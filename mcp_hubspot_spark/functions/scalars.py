@@ -123,12 +123,6 @@ def iso_format(c: Column | str, fmt: str = ISO_FMT) -> Column:
     return F.date_format(c, fmt)
 
 
-def tz_offset_string(c: Column | str) -> Column:
-    """F2 — render a timestamp's zone offset as "UTC+08:00"
-    (reference core/formatters.py:23-26)."""
-    return F.concat(F.lit("UTC"), F.date_format(c, "xxx"))
-
-
 def truncate_text(c: Column | str, n: int = 200) -> Column:
     """F3 — 200-char response clipping (reference
     handlers/conversation_handler.py:104-121; applied AFTER indexing)."""
@@ -221,28 +215,6 @@ def engagement_content(etype: Column, md: Column) -> Column:
         F.when(etype == "MEETING", meeting_struct).alias("meeting"),
         F.when(etype == "CALL", call_struct).alias("call"),
     )
-
-
-def normalize_participants(parts: Column | str) -> Column:
-    """F9 — participant normalization over to/cc/bcc arrays (reference
-    company_client.py:206-232) via transform()."""
-    p = F.col(parts) if isinstance(parts, str) else parts
-    return F.transform(
-        p,
-        lambda x: F.struct(
-            F.coalesce(x.getField("raw"), F.lit("")).alias("raw"),
-            F.coalesce(x.getField("email"), F.lit("")).alias("email"),
-            F.coalesce(x.getField("firstName"), F.lit("")).alias("firstName"),
-            F.coalesce(x.getField("lastName"), F.lit("")).alias("lastName"),
-        ),
-    )
-
-
-def canonical_json(*cols: Column | str) -> Column:
-    """F10 — record → JSON text with EXPLICIT field order (struct order is
-    the canonical order; reference utils.py:22 relies on dict insertion
-    order — SURVEY flags this as the hash-parity trap)."""
-    return F.to_json(F.struct(*cols))
 
 
 def similarity_from_distance(distance: Column | str) -> Column:

@@ -17,20 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def group_counts(
-    df: DataFrame,
-    group: Sequence[str],
-    count_col: str = "n",
-    distinct_of: str | None = None,
-) -> DataFrame:
-    """A1/A2-style counts; partial aggregation happens map-side so the
-    shuffle carries one row per (partition, key), not the raw rows."""
-    aggs = [F.count(F.lit(1)).alias(count_col)]
-    if distinct_of:
-        aggs.append(F.countDistinct(distinct_of).alias(f"n_distinct_{distinct_of}"))
-    return df.groupBy(*group).agg(*aggs)
-
-
 def group_to_array(
     df: DataFrame,
     group: Sequence[str],
@@ -95,11 +81,6 @@ def group_concat_ordered(
             F.transform(collected, lambda s: s.getField("_v")), sep
         )
     return df.groupBy(*group).agg(joined.alias(alias), *extra_aggs)
-
-
-def summary_rollup(df: DataFrame, sums: dict[str, str]) -> DataFrame:
-    """A5 global rollup: ``sums`` maps output alias → input column."""
-    return df.agg(*[F.sum(c).alias(a) for a, c in sums.items()])
 
 
 def grouped_zscore(

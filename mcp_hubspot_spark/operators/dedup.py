@@ -468,29 +468,6 @@ def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
     return key
 
 
-def _lsh_bucket_sql(vec_name: str, planes: list[list[float]]) -> str:
-    """SQL-string form of ``lsh_bucket`` — identical math (same zip_with/
-    aggregate fold, same ``> 0`` sign test), but ONE parser round-trip
-    instead of thousands of py4j ``F.lit`` calls. With planes × tables ×
-    dim in the thousands, Column-object construction dominates wall time
-    (measured 2.6 s build vs 1.1 s execute); a literal SQL string moves
-    that cost to the JVM parser (~ms). ``repr(float)`` is the shortest
-    round-trip decimal, which Java parses back to the same IEEE double.
-    """
-    terms = []
-    for i, p in enumerate(planes):
-        arr = ", ".join(f"{x!r}D" for x in p)
-        d = (
-            f"aggregate(zip_with(`{vec_name}`, array({arr}), (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-        terms.append(
-            f"(CASE WHEN {d} > 0 THEN CAST({1 << i} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-        )
-    return " + ".join(terms)
-
-
 def embedding_neardup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",

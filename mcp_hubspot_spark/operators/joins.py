@@ -195,18 +195,6 @@ def range_join(
     )
 
 
-def enrich_one_to_many(
-    parents: DataFrame,
-    children: DataFrame,
-    key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Replace the reference's N+1 per-parent child fetch (J5,
-    conversation_client.py:301-333) with one equi-join; pair with
-    aggregates.group_to_array for the nested re-assembly."""
-    return parents.join(children, on=key, how=how)
-
-
 def snapshot_diff(
     before: DataFrame,
     after: DataFrame,

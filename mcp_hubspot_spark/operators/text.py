@@ -37,14 +37,6 @@ def token_count(c: Column | str) -> Column:
     return F.size(tokens(c))
 
 
-def bpe_ish_token_count(c: Column | str) -> Column:
-    """BPE-flavored token estimate: count word pieces + digits + punctuation
-    runs, the standard ~len/4 heuristic refined by a regex tokenizer."""
-    col = F.col(c) if isinstance(c, str) else c
-    pieces = F.split(col, r"(?=[A-Z])|[^\p{L}\p{N}]+")
-    return F.size(F.filter(pieces, lambda x: x != ""))
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality features: length, token count, mean word
     length, punctuation ratio, stopword ratio, uppercase ratio. All are
@@ -207,22 +199,6 @@ def ngram_list(toks: Column, n: int) -> Column:
     return F.when(F.size(toks) >= n, positional_ngrams(toks, n)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def dup_ngram_frac(toks: Column, n: int) -> Column:
-    """Fraction of n-gram occurrences that are repeats of an earlier
-    n-gram in the same document: (total - distinct) / total, 0.0 for
-    docs with no n-grams. Gopher-style repetition quality signal.
-
-    PERF: pass ``toks`` as a materialized COLUMN REFERENCE, not a nested
-    ``split(...)`` expression — HOF lambdas have no common-subexpression
-    elimination, so a nested tokenizer re-runs per n-gram position
-    (measured 10x at 200k docs). ``repetition_features`` stages the
-    token and gram arrays through explicit projections for this reason."""
-    grams = ngram_list(toks, n)
-    total = F.size(grams)
-    dups = (total - F.size(F.array_distinct(grams))).cast("double")
-    return F.when(total > 0, F.round(dups / total, 4)).otherwise(F.lit(0.0))
 
 
 def _dup_frac_of(grams: Column) -> Column:

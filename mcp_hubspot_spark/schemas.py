@@ -302,9 +302,3 @@ CRM_SCHEMAS: dict[str, StructType] = {
         ("duration_ms", LongType(), True),
     ),
 }
-
-
-def schema_for(table: str) -> StructType:
-    if table in TESTDATA_SCHEMAS:
-        return TESTDATA_SCHEMAS[table]
-    return CRM_SCHEMAS[table]

@@ -22,18 +22,39 @@ with no table movement is a no-op.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import durable
 from .sources.snapshot_table import SnapshotTable
 from .vector_store import IvfIndex
 
 _STATE = "_sync_state.json"
 
 
-class IndexMaintainer:
+class _SyncedVersion:
+    """The table version a maintainer's ``index`` answers for, recorded
+    next to the index. ``_record`` is each sync's final, atomic step, so
+    a crashed sync replays from the last version it completed."""
+
+    def _state_path(self) -> str:
+        return str(self.index.root / _STATE)
+
+    def synced_version(self) -> int | None:
+        """The table version the index currently answers for, or None
+        before ``initialize``."""
+        try:
+            with open(self._state_path()) as fh:
+                return int(json.load(fh)["synced_version"])
+        except FileNotFoundError:
+            return None
+
+    def _record(self, version: int) -> None:
+        durable.write_json(self._state_path(), {"synced_version": version})
+
+
+class IndexMaintainer(_SyncedVersion):
     """Keeps ``index`` answering for the current version of ``table``.
 
     ``embed`` maps a DataFrame carrying (``id_col``, ``text_col``) to
@@ -69,26 +90,6 @@ class IndexMaintainer:
             .cast("array<double>")
             .alias("embedding"),
         )
-
-    # ------------------------------------------------------------- state
-    def _state_path(self) -> str:
-        return str(self.index.root / _STATE)
-
-    def synced_version(self) -> int | None:
-        """The table version the index currently answers for, or None
-        before :meth:`initialize`."""
-        try:
-            with open(self._state_path()) as fh:
-                return int(json.load(fh)["synced_version"])
-        except FileNotFoundError:
-            return None
-
-    def _record(self, version: int) -> None:
-        os.makedirs(self.index.root, exist_ok=True)
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"synced_version": version}, fh)
-        os.replace(tmp, self._state_path())
 
     # --------------------------------------------------------------- API
     def initialize(self, n_cells: int = 16, **build_kwargs) -> int:
@@ -160,7 +161,7 @@ class IndexMaintainer:
         }
 
 
-class TextIndexMaintainer:
+class TextIndexMaintainer(_SyncedVersion):
     """Keeps a :class:`~.text_index.TextIndex` answering for the current
     version of a :class:`~.sources.snapshot_table.SnapshotTable` — the
     lexical twin of :class:`IndexMaintainer`, with the same CDC-delta
@@ -206,23 +207,6 @@ class TextIndexMaintainer:
         self.index = index
         self.id_col = id_col
         self.text_col = text_col
-
-    def _state_path(self) -> str:
-        return str(self.index.root / _STATE)
-
-    def synced_version(self) -> int | None:
-        try:
-            with open(self._state_path()) as fh:
-                return int(json.load(fh)["synced_version"])
-        except FileNotFoundError:
-            return None
-
-    def _record(self, version: int) -> None:
-        os.makedirs(self.index.root, exist_ok=True)
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"synced_version": version}, fh)
-        os.replace(tmp, self._state_path())
 
     def initialize(self, num_buckets: int = 64) -> int:
         v = self.table.version()

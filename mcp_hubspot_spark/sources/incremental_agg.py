@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import durable
 from .snapshot_table import SnapshotTable
 
 _SUM_TYPE = "decimal(28,6)"
@@ -83,11 +84,7 @@ class IncrementalAggregate:
         df.coalesce(1).write.mode("overwrite").parquet(
             self._data_path(base_version)
         )
-        tmp = self._state_path() + ".tmp"
-        os.makedirs(self.path, exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump({"base_version": base_version}, fh)
-        os.replace(tmp, self._state_path())
+        durable.write_json(self._state_path(), {"base_version": base_version})
 
     # -------------------------------------------------------------- API
     def _direct(self, df: DataFrame) -> DataFrame:

@@ -16,12 +16,14 @@ directly on parquet:
 - **Manifest**: a JSON pointer file maps every bucket to the version
   directory that currently owns it. Readers resolve the manifest once and
   read exactly those directories; writers never mutate a published file.
-- **Atomic commit**: the manifest swap is a single ``os.replace`` (atomic
-  on POSIX) under an ``O_CREAT|O_EXCL`` lock file, with an
+- **Atomic commit**: the manifest swap is one atomic JSON replace
+  (``durable.write_json``) under a ``flock`` commit lock, with an
   expected-version check — a concurrent committed writer raises
   ``SnapshotConflictError`` instead of silently losing rows (optimistic
-  concurrency, same contract as Delta's commit protocol). On an object
-  store you would swap ``os.replace`` for the store's conditional-put.
+  concurrency, same contract as Delta's commit protocol). The kernel
+  drops the lock with a dead committer, so a crash never wedges later
+  commits. On an object store you would swap the rename for the store's
+  conditional-put.
 
 Scale design: MERGE cost is proportional to the TOUCHED buckets, not the
 table. Updates are bucketed by ``pmod(xxhash64(keys), n_buckets)``; only
@@ -37,12 +39,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import durable
 
 _MANIFEST = "_latest.json"
 _LOCK = "_commit.lock"
@@ -59,6 +62,8 @@ def _bucket_expr(keys: Sequence[str], n_buckets: int):
 
 class SnapshotTable:
     """A parquet table with versioned, atomically-committed upserts."""
+
+    LOCK_TIMEOUT_S = 10.0
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -82,35 +87,24 @@ class SnapshotTable:
 
     def _commit(self, manifest: dict, expected_version: int | None) -> None:
         """Atomically publish ``manifest`` iff the table is still at
-        ``expected_version`` (None = initial commit, table must not exist).
-        """
-        os.makedirs(self.root, exist_ok=True)
-        lock = os.path.join(self.root, _LOCK)
-        # O_EXCL lock: only one committer holds it; held only for the
-        # pointer check + rename, never during the (long) data write
-        for _ in range(200):
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                time.sleep(0.05)
-        else:
-            raise TimeoutError(f"could not acquire commit lock {lock}")
-        try:
+        ``expected_version`` (None = initial commit, table must not exist),
+        saving the superseded manifest for time travel first. The lock is
+        held only for the pointer check and the two small JSON writes,
+        never during the (long) data write."""
+        with durable.flock(os.path.join(self.root, _LOCK), self.LOCK_TIMEOUT_S):
             current = None
             if os.path.exists(self._manifest_path()):
-                current = self._read_manifest()["version"]
-            if current != expected_version:
+                current = self._read_manifest()
+            found = None if current is None else current["version"]
+            if found != expected_version:
                 raise SnapshotConflictError(
-                    f"expected version {expected_version}, found {current}"
+                    f"expected version {expected_version}, found {found}"
                 )
-            tmp = self._manifest_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            os.replace(tmp, self._manifest_path())  # the atomic commit point
-        finally:
-            os.close(fd)
-            os.remove(lock)
+            if current is not None:
+                durable.write_json(
+                    os.path.join(self.root, f"_manifest_v{found}.json"), current
+                )
+            durable.write_json(self._manifest_path(), manifest)  # commit point
 
     # ----------------------------------------------------------------- API
     def version(self) -> int:
@@ -179,11 +173,10 @@ class SnapshotTable:
     def read(self, version: int | None = None) -> DataFrame:
         """Current snapshot (or time-travel to an older ``version`` while
         its directories have not been vacuumed)."""
-        manifest = self._read_manifest()
-        if version is not None and version != manifest["version"]:
-            older = os.path.join(self.root, f"_manifest_v{version}.json")
-            with open(older) as fh:
-                manifest = json.load(fh)
+        manifest = (
+            self._read_manifest() if version is None
+            else self._manifest_at(version)
+        )
         paths = self._bucket_paths(
             manifest, [int(b) for b in manifest["buckets"]]
         )
@@ -261,10 +254,6 @@ class SnapshotTable:
         buckets = dict(manifest["buckets"])
         for b in self._buckets_in(vdir):
             buckets[str(b)] = vdir
-        # keep the superseded manifest readable for time travel
-        prev = os.path.join(self.root, f"_manifest_v{expected}.json")
-        with open(prev, "w") as fh:
-            json.dump(manifest, fh)
         self._commit_or_cleanup(
             {"version": new_version, "keys": keys, "n_buckets": nb,
              "buckets": buckets},
@@ -308,9 +297,6 @@ class SnapshotTable:
                 buckets[str(b)] = vdir
             else:
                 del buckets[str(b)]  # bucket emptied entirely
-        prev = os.path.join(self.root, f"_manifest_v{expected}.json")
-        with open(prev, "w") as fh:
-            json.dump(manifest, fh)
         self._commit_or_cleanup(
             {"version": new_version, "keys": manifest["keys"],
              "n_buckets": manifest["n_buckets"], "buckets": buckets},
@@ -420,9 +406,6 @@ class SnapshotTable:
                 f"cannot restore to v{version}: {len(missing)} bucket "
                 f"directories vacuumed (first: {missing[0]})"
             )
-        prev = os.path.join(self.root, f"_manifest_v{expected}.json")
-        with open(prev, "w") as fh:
-            json.dump(manifest, fh)
         new_version = expected + 1
         self._commit(
             {
@@ -474,9 +457,6 @@ class SnapshotTable:
         buckets = dict(manifest["buckets"])
         for b in self._buckets_in(vdir):
             buckets[str(b)] = vdir
-        prev = os.path.join(self.root, f"_manifest_v{expected}.json")
-        with open(prev, "w") as fh:
-            json.dump(manifest, fh)
         self._commit_or_cleanup(
             {"version": new_version, "keys": keys, "n_buckets": nb,
              "buckets": buckets},

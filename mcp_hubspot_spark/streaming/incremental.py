@@ -17,6 +17,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import durable
+
 
 class IncrementalReader:
     """High-water-mark incremental scans over any timestamped DataFrame.
@@ -35,8 +37,7 @@ class IncrementalReader:
         return None
 
     def _save_mark(self, mark: str) -> None:
-        self.state_path.parent.mkdir(parents=True, exist_ok=True)
-        self.state_path.write_text(json.dumps({"high_water_mark": mark}))
+        durable.write_json(self.state_path, {"high_water_mark": mark})
 
     def read_increment(self, df: DataFrame) -> DataFrame:
         """Rows past the mark. Advance with ``commit(df)`` after a

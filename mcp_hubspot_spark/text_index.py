@@ -51,24 +51,11 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import durable
 from .operators.classifier import hash_bucket
 from .operators.text import tokens
 
 __all__ = ["TextIndex"]
-
-
-def _locked(fn):
-    """Run a TextIndex mutator under the index's flock (same contract
-    as vector_store._locked: single-writer, kernel-released on death)."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        with self._mutation_lock():
-            self._recover_swap(locked=True)
-            return fn(self, *args, **kwargs)
-
-    return wrapper
 
 
 class TextIndex:
@@ -86,49 +73,6 @@ class TextIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.root = Path(str(path))
-
-    # ------------------------------------------------------------ lock
-
-    def _mutation_lock(self, timeout_s: float | None = None):
-        """flock-based single-writer lock; see the long rationale at
-        vector_store.IvfIndex._mutation_lock (same design, same scope:
-        driver-side directory mutations on one host)."""
-        import contextlib
-        import fcntl as _fcntl
-        import os as _os
-        import time as _time
-
-        if timeout_s is None:
-            timeout_s = self.LOCK_TIMEOUT_S
-        lock = self.root / "_mutation.lock"
-
-        @contextlib.contextmanager
-        def _held():
-            self.root.mkdir(parents=True, exist_ok=True)
-            fd = _os.open(lock, _os.O_CREAT | _os.O_WRONLY, 0o644)
-            try:
-                deadline = _time.monotonic() + timeout_s
-                while True:
-                    try:
-                        _fcntl.flock(fd, _fcntl.LOCK_EX | _fcntl.LOCK_NB)
-                        break
-                    except BlockingIOError:
-                        if _time.monotonic() >= deadline:
-                            raise TimeoutError(
-                                f"could not acquire {lock} after "
-                                f"{timeout_s}s — another writer is active"
-                            ) from None
-                        _time.sleep(0.05)
-                try:
-                    _os.ftruncate(fd, 0)
-                    _os.write(fd, str(_os.getpid()).encode())
-                    yield
-                finally:
-                    _fcntl.flock(fd, _fcntl.LOCK_UN)
-            finally:
-                _os.close(fd)
-
-        return _held()
 
     # ------------------------------------------------------------ meta
 
@@ -189,7 +133,7 @@ class TextIndex:
             "dl",
         )
 
-    @_locked
+    @durable.mutator
     def build(
         self,
         df: DataFrame,
@@ -212,9 +156,8 @@ class TextIndex:
         interrupted builds, so this path must be loss-free)."""
         import shutil
 
-        self.root.mkdir(parents=True, exist_ok=True)
         meta_path = self.root / self._META
-        meta_path.write_text(json.dumps({"building": True}))
+        durable.write_json(meta_path, {"building": True})
         for stale in ("tombstones", "_postings_new", "_postings_old"):
             p = self.root / stale
             if p.exists():
@@ -229,18 +172,17 @@ class TextIndex:
             .partitionBy("epoch", "bucket")
             .parquet(str(self.root / "postings"))
         )
-        meta_path.write_text(
-            json.dumps(
-                {
-                    "num_buckets": num_buckets,
-                    "n_docs": int(stats.n),
-                    "sum_dl": int(stats.sum_dl or 0),
-                    "last_epoch": 0,
-                }
-            )
+        durable.write_json(
+            meta_path,
+            {
+                "num_buckets": num_buckets,
+                "n_docs": int(stats.n),
+                "sum_dl": int(stats.sum_dl or 0),
+                "last_epoch": 0,
+            },
         )
 
-    @_locked
+    @durable.mutator
     def add(
         self,
         df: DataFrame,
@@ -369,9 +311,9 @@ class TextIndex:
             meta["n_docs"] = int(meta["n_docs"]) + int(stats_delta[0])
             meta["sum_dl"] = int(meta["sum_dl"]) + int(stats_delta[1])
             meta["last_epoch"] = int(epoch)
-            (self.root / self._META).write_text(json.dumps(meta))
+            durable.write_json(self.root / self._META, meta)
 
-    @_locked
+    @durable.mutator
     def delete(self, doc_ids, *, dead_epoch: int | None = None) -> None:
         """Tombstone documents. A doc's postings spread across ALL
         buckets (terms hash independently), so an eager delete would
@@ -416,7 +358,7 @@ class TextIndex:
             .parquet(str(self.root / "tombstones"))
         )
 
-    @_locked
+    @durable.mutator
     def compact(self) -> None:
         """Physically drop tombstoned postings AND consolidate every
         surviving generation into ONE epoch partition set (epoch 0) —
@@ -501,7 +443,7 @@ class TextIndex:
         # compact time (a doc re-added at its dead_epoch survived the
         # tombstone pre-fold; post-fold its epoch is 0 < dead_epoch —
         # silent permanent loss). _postings_old is therefore the
-        # swap-in-progress marker: as long as it exists, _recover_swap
+        # swap-in-progress marker: as long as it exists, _recover
         # knows the tombstone-applied rewrite is (or is about to be)
         # the live postings dir and clears tombstones/ itself, so a
         # crash anywhere in this tail is safe.
@@ -510,7 +452,7 @@ class TextIndex:
         shutil.rmtree(old)
         meta["n_docs"] = int(stats.n)
         meta["sum_dl"] = int(stats.sum_dl or 0)
-        (self.root / self._META).write_text(json.dumps(meta))
+        durable.write_json(self.root / self._META, meta)
 
     # epoch-partition-count threshold for maybe_compact(): the same
     # measured-auto-switch pattern as vector.ADC_LITERAL_MAX_DOUBLES and
@@ -552,7 +494,7 @@ class TextIndex:
         self.compact()
         return True
 
-    def _recover_swap(self, locked: bool = False) -> None:
+    def _recover(self) -> None:
         """Finish a compact() interrupted mid-swap. ``_postings_old``
         existing means the swap reached its first rename, so the live
         (or about-to-be-live) postings dir is the consolidated rewrite
@@ -565,41 +507,15 @@ class TextIndex:
         WITHOUT the ``_postings_old`` marker is the opposite case — a
         compact that crashed before its first rename — and is
         discarded with tombstones kept (the old layout still needs
-        them).
-
-        Readers call this WITHOUT the mutation lock, so they must not
-        race a LIVE compact between its two renames: when ``locked`` is
-        False the flock is probed non-blockingly and recovery is skipped
-        while a writer holds it (the writer will finish its own swap —
-        kernel-released on death, so a dead writer never blocks this).
-        """
-        import fcntl as _fcntl
-        import os as _os
+        them). Runs under the mutation lock: before every mutation
+        (``durable.mutator``), and from reads only while no live
+        compact holds it (``durable.recover_if_idle``) — a live writer
+        finishes its own swap."""
         import shutil
 
         post = self.root / "postings"
         tmp = self.root / "_postings_new"
         old = self.root / "_postings_old"
-        if post.exists() and not tmp.exists() and not old.exists():
-            return  # fast path: clean layout
-        if not locked:
-            lock = self.root / "_mutation.lock"
-            try:
-                fd = _os.open(lock, _os.O_CREAT | _os.O_WRONLY, 0o644)
-            except OSError:
-                return
-            try:
-                try:
-                    _fcntl.flock(fd, _fcntl.LOCK_EX | _fcntl.LOCK_NB)
-                except BlockingIOError:
-                    return  # live writer mid-swap; it will finish
-                try:
-                    self._recover_swap(locked=True)
-                finally:
-                    _fcntl.flock(fd, _fcntl.LOCK_UN)
-            finally:
-                _os.close(fd)
-            return
         if not post.exists() and tmp.exists():
             tmp.rename(post)
         if post.exists():
@@ -621,10 +537,14 @@ class TextIndex:
         tombstone for its doc carries a LATER epoch; the max() over
         tombstones makes retried deletes collapse). Broadcast join — the
         tombstone table is small between compactions; a no-op
-        passthrough when none exists. Runs swap recovery first —
-        readers don't take the lock, and planning against a mid-crash
-        layout would throw on the missing directory anyway."""
-        self._recover_swap()
+        passthrough when none exists. Runs swap recovery first when a
+        compact's leftovers are on disk — readers don't take the lock,
+        and planning against a mid-crash layout would throw on the
+        missing directory anyway."""
+        if (self.root / "_postings_new").exists() or (
+            self.root / "_postings_old"
+        ).exists():
+            durable.recover_if_idle(self)
         reader = self.spark.read.parquet(str(self.root / "postings"))
         tomb = self.root / "tombstones"
         if tomb.exists():

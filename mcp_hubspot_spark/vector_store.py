@@ -27,6 +27,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import durable
 from .operators.vector import knn
 
 VECTOR_STORE_COLUMNS = ("date", "vec_id", "embedding", "type", "data_json", "extras")
@@ -175,25 +176,6 @@ class VectorStore:
         )
 
 
-def _locked(fn):
-    """Run an IvfIndex mutator under the index's mutation lock. Crash
-    recovery runs FIRST, while the lock is held and before the mutator
-    reads any cell files: a hard-crashed ``_swap_cells`` can leave a
-    cell's only rows under ``_swap_backup``, and a mutator that read the
-    cells before restoring would plan against (and then persist) the
-    truncated view — e.g. ``delete()`` would miss ids living in the
-    backed-up cell entirely."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        with self._mutation_lock():
-            self._recover_swap_backup()
-            return fn(self, *args, **kwargs)
-
-    return wrapper
-
-
 class IvfIndex:
     """Persisted IVF index: the scale complement to ``VectorStore``'s
     exact scan. ``build()`` trains centroids once (MLlib KMeans on a
@@ -207,6 +189,9 @@ class IvfIndex:
     at). Build once / query many: the index cost is amortized across
     every subsequent query, unlike the in-query training path
     (``workload.ivf_search``) which exists for oracle-checkability.
+
+    The mutators (build/add/delete/compact) are single-writer under
+    :mod:`.durable`'s lock; searches take no lock.
     """
 
     LOCK_TIMEOUT_S = 120.0  # override per-instance for tests
@@ -215,83 +200,16 @@ class IvfIndex:
         self.spark = spark
         self.root = Path(str(path))
 
-    def _mutation_lock(self, timeout_s: float | None = None):
-        """Serialize the file-mutating operations (build/add/delete/
-        compact) with ``flock`` on a lock file — the same coarse
-        single-writer contract the reference's FAISS manager gets for
-        free from being one process, made explicit here because two
-        concurrent cell rewrites (or an add appending into a cell being
-        swapped) would corrupt the directory layout. Readers
-        (``search``) never take the lock: they resolve a consistent
-        file listing per query via the manifest or the parquet
-        snapshot.
-
-        ``flock`` (not O_CREAT|O_EXCL existence) because the kernel
-        releases it when the owner dies — even ``kill -9`` mid-mutation
-        leaves no stale lock, so post-crash search-time recovery and
-        the next mutation proceed immediately, and there is no
-        lock-breaking protocol to get wrong (PID-liveness breaking has
-        an unfixable check-then-remove race where a contender can
-        delete a FRESH lock re-acquired after its staleness check,
-        admitting two writers). The lock FILE persists on disk between
-        mutations — only the flock on it matters; its PID content is a
-        diagnostic. Single-host semantics (an advisory lock on the
-        local filesystem), which is the lock's scope anyway: it guards
-        driver-side directory renames. Each acquisition opens its own
-        file description, so two writers in one process (threads)
-        still exclude each other."""
-        import contextlib
-        import fcntl as _fcntl
-        import os as _os
-        import time as _time
-
-        if timeout_s is None:
-            timeout_s = self.LOCK_TIMEOUT_S
-        lock = self.root / "_mutation.lock"
-
-        @contextlib.contextmanager
-        def _held():
-            self.root.mkdir(parents=True, exist_ok=True)
-            fd = _os.open(lock, _os.O_CREAT | _os.O_WRONLY, 0o644)
-            try:
-                deadline = _time.monotonic() + timeout_s
-                while True:
-                    try:
-                        _fcntl.flock(
-                            fd, _fcntl.LOCK_EX | _fcntl.LOCK_NB
-                        )
-                        break
-                    except BlockingIOError:
-                        if _time.monotonic() >= deadline:
-                            raise TimeoutError(
-                                f"could not acquire {lock} after "
-                                f"{timeout_s}s — another writer is "
-                                "active"
-                            ) from None
-                        _time.sleep(0.05)
-                try:
-                    _os.ftruncate(fd, 0)
-                    _os.write(fd, str(_os.getpid()).encode())
-                    yield
-                finally:
-                    _fcntl.flock(fd, _fcntl.LOCK_UN)
-            finally:
-                _os.close(fd)
-
-        return _held()
-
-    def _recover_swap_backup(self) -> None:
+    def _recover(self) -> None:
         """Restore any cell whose ONLY copy survives under
         ``_swap_backup`` — the leftover of a hard crash between
         :meth:`_swap_cells`'s backup rename and its move-in. A cell dir
         present both live and in the backup means the move-in completed
         (or never started); the live copy wins and the backup is stale.
-        Called at the top of every mutation (before the backup root is
-        cleared), always under the mutation lock — a restore racing a
-        live writer's move-in would collide with it. ``search`` calls
-        the guarded :meth:`_recover_swap_backup_if_idle` wrapper, so a
-        post-crash index answers consistently without waiting for the
-        next write."""
+        Runs under the mutation lock (``durable.mutator``) before every
+        mutation, and from ``search``/``lookup`` only when no live writer
+        holds the lock (``durable.recover_if_idle``): a restore racing a
+        live writer's move-in would collide with it."""
         import os as _os
 
         bak_root = self.root / "_swap_backup"
@@ -302,24 +220,6 @@ class IvfIndex:
             live = cells_root / bak.name
             if not live.exists():
                 _os.rename(bak, live)  # crash leftover: restore
-
-    def _recover_swap_backup_if_idle(self) -> None:
-        """Search-time crash recovery: attempt the mutation lock
-        WITHOUT blocking; if a LIVE writer holds it, a ``_swap_cells``
-        is mid-flight (its backup dir is a legitimate transient, and
-        the writer converges on its own) — restoring from under it
-        would break its move-in, so skip. A crashed writer never causes
-        a skip: the kernel drops its ``flock`` at process death, so the
-        first post-crash search acquires immediately and restores the
-        backed-up cells. Costs one ``exists()`` in the common no-backup
-        path."""
-        if not (self.root / "_swap_backup").exists():
-            return
-        try:
-            with self._mutation_lock(timeout_s=0.0):
-                self._recover_swap_backup()
-        except TimeoutError:
-            pass  # active writer owns recovery
 
     # ----------------------------------------------------------- metric
     _META = "meta.json"
@@ -415,7 +315,7 @@ class IvfIndex:
         ]
         return self._cb_cache
 
-    @_locked
+    @durable.mutator
     def build(
         self,
         df: DataFrame,
@@ -462,8 +362,6 @@ class IvfIndex:
         (ivfpq_residual rows), so residual builds keep rotation
         opt-in; pass ``pq_opq=False`` explicitly to measure raw flat
         codebooks (diagnostic)."""
-        import json
-
         from .operators.vector import (
             assign_cells_literal,
             pq_encode_matmul,
@@ -486,7 +384,6 @@ class IvfIndex:
                 ),
                 vec_col,
             )
-        self.root.mkdir(parents=True, exist_ok=True)
         self._cb_cache = None  # rebuild replaces any cached codebooks
         self._rot_cache = None
         # Crash-ordering discipline: meta is written first with a
@@ -504,9 +401,7 @@ class IvfIndex:
         # with the sentinel every meta reader (_meta_dict) fails loud
         # until a build completes.
         meta: dict = {"metric": metric}
-        (self.root / self._META).write_text(
-            json.dumps({**meta, "building": True})
-        )
+        durable.write_json(self.root / self._META, {**meta, "building": True})
         if pq_opq:
             from .operators.vector import (
                 pq_train_opq_rotation,
@@ -611,14 +506,14 @@ class IvfIndex:
             }
         if pq_opq:
             meta["opq"] = True
-        (self.root / self._META).write_text(json.dumps(meta))
+        durable.write_json(self.root / self._META, meta)
         # a REBUILD invalidates an exported manifest (new centroids, new
         # cell files): refresh it like add() does, or a server would probe
         # with stale centroids against overwritten files
         if (self.root / "manifest.json").exists():
             self.export_manifest()
 
-    @_locked
+    @durable.mutator
     def add(
         self,
         df: DataFrame,
@@ -717,9 +612,9 @@ class IvfIndex:
 
         Hard-crash recovery: a process kill between the backup rename
         and the move-in leaves a cell's only copy under ``_swap_backup``.
-        The NEXT mutation must therefore RESTORE any backed-up cell
-        whose live dir is missing before it clears the backup root —
-        an unconditional rmtree here would permanently delete those
+        Clearing the backup root below is safe only because the calling
+        mutator already ran :meth:`_recover` under this lock hold — an
+        rmtree before that restore would permanently delete those
         surviving rows."""
         import os as _os
         import shutil as _sh
@@ -728,7 +623,6 @@ class IvfIndex:
         tmp = self.root / "_rewrite_tmp"
         bak_root = self.root / "_swap_backup"
         _sh.rmtree(tmp, ignore_errors=True)
-        self._recover_swap_backup()
         _sh.rmtree(bak_root, ignore_errors=True)
         (
             keep.repartition(max(1, len(affected)), "cell_id")
@@ -758,7 +652,7 @@ class IvfIndex:
         if (self.root / "manifest.json").exists():
             self.export_manifest()
 
-    @_locked
+    @durable.mutator
     def delete(self, ids, id_col: str = "vec_id") -> int:
         """Delete vectors by id — the removal side of the serving
         lifecycle (the reference expires whole daily FAISS partitions,
@@ -799,7 +693,7 @@ class IvfIndex:
         self._swap_cells(keep, affected)
         return sum(per_cell.values())
 
-    @_locked
+    @durable.mutator
     def compact(self, min_files: int = 2) -> list[int]:
         """Merge the small files repeated ``add()`` batches leave behind:
         every cell holding >= ``min_files`` parquet files is rewritten to
@@ -831,9 +725,9 @@ class IvfIndex:
         ``faiss_manager.py``) can pick probe cells from the centroids and
         mmap exactly the listed files, without a Spark session and
         without re-deriving the partition layout from a directory walk.
-        One bounded JSON: n_cells centroids + file names, never vectors."""
-        import json
-
+        One bounded JSON: n_cells centroids + file names, never vectors.
+        Replaced atomically, so a concurrent ``search`` (which reads it
+        without the lock) never parses a half-written file."""
         cents = self.spark.read.parquet(str(self.root / "centroids")).collect()
         cells_root = self.root / "cells"
         cells: dict[str, list[str]] = {}
@@ -853,9 +747,7 @@ class IvfIndex:
             },
             "cells": cells,
         }
-        (self.root / "manifest.json").write_text(
-            json.dumps(manifest, sort_keys=True)
-        )
+        durable.write_json(self.root / "manifest.json", manifest)
         return manifest
 
     def read_manifest(self) -> dict | None:
@@ -1002,7 +894,8 @@ class IvfIndex:
         a join side. Embeddings are cast to double (float→double is
         exact) so downstream arithmetic matches the batch operators'
         ``array<double>`` convention bit-for-bit."""
-        self._recover_swap_backup_if_idle()
+        if (self.root / "_swap_backup").exists():
+            durable.recover_if_idle(self)
         ids = list(ids)
         if len(ids) > 10_000:
             raise ValueError(
@@ -1034,7 +927,8 @@ class IvfIndex:
         # a hard-crashed swap can leave a cell's only rows under
         # _swap_backup; restore them (lock-guarded, non-blocking) so a
         # post-crash search sees the full index
-        self._recover_swap_backup_if_idle()
+        if (self.root / "_swap_backup").exists():
+            durable.recover_if_idle(self)
 
         metric = self.metric()
         query_vec = [float(x) for x in query_vec]
