@@ -134,12 +134,6 @@ def main() -> None:
         if os.environ.get("SPARK_GRAFT_BENCH_ALL") == "1"
         else HEADLINE
     )
-    # executor Python workers import this package by path: make the repo
-    # root visible to them even when bench.py is launched from elsewhere
-    repo = str(Path(__file__).resolve().parent)
-    os.environ["PYTHONPATH"] = (
-        repo + os.pathsep + os.environ.get("PYTHONPATH", "")
-    )
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
     # warm up the JVM / codegen paths

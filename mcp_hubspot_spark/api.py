@@ -359,7 +359,9 @@ class Engine:
         types: Sequence[str] | None = None, as_of: date | None = None,
     ) -> DataFrame:
         """hubspot_search_data (V4/V5, faiss_manager.py:254-296 +
-        utils.py:100-108) over the date-partitioned vector store."""
+        utils.py:100-108) over the date-partitioned vector store. A
+        small store is searched in the driver and launches no Spark job
+        (``VectorStore.search``)."""
         if self.store is None:
             raise ValueError("engine has no vector store attached")
         return self.store.search(query_vec, k=k, types=types, as_of=as_of)

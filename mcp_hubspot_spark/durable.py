@@ -35,6 +35,9 @@ mutator runs it under the lock before touching anything
 no live writer holds the lock (:func:`recover_if_idle`), because the
 leftovers of a LIVE writer are its in-flight swap, which it finishes
 itself.
+
+Every mutation and every reader-side recovery attempt logs one INFO
+record through ``logging.getLogger("mcp_hubspot_spark.durable")``.
 """
 
 from __future__ import annotations
@@ -43,11 +46,14 @@ import contextlib
 import fcntl
 import functools
 import json
+import logging
 import os
 import time
 import uuid
 
 MUTATION_LOCK = "_mutation.lock"
+
+log = logging.getLogger(__name__)
 
 
 @contextlib.contextmanager
@@ -86,13 +92,25 @@ def mutator(fn):
     """Run a store method under the store's ``root/_mutation.lock``
     (waiting up to ``LOCK_TIMEOUT_S``), with the store's ``_recover()``
     first: a mutator that planned against a crashed writer's half-swapped
-    layout would persist the truncated view."""
+    layout would persist the truncated view. Logs the store class, root,
+    method, outcome and elapsed seconds of every call."""
 
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
-        with flock(os.path.join(self.root, MUTATION_LOCK), self.LOCK_TIMEOUT_S):
-            self._recover()
-            return fn(self, *args, **kwargs)
+        t0 = time.monotonic()
+        outcome = "failed"
+        try:
+            with flock(os.path.join(self.root, MUTATION_LOCK), self.LOCK_TIMEOUT_S):
+                self._recover()
+                result = fn(self, *args, **kwargs)
+            outcome = "ok"
+            return result
+        finally:
+            log.info(
+                "%s.%s at %s: %s in %.3f s",
+                type(self).__name__, fn.__name__, self.root, outcome,
+                time.monotonic() - t0,
+            )
 
     return wrapper
 
@@ -100,11 +118,16 @@ def mutator(fn):
 def recover_if_idle(store) -> None:
     """Reader-side crash recovery: run ``store._recover()`` under a
     non-blocking attempt at the store's mutation lock, and skip it while
-    a live writer holds the lock. A dead writer never causes a skip."""
-    with contextlib.suppress(TimeoutError), flock(
-        os.path.join(store.root, MUTATION_LOCK), 0
-    ):
-        store._recover()
+    a live writer holds the lock. A dead writer never causes a skip.
+    Logs whether recovery ran or was skipped."""
+    name = f"{type(store).__name__} at {store.root}"
+    try:
+        with flock(os.path.join(store.root, MUTATION_LOCK), 0):
+            store._recover()
+    except TimeoutError:
+        log.info("%s: recovery skipped, a live writer holds the lock", name)
+        return
+    log.info("%s: recovered crash leftovers", name)
 
 
 def write_json(path, obj) -> None:

@@ -23,10 +23,11 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import durable
+from . import durable, local_serve
 from .sources.snapshot_table import SnapshotTable
 from .vector_store import IvfIndex
 
@@ -324,8 +325,13 @@ def hybrid_rrf_serve(
     query on BOTH legs. Here each leg reads only what its index prunes
     to: the lexical leg touches |query-term buckets| / num_buckets of
     the postings (SCALE_r10: 1.79 s vs 7.92 s brute at 1M docs) and the
-    dense leg scans nprobe cells. Output schema matches the brute twin:
-    (doc_id, lex_rank, vec_rank, rrf_score).
+    dense leg scans nprobe cells. Each leg takes its own path (small
+    reads in the driver, larger ones as Spark plans, see
+    :mod:`.local_serve`); a Spark leg is collected, since it holds at
+    most ``shortlist`` rows. The fusion always runs in Python and the
+    answer is one Arrow-backed DataFrame, so small reads launch no Spark
+    job. Output schema matches the brute twin: (doc_id, lex_rank,
+    vec_rank, rrf_score).
 
     Agreement is pytest-pinned against the brute query: the BM25 leg is
     score-identical by the TextIndex agreement pin, and the ANN leg
@@ -334,9 +340,10 @@ def hybrid_rrf_serve(
     trades the dense leg's recall for cell pruning exactly as
     ``IvfIndex.search`` documents.
 
-    RRF is rank-only (score scales never mix), so the fusion itself is
-    engine-exact: 1/(rrf_k + rank) summed over the legs a doc appears
-    in, descending, doc_id tiebreak.
+    RRF is rank-only (score scales never mix): 1/(rrf_k + rank) summed
+    over the legs a doc appears in (a full outer join of the legs on
+    the id), rounded as Spark's ``round(·, 6)`` rounds, descending,
+    doc_id tiebreak.
 
     ``dense`` picks the ANN leg's physical path: ``"exact"`` (default)
     scans the probed cells' embedding column; ``"pq"`` (requires an
@@ -349,38 +356,47 @@ def hybrid_rrf_serve(
     (pytest-pinned); at serving settings it trades recall for IO
     exactly as ``search_pq`` documents.
     """
-    lex = text_index.search(query_terms, k=shortlist).select(
-        "doc_id", F.col("rank").alias("lex_rank")
-    )
+    lex = text_index._serve(query_terms, k=shortlist)
     if dense == "pq":
-        vec_raw = vector_index.search_pq(
+        vec = vector_index.search_pq(
             query_vec,
             k=shortlist,
             nprobe=nprobe,
             rerank=(pq_rerank if pq_rerank is not None else 4 * shortlist),
         )
     elif dense == "exact":
-        vec_raw = vector_index.search(query_vec, k=shortlist, nprobe=nprobe)
+        vec = vector_index._serve(query_vec, k=shortlist, nprobe=nprobe)
     else:
         raise ValueError(f"dense must be exact|pq, got {dense!r}")
-    vec = vec_raw.select(
-        F.col("vec_id").alias("doc_id"), F.col("rank").alias("vec_rank")
-    )
-    rrf = F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("lex_rank")), F.lit(0.0)
-    ) + F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("vec_rank")), F.lit(0.0)
-    )
-    return (
-        lex.join(vec, "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            "lex_rank",
-            "vec_rank",
-            F.round(rrf, 6).alias("rrf_score"),
-        )
-        .orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-        .limit(k)
+    legs: dict = {}
+    for leg, (result, id_col) in enumerate(((lex, "doc_id"), (vec, "vec_id"))):
+        for doc, rank in local_serve.rows(result, (id_col, "rank")):
+            legs.setdefault(doc, ([], []))[leg].append(rank)
+
+    def rrf(rank):
+        return 1.0 / (rrf_k + rank) if rank is not None else 0.0
+
+    fused = [
+        (doc, lr, vr, local_serve.spark_round(rrf(lr) + rrf(vr), 6))
+        for doc, (lrs, vrs) in legs.items()
+        for lr in lrs or [None]
+        for vr in vrs or [None]
+    ]
+    fused.sort(key=lambda r: (-r[3], r[0]))
+    fused = fused[: max(0, k)]
+    # the legs' id type; when they differ (int vs long), Arrow infers
+    # the wider one, as the join's type coercion did
+    lex_t = local_serve.arrow_type(lex, "doc_id")
+    doc_t = lex_t if lex_t == local_serve.arrow_type(vec, "vec_id") else None
+    cols = list(zip(*fused)) or [(), (), (), ()]
+    return local_serve.answer(
+        text_index.spark,
+        pa.table({
+            "doc_id": pa.array(cols[0], doc_t),
+            "lex_rank": pa.array(cols[1], pa.int32()),
+            "vec_rank": pa.array(cols[2], pa.int32()),
+            "rrf_score": pa.array(cols[3], pa.float64()),
+        }),
     )
 
 

@@ -79,6 +79,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _worker_pythonpath() -> str:
+    """This package's parent directory, then the entries of the
+    environment's ``PYTHONPATH`` (without duplicates)."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entries = [parent] + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return os.pathsep.join(dict.fromkeys(e for e in entries if e))
+
+
 def get_spark(
     app_name: str = "mcp-hubspot-spark",
     master: str | None = None,
@@ -90,6 +98,10 @@ def get_spark(
     ``shuffle_partitions`` defaults to 2x the local core count — with AQE
     coalescing enabled the exact number matters little locally; on a real
     cluster you would size it to total cores * 2-3 and let AQE shrink.
+
+    ``spark.executorEnv.PYTHONPATH`` puts this package's parent directory
+    ahead of the caller's ``PYTHONPATH``, so Python workers (pandas UDFs)
+    import the package however the driver found it.
     """
     master = master or os.environ.get(
         "SPARK_GRAFT_MASTER", f"local[{default_parallelism()}]"
@@ -99,6 +111,7 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions or 2 * default_parallelism()
     )
+    conf["spark.executorEnv.PYTHONPATH"] = _worker_pythonpath()
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -8,12 +8,16 @@ many queries of one corpus. ``TextIndex.build()`` tokenizes ONCE and
 writes positional postings PARTITIONED BY (epoch, term-hash bucket);
 ``search()`` (BM25 top-k) and ``phrase_hits()`` (exact token-aligned
 phrase lookup) then read only the buckets their query terms hash to —
-partition pruning turns |query-term buckets| / num_buckets into a
-physical-IO fraction, the same build-once/query-many economics the IVF
-index gives vectors. The reference has no lexical index at all (its
-search surface is the FAISS flat vector scan, faiss_manager.py); this
-is beyond-reference serving infrastructure for the LLM-pipeline
-mandate.
+|query-term buckets| / num_buckets becomes a physical-IO fraction, the
+same build-once/query-many economics the IVF index gives vectors. A
+``search()`` whose buckets (plus tombstones) hold at most
+``local_serve.LOCAL_READ_MAX_BYTES`` is scored in the driver with
+pyarrow + numpy and launches no Spark job; larger reads, the batch
+reads and the phrase reads run as Spark plans with partition pruning,
+and the two BM25 paths agree bit for bit. The reference has no lexical
+index at all (its search surface is the FAISS flat vector scan,
+faiss_manager.py); this is beyond-reference serving infrastructure for
+the LLM-pipeline mandate.
 
 Layout under ``root/``:
 - ``postings/epoch=<e>/bucket=<b>/``: (term, doc_id, tf, positions
@@ -49,9 +53,12 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import durable
+from . import durable, local_serve
 from .operators.classifier import hash_bucket
 from .operators.text import tokens
 
@@ -532,19 +539,22 @@ class TextIndex:
 
     # ----------------------------------------------------------- reads
 
+    def _recover_leftovers(self) -> None:
+        """Reader-side recovery: run swap recovery when a compact's
+        leftovers are on disk — readers don't take the lock, and reading
+        a mid-crash layout would miss the postings directory."""
+        if (self.root / "_postings_new").exists() or (
+            self.root / "_postings_old"
+        ).exists():
+            durable.recover_if_idle(self)
+
     def _read_postings(self) -> DataFrame:
         """Postings minus tombstoned generations (a posting dies when a
         tombstone for its doc carries a LATER epoch; the max() over
         tombstones makes retried deletes collapse). Broadcast join — the
         tombstone table is small between compactions; a no-op
-        passthrough when none exists. Runs swap recovery first when a
-        compact's leftovers are on disk — readers don't take the lock,
-        and planning against a mid-crash layout would throw on the
-        missing directory anyway."""
-        if (self.root / "_postings_new").exists() or (
-            self.root / "_postings_old"
-        ).exists():
-            durable.recover_if_idle(self)
+        passthrough when none exists. Recovers a crashed compact first."""
+        self._recover_leftovers()
         reader = self.spark.read.parquet(str(self.root / "postings"))
         tomb = self.root / "tombstones"
         if tomb.exists():
@@ -562,6 +572,18 @@ class TextIndex:
                 .drop("_dead")
             )
         return reader
+
+    @staticmethod
+    def _buckets(terms: list[str], nb: int) -> list[int]:
+        """The buckets ``terms`` hash to: a driver-side replica of
+        classifier.hash_bucket (first 15 md5 hex digits as a long, mod
+        nb) — no Spark job to plan a query, and the build/query
+        agreement is pytest-pinned."""
+        import hashlib
+
+        return sorted(
+            {int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % nb for t in terms}
+        )
 
     def _pruned(self, terms: list[str]) -> DataFrame:
         """Postings for exactly ``terms``: the bucket IN-list prunes
@@ -586,20 +608,9 @@ class TextIndex:
         phrase can match across generations). That case needs the
         tombstone — use ``add(..., replace=True)`` or the explicit
         ``delete(ids, dead_epoch=epoch)`` pairing."""
-        import hashlib
-
         meta = self._meta_dict()
-        nb = meta["num_buckets"]
         reader = self._read_postings()
-        # driver-side replica of classifier.hash_bucket (first 15 md5 hex
-        # digits as a long, mod nb) — no Spark job to plan a query, and
-        # the build/query agreement is pytest-pinned
-        bucket_lits = sorted(
-            {
-                int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % nb
-                for t in terms
-            }
-        )
+        bucket_lits = self._buckets(terms, meta["num_buckets"])
         pruned = reader.filter(
             F.col("bucket").isin(bucket_lits) & F.col("term").isin(terms)
         )
@@ -634,11 +645,137 @@ class TextIndex:
         Lucene idf, same sorted-term fixed-order fold, with (N, avgdl)
         from meta and per-term df aggregated from the pruned read
         (corpus-global by construction). Returns (rank, doc_id, score).
+        Reads of at most ``local_serve.LOCAL_READ_MAX_BYTES`` are scored
+        in the driver (no Spark job), larger ones by the Spark plan; the
+        two agree bit for bit.
         """
+        return local_serve.answer(self.spark, self._serve(query_terms, k, k1=k1, b=b))
+
+    def _serve(
+        self,
+        query_terms: list[str],
+        k: int = 10,
+        *,
+        k1: float = 1.2,
+        b: float = 0.75,
+    ):
+        """``search``'s answer before wrapping: the local path's Arrow
+        table or the Spark path's plan."""
+        terms = sorted(set(t.lower() for t in query_terms))
+        postings, tombstones = self._search_files(terms)
+        if local_serve.use_local(
+            f"TextIndex.search at {self.root}", postings + tombstones
+        ):
+            result = self._search_local(terms, k, k1, b, postings, tombstones)
+            if result is not None:
+                return result
+        return self._search_spark(terms, k, k1, b)
+
+    def _search_files(self, terms: list[str]) -> tuple[list[str], list[str]]:
+        """The files a BM25 read of ``terms`` opens: every epoch's
+        posting files in the terms' buckets, and the tombstone files.
+        Recovers a crashed compact first, as ``_read_postings`` does."""
+        meta = self._meta_dict()
+        self._recover_leftovers()
+        buckets = self._buckets(terms, meta["num_buckets"])
+        post = self.root / "postings"
+        epochs = sorted(post.glob("epoch=*")) if post.exists() else []
+        postings = local_serve.data_files(
+            e / f"bucket={bk}" for e in epochs for bk in buckets
+        )
+        return postings, local_serve.data_files([self.root / "tombstones"])
+
+    def _search_local(
+        self,
+        terms: list[str],
+        k: int,
+        k1: float,
+        b: float,
+        postings: list[str],
+        tombstones: list[str],
+    ) -> pa.Table | None:
+        """``search`` over ``postings`` and ``tombstones``, in the driver:
+        the Spark plan's tombstone rule, newest-generation rule, df
+        count, idf (``StrictMath.log``) and per-doc sorted-term fold,
+        replayed in numpy. Never reads ``positions``. None when the
+        index holds no posting file to type an answer with."""
         meta = self._meta_dict()
         n_docs = float(meta["n_docs"])
         avgdl = meta["sum_dl"] / n_docs if n_docs else 1.0
-        terms = sorted(set(t.lower() for t in query_terms))
+        cols = ["term", "doc_id", "tf", "dl"]
+        post = local_serve.read(postings, cols, partition_cols=["epoch"])
+        if post is None:
+            schema = local_serve.schema_of(self.root / "postings", cols)
+            if schema is None:
+                return None
+            post = schema.empty_table().append_column(
+                "epoch", pa.array([], pa.int32())
+            )
+        post = post.filter(pc.is_in(post["term"], value_set=pa.array(terms, pa.string())))
+        if tombstones:
+            dead = (
+                local_serve.read(tombstones, ["doc_id", "dead_epoch"])
+                .group_by("doc_id")
+                .aggregate([("dead_epoch", "max")])
+            )
+            post = post.join(dead, "doc_id", join_type="left outer")
+            alive = pc.or_kleene(
+                pc.is_null(post["dead_epoch_max"]),
+                pc.greater_equal(post["epoch"], post["dead_epoch_max"]),
+            )
+            post = post.filter(alive).drop_columns(["dead_epoch_max"])
+        doc_key = local_serve.dense_key(post["doc_id"])
+        term_key = local_serve.dense_key(post["term"])
+        if int(meta["last_epoch"]) > 0:
+            # the newest generation per (doc, term): the last row of each
+            # group once sorted by (doc, term, epoch)
+            order = np.lexsort([post["epoch"].to_numpy(), term_key, doc_key])
+            d, t = doc_key[order], term_key[order]
+            last = np.r_[(d[1:] != d[:-1]) | (t[1:] != t[:-1]), True]
+            keep = order[last] if len(order) else order
+            post, doc_key, term_key = post.take(keep), doc_key[keep], term_key[keep]
+        # per-term document frequency over the read, then the idf
+        idf_of = np.array([
+            local_serve.strict_log(
+                self.spark, 1.0 + (n_docs - float(n) + 0.5) / (float(n) + 0.5)
+            )
+            for n in np.bincount(term_key)
+        ])
+        tf = post["tf"].to_numpy().astype(np.float64)
+        dl = post["dl"].to_numpy().astype(np.float64)
+        contrib = (idf_of[term_key] * (tf * (k1 + 1.0))) / (
+            tf + k1 * ((1.0 - b) + b * dl / avgdl)
+        )
+        # per doc, fold 0.0 + c in (term, c) order as sort_array does
+        order = np.lexsort([contrib, term_key, doc_key])
+        d = doc_key[order]
+        first = np.r_[True, d[1:] != d[:-1]] if len(d) else np.zeros(0, bool)
+        group = np.cumsum(first) - 1
+        starts = np.flatnonzero(first)
+        pos = np.arange(len(order)) - starts[group]
+        score = np.zeros(len(starts))
+        c = contrib[order]
+        for p in range(int(pos.max(initial=-1)) + 1):
+            at = pos == p
+            score[group[at]] = score[group[at]] + c[at]
+        docs = post["doc_id"].take(order[starts])
+        top = local_serve.top_k(score, docs, k, descending=True)
+        return pa.Table.from_arrays(
+            [local_serve.rank_column(len(top)), docs.take(top), pa.array(score[top])],
+            schema=pa.schema([
+                local_serve.RANK,
+                post.schema.field("doc_id").with_nullable(True),
+                ("score", pa.float64()),
+            ]),
+        )
+
+    def _search_spark(
+        self, terms: list[str], k: int, k1: float, b: float
+    ) -> DataFrame:
+        """``search`` as a Spark plan over the partition-pruned postings."""
+        meta = self._meta_dict()
+        n_docs = float(meta["n_docs"])
+        avgdl = meta["sum_dl"] / n_docs if n_docs else 1.0
         post = self._pruned(terms).select("term", "doc_id", "tf", "dl")
         dfreq = post.groupBy("term").agg(
             F.count(F.lit(1)).cast("double").alias("_df")

@@ -7,10 +7,16 @@ merge (reference ``faiss_manager.py:26-27,41-61,90-104,221-296``).
 
 Spark-first translation: ONE parquet (or Delta) table partitioned by
 ``date``. Appending is a partitioned write; retention is partition pruning +
-physical partition delete; search is a filter on the date partition column
-(static pruning — only retained days are scanned) followed by the brute-force
-k-NN plan. Vectors and metadata live in the same rows, so the positional
-index/sidecar alignment the reference maintains by hand cannot drift.
+physical partition delete. Vectors and metadata live in the same rows, so
+the positional index/sidecar alignment the reference maintains by hand
+cannot drift.
+
+Search reads only the retained days. A small read (at most
+``local_serve.LOCAL_READ_MAX_BYTES`` of files) is answered in the driver
+with pyarrow + numpy and launches no Spark job, as the reference's
+in-process flat search does; a larger one runs the brute-force k-NN plan,
+whose date filter prunes partitions at planning time. Both return the
+same rows bit for bit (:mod:`.local_serve`).
 
 At 100 TB: the date partitioning bounds every query's scan to the retention
 window; within a day, files are splittable so the distance scan parallelizes
@@ -24,10 +30,12 @@ from collections.abc import Sequence
 from datetime import date
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import durable
+from . import durable, local_serve
 from .operators.vector import knn
 
 VECTOR_STORE_COLUMNS = ("date", "vec_id", "embedding", "type", "data_json", "extras")
@@ -153,8 +161,72 @@ class VectorStore:
         types: Sequence[str] | None = None,
     ) -> DataFrame:
         """Exact k-NN over all retained partitions (V4/V5,
-        faiss_manager.py:254-296): partition-pruned scan → distance →
-        per-partition top-k → global merge → rank + similarity=1-d/2."""
+        faiss_manager.py:254-296): distance → top-k by (distance, vec_id)
+        → rank + similarity=1-d/2. Answered in the driver when the
+        retained days' files are small (:mod:`.local_serve`), else by the
+        partition-pruned Spark plan."""
+        keep = self._present_dates(as_of)[: self.max_days]
+        files = local_serve.data_files(Path(self.path) / f"date={d}" for d in keep)
+        if local_serve.use_local(f"VectorStore.search at {self.path}", files):
+            result = self._search_local(query_vec, k, types, files)
+        else:
+            result = self._search_spark(query_vec, k, as_of, types)
+        return local_serve.answer(self.spark, result)
+
+    _SEARCH_SCHEMA = pa.schema([
+        local_serve.RANK,
+        ("vec_id", pa.int64()),
+        ("distance", pa.float64()),
+        ("similarity", pa.float64()),
+        ("type", pa.string()),
+        ("data_json", pa.string()),
+    ])
+
+    def _search_local(
+        self,
+        query_vec: Sequence[float],
+        k: int,
+        types: Sequence[str] | None,
+        files: Sequence[str],
+    ) -> pa.Table:
+        """``search`` over the retained days' ``files``, in the driver."""
+        cols = {
+            "vec_id": pa.int64(),
+            "type": pa.string(),
+            "data_json": pa.string(),
+            "embedding": pa.list_(pa.float64()),
+        }
+        rows = local_serve.read(files, list(cols), cast=cols)
+        if rows is None:
+            rows = pa.schema(list(cols.items())).empty_table()
+        if types:
+            rows = rows.filter(
+                pc.is_in(rows["type"], value_set=pa.array(list(types), pa.string()))
+            )
+        X, valid = local_serve.vectors(rows["embedding"], len(query_vec))
+        dist, sim = local_serve.knn_scores(X, valid, query_vec, "l2")
+        top = local_serve.top_k(dist, rows["vec_id"], k, null=~valid)
+        return pa.Table.from_arrays(
+            [
+                local_serve.rank_column(len(top)),
+                rows["vec_id"].take(top),
+                local_serve.nullable(dist[top], ~valid[top]),
+                local_serve.nullable(sim[top], ~valid[top]),
+                rows["type"].take(top),
+                rows["data_json"].take(top),
+            ],
+            schema=self._SEARCH_SCHEMA,
+        )
+
+    def _search_spark(
+        self,
+        query_vec: Sequence[float],
+        k: int,
+        as_of: date | None,
+        types: Sequence[str] | None,
+    ) -> DataFrame:
+        """``search`` as a Spark plan: partition-pruned scan → distance →
+        per-partition top-k → global merge."""
         base = self.retained(as_of)
         if types:
             base = base.filter(F.col("type").isin(list(types)))
@@ -182,13 +254,17 @@ class IvfIndex:
     sample), assigns every vector to its nearest cell, and writes the
     table PARTITIONED BY cell_id with the centroids alongside;
     ``search()`` picks the nprobe nearest centroids driver-side (tiny,
-    bounded) and scans ONLY those partitions — Spark's partition pruning
-    turns nprobe/n_cells into a physical-IO fraction, the same reason
-    FAISS IVF beats flat scan (reference ``faiss_manager.py`` uses
-    IndexFlatL2; this is the upgrade path its per-day sharding gestures
-    at). Build once / query many: the index cost is amortized across
-    every subsequent query, unlike the in-query training path
-    (``workload.ivf_search``) which exists for oracle-checkability.
+    bounded) and reads ONLY those cells — nprobe/n_cells becomes a
+    physical-IO fraction, the same reason FAISS IVF beats flat scan
+    (reference ``faiss_manager.py`` uses IndexFlatL2; this is the upgrade
+    path its per-day sharding gestures at). Probed cells of at most
+    ``local_serve.LOCAL_READ_MAX_BYTES`` are ranked in the driver with
+    pyarrow + numpy and launch no Spark job; larger probes, ``where``
+    filters, ``search_pq`` and ``search_batch`` run as Spark plans whose
+    partition pruning does the same selection. Build once / query many:
+    the index cost is amortized across every subsequent query, unlike
+    the in-query training path (``workload.ivf_search``) which exists
+    for oracle-checkability.
 
     The mutators (build/add/delete/compact) are single-writer under
     :mod:`.durable`'s lock; searches take no lock.
@@ -199,6 +275,18 @@ class IvfIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.root = Path(str(path))
+
+    def _cells(self) -> DataFrame:
+        """The cell table, with its ``cell_id`` partition column."""
+        cells = str(self.root / "cells")
+        return self.spark.read.option("basePath", cells).parquet(cells)
+
+    def _recover_leftovers(self) -> None:
+        """Reader-side recovery: a hard-crashed swap can leave a cell's
+        only rows under ``_swap_backup``; restore them (lock-guarded,
+        non-blocking) so a post-crash read sees the full index."""
+        if (self.root / "_swap_backup").exists():
+            durable.recover_if_idle(self)
 
     def _recover(self) -> None:
         """Restore any cell whose ONLY copy survives under
@@ -663,10 +751,7 @@ class IvfIndex:
         Untouched cells keep their exact files; the manifest, when
         exported, is refreshed so a server never probes removed rows.
         Returns the number of rows deleted."""
-        cells_root = self.root / "cells"
-        base = self.spark.read.option("basePath", str(cells_root)).parquet(
-            str(cells_root)
-        )
+        base = self._cells()
         if isinstance(ids, DataFrame):
             col = id_col if id_col in ids.columns else ids.columns[0]
             ids_df = ids.select(F.col(col).alias(id_col)).distinct()
@@ -707,9 +792,7 @@ class IvfIndex:
         )
         if not affected:
             return []
-        base = self.spark.read.option("basePath", str(cells_root)).parquet(
-            str(cells_root)
-        )
+        base = self._cells()
         self._swap_cells(base.filter(F.col("cell_id").isin(affected)), affected)
         return affected
 
@@ -771,15 +854,104 @@ class IvfIndex:
         id_cols: Sequence[str] = ("vec_id",),
         where=None,
     ) -> DataFrame:
-        """``where`` (an optional Column predicate over the cell rows)
+        """Exact top-k over the ``nprobe`` cells nearest the query:
+        (rank, *id_cols, distance, similarity). Without ``where``, probed
+        cells of at most ``local_serve.LOCAL_READ_MAX_BYTES`` are ranked
+        in the driver (no Spark job); otherwise the pruned Spark scan
+        answers, with the same rows bit for bit.
+
+        ``where`` (an optional Column predicate over the cell rows)
         makes this a filtered / hybrid search: the predicate applies
         INSIDE the pruned cell scan — pushed to the parquet reader when
         expressible — so metadata-filtered kNN costs the same IO as the
         unfiltered probe, never a post-join. Note the standard IVF
         caveat: a highly selective filter empties probed cells before k
         hits are found; raise nprobe for filtered queries."""
+        return local_serve.answer(
+            self.spark,
+            self._serve(query_vec, k, nprobe, vec_col, id_cols, where),
+        )
+
+    def _serve(
+        self,
+        query_vec: Sequence[float],
+        k: int = 10,
+        nprobe: int = 2,
+        vec_col: str = "embedding",
+        id_cols: Sequence[str] = ("vec_id",),
+        where=None,
+    ):
+        """``search``'s answer before wrapping: the local path's Arrow
+        table or the Spark path's plan."""
         query_vec, probe, metric, _ = self._probe(query_vec, nprobe)
-        pruned = self._pruned_cells(probe)
+        files = self._cell_files(probe)
+        if local_serve.use_local(f"IvfIndex.search at {self.root}", files, where):
+            result = self._search_local(query_vec, metric, files, k, vec_col, id_cols)
+            if result is not None:
+                return result
+        return self._search_spark(query_vec, probe, metric, k, vec_col, id_cols, where)
+
+    def _cell_files(self, probe: Sequence[int]) -> list[str]:
+        """The data files of the probed cells, listed from the cell
+        directories: ``_swap_cells`` renames cells before it re-exports
+        the manifest, so the manifest's file list can be stale."""
+        cells = self.root / "cells"
+        return local_serve.data_files(cells / f"cell_id={c}" for c in probe)
+
+    def _search_local(
+        self,
+        query_vec: Sequence[float],
+        metric: str,
+        files: Sequence[str],
+        k: int,
+        vec_col: str = "embedding",
+        id_cols: Sequence[str] = ("vec_id",),
+    ) -> pa.Table | None:
+        """``search`` over the probed cells' ``files``, in the driver.
+        None when the index holds no cell file to type an answer with;
+        the Spark path then raises its own error."""
+        stored = [c for c in id_cols if c != "cell_id"]
+        part = ["cell_id"] if "cell_id" in id_cols else []
+        rows = local_serve.read(
+            files, [*stored, vec_col],
+            cast={vec_col: pa.list_(pa.float64())}, partition_cols=part,
+        )
+        if rows is None:
+            schema = local_serve.schema_of(self.root / "cells", [*stored, vec_col])
+            if schema is None:
+                return None
+            rows = schema.empty_table()
+            for c in part:
+                rows = rows.append_column(c, pa.array([], pa.int32()))
+        X, valid = local_serve.vectors(rows[vec_col], len(query_vec))
+        dist, sim = local_serve.knn_scores(X, valid, query_vec, metric)
+        top = local_serve.top_k(dist, rows[id_cols[0]], k, null=~valid)
+        fields = [rows.schema.field(c).with_nullable(True) for c in id_cols]
+        return pa.Table.from_arrays(
+            [
+                local_serve.rank_column(len(top)),
+                *[rows[c].take(top) for c in id_cols],
+                local_serve.nullable(dist[top], ~valid[top]),
+                local_serve.nullable(sim[top], ~valid[top]),
+            ],
+            schema=pa.schema([
+                local_serve.RANK, *fields,
+                ("distance", pa.float64()), ("similarity", pa.float64()),
+            ]),
+        )
+
+    def _search_spark(
+        self,
+        query_vec: Sequence[float],
+        probe: Sequence[int],
+        metric: str,
+        k: int,
+        vec_col: str = "embedding",
+        id_cols: Sequence[str] = ("vec_id",),
+        where=None,
+    ) -> DataFrame:
+        """``search`` as a Spark plan over the partition-pruned cells."""
+        pruned = self._pruned_cells(list(probe))
         if where is not None:
             pruned = pruned.filter(where)
         return knn(
@@ -894,18 +1066,14 @@ class IvfIndex:
         a join side. Embeddings are cast to double (float→double is
         exact) so downstream arithmetic matches the batch operators'
         ``array<double>`` convention bit-for-bit."""
-        if (self.root / "_swap_backup").exists():
-            durable.recover_if_idle(self)
+        self._recover_leftovers()
         ids = list(ids)
         if len(ids) > 10_000:
             raise ValueError(
                 f"lookup() is a bounded point-lookup ({len(ids)} ids); "
                 "join against the cells table for bulk reads"
             )
-        cells = self.spark.read.option(
-            "basePath", str(self.root / "cells")
-        ).parquet(str(self.root / "cells"))
-        return cells.filter(F.col(id_col).isin(ids)).select(
+        return self._cells().filter(F.col(id_col).isin(ids)).select(
             id_col,
             F.col(vec_col).cast("array<double>").alias(vec_col),
         )
@@ -921,30 +1089,13 @@ class IvfIndex:
         normalized) query, the nprobe cell ids to scan, the metric,
         and the probed cells' centroids (needed by the residual-PQ
         serving path, free to everyone else — they're already in
-        hand)."""
+        hand). A query whose length is not the index's dimension
+        raises ``ValueError``: ranking would otherwise see only a
+        prefix of it, and every distance would be null."""
         import math
 
-        # a hard-crashed swap can leave a cell's only rows under
-        # _swap_backup; restore them (lock-guarded, non-blocking) so a
-        # post-crash search sees the full index
-        if (self.root / "_swap_backup").exists():
-            durable.recover_if_idle(self)
-
+        self._recover_leftovers()
         metric = self.metric()
-        query_vec = [float(x) for x in query_vec]
-        if self._opq_meta():
-            # rotate the query into the index's (rotated) space —
-            # d x d driver-side matmul, trivial next to the scan
-            rot = self._load_rotation()
-            query_vec = [
-                sum(w * x for w, x in zip(row, query_vec)) for row in rot
-            ]
-        if metric == "cosine":
-            # the index stores unit vectors; normalize the query so the
-            # cell-selection geometry matches the assignment geometry
-            qn = math.sqrt(sum(x * x for x in query_vec))
-            if qn > 0:
-                query_vec = [x / qn for x in query_vec]
         # serving path: centroid selection from the manifest costs zero
         # Spark jobs (a query should only ever launch the ONE pruned-scan
         # job); the parquet centroids remain the source of truth when no
@@ -961,6 +1112,25 @@ class IvfIndex:
                     str(self.root / "centroids")
                 ).collect()
             ]
+        query_vec = [float(x) for x in query_vec]
+        if cent_pairs and len(query_vec) != len(cent_pairs[0][1]):
+            raise ValueError(
+                f"query has {len(query_vec)} dimensions; the index at "
+                f"{self.root} has {len(cent_pairs[0][1])}"
+            )
+        if self._opq_meta():
+            # rotate the query into the index's (rotated) space —
+            # d x d driver-side matmul, trivial next to the scan
+            rot = self._load_rotation()
+            query_vec = [
+                sum(w * x for w, x in zip(row, query_vec)) for row in rot
+            ]
+        if metric == "cosine":
+            # the index stores unit vectors; normalize the query so the
+            # cell-selection geometry matches the assignment geometry
+            qn = math.sqrt(sum(x * x for x in query_vec))
+            if qn > 0:
+                query_vec = [x / qn for x in query_vec]
         # rank cells by the SAME _cell_distance geometry the rows were
         # assigned with (l2 → squared L2; cosine → 1-cos against the
         # non-unit mean centroid), so partial-nprobe probes the cells
@@ -987,11 +1157,8 @@ class IvfIndex:
         return query_vec, probe, metric, probed_cents
 
     def _pruned_cells(self, probe: list[int]) -> DataFrame:
-        cells = self.spark.read.option(
-            "basePath", str(self.root / "cells")
-        ).parquet(str(self.root / "cells"))
         # literal IN-list on the partition column → planning-time pruning
-        return cells.filter(F.col("cell_id").isin(probe))
+        return self._cells().filter(F.col("cell_id").isin(probe))
 
     # Literal-vs-join switch for residual ADC serving, from the
     # SCALE_r10 characterization (200k rows, 8 queries, m=8): the

@@ -377,3 +377,48 @@ def test_lock_and_atomic_replace_live_only_in_durable():
             ):
                 found.append(f"{where} write_text(json.dumps(...))")
     assert found == []
+
+
+class _Store:
+    """The smallest store ``durable`` serves: a root, a lock budget and
+    a recovery that counts its runs."""
+
+    LOCK_TIMEOUT_S = 1.0
+
+    def __init__(self, root):
+        self.root = str(root)
+        self.recovered = 0
+
+    def _recover(self):
+        self.recovered += 1
+
+    @durable.mutator
+    def add(self, fail=False):
+        if fail:
+            raise RuntimeError("boom")
+        return "added"
+
+
+def test_mutations_and_recoveries_are_logged(tmp_path, caplog):
+    """Every mutator call logs its store class, root, method, outcome
+    and elapsed seconds; reader-side recovery logs whether it ran or
+    skipped for a live writer."""
+    import logging
+
+    caplog.set_level(logging.INFO, logger="mcp_hubspot_spark.durable")
+    store = _Store(tmp_path)
+    assert store.add() == "added"
+    with pytest.raises(RuntimeError):
+        store.add(fail=True)
+    durable.recover_if_idle(store)
+    with durable.flock(tmp_path / durable.MUTATION_LOCK, 0):
+        durable.recover_if_idle(store)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 4 and store.recovered == 3
+    for msg, outcome in zip(msgs[:2], ("ok", "failed")):
+        assert msg.startswith(f"_Store.add at {tmp_path}: {outcome} in ")
+        assert msg.endswith(" s")
+    assert msgs[2] == f"_Store at {tmp_path}: recovered crash leftovers"
+    assert msgs[3] == (
+        f"_Store at {tmp_path}: recovery skipped, a live writer holds the lock"
+    )

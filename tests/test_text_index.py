@@ -114,12 +114,13 @@ def test_driver_hash_replica_matches_expression(spark):
 
 
 def test_search_plan_prunes_partitions_and_positions(spark, built):
-    """The BM25 read must (a) prune bucket partitions at planning time
-    and (b) never read the positions column."""
+    """The Spark BM25 plan must (a) prune bucket partitions at planning
+    time and (b) never read the positions column. (Small reads are
+    answered locally; test_local_serve audits that path's files.)"""
     import io
     from contextlib import redirect_stdout
 
-    df = built.search(["spark", "window"], k=5)
+    df = built._search_spark(["spark", "window"], 5, 1.2, 0.75)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain(True)

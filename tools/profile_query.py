@@ -34,8 +34,6 @@ def main() -> None:
     names = sys.argv[2:]
     suffix = os.environ.get("SPARK_GRAFT_PLAN_SUFFIX", "before")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repo = str(Path(__file__).resolve().parent.parent)
-    os.environ["PYTHONPATH"] = repo + os.pathsep + os.environ.get("PYTHONPATH", "")
     spark = get_spark(app_name="profile_query")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
