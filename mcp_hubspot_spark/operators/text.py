@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.scalars import memo_expr
+from .topk import grouped_top_k
 
 _WS = r"\s+"
 
@@ -545,12 +546,37 @@ def bm25_scores(
     are bit-stable across partitionings (and engines).
     """
     contrib = _bm25_contrib(df, query_terms, text_col, id_col, k1, b)
-    return contrib.groupBy(id_col).agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("_term", "_c"))),
-            F.lit(0.0),
-            lambda acc, s: acc + s.getField("_c"),
-        ).alias("score")
+    return contrib.groupBy(id_col).agg(sorted_term_sum("_term").alias("score"))
+
+
+def bm25_weight(
+    tf: Column,
+    dl: Column,
+    df: Column,
+    n: Column,
+    avgdl: Column,
+    k1: float,
+    b: float,
+) -> Column:
+    """One term's BM25 contribution to one document: Lucene idf
+    ``ln(1 + (N - df + 0.5)/(df + 0.5))`` times the saturated,
+    length-normalized term frequency. Doubles in, double out."""
+    idf = F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
+    return (
+        idf
+        * (tf * F.lit(k1 + 1.0))
+        / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl))
+    )
+
+
+def sorted_term_sum(term_col: str) -> Column:
+    """Aggregate: the sum of a group's BM25 contributions ``_c`` folded
+    in sorted ``term_col`` order from 0.0 — a fixed-order float sum, so
+    scores are bit-stable across partitionings (and engines)."""
+    return F.aggregate(
+        F.sort_array(F.collect_list(F.struct(term_col, "_c"))),
+        F.lit(0.0),
+        lambda acc, s: acc + s.getField("_c"),
     )
 
 
@@ -566,10 +592,11 @@ def _bm25_contrib(
     corpus scan — the shared front half of :func:`bm25_scores` and
     :func:`bm25_topk_batch`. Tokens are filtered to the term list
     map-side before the explode, so exploded rows are bounded by
-    |terms| * matching docs; df/N/avgdl are tiny broadcast aggregates.
+    |terms| * matching docs; df/N/avgdl are tiny broadcast aggregates,
+    and the weight is :func:`bm25_weight`, as ``TextIndex`` scores.
     Query terms are case-folded HERE so every caller (``bm25_scores``,
-    ``bm25_topk_batch``, and through them the hybrid/TextIndex twins)
-    matches the lowercased corpus tokens identically — r11's batch
+    ``bm25_topk_batch``, and through them the hybrid query) matches
+    the lowercased corpus tokens identically — r11's batch
     operator lowercased but the one-query path did not, so
     ``bm25_scores(["Spark"])`` matched nothing while its batch twin
     matched (ADVICE r11). Returns (id_col, _term, _c)."""
@@ -604,21 +631,9 @@ def _bm25_contrib(
         .select(
             id_col,
             "_term",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("_n") - F.col("_df") + F.lit(0.5))
-                    / (F.col("_df") + F.lit(0.5))
-                )
-                * (F.col("_tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("_tf")
-                    + F.lit(k1)
-                    * (
-                        F.lit(1.0 - b)
-                        + F.lit(b) * F.col("_dl") / F.col("_avgdl")
-                    )
-                )
+            bm25_weight(
+                F.col("_tf"), F.col("_dl"), F.col("_df"),
+                F.col("_n"), F.col("_avgdl"), k1, b,
             ).alias("_c"),
         )
     )
@@ -641,17 +656,15 @@ def bm25_topk_batch(
     tf aggregate — term df is corpus-global so it is shared across
     queries by construction), then a tiny broadcast (query_id, term)
     map fans each contribution into the queries that asked for that
-    term, each query folds its own contributions in sorted term order
-    (the same fixed-order fold as :func:`bm25_scores`, so per-query
-    results are bit-identical to the one-query operator — pinned), and
-    rank-k survives a per-query window whose input is already reduced
-    to matching docs. Returns (query_id, rank, doc_id, score).
+    term, each query folds its own contributions by
+    :func:`sorted_term_sum` (as :func:`bm25_scores` does, so per-query
+    results are bit-identical to the one-query operator), and
+    ``grouped_top_k`` keeps k per query from input already reduced to
+    matching docs. Returns (query_id, rank, doc_id, score).
 
     Scale: one corpus scan regardless of Q; the window partitions by
     query_id over match-proportional rows, never the corpus.
     """
-    from pyspark.sql.window import Window
-
     if not queries:
         raise ValueError("empty query batch")
     qmap = sorted(
@@ -666,20 +679,11 @@ def bm25_topk_batch(
     )
     per_q = contrib.join(F.broadcast(qdf), "_term")
     scored = per_q.groupBy("query_id", id_col).agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("_term", "_c"))),
-            F.lit(0.0),
-            lambda acc, s: acc + s.getField("_c"),
-        ).alias("score")
+        sorted_term_sum("_term").alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score")
-    )
+    return grouped_top_k(
+        scored, ["query_id"], [F.col("score").desc(), F.col(id_col).asc()], k
+    ).select("query_id", "rank", id_col, "score")
 
 
 def length_bucketed_batches(

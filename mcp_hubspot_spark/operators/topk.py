@@ -30,6 +30,31 @@ def top_k(
     return out
 
 
+def ranked_top_k(
+    df: DataFrame,
+    order: Sequence[Column],
+    k: int,
+    project: Sequence[Column | str] | None = None,
+) -> DataFrame:
+    """Global top-k with a 1-based ``rank`` column first, then
+    ``project`` (default: every column of ``df``).
+
+    TakeOrderedAndProject keeps k rows by ``order``, then ``row_number``
+    over the same order numbers them — the window sees k rows only. The
+    projection shares the window's select so derived columns (e.g. a
+    similarity from a distance) are computed in the TakeOrderedAndProject
+    over k rows, not in a Project above the window.
+    """
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    top = df.orderBy(*order).limit(k)
+    return top.select(
+        F.row_number().over(Window.orderBy(*order)).alias("rank"),
+        *(df.columns if project is None else project),
+    )
+
+
 def grouped_top_k(
     df: DataFrame,
     group: Sequence[str],

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import const_double_array, const_long_array, memo_expr
+from .topk import grouped_top_k, ranked_top_k, top_k
 
 
 def _vec_lit(vec: Sequence[float]) -> Column:
@@ -85,39 +86,40 @@ def knn(
     k=min(k, ntotal) clamp (faiss_manager.py:275) is implicit: limit never
     over-returns.
     """
-    q = _vec_lit(query_vec)
-    v = F.col(vec_col)
-    if metric == "l2":
-        dist = l2_squared(v, q)
-        sim = F.lit(1.0) - F.col("distance") / F.lit(2.0)
-    elif metric == "cosine":
-        # the query is a plan-time literal: fold its norm once driver-side
-        # (same double arithmetic as the Spark fold) instead of per row
-        import math
-
-        qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-        sim_expr = dot(v, q) / (l2_norm(v) * F.lit(qn))
-        dist = F.lit(1.0) - sim_expr
-        sim = F.lit(1.0) - F.col("distance")
-    else:
-        raise ValueError(f"unknown metric: {metric}")
+    # the query is a plan-time literal: fold its norm once driver-side
+    # (same double arithmetic as the Spark fold) instead of per row
+    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
+    dist, sim = _knn_exprs(F.col(vec_col), _vec_lit(query_vec), F.lit(qn), metric)
     scored = df.select(*id_cols, dist.alias("distance"))
     # deterministic boundary: tiebreak on the first id column. Nulls LAST:
     # a null/mismatched-dim embedding yields NULL distance, and Spark's
     # default asc ordering would put it at rank 1 of every search.
-    top = scored.orderBy(
-        F.col("distance").asc_nulls_last(), F.col(id_cols[0]).asc()
-    ).limit(k)
-    # rank over k rows only — the window sees the already-reduced top-k
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(F.col("distance").asc_nulls_last(), F.col(id_cols[0]).asc())
-    return top.select(
-        F.row_number().over(w).alias("rank"),
-        *id_cols,
-        F.col("distance"),
-        sim.alias("similarity"),
+    return ranked_top_k(
+        scored,
+        _nearest_first(id_cols[0]),
+        k,
+        [*id_cols, "distance", sim.alias("similarity")],
     )
+
+
+def _knn_exprs(
+    v: Column, q: Column, q_norm: Column, metric: str
+) -> tuple[Column, Column]:
+    """(distance, similarity) of vector ``v`` to query ``q`` of norm
+    ``q_norm``: L2² and 1 - d²/2, or 1 - cosine and the cosine. The
+    similarity reads the column aliased ``distance``."""
+    if metric == "l2":
+        return l2_squared(v, q), F.lit(1.0) - F.col("distance") / F.lit(2.0)
+    if metric == "cosine":
+        dist = F.lit(1.0) - dot(v, q) / (l2_norm(v) * q_norm)
+        return dist, F.lit(1.0) - F.col("distance")
+    raise ValueError(f"unknown metric: {metric}")
+
+
+def _nearest_first(id_col: str, dist_col: str = "distance") -> list[Column]:
+    """The (distance ASC NULLS LAST, id ASC) order every nearest-first
+    top-k ranks by."""
+    return [F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()]
 
 
 def knn_batch(
@@ -136,8 +138,6 @@ def knn_batch(
     For huge query sets, switch to block matmul via grouped pandas UDF
     (SURVEY §7 hardest-problems #1).
     """
-    from pyspark.sql.window import Window
-
     pairs = df.crossJoin(F.broadcast(queries))
     dist = l2_squared(F.col(vec_col), F.col(query_vec_col))
     scored = pairs.select(
@@ -145,19 +145,14 @@ def knn_batch(
         F.col(id_col),
         dist.alias("distance"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "rank",
-            id_col,
-            "distance",
-            (F.lit(1.0) - F.col("distance") / 2.0).alias("similarity"),
-        )
+    return grouped_top_k(
+        scored, [query_id_col], _nearest_first(id_col), k
+    ).select(
+        query_id_col,
+        "rank",
+        id_col,
+        "distance",
+        (F.lit(1.0) - F.col("distance") / 2.0).alias("similarity"),
     )
 
 
@@ -181,8 +176,6 @@ def knn_batch_matmul(
     single-query kNN, so the shuffle never carries the n×q cross product.
     """
     import numpy as np
-
-    from pyspark.sql.window import Window
 
     qids = [int(q) for q, _ in queries]
     Q = np.asarray([v for _, v in queries], dtype="float64")
@@ -220,14 +213,9 @@ def knn_batch_matmul(
     local = df.select(id_col, vec_col).mapInPandas(
         score, schema=f"query_id long, {id_col} long, distance double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "distance")
-    )
+    return grouped_top_k(
+        local, ["query_id"], [F.col("distance").asc(), F.col(id_col).asc()], k
+    ).select("query_id", "rank", id_col, "distance")
 
 
 def centroid_agg(vec_col: str = "embedding"):
@@ -685,23 +673,19 @@ def _adc_table(
     ]
 
 
-def _ranked_topk(
-    scored: DataFrame, k: int, id_cols: Sequence[str], dist_col: str
-) -> DataFrame:
-    """Shared ADC ranking tail: TakeOrderedAndProject top-k on
-    (distance, first id), then rank over the bounded k rows — the one
-    tiebreak/nulls-ordering definition both PQ serving paths use."""
-    from pyspark.sql.window import Window
-
-    top = scored.orderBy(
-        F.col(dist_col).asc_nulls_last(), F.col(id_cols[0]).asc()
-    ).limit(k)
-    w = Window.orderBy(
-        F.col(dist_col).asc_nulls_last(), F.col(id_cols[0]).asc()
-    )
-    return top.select(
-        F.row_number().over(w).alias("rank"), *id_cols, dist_col
-    )
+def _residual_tables(
+    codebooks: list[list[list[float]]],
+    query_vec: Sequence[float],
+    probed_cents: list[tuple[int, list[float]]],
+) -> list[list[list[float]]]:
+    """One :func:`_adc_table` per probed cell, of the query's residual
+    from that cell's centroid, in probed order."""
+    return [
+        _adc_table(
+            codebooks, [float(q) - float(c) for q, c in zip(query_vec, cent)]
+        )
+        for _, cent in probed_cents
+    ]
 
 
 def _adc_expr(
@@ -710,21 +694,26 @@ def _adc_expr(
     code_col: str,
 ) -> Column:
     """The shared ADC distance expression: fold the m x k query
-    distance table driver-side (bounded), inline it as a 2-D literal,
-    and chain m element_at lookups with explicit left-to-right adds —
-    the one definition both PQ serving paths rank by."""
+    distance table driver-side (bounded) and inline it as a 2-D literal
+    for :func:`_adc_lookup` — the one definition both PQ serving paths
+    rank by."""
+    table = const_double_array(_adc_table(codebooks, query_vec), depth=2)
+    return _adc_lookup(table, code_col, len(codebooks))
+
+
+def _adc_lookup(table: Column, code_col: str, m: int) -> Column:
+    """A row's ADC distance from its m x k query ``table``: m element_at
+    lookups chained by explicit left-to-right adds (no float fold per
+    row, fully codegen'd) — shared by the raw and both residual paths."""
     import functools
     import operator as op
 
-    m = len(codebooks)
-    table = _adc_table(codebooks, query_vec)
-    tlit = const_double_array(table, depth=2)
     code = F.col(code_col)
     return functools.reduce(
         op.add,
         [
             F.element_at(
-                F.element_at(tlit, mi + 1), F.element_at(code, mi + 1) + 1
+                F.element_at(table, mi + 1), F.element_at(code, mi + 1) + 1
             )
             for mi in range(m)
         ],
@@ -749,7 +738,7 @@ def pq_adc_topk(
     rerank the top-k' with exact distances when recall matters."""
     dist = _adc_expr(codebooks, query_vec, code_col)
     scored = df_codes.select(*id_cols, dist.alias("adc_distance"))
-    return _ranked_topk(scored, k, id_cols, "adc_distance")
+    return ranked_top_k(scored, _nearest_first(id_cols[0], "adc_distance"), k)
 
 
 def pq_search_rerank(
@@ -768,31 +757,16 @@ def pq_search_rerank(
     the shortlist stage is a TakeOrderedAndProject carrying the
     embedding column, so the expensive exact distance runs on
     ``shortlist`` rows total. On unclustered corpora (PQ's worst case)
-    this recovers most of the exact top-k that raw ADC ordering loses;
-    output matches :func:`knn` (rank, ids, distance, similarity)."""
-    from pyspark.sql.window import Window
-
+    this recovers most of the exact top-k that raw ADC ordering loses.
+    The exact stage is :func:`knn` over the shortlist, so the output is
+    knn's (rank, ids, distance, similarity)."""
     adc = _adc_expr(codebooks, query_vec, code_col)
-    short = (
-        df_codes.select(*id_cols, vec_col, adc.alias("_adc"))
-        .orderBy(F.col("_adc").asc_nulls_last(), F.col(id_cols[0]).asc())
-        .limit(shortlist)
+    short = top_k(
+        df_codes.select(*id_cols, vec_col, adc.alias("_adc")),
+        _nearest_first(id_cols[0], "_adc"),
+        shortlist,
     )
-    exact = l2_squared(F.col(vec_col), _vec_lit(query_vec))
-    top = (
-        short.select(*id_cols, exact.alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_cols[0]).asc())
-        .limit(k)
-    )
-    w = Window.orderBy(
-        F.col("distance").asc_nulls_last(), F.col(id_cols[0]).asc()
-    )
-    return top.select(
-        F.row_number().over(w).alias("rank"),
-        *id_cols,
-        "distance",
-        (F.lit(1.0) - F.col("distance") / F.lit(2.0)).alias("similarity"),
-    )
+    return knn(short, query_vec, k, vec_col, id_cols)
 
 
 def pq_encode_matmul(
@@ -1113,7 +1087,7 @@ def hamming_topk(
     plan)."""
     ham = _hamming_expr(query_vec, code_col, bits_per_word)
     scored = df_packed.select(*id_cols, ham.alias("hamming"))
-    return _ranked_topk(scored, k, id_cols, "hamming")
+    return ranked_top_k(scored, _nearest_first(id_cols[0], "hamming"), k)
 
 
 def hamming_topk_rerank(
@@ -1136,31 +1110,16 @@ def hamming_topk_rerank(
     expensive exact distance runs on ``shortlist`` rows total. Sign
     bits only preserve ANGULAR order (Charikar 2002), so recall comes
     from the rerank — recall@k rises with shortlist exactly as PQ's
-    does (SCALE recall rows). Output matches :func:`knn`
-    (rank, ids, distance, similarity)."""
-    from pyspark.sql.window import Window
-
+    does (SCALE recall rows). The exact stage is :func:`knn` over the
+    shortlist, so the output is knn's (rank, ids, distance,
+    similarity)."""
     ham = _hamming_expr(query_vec, code_col, bits_per_word)
-    short = (
-        df_packed.select(*id_cols, vec_col, ham.alias("_ham"))
-        .orderBy(F.col("_ham").asc_nulls_last(), F.col(id_cols[0]).asc())
-        .limit(shortlist)
+    short = top_k(
+        df_packed.select(*id_cols, vec_col, ham.alias("_ham")),
+        _nearest_first(id_cols[0], "_ham"),
+        shortlist,
     )
-    exact = l2_squared(F.col(vec_col), _vec_lit(query_vec))
-    top = (
-        short.select(*id_cols, exact.alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_cols[0]).asc())
-        .limit(k)
-    )
-    w = Window.orderBy(
-        F.col("distance").asc_nulls_last(), F.col(id_cols[0]).asc()
-    )
-    return top.select(
-        F.row_number().over(w).alias("rank"),
-        *id_cols,
-        "distance",
-        (F.lit(1.0) - F.col("distance") / F.lit(2.0)).alias("similarity"),
-    )
+    return knn(short, query_vec, k, vec_col, id_cols)
 
 
 def rotate_expr(vec, rotation: list[list[float]]) -> Column:
@@ -1296,37 +1255,19 @@ def pq_adc_topk_residual(
     nprobe — a when-chain per cell would copy the m-lookup chain nprobe
     times and blow the expression tree (measured 3.7x slower at
     nprobe=8). Still zero Python, still TakeOrderedAndProject."""
-    import functools
-    import operator as op
-
     if not probed_cents:
         raise ValueError("pq_adc_topk_residual: no probed cells")
-    m = len(codebooks)
-    tables = [  # [cell][m][code] in probed order — the shared builder
-        _adc_table(
-            codebooks,
-            [float(q) - float(c) for q, c in zip(query_vec, cent)],
-        )
-        for _, cent in probed_cents
-    ]
-    t3 = const_double_array(tables, depth=3)
+    # [cell][m][code] in probed order
+    t3 = const_double_array(
+        _residual_tables(codebooks, query_vec, probed_cents), depth=3
+    )
     probe_ids = const_long_array(cid for cid, _ in probed_cents)
     cell_pos = F.array_position(
         probe_ids, F.col(cell_col).cast("long")
     ).cast("int")
-    tab = F.element_at(t3, cell_pos)
-    code = F.col(code_col)
-    dist = functools.reduce(
-        op.add,
-        [
-            F.element_at(
-                F.element_at(tab, mi + 1), F.element_at(code, mi + 1) + 1
-            )
-            for mi in range(m)
-        ],
-    )
+    dist = _adc_lookup(F.element_at(t3, cell_pos), code_col, len(codebooks))
     scored = df_codes.select(*id_cols, dist.alias("adc_distance"))
-    return _ranked_topk(scored, k, id_cols, "adc_distance")
+    return ranked_top_k(scored, _nearest_first(id_cols[0], "adc_distance"), k)
 
 
 def pq_adc_topk_residual_join(
@@ -1355,47 +1296,30 @@ def pq_adc_topk_residual_join(
     broadcast ships nprobe·m·k doubles ONCE per executor instead of
     once per plan copy. Same output contract (same ``_adc_table``
     construction and fold order — identical distances, agreement-pinned
-    by pytest); ``IvfIndex.search_pq(adc_tables=...)`` picks between
-    the twins, keeping the literal only at/below 512 doubles where the
-    two are within host noise (and for SQL-oracle replayability)."""
-    import functools
-    import operator as op
-
+    by pytest); ``IvfIndex.search_pq`` picks between the twins by table
+    size, keeping the literal only at/below
+    ``IvfIndex.ADC_LITERAL_MAX_DOUBLES`` (512) where the two are within
+    host noise (and for SQL-oracle replayability)."""
     if not probed_cents:
         raise ValueError("pq_adc_topk_residual_join: no probed cells")
-    m = len(codebooks)
-    spark = df_codes.sparkSession
-    table_rows = [
-        (
-            int(cid),
-            _adc_table(
-                codebooks,
-                [float(q) - float(c) for q, c in zip(query_vec, cent)],
-            ),
-        )
-        for cid, cent in probed_cents
-    ]
-    tdf = spark.createDataFrame(
-        table_rows, "_adc_cell long, _adc_tab array<array<double>>"
+    tdf = df_codes.sparkSession.createDataFrame(
+        [
+            (int(cid), table)
+            for (cid, _), table in zip(
+                probed_cents,
+                _residual_tables(codebooks, query_vec, probed_cents),
+            )
+        ],
+        "_adc_cell long, _adc_tab array<array<double>>",
     )
     joined = df_codes.join(
         F.broadcast(tdf),
         F.col(cell_col).cast("long") == F.col("_adc_cell"),
         "inner",
     )
-    tab = F.col("_adc_tab")
-    code = F.col(code_col)
-    dist = functools.reduce(
-        op.add,
-        [
-            F.element_at(
-                F.element_at(tab, mi + 1), F.element_at(code, mi + 1) + 1
-            )
-            for mi in range(m)
-        ],
-    )
+    dist = _adc_lookup(F.col("_adc_tab"), code_col, len(codebooks))
     scored = joined.select(*id_cols, dist.alias("adc_distance"))
-    return _ranked_topk(scored, k, id_cols, "adc_distance")
+    return ranked_top_k(scored, _nearest_first(id_cols[0], "adc_distance"), k)
 
 
 def mmr_rerank(

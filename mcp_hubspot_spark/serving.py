@@ -340,10 +340,7 @@ def hybrid_rrf_serve(
     trades the dense leg's recall for cell pruning exactly as
     ``IvfIndex.search`` documents.
 
-    RRF is rank-only (score scales never mix): 1/(rrf_k + rank) summed
-    over the legs a doc appears in (a full outer join of the legs on
-    the id), rounded as Spark's ``round(·, 6)`` rounds, descending,
-    doc_id tiebreak.
+    RRF (:func:`_rrf_fuse`) is rank-only: score scales never mix.
 
     ``dense`` picks the ANN leg's physical path: ``"exact"`` (default)
     scans the probed cells' embedding column; ``"pq"`` (requires an
@@ -368,9 +365,27 @@ def hybrid_rrf_serve(
         vec = vector_index._serve(query_vec, k=shortlist, nprobe=nprobe)
     else:
         raise ValueError(f"dense must be exact|pq, got {dense!r}")
+    fused = _rrf_fuse(
+        local_serve.rows(lex, ("doc_id", "rank")),
+        local_serve.rows(vec, ("vec_id", "rank")),
+        k,
+        rrf_k,
+    )
+    return local_serve.answer(
+        text_index.spark, _fused_table(fused, lex, vec)
+    )
+
+
+def _rrf_fuse(lex_rows, vec_rows, k: int, rrf_k: int) -> list[tuple]:
+    """Reciprocal-rank fusion of two legs' (doc, rank) rows: a doc's
+    score is 1/(rrf_k + rank) summed over the legs it appears in (each
+    pair of its leg rows, as a full outer join on the id pairs them),
+    rounded as Spark's ``round(·, 6)`` rounds. Returns the top ``k``
+    (doc, lex_rank, vec_rank, rrf_score) by score descending, doc
+    ascending."""
     legs: dict = {}
-    for leg, (result, id_col) in enumerate(((lex, "doc_id"), (vec, "vec_id"))):
-        for doc, rank in local_serve.rows(result, (id_col, "rank")):
+    for leg, rows in enumerate((lex_rows, vec_rows)):
+        for doc, rank in rows:
             legs.setdefault(doc, ([], []))[leg].append(rank)
 
     def rrf(rank):
@@ -383,21 +398,22 @@ def hybrid_rrf_serve(
         for vr in vrs or [None]
     ]
     fused.sort(key=lambda r: (-r[3], r[0]))
-    fused = fused[: max(0, k)]
+    return fused[: max(0, k)]
+
+
+def _fused_table(fused: list[tuple], lex, vec) -> pa.Table:
+    """``_rrf_fuse`` rows as the hybrid answer's Arrow table."""
     # the legs' id type; when they differ (int vs long), Arrow infers
     # the wider one, as the join's type coercion did
     lex_t = local_serve.arrow_type(lex, "doc_id")
     doc_t = lex_t if lex_t == local_serve.arrow_type(vec, "vec_id") else None
     cols = list(zip(*fused)) or [(), (), (), ()]
-    return local_serve.answer(
-        text_index.spark,
-        pa.table({
-            "doc_id": pa.array(cols[0], doc_t),
-            "lex_rank": pa.array(cols[1], pa.int32()),
-            "vec_rank": pa.array(cols[2], pa.int32()),
-            "rrf_score": pa.array(cols[3], pa.float64()),
-        }),
-    )
+    return pa.table({
+        "doc_id": pa.array(cols[0], doc_t),
+        "lex_rank": pa.array(cols[1], pa.int32()),
+        "vec_rank": pa.array(cols[2], pa.int32()),
+        "rrf_score": pa.array(cols[3], pa.float64()),
+    })
 
 
 def hybrid_rrf_serve_batch(
@@ -412,59 +428,40 @@ def hybrid_rrf_serve_batch(
 ) -> DataFrame:
     """Batched :func:`hybrid_rrf_serve`: Q hybrid queries against ONE
     pruned posting read (``TextIndex.search_batch``) and ONE pruned
-    cell scan (``IvfIndex.search_batch``), fused per query by RRF.
-    ``queries`` maps query_id (string) -> (terms list, query vector).
-    Per-query output is pytest-pinned identical to a
-    ``hybrid_rrf_serve`` call (both legs pin to their own per-query
-    twins, and RRF + per-query window rank is rank-only arithmetic).
-    Returns (query_id, doc_id, lex_rank, vec_rank, rrf_score), top-k
-    per query by (rrf_score desc, doc_id asc).
+    cell scan (``IvfIndex.search_batch``). Both legs are collected (at
+    most Q x ``shortlist`` rows each) and each query is fused in Python
+    by the same RRF as ``hybrid_rrf_serve``, so per-query output is
+    that call's (pytest-pinned). ``queries`` maps query_id (string) ->
+    (terms list, query vector). Returns (query_id, doc_id, lex_rank,
+    vec_rank, rrf_score), top-k per query by (rrf_score desc, doc_id
+    asc).
     """
-    from pyspark.sql.window import Window
-
     if not queries:
         raise ValueError("empty query batch")
     order = sorted(queries)
     lex = text_index.search_batch(
         {q: queries[q][0] for q in order}, k=shortlist
-    ).select(
-        "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
-    vec_raw = vector_index.search_batch(
+    vec = vector_index.search_batch(
         [(i, queries[q][1]) for i, q in enumerate(order)],
         k=shortlist,
         nprobe=nprobe,
-    ).select(
-        F.col("query_id").alias("_qi"),
-        F.col("vec_id").alias("doc_id"),
-        F.col("rank").alias("vec_rank"),
     )
-    spark = vec_raw.sparkSession
-    mapping = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(order)], "_qi long, query_id string"
-    )
-    vec = vec_raw.join(F.broadcast(mapping), "_qi").select(
-        "query_id", "doc_id", "vec_rank"
-    )
-    rrf = F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("lex_rank")), F.lit(0.0)
-    ) + F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("vec_rank")), F.lit(0.0)
-    )
-    fused = lex.join(vec, ["query_id", "doc_id"], "full_outer").select(
-        "query_id",
-        "doc_id",
-        "lex_rank",
-        "vec_rank",
-        F.round(rrf, 6).alias("rrf_score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
+    lex_rows: dict = {q: [] for q in order}
+    for q, doc, rank in lex.select("query_id", "doc_id", "rank").collect():
+        lex_rows[q].append((doc, rank))
+    vec_rows: dict = {q: [] for q in order}
+    for i, doc, rank in vec.select("query_id", "vec_id", "rank").collect():
+        vec_rows[order[i]].append((doc, rank))
+    fused, query_ids = [], []
+    for q in order:
+        rows = _rrf_fuse(lex_rows[q], vec_rows[q], k, rrf_k)
+        fused += rows
+        query_ids += [q] * len(rows)
+    table = _fused_table(fused, lex, vec)
+    return local_serve.answer(
+        text_index.spark,
+        table.add_column(0, "query_id", pa.array(query_ids, pa.string())),
     )
 
 

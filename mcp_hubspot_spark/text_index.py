@@ -60,7 +60,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import durable, local_serve
 from .operators.classifier import hash_bucket
-from .operators.text import tokens
+from .operators.text import bm25_weight, sorted_term_sum, tokens
+from .operators.topk import grouped_top_k, ranked_top_k
 
 __all__ = ["TextIndex"]
 
@@ -594,12 +595,11 @@ class TextIndex:
         tombstone (``delete(ids, dead_epoch=epoch)``) is a documented
         convention, not enforced — if violated, more than one
         generation of a (doc, term) posting survives the tombstone
-        filter, double-counting df/tf and (under the default
-        ``spark.sql.mapKeyDedupPolicy=EXCEPTION``) throwing inside
-        ``phrase_hits``'s map assembly. When the index has ever grown
-        past epoch 0, the pruned read keeps only the NEWEST generation
-        per (doc, term) — one map-side-combinable aggregate over the
-        already-tiny pruned subset; single-epoch indexes skip it.
+        filter, double-counting df/tf and positions. When the index
+        has ever grown past epoch 0, the pruned read keeps only the
+        NEWEST generation per (doc, term) — one map-side-combinable
+        aggregate over the already-tiny pruned subset; single-epoch
+        indexes skip it.
 
         Scope (ADVICE r11): the net shadows only terms the newest
         generation STILL CONTAINS. A convention-violating re-add that
@@ -769,10 +769,11 @@ class TextIndex:
             ]),
         )
 
-    def _search_spark(
-        self, terms: list[str], k: int, k1: float, b: float
-    ) -> DataFrame:
-        """``search`` as a Spark plan over the partition-pruned postings."""
+    def _contrib(self, terms: list[str], k1: float, b: float) -> DataFrame:
+        """Per-(doc, term) BM25 contributions ``_c`` over the pruned
+        postings of ``terms``: (N, avgdl) from meta, per-term df
+        aggregated from the pruned read (corpus-global by construction),
+        the weight ``bm25_scores`` uses."""
         meta = self._meta_dict()
         n_docs = float(meta["n_docs"])
         avgdl = meta["sum_dl"] / n_docs if n_docs else 1.0
@@ -780,43 +781,24 @@ class TextIndex:
         dfreq = post.groupBy("term").agg(
             F.count(F.lit(1)).cast("double").alias("_df")
         )
-        contrib = post.join(F.broadcast(dfreq), "term").select(
+        return post.join(F.broadcast(dfreq), "term").select(
             "doc_id",
             "term",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.col("_df") + F.lit(0.5))
-                    / (F.col("_df") + F.lit(0.5))
-                )
-                * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-                / (
-                    F.col("tf").cast("double")
-                    + F.lit(k1)
-                    * (
-                        F.lit(1.0 - b)
-                        + F.lit(b)
-                        * F.col("dl").cast("double")
-                        / F.lit(avgdl)
-                    )
-                )
+            bm25_weight(
+                F.col("tf").cast("double"), F.col("dl").cast("double"),
+                F.col("_df"), F.lit(n_docs), F.lit(avgdl), k1, b,
             ).alias("_c"),
         )
-        scored = contrib.groupBy("doc_id").agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "_c"))),
-                F.lit(0.0),
-                lambda acc, s: acc + s.getField("_c"),
-            ).alias("score")
-        )
-        top = scored.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(k)
-        from pyspark.sql.window import Window
 
-        w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return top.select(
-            F.row_number().over(w).alias("rank"), "doc_id", "score"
+    def _search_spark(
+        self, terms: list[str], k: int, k1: float, b: float
+    ) -> DataFrame:
+        """``search`` as a Spark plan over the partition-pruned postings."""
+        scored = self._contrib(terms, k1, b).groupBy("doc_id").agg(
+            sorted_term_sum("term").alias("score")
+        )
+        return ranked_top_k(
+            scored, [F.col("score").desc(), F.col("doc_id").asc()], k
         )
 
     def search_batch(
@@ -829,77 +811,34 @@ class TextIndex:
     ) -> DataFrame:
         """BM25 top-k for MANY queries from ONE pruned posting read —
         the ``knn_batch`` analog on the persisted index (and the
-        serving twin of ``operators/text.py::bm25_topk_batch``, which
-        rescans the corpus). The read prunes to the union of all
-        query-term buckets, per-term df aggregates once over that read
-        (corpus-global by construction, shared across queries), a tiny
-        broadcast (query_id, term) map fans contributions into their
-        queries, and each query folds its own terms in sorted order —
-        so every per-query ranking is bit-identical to a ``search()``
-        call for that query (pytest-pinned). Returns
-        (query_id, rank, doc_id, score).
+        serving counterpart of ``operators/text.py::bm25_topk_batch``,
+        which rescans the corpus). The read prunes to the union of all
+        query-term buckets and ``_search_spark``'s contributions are
+        computed once over it; a tiny broadcast (query_id, term) map
+        fans them into their queries, and each query folds its own
+        terms in sorted order — so every per-query ranking is
+        bit-identical to a ``search()`` call for that query
+        (pytest-pinned). Returns (query_id, rank, doc_id, score).
         """
-        from pyspark.sql.window import Window
-
         if not queries:
             raise ValueError("empty query batch")
-        meta = self._meta_dict()
-        n_docs = float(meta["n_docs"])
-        avgdl = meta["sum_dl"] / n_docs if n_docs else 1.0
         qmap = sorted(
             (qid, t)
             for qid, ts in queries.items()
             for t in {x.lower() for x in ts}
         )
-        all_terms = sorted({t for _, t in qmap})
-        post = self._pruned(all_terms).select("term", "doc_id", "tf", "dl")
-        dfreq = post.groupBy("term").agg(
-            F.count(F.lit(1)).cast("double").alias("_df")
-        )
-        contrib = post.join(F.broadcast(dfreq), "term").select(
-            "doc_id",
-            "term",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.col("_df") + F.lit(0.5))
-                    / (F.col("_df") + F.lit(0.5))
-                )
-                * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-                / (
-                    F.col("tf").cast("double")
-                    + F.lit(k1)
-                    * (
-                        F.lit(1.0 - b)
-                        + F.lit(b)
-                        * F.col("dl").cast("double")
-                        / F.lit(avgdl)
-                    )
-                )
-            ).alias("_c"),
-        )
+        contrib = self._contrib(sorted({t for _, t in qmap}), k1, b)
         qdf = self.spark.createDataFrame(
             qmap, "query_id string, term string"
         )
         scored = (
             contrib.join(F.broadcast(qdf), "term")
             .groupBy("query_id", "doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "_c"))),
-                    F.lit(0.0),
-                    lambda acc, s: acc + s.getField("_c"),
-                ).alias("score")
-            )
+            .agg(sorted_term_sum("term").alias("score"))
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
-        )
+        return grouped_top_k(
+            scored, ["query_id"], [F.col("score").desc(), F.col("doc_id").asc()], k
+        ).select("query_id", "rank", "doc_id", "score")
 
     def phrase_hits_batch(self, phrases: list[str]) -> DataFrame:
         """Positional matches for MANY phrases from ONE pruned read —
@@ -910,10 +849,10 @@ class TextIndex:
         (a phrase with repeated terms contributes one row per OFFSET,
         reusing the single posting row), docs missing any offset drop
         at the count gate, and each (doc, phrase) folds its shifted
-        position arrays by ``array_intersect`` in offset order — the
-        same arithmetic as :meth:`phrase_hits`, which is pinned
-        row-for-row per phrase. Returns (phrase, doc_id,
-        n_occurrences, first_pos); overlapping occurrences all count.
+        position arrays by ``array_intersect`` in offset order: a doc
+        matches at start p iff term_i's positions contain p+i for all
+        i. Returns (phrase, doc_id, n_occurrences, first_pos);
+        overlapping occurrences all count.
         """
         norm = []
         for p in phrases:
@@ -989,39 +928,9 @@ class TextIndex:
         )
 
     def phrase_hits(self, phrase: str) -> DataFrame:
-        """Documents containing the exact token-aligned phrase, via
-        positional intersection over the pruned read: a doc matches at
-        start position p iff term_i's positions contain p+i for all i.
-        Returns (doc_id, n_occurrences, first_pos) — the persisted-index
-        answer to the batch ``blocklist_hits`` corpus scan (agreement
-        pytest). Repeated terms in the phrase reuse one posting row.
+        """Documents containing the exact token-aligned phrase:
+        :meth:`phrase_hits_batch` of the one phrase. Returns (doc_id,
+        n_occurrences, first_pos) — the persisted-index answer to the
+        batch ``blocklist_hits`` corpus scan (agreement pytest).
         """
-        terms = [t.lower() for t in phrase.split()]
-        if not terms:
-            raise ValueError("empty phrase")
-        uniq = sorted(set(terms))
-        post = self._pruned(uniq).select("doc_id", "term", "positions")
-        per_doc = post.groupBy("doc_id").agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))
-            ).alias("_pos"),
-            F.count(F.lit(1)).alias("_nterms"),
-        ).filter(F.col("_nterms") == len(uniq))
-
-        def _shifted(term: str, off: int):
-            # single-parameter lambda: a two-parameter lambda would make
-            # F.transform bind the second to the ELEMENT INDEX (the HOF
-            # (x, i) form), silently shifting by position instead of off
-            return F.transform(
-                F.col("_pos").getItem(term), lambda p: p - F.lit(off)
-            )
-
-        starts = F.col("_pos").getItem(terms[0])
-        for i, t in enumerate(terms[1:], start=1):
-            starts = F.array_intersect(starts, _shifted(t, i))
-        hits = per_doc.select(
-            "doc_id",
-            F.size(starts).cast("long").alias("n_occurrences"),
-            F.array_min(starts).alias("first_pos"),
-        )
-        return hits.filter(F.col("n_occurrences") > 0)
+        return self.phrase_hits_batch([phrase]).drop("phrase")

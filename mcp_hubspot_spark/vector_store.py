@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import durable, local_serve
-from .operators.vector import knn
+from .operators.topk import grouped_top_k
+from .operators.vector import _knn_exprs, _nearest_first, knn
 
 VECTOR_STORE_COLUMNS = ("date", "vec_id", "embedding", "type", "data_json", "extras")
 
@@ -981,19 +982,16 @@ class IvfIndex:
         restricts each candidate row to the queries that actually
         probed its cell (so a query never sees cells it didn't ask
         for — per-query results are EXACTLY ``search``'s, pytest-
-        pinned), and per-query top-k survives a window over the
-        candidate rows. Returns (query_id, rank, *id_cols, distance,
-        similarity) — ``search``'s schema plus the query id.
+        pinned), and ``grouped_top_k`` keeps each query's k nearest
+        candidate rows by knn's distance expression. Returns
+        (query_id, rank, *id_cols, distance, similarity) —
+        ``search``'s schema plus the query id.
 
         Scale: one partition-pruned scan regardless of Q; both join
         sides against it are broadcast; the window input is bounded by
         |union cells| rows, never the index.
         """
         import math
-
-        from pyspark.sql.window import Window
-
-        from .operators.vector import dot, l2_norm, l2_squared
 
         if not queries:
             raise ValueError("empty query batch")
@@ -1024,30 +1022,16 @@ class IvfIndex:
         cand = pruned.join(
             F.broadcast(qcells), F.col("_cell") == F.col("_qcell")
         ).join(F.broadcast(qvecs), "query_id")
-        v = F.col(vec_col)
-        if metric == "cosine":
-            sim_expr = dot(v, F.col("_qv")) / (l2_norm(v) * F.col("_qn"))
-            dist = F.lit(1.0) - sim_expr
-        else:
-            dist = l2_squared(v, F.col("_qv"))
+        dist, sim = _knn_exprs(
+            F.col(vec_col), F.col("_qv"), F.col("_qn"), metric
+        )
         scored = cand.select(
             "query_id", *id_cols, dist.alias("distance")
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc_nulls_last(), F.col(id_cols[0]).asc()
-        )
-        sim = (
-            (F.lit(1.0) - F.col("distance"))
-            if metric == "cosine"
-            else (F.lit(1.0) - F.col("distance") / F.lit(2.0))
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "rank", *id_cols, "distance",
-                sim.alias("similarity"),
-            )
+        return grouped_top_k(
+            scored, ["query_id"], _nearest_first(id_cols[0]), k
+        ).select(
+            "query_id", "rank", *id_cols, "distance", sim.alias("similarity")
         )
 
     def lookup(
@@ -1169,7 +1153,7 @@ class IvfIndex:
     # py4j lit-construction per query plus Catalyst re-walking the
     # whole tree per rule, while the join's fixed ~0.1 s/query
     # createDataFrame+broadcast overhead is flat in nprobe·codes.
-    # Auto therefore switches to the join twin above 512 doubles; at
+    # search_pq therefore switches to the join twin above 512 doubles; at
     # or below that the two are within host-drift noise and the
     # literal's zero-extra-jobs single-expression plan is kept for the
     # smallest probes (and for SQL-oracle replayability, which is why
@@ -1185,7 +1169,6 @@ class IvfIndex:
         vec_col: str = "embedding",
         id_cols: Sequence[str] = ("vec_id",),
         where=None,
-        adc_tables: str = "auto",
     ) -> DataFrame:
         """IVFPQ serving (requires ``build(pq_m=...)``): probe cells as
         ``search`` does, but rank candidates by ASYMMETRIC distance over
@@ -1214,12 +1197,9 @@ class IvfIndex:
         DIAGNOSTIC-ONLY (raw ADC ordering, adc_distance output shape):
         use it to measure codebook quality, never to serve.
 
-        ``adc_tables`` (residual indexes only) picks how the per-cell
-        query tables reach the scan: ``"literal"`` inlines them as one
-        3-D literal (fastest at small nprobe·codes), ``"join"``
-        broadcast-joins a tiny nprobe-row table DataFrame (plan size
-        O(1) — the large-nprobe·codes regime), ``"auto"`` switches at
-        ``ADC_LITERAL_MAX_DOUBLES`` (the SCALE-measured crossover)."""
+        On residual indexes the per-cell query tables reach the scan as
+        one 3-D literal up to ``ADC_LITERAL_MAX_DOUBLES`` (nprobe·m·codes)
+        and as a broadcast-joined nprobe-row table above it."""
         from .operators.vector import (
             pq_adc_topk,
             pq_adc_topk_residual,
@@ -1249,19 +1229,13 @@ class IvfIndex:
             # from THIS cell's query residual; the scan still reads
             # (ids, cell_id, pq_code) only — cell_id is the partition
             # column, so it costs nothing extra
-            if adc_tables not in ("auto", "literal", "join"):
-                raise ValueError(
-                    f"adc_tables must be auto|literal|join, got {adc_tables!r}"
-                )
             n_doubles = (
                 len(probed_cents) * len(cbs) * int(pq_meta["codes"])
             )
-            use_join = adc_tables == "join" or (
-                adc_tables == "auto"
-                and n_doubles > self.ADC_LITERAL_MAX_DOUBLES
-            )
             residual_topk = (
-                pq_adc_topk_residual_join if use_join else pq_adc_topk_residual
+                pq_adc_topk_residual_join
+                if n_doubles > self.ADC_LITERAL_MAX_DOUBLES
+                else pq_adc_topk_residual
             )
             adc = residual_topk(
                 pruned.select(*id_cols, "cell_id", "pq_code"),

@@ -33,7 +33,7 @@ from .operators.dedup import (
 )
 from .operators.scans import filtered_scan, recent_scan, semi_lookup
 from .operators.text import LANG_MARKERS, language_id, quality_features, fingerprint
-from .operators.topk import grouped_top_k
+from .operators.topk import grouped_top_k, ranked_top_k
 from .operators.vector import l2_squared, cosine_similarity
 from .sources.catalog import fan_out, load_table
 
@@ -799,12 +799,14 @@ def knn_l2(spark: SparkSession, sf: str) -> DataFrame:
     scored = emb.crossJoin(F.broadcast(q)).select(
         "vec_id", l2_squared(F.col("embedding"), F.col("qv")).alias("distance")
     )
-    top = scored.orderBy(F.col("distance").asc(), F.col("vec_id").asc()).limit(10)
-    w = Window.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-    return top.select(
-        F.row_number().over(w).alias("rank"),
-        "vec_id",
-        F.round(F.lit(1.0) - F.col("distance") / 2.0, 4).alias("similarity"),
+    return ranked_top_k(
+        scored,
+        [F.col("distance").asc(), F.col("vec_id").asc()],
+        10,
+        [
+            "vec_id",
+            F.round(F.lit(1.0) - F.col("distance") / 2.0, 4).alias("similarity"),
+        ],
     )
 
 
@@ -837,12 +839,11 @@ def knn_cosine(spark: SparkSession, sf: str) -> DataFrame:
     scored = emb.crossJoin(F.broadcast(q)).select(
         "vec_id", cosine_similarity(F.col("embedding"), F.col("qv")).alias("cosine")
     )
-    top = scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(10)
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return top.select(
-        F.row_number().over(w).alias("rank"),
-        "vec_id",
-        F.round(F.col("cosine"), 4).alias("cosine_sim"),
+    return ranked_top_k(
+        scored,
+        [F.col("cosine").desc(), F.col("vec_id").asc()],
+        10,
+        ["vec_id", F.round(F.col("cosine"), 4).alias("cosine_sim")],
     )
 
 
@@ -4588,12 +4589,11 @@ def projected_knn_rerank(spark: SparkSession, sf: str) -> DataFrame:
         .crossJoin(F.broadcast(qe))
         .select("vec_id", exact_d.alias("distance"))
     )
-    top = exact.orderBy(F.col("distance").asc(), F.col("vec_id").asc()).limit(5)
-    w = Window.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-    return top.select(
-        F.row_number().over(w).alias("rank"),
-        "vec_id",
-        F.round(F.col("distance"), 4).alias("distance"),
+    return ranked_top_k(
+        exact,
+        [F.col("distance").asc(), F.col("vec_id").asc()],
+        5,
+        ["vec_id", F.round(F.col("distance"), 4).alias("distance")],
     )
 
 

@@ -97,8 +97,7 @@ def _synth_clustered(
     """Deterministic clustered corpus: n vectors of dim d around n_cent
     well-separated centers spread over the first center_dims dims, plus
     xxhash noise — the distribution residual-PQ's recall advantage
-    exists for (shared by the pq_residual and residual_serving
-    sections)."""
+    exists for (the pq_residual section)."""
     cl = (F.col("vec_id") % n_cent).cast("double")
     cols = []
     for j in range(d):
@@ -1060,114 +1059,6 @@ def main() -> None:
                     extras[f"{tag}_recall_at10"] = round(hit / 80.0, 4)
             except Exception as exc:
                 errors["pq_residual"] = f"{type(exc).__name__}: {exc}"[:200]
-
-        # -------- round-10: residual ADC serving at production
-        # nprobe·codes — the literal path inlines all nprobe per-cell
-        # query tables as ONE 3-D literal (O(nprobe·m·k) doubles in the
-        # expression tree: 16k at nprobe=8/k=256, 131k at nprobe=64),
-        # the broadcast-join twin ships them as a tiny nprobe-row
-        # DataFrame instead (plan size O(1)). This section builds a
-        # residual index at the production-ish codes=256 and times both
-        # paths at nprobe ∈ {8, 32, 64} (8 queries each), records the
-        # literal plan size, and pins agreement at every probed width —
-        # the measured crossover feeds IvfIndex.ADC_LITERAL_MAX_DOUBLES
-        # (the auto switch).
-        if wanted("residual_serving"):
-            try:
-                from mcp_hubspot_spark.vector_store import IvfIndex
-
-                n_cl, d, n_cent = 200_000, 64, 64
-                c1 = spark.read.parquet(
-                    _synth_clustered(
-                        spark, str(work / "clustered_full"), n_cl, d,
-                        n_cent, d,
-                    )
-                )
-                qids = [i * (n_cl // 8) + i for i in range(8)]
-                qvecs = {
-                    int(r.vec_id): [float(x) for x in r.embedding]
-                    for r in c1.filter(F.col("vec_id").isin(qids)).collect()
-                }
-                ivf = IvfIndex(spark, str(work / "res256"))
-                t0 = time.perf_counter()
-                ivf.build(
-                    c1,
-                    n_cells=n_cent,
-                    pq_m=8,
-                    pq_codes=256,
-                    pq_residual=True,
-                    sample_fraction=0.1,
-                )
-                timings["ivfpq_res256_build_200k"] = round(
-                    time.perf_counter() - t0, 3
-                )
-                rows["ivfpq_res256_build_200k"] = n_cl
-                # rerank=0 throughout this section BY INTENT: it times
-                # and twin-checks the raw ADC stage (the literal-vs-
-                # join plan shapes), not the serving default
-                for np_ in (8, 32, 64):
-                    for mode in ("literal", "join"):
-                        t0 = time.perf_counter()
-                        for qid in qids:
-                            ivf.search_pq(
-                                qvecs[qid],
-                                k=10,
-                                nprobe=np_,
-                                rerank=0,
-                                adc_tables=mode,
-                            ).collect()
-                        key = f"res256_adc_{mode}_nprobe{np_}_200k"
-                        timings[key] = round(time.perf_counter() - t0, 3)
-                        rows[key] = 80
-                    qv0 = qvecs[qids[0]]
-                    lit = [
-                        (r.rank, r.vec_id, round(r.adc_distance, 9))
-                        for r in ivf.search_pq(
-                            qv0,
-                            k=10,
-                            nprobe=np_,
-                            rerank=0,
-                            adc_tables="literal",
-                        ).collect()
-                    ]
-                    jn = [
-                        (r.rank, r.vec_id, round(r.adc_distance, 9))
-                        for r in ivf.search_pq(
-                            qv0,
-                            k=10,
-                            nprobe=np_,
-                            rerank=0,
-                            adc_tables="join",
-                        ).collect()
-                    ]
-                    extras[f"res256_twins_agree_nprobe{np_}"] = bool(
-                        lit == jn
-                    )
-                    extras[f"res256_literal_doubles_nprobe{np_}"] = (
-                        np_ * 8 * 256
-                    )
-                # expression-tree bloat, made visible: physical-plan
-                # string size of the literal path at the widest probe
-                for np_ in (8, 64):
-                    plan = (
-                        ivf.search_pq(
-                            qvecs[qids[0]],
-                            k=10,
-                            nprobe=np_,
-                            rerank=0,
-                            adc_tables="literal",
-                        )
-                        ._jdf.queryExecution()
-                        .executedPlan()
-                        .toString()
-                    )
-                    extras[
-                        f"res256_literal_plan_chars_nprobe{np_}"
-                    ] = len(plan)
-            except Exception as exc:
-                errors["residual_serving"] = (
-                    f"{type(exc).__name__}: {exc}"[:200]
-                )
 
         # -------- round-9: binary sign quantization at corpus scale —
         # pack the full replicated embedding table to 2 longs/row (32x

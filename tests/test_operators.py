@@ -288,6 +288,25 @@ def test_knn_batch_matmul_matches_expression_path(spark):
         assert abs(expr[key][1] - mat[key][1]) < 1e-9, key
 
 
+def test_knn_batch_ranks_null_distances_last(spark):
+    """A null or wrong-length embedding has a NULL distance; the batch
+    path must rank it after every real neighbor, as knn does."""
+    from mcp_hubspot_spark.operators.vector import knn, knn_batch
+
+    emb = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, None), (4, [5.0])],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(0, [0.0, 0.0])], "query_id long, query_vec array<double>"
+    )
+    single = [(r.rank, r.vec_id) for r in knn(emb, [0.0, 0.0], k=2).collect()]
+    batch = sorted(
+        (r.rank, r.vec_id) for r in knn_batch(emb, queries, k=2).collect()
+    )
+    assert single == batch == [(1, 1), (2, 2)]
+
+
 def test_ivf_kmeans_recall_vs_brute_force(spark):
     """IVF with trained k-means centroids: probing a fraction of cells
     recovers most of the true top-k. The synthetic embeddings are

@@ -52,6 +52,9 @@ def test_phrase_hits_matches_blocklist_scan(spark, docs, built):
     }
     served = {r.doc_id for r in built.phrase_hits("table table").collect()}
     assert served == scan_ids and served
+    for empty in ("", " \t\n "):
+        with pytest.raises(ValueError):
+            built.phrase_hits(empty)
 
 
 def test_phrase_positions_exact(spark, tmp_path):
@@ -115,7 +118,8 @@ def test_driver_hash_replica_matches_expression(spark):
 
 def test_search_plan_prunes_partitions_and_positions(spark, built):
     """The Spark BM25 plan must (a) prune bucket partitions at planning
-    time and (b) never read the positions column. (Small reads are
+    time, (b) never read the positions column and (c) take its top-k as
+    one TakeOrderedAndProject, not a per-query window. (Small reads are
     answered locally; test_local_serve audits that path's files.)"""
     import io
     from contextlib import redirect_stdout
@@ -131,6 +135,7 @@ def test_search_plan_prunes_partitions_and_positions(spark, built):
     assert any("bucket" in ln for ln in scan_lines)
     read_schemas = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schemas and all("positions" not in ln for ln in read_schemas)
+    assert "TakeOrderedAndProject" in plan
 
 
 @pytest.mark.slow

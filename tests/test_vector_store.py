@@ -1168,15 +1168,22 @@ def test_ivf_interrupted_build_fails_loud_not_wrong(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivfpq_residual_join_twin_agrees_with_literal(spark, tmp_path):
+def test_ivfpq_residual_join_twin_agrees_with_literal(
+    spark, tmp_path, monkeypatch
+):
     """The broadcast-join residual-ADC twin (large-nprobe·codes regime)
-    must agree with the 3-D-literal path EXACTLY — same _adc_table
-    construction, same fold order, so identical distances, ids, and
-    ranks — and its scan must still read codes, never the embedding
-    column. Also pins the auto switch: small nprobe·codes stays on the
-    literal plan (no BroadcastHashJoin), forced join uses one."""
+    must agree with the 3-D-literal path EXACTLY over the same pruned
+    cells — same _adc_table construction, same fold order, so identical
+    distances, ids, and ranks — and its scan must still read codes,
+    never the embedding column. Also pins search_pq's switch: at
+    ADC_LITERAL_MAX_DOUBLES it stays on the literal plan (no
+    BroadcastHashJoin), above it the plan joins."""
     import numpy as np
 
+    from mcp_hubspot_spark.operators.vector import (
+        pq_adc_topk_residual,
+        pq_adc_topk_residual_join,
+    )
     from mcp_hubspot_spark.vector_store import IvfIndex
 
     rng = np.random.default_rng(5)
@@ -1190,58 +1197,43 @@ def test_ivfpq_residual_join_twin_agrees_with_literal(spark, tmp_path):
     )
     idx = IvfIndex(spark, str(tmp_path / "ivf"))
     idx.build(df, n_cells=8, pq_m=4, pq_codes=16, pq_residual=True)
+    cbs = idx._load_codebooks()
 
     for qid in (0, 7, 100):
-        qv = [float(x) for x in X[qid]]
-        lit = [
-            (r.rank, r.vec_id, round(r.adc_distance, 9))
-            for r in idx.search_pq(
-                qv, k=10, nprobe=8, rerank=0, adc_tables="literal"
-            ).collect()
-        ]
-        join = [
-            (r.rank, r.vec_id, round(r.adc_distance, 9))
-            for r in idx.search_pq(
-                qv, k=10, nprobe=8, rerank=0, adc_tables="join"
-            ).collect()
-        ]
+        qv, probe, _, probed_cents = idx._probe(
+            [float(x) for x in X[qid]], 8
+        )
+        codes = idx._pruned_cells(probe).select("vec_id", "cell_id", "pq_code")
+        lit, join = (
+            [
+                (r.rank, r.vec_id, round(r.adc_distance, 9))
+                for r in topk(codes, cbs, qv, probed_cents, k=10).collect()
+            ]
+            for topk in (pq_adc_topk_residual, pq_adc_topk_residual_join)
+        )
         assert lit == join and len(lit) == 10
 
     qv = [float(x) for x in X[0]]
-    # auto at nprobe=8, m=4, codes=16 -> 512 doubles, exactly AT the
-    # switch threshold (auto goes join strictly above it): literal
-    # plan, no broadcast join
-    auto_plan = idx.search_pq(
-        qv, k=5, nprobe=8, rerank=0, adc_tables="auto"
+    # nprobe=8, m=4, codes=16 -> 512 doubles, exactly AT the switch
+    # threshold (search_pq joins strictly above it): literal plan, no
+    # broadcast join
+    lit_plan = idx.search_pq(
+        qv, k=5, nprobe=8, rerank=0
     )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in auto_plan
-    join_df = idx.search_pq(qv, k=5, nprobe=8, rerank=0, adc_tables="join")
+    assert "BroadcastHashJoin" not in lit_plan
+    want = [r.vec_id for r in idx.search_pq(qv, k=5, nprobe=8, rerank=50).collect()]
+
+    monkeypatch.setattr(IvfIndex, "ADC_LITERAL_MAX_DOUBLES", 511)
+    join_df = idx.search_pq(qv, k=5, nprobe=8, rerank=0)
     join_plan = join_df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in join_plan
     # the join twin's pruned scan still never reads the embedding column
     assert "embedding" not in join_plan.split("ReadSchema", 1)[-1].split(
         "\n", 1
     )[0]
-
     # rerank composes with the join twin identically
-    want = [
-        r.vec_id
-        for r in idx.search_pq(
-            qv, k=5, nprobe=8, rerank=50, adc_tables="literal"
-        ).collect()
-    ]
-    got = [
-        r.vec_id
-        for r in idx.search_pq(
-            qv, k=5, nprobe=8, rerank=50, adc_tables="join"
-        ).collect()
-    ]
+    got = [r.vec_id for r in idx.search_pq(qv, k=5, nprobe=8, rerank=50).collect()]
     assert got == want
-
-    import pytest
-
-    with pytest.raises(ValueError, match="adc_tables"):
-        idx.search_pq(qv, k=5, adc_tables="bogus")
 
 
 @pytest.mark.slow

@@ -1,12 +1,16 @@
-"""Round-13 optimization harness: per-query plan capture + isolated timing.
+"""Per-query plan capture + isolated timing for registry queries.
 
 Usage:
-    python tools/profile_query.py plans NAME [NAME...]   # explain -> plans/r13/
-    python tools/profile_query.py time  NAME [NAME...]   # noop-sink timing, 1 cold + 3 steady reps
-    python tools/profile_query.py both  NAME [NAME...]
+    python tools/profile_query.py plans --out DIR [NAME...]   # explain -> DIR/<name>.txt
+    python tools/profile_query.py time  [NAME...]             # noop-sink timing, 1 cold + 3 steady reps
+    python tools/profile_query.py both  --out DIR [NAME...]
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
-SPARK_GRAFT_PLAN_SUFFIX (default "before" -> plans/r13/<name>_before.txt).
+No NAME means every registry query. Env: SPARK_GRAFT_SF_DIR (the sf0.1
+test data by default), SPARK_GRAFT_CPUS.
+
+Plans are ``explain('formatted')`` text; two dumps of the same tree
+differ only in expression ids (``#\\d+L?``) and exchange/broadcast
+``plan_id=N``, so normalize those before diffing dumps of two trees.
 
 Timing methodology matches bench.py (guide §1.4): each rep fully
 materializes every column through the noop sink; jobs are labelled with
@@ -15,6 +19,7 @@ setJobDescription so UI/event-log forensics map to queries.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -26,13 +31,16 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from mcp_hubspot_spark.session import get_spark  # noqa: E402
 from mcp_hubspot_spark.workload import QUERIES  # noqa: E402
 
-OUT_DIR = Path(__file__).resolve().parent.parent / "plans" / "r13"
-
 
 def main() -> None:
-    mode = sys.argv[1]
-    names = sys.argv[2:]
-    suffix = os.environ.get("SPARK_GRAFT_PLAN_SUFFIX", "before")
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("mode", choices=("plans", "time", "both"))
+    ap.add_argument("names", nargs="*", help="registry queries (default: all)")
+    ap.add_argument("--out", type=Path, help="plan directory (plans/both)")
+    args = ap.parse_args()
+    if args.mode != "time" and args.out is None:
+        ap.error(f"{args.mode} needs --out DIR")
+    names = args.names or sorted(QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="profile_query")
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,7 +55,8 @@ def main() -> None:
         _noop, schema="id long"
     ).write.format("noop").mode("overwrite").save()
 
-    OUT_DIR.mkdir(parents=True, exist_ok=True)
+    if args.out is not None:
+        args.out.mkdir(parents=True, exist_ok=True)
     results: dict[str, dict] = {}
     for name in names:
         fn = QUERIES[name]
@@ -56,18 +65,19 @@ def main() -> None:
         df = fn(spark, sf_dir)
         build_s = time.perf_counter() - t0
         entry: dict = {"build_sec": round(build_s, 3)}
-        if mode in ("plans", "both"):
+        if args.mode in ("plans", "both"):
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            (OUT_DIR / f"{name}_{suffix}.txt").write_text(plan)
-            entry["plan"] = f"plans/r13/{name}_{suffix}.txt"
+            path = args.out / f"{name}.txt"
+            path.write_text(plan)
+            entry["plan"] = str(path)
             entry["exchanges"] = plan.count("Exchange")
             entry["python_nodes"] = sum(
                 plan.count(t)
                 for t in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
             )
-        if mode in ("time", "both"):
+        if args.mode in ("time", "both"):
             reps = []
             tracker = spark.sparkContext.statusTracker()
             for i in range(4):
