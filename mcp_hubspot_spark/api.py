@@ -7,9 +7,9 @@ transport, HubSpot HTTP client, and retry machinery are environment, not
 query semantics (SURVEY §7 non-goals), so the façade takes DataFrames (the
 "CRM tables") and returns DataFrames. Embedding side-effects of the
 reference's handlers (every response indexed into FAISS before returning,
-``handlers/base_handler.py:39-76``) are explicit: pass a VectorStore and
-the façade appends the result rows to it as a SEPARATE job, never hidden
-inside query execution (SURVEY §3.1 build note).
+``handlers/base_handler.py:39-76``) are explicit: pass a VectorStore and a
+tool runs its answer once, embeds and appends the rows in the driver, and
+returns the same rows as a local DataFrame (``Engine._indexed``).
 """
 
 from __future__ import annotations
@@ -18,9 +18,12 @@ from dataclasses import dataclass
 from datetime import date
 from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import local_serve
+from .functions.embedding import _hash_embed_one
 from .functions.scalars import (
     classify_sender,
     coalesce_body,
@@ -58,25 +61,35 @@ class Engine:
     store: VectorStore | None = None
 
     def _indexed(self, df: DataFrame, data_type: str, as_of: date | None = None) -> DataFrame:
-        """Side-effect pipeline (reference handlers/base_handler.py:39-76):
-        embed + append result rows to the vector store, then return the
-        frame unchanged. Explicit second job, not hidden in the query."""
-        if self.store is not None:
-            from .functions.embedding import embed_column
+        """The tool's answer ``df``; with a store attached, run once and
+        indexed (:meth:`_index`), as a local frame whose collect runs no job."""
+        if self.store is None:
+            return df
+        return local_serve.answer(df.sparkSession, self._index(df, data_type, as_of))
 
-            payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-            rows = df.select(
-                # content-derived id: stable across re-runs and collision-
-                # free across batches (monotonically_increasing_id restarts
-                # at 0 every job, poisoning the store's key)
-                F.xxhash64(F.lit(data_type), payload).alias("vec_id"),
-                embed_column(payload, dim=64).alias("embedding"),
-                F.lit(data_type).alias("type"),
-                payload.alias("data_json"),
-                F.lit(None).cast("map<string,string>").alias("extras"),
-            )
-            self.store.add(rows, as_of=as_of)
-        return df
+    def _index(self, df: DataFrame, data_type: str, as_of: date | None = None) -> pa.Table:
+        """Run ``df`` once and return its rows, after embedding their JSON
+        payloads and appending them to the store in the driver (reference
+        handlers/base_handler.py:39-76)."""
+        payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+        table = df.select(
+            "*",
+            # content-derived id: stable across re-runs and collision-
+            # free across batches (monotonically_increasing_id restarts
+            # at 0 every job, poisoning the store's key)
+            F.xxhash64(F.lit(data_type), payload).alias("__vec_id"),
+            payload.alias("__data_json"),
+        ).toArrow()
+        texts = table.column("__data_json")
+        self.store.add(pa.table({
+            "vec_id": table.column("__vec_id"),
+            # the function the embedding pandas UDF applies per row
+            "embedding": [_hash_embed_one(t or "", 64) for t in texts.to_pylist()],
+            "type": [data_type] * table.num_rows,
+            "data_json": texts,
+            "extras": [None] * table.num_rows,
+        }), as_of=as_of)
+        return table.drop_columns(["__vec_id", "__data_json"])
 
     # ------------------------------------------------------------ tools
 
@@ -161,9 +174,7 @@ class Engine:
         if self.store is not None:
             # reference parity: the index keeps FULL text — clipping
             # happens only on the response path
-            self._indexed(
-                self._conversations_frame(limit, None), "hubspot_conversation"
-            )
+            self._index(self._conversations_frame(limit, None), "hubspot_conversation")
         return self._conversations_frame(limit, truncate_chars)
 
     def _conversations_frame(
@@ -386,9 +397,11 @@ def handle_tool_errors(func):
     Spark nuance: DataFrames are lazy, so this boundary converts the
     errors that surface at CALL time — analysis errors (missing table or
     column, type mismatch), bad arguments, missing store — which is also
-    when the reference's HTTP errors surface. An executor failure during
-    a later ``.collect()`` happens outside any tool call, exactly like a
-    network drop after the reference returned its payload."""
+    when the reference's HTTP errors surface. A tool with a store attached
+    executes its answer inside the call, so its execution errors come back
+    as the ``{"error": ...}`` payload too. Otherwise an executor failure
+    during a later ``.collect()`` happens outside any tool call, exactly
+    like a network drop after the reference returned its payload."""
     import functools
     import json as _json
     import logging

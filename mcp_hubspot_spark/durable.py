@@ -1,7 +1,7 @@
 """Crash-safe on-disk state for the serving stores: one single-writer
-lock and one atomic JSON write, shared by ``SnapshotTable``,
+lock and one atomic file replace, shared by ``SnapshotTable``,
 ``IvfIndex``, ``TextIndex``, the CDC maintainers' synced-version files,
-``IncrementalAggregate`` and ``IncrementalReader``.
+``IncrementalAggregate``, ``IncrementalReader`` and ``VectorStore``.
 
 The scope is process death (``kill -9`` at any step), not power loss:
 nothing here fsyncs.
@@ -24,8 +24,9 @@ description, so two writers in one process (threads) still exclude each
 other.
 
 **Readers never take the lock.** They see a store through files that
-only ever change by ``os.replace`` (JSON state) or directory rename, so
-a read resolves either the old or the new version, never a torn one.
+only ever change by ``os.replace`` (JSON state, appended parquet) or
+directory rename, so a read resolves the old or the new version, never
+a torn one.
 
 **Crash recovery** is each store's own ``_recover()`` — the stores
 repair different layouts (``IvfIndex`` rolls a cell swap back,
@@ -130,21 +131,27 @@ def recover_if_idle(store) -> None:
     log.info("%s: recovered crash leftovers", name)
 
 
-def write_json(path, obj) -> None:
-    """Replace the JSON file at ``path`` with ``obj`` atomically: the
-    document is written to a uniquely named temp file in the same
-    directory, then renamed over ``path``. A reader sees the complete old
-    or new document; a writer killed mid-write leaves ``path`` untouched
-    (and a hidden ``.tmp`` file nothing reads)."""
+@contextlib.contextmanager
+def replacing(path):
+    """Create or replace the file at ``path`` atomically: the body writes
+    the yielded uniquely named hidden temp file in the same directory,
+    which is then renamed over ``path``. A reader sees the old file (or
+    none) or the new one, whole; a writer killed before the rename leaves
+    ``path`` as it was and a hidden ``.tmp`` file nothing reads."""
     path = os.fspath(path)
     folder, name = os.path.split(path)
     os.makedirs(folder or ".", exist_ok=True)
     tmp = os.path.join(folder, f".{name}.{uuid.uuid4().hex}.tmp")
     try:
-        with open(tmp, "x") as fh:
-            fh.write(json.dumps(obj, sort_keys=True))
+        yield tmp
         os.replace(tmp, path)
     except BaseException:
         with contextlib.suppress(FileNotFoundError):
             os.remove(tmp)
         raise
+
+
+def write_json(path, obj) -> None:
+    """Replace the JSON file at ``path`` with ``obj`` atomically."""
+    with replacing(path) as tmp, open(tmp, "x") as fh:
+        fh.write(json.dumps(obj, sort_keys=True))

@@ -6,10 +6,10 @@ startup, and searches the union of retained days with per-day top-k + global
 merge (reference ``faiss_manager.py:26-27,41-61,90-104,221-296``).
 
 Spark-first translation: ONE parquet (or Delta) table partitioned by
-``date``. Appending is a partitioned write; retention is partition pruning +
-physical partition delete. Vectors and metadata live in the same rows, so
-the positional index/sidecar alignment the reference maintains by hand
-cannot drift.
+``date``. Appending is a partitioned write, or one file written in the
+driver for an Arrow table; retention is partition pruning + physical
+partition delete. Vectors and metadata live in the same rows, so the
+positional index/sidecar alignment the reference keeps by hand can't drift.
 
 Search reads only the retained days. A small read (at most
 ``local_serve.LOCAL_READ_MAX_BYTES`` of files) is answered in the driver
@@ -25,21 +25,37 @@ across the cluster; only k rows per task reach the driver merge.
 
 from __future__ import annotations
 
+import logging
 import shutil
+import time
+import uuid
 from collections.abc import Sequence
 from datetime import date
 from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import durable, local_serve
 from .operators.topk import grouped_top_k
 from .operators.vector import _knn_exprs, _nearest_first, knn
 
-VECTOR_STORE_COLUMNS = ("date", "vec_id", "embedding", "type", "data_json", "extras")
+# ``date`` is the partition directory; the other columns are the files'
+STORE_SCHEMA = T.StructType([
+    T.StructField("date", T.DateType()),
+    T.StructField("vec_id", T.LongType()),
+    T.StructField("embedding", T.ArrayType(T.FloatType())),
+    T.StructField("type", T.StringType()),
+    T.StructField("data_json", T.StringType()),
+    T.StructField("extras", T.MapType(T.StringType(), T.StringType())),
+])
+
+log = logging.getLogger(__name__)
 
 
 class VectorStore:
@@ -52,37 +68,54 @@ class VectorStore:
 
     # ------------------------------------------------------------- write
 
-    def add(self, df: DataFrame, as_of: date | None = None) -> None:
-        """Append rows (V3, faiss_manager.py:221-252). If the frame has no
-        ``date`` column, rows are stamped with ``as_of`` (defaults to
-        today) — the reference always appends to today's partition.
+    def add(self, rows: DataFrame | pa.Table, as_of: date | None = None) -> None:
+        """Append rows (V3, faiss_manager.py:221-252). Rows without a
+        ``date`` column are stamped with ``as_of`` (defaults to today) —
+        the reference always appends to today's partition.
 
         Column presence is validated up front — FAISS rejects malformed
         adds at add() time (wrong dim raises); a schemaless append here
         would instead poison every later search. Rows are also CAST to the
         canonical store schema (embedding array<float>, vec_id long) so an
         array<double> append can't fork the on-disk schema between the
-        empty-store and populated-store states."""
-        missing = {c for c in VECTOR_STORE_COLUMNS if c != "date"} - set(df.columns)
+        empty-store and populated-store states. A ``pa.Table`` (no ``date``
+        column) is written in the driver as one parquet file; a DataFrame
+        is a Spark write. Each call logs root, days, rows, path, seconds."""
+        t0 = time.perf_counter()
+        local = isinstance(rows, pa.Table)
+        names = rows.column_names if local else rows.columns
+        missing = set(STORE_SCHEMA.names[1:]) - set(names)
         if missing:
             raise ValueError(f"vector store add() missing columns: {sorted(missing)}")
-        out = df
-        if "date" not in df.columns:
-            stamp = as_of or date.today()
-            out = df.withColumn("date", F.lit(stamp.isoformat()).cast("date"))
-        out = out.select(
-            F.col("date").cast("date").alias("date"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("embedding").cast("array<float>").alias("embedding"),
-            F.col("type").cast("string").alias("type"),
-            F.col("data_json").cast("string").alias("data_json"),
-            F.col("extras").cast("map<string,string>").alias("extras"),
-        )
-        (
-            out.write.mode("append")
-            .partitionBy("date")
-            .parquet(self.path)
-        )
+        stamp = (as_of or date.today()).isoformat()
+        if local:
+            if "date" in names:
+                raise ValueError("a pa.Table append is stamped with as_of, not a date column")
+            file_schema = to_arrow_schema(T.StructType(STORE_SCHEMA.fields[1:]))
+            table = rows.select(file_schema.names).cast(file_schema)
+            days, n = [stamp], table.num_rows
+            part = Path(self.path) / f"date={stamp}" / f"part-{uuid.uuid4().hex}.parquet"
+            if n:  # zstd: the codec the session writes parquet with
+                with durable.replacing(part) as tmp:
+                    pq.write_table(table, tmp, compression="zstd")
+        else:
+            before = set(self._data_files())
+            out = rows if "date" in names else rows.withColumn("date", F.lit(stamp))
+            out.select(
+                *(F.col(f.name).cast(f.dataType).alias(f.name) for f in STORE_SCHEMA)
+            ).write.mode("append").partitionBy("date").parquet(self.path)
+            new = set(self._data_files()) - before
+            days = sorted({Path(f).parent.name[5:] for f in new})
+            n = sum(pq.read_metadata(f).num_rows for f in new)
+        log.info("VectorStore.add at %s: %d rows into date=%s, %s path, in %.3f s",
+                 self.path, n, ",".join(days), "local" if local else "spark",
+                 time.perf_counter() - t0)
+
+    def _data_files(self, days: Sequence[str] | None = None) -> list[str]:
+        """The data files of the ``days`` partitions (default: all)."""
+        root = Path(self.path)
+        dirs = root.glob("date=*") if days is None else (root / f"date={d}" for d in days)
+        return local_serve.data_files(dirs)
 
     # ----------------------------------------------------------- read
 
@@ -90,26 +123,16 @@ class VectorStore:
         """All rows; an empty/nonexistent store is an EMPTY frame, not an
         error — the reference returns ([], []) when no index has data
         (faiss_manager.py:264-268 skips ntotal==0 days)."""
-        root = Path(self.path)
-        if not root.exists() or not any(root.glob("date=*")):
-            return self.spark.createDataFrame(
-                [],
-                "date date, vec_id long, embedding array<float>, "
-                "type string, data_json string, extras map<string,string>",
-            )
+        if not self._present_dates():
+            return self.spark.createDataFrame([], STORE_SCHEMA)
         return self.spark.read.option("basePath", self.path).parquet(self.path)
 
     def _present_dates(self, as_of: date | None = None) -> list[str]:
-        """ISO dates of partitions physically present, newest first,
-        bounded above by ``as_of`` when given. Driver-side directory
-        listing — the same metadata walk Spark's own partition discovery
-        performs, so it costs one filesystem listing, never a data scan."""
-        root = Path(self.path)
-        if not root.exists():
-            return []
-        days = sorted(
-            (p.name.split("=", 1)[1] for p in root.glob("date=*")), reverse=True
-        )
+        """ISO dates of partitions holding a data file (an empty ``date=``
+        directory is no day), newest first, bounded above by ``as_of``
+        when given. Driver-side directory listing — the same metadata walk
+        Spark's own partition discovery performs, never a data scan."""
+        days = sorted({Path(f).parent.name[5:] for f in self._data_files()}, reverse=True)
         if as_of is not None:
             days = [d for d in days if d <= as_of.isoformat()]
         return days
@@ -124,8 +147,6 @@ class VectorStore:
         partition column, so Spark prunes everything else at planning
         time."""
         keep = self._present_dates(as_of)[: self.max_days]
-        if not keep:
-            return self.load().limit(0)
         return self.load().filter(F.col("date").isin(keep))
 
     # ----------------------------------------------------- maintenance
@@ -140,8 +161,6 @@ class VectorStore:
         keep = set(self._present_dates(as_of)[: self.max_days])
         removed: list[str] = []
         root = Path(self.path)
-        if not root.exists():
-            return removed
         horizon = as_of.isoformat() if as_of is not None else None
         for part in sorted(root.glob("date=*")):
             day = part.name.split("=", 1)[1]
@@ -166,8 +185,7 @@ class VectorStore:
         → rank + similarity=1-d/2. Answered in the driver when the
         retained days' files are small (:mod:`.local_serve`), else by the
         partition-pruned Spark plan."""
-        keep = self._present_dates(as_of)[: self.max_days]
-        files = local_serve.data_files(Path(self.path) / f"date={d}" for d in keep)
+        files = self._data_files(self._present_dates(as_of)[: self.max_days])
         if local_serve.use_local(f"VectorStore.search at {self.path}", files):
             result = self._search_local(query_vec, k, types, files)
         else:

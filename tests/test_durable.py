@@ -239,6 +239,59 @@ def test_killed_writer_leaves_store_readable_and_unlocked(tmp_path, case):
     case(root)
 
 
+def _vs_rows(ids):
+    """``ids`` as rows of the vector store's file schema (2-d vectors)."""
+    import pyarrow as pa
+
+    return pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array([[float(i), 1.0] for i in ids], pa.list_(pa.float32())),
+        "type": ["a"] * len(ids),
+        "data_json": [f'{{"id": {i}}}' for i in ids],
+        "extras": pa.nulls(len(ids), pa.map_(pa.string(), pa.string())),
+    })
+
+
+def test_killed_local_append_leaves_store_as_before(spark, tmp_path):
+    """A driver-side ``VectorStore`` append killed before its rename
+    leaves only a hidden temp file in a new ``date=`` directory. That
+    directory is no retained day: ``load``, ``retained`` and both search
+    paths return what they returned before the kill."""
+    from datetime import date
+
+    from mcp_hubspot_spark.vector_store import VectorStore
+
+    root = tmp_path / "vs"
+    vs = VectorStore(spark, str(root), max_days=2)
+    vs.add(_vs_rows([1, 2]), as_of=date(2024, 6, 1))
+    vs.add(_vs_rows([3]), as_of=date(2024, 6, 2))
+
+    def state():
+        files = vs._data_files(vs._present_dates()[: vs.max_days])
+        return (
+            sorted(vs.load().collect()),
+            sorted(vs.retained().collect()),
+            vs._search_local([0.0, 1.0], 5, None, files).to_pylist(),
+            vs._search_spark([0.0, 1.0], 5, None, None).collect(),
+        )
+
+    before = state()
+    assert len(before[1]) == 3
+    _crash(
+        "import datetime\n"
+        "import pyarrow as pa\n"
+        "from mcp_hubspot_spark.vector_store import VectorStore\n"
+        "os.replace = lambda *a: os._exit(9)\n"
+        "VectorStore(None, args['root']).add(\n"
+        "    pa.Table.from_pylist(args['rows']), as_of=datetime.date(2024, 6, 3))\n",
+        root=root,
+        rows=_vs_rows([4]).to_pylist(),
+    )
+    [left] = os.listdir(root / "date=2024-06-03")
+    assert left.startswith(".part-") and left.endswith(".tmp")
+    assert state() == before
+
+
 def test_snapshot_commit_ignores_stale_lock_file(tmp_path):
     """A committer killed while holding the old ``O_EXCL`` lock file left
     it behind; the file must not block later commits."""
@@ -422,3 +475,27 @@ def test_mutations_and_recoveries_are_logged(tmp_path, caplog):
     assert msgs[3] == (
         f"_Store at {tmp_path}: recovery skipped, a live writer holds the lock"
     )
+
+
+def test_vector_store_appends_are_logged(spark, tmp_path, caplog):
+    """``VectorStore.add`` logs one INFO record per call on either path:
+    root, day, rows, path and elapsed seconds."""
+    import logging
+    from datetime import date
+
+    from mcp_hubspot_spark.vector_store import VectorStore
+
+    caplog.set_level(logging.INFO, logger="mcp_hubspot_spark.vector_store")
+    vs = VectorStore(spark, str(tmp_path / "vs"))
+    rows = _vs_rows([1, 2, 3])
+    vs.add(rows, as_of=date(2024, 6, 1))
+    vs.add(spark.createDataFrame(rows.to_pylist(), vs.load().drop("date").schema),
+           as_of=date(2024, 6, 2))
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 2
+    for msg, day, path in zip(msgs, ("2024-06-01", "2024-06-02"), ("local", "spark")):
+        assert msg.startswith(
+            f"VectorStore.add at {tmp_path / 'vs'}: 3 rows into date={day}, "
+            f"{path} path, in "
+        )
+        assert msg.endswith(" s")

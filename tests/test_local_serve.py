@@ -258,6 +258,116 @@ def test_vector_store_local_matches_spark(spark, embs, queries, tmp_path, case):
             assert got[-1].distance is None
 
 
+# ------------------------------------------------------- Engine appends
+
+
+def _udf_rows(df, data_type):
+    """A tool answer as the Spark pipeline embeds it: payload, id and the
+    pandas-UDF embedding in one select over the answer's plan."""
+    from mcp_hubspot_spark.functions.embedding import embed_column
+
+    payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+    return df.select(
+        F.xxhash64(F.lit(data_type), payload).alias("vec_id"),
+        embed_column(payload, dim=64).alias("embedding"),
+        F.lit(data_type).alias("type"),
+        payload.alias("data_json"),
+        F.lit(None).cast("map<string,string>").alias("extras"),
+    )
+
+
+def _stored(vs):
+    """Every stored row, its embedding as float32 bytes, sorted."""
+    return sorted(
+        (r.date, r.vec_id, struct.pack(f"<{len(r.embedding)}f", *r.embedding),
+         r.type, r.data_json, r.extras)
+        for r in vs.load().collect()
+    )
+
+
+def test_engine_appends_match_the_spark_pipeline(spark, tmp_path):
+    """The rows an Engine tool appends in the driver equal, bit for bit,
+    the rows the pandas-UDF pipeline appends through Spark for the same
+    answer and day; a store holding both kinds of file reads back the
+    same through the local and the Spark search."""
+    from mcp_hubspot_spark.api import Engine
+    from tests.crm_fixtures import build_crm_tables
+
+    tables = build_crm_tables(spark)
+    plain = Engine(tables)
+    frames = {
+        "hubspot_ticket": plain.get_tickets(limit=5),
+        "hubspot_company": plain.get_active_companies(limit=4),
+        "hubspot_contact": plain.get_active_contacts(limit=3),
+    }
+    days = dict(zip(frames, [date(2024, 6, d) for d in (1, 2, 3)]))
+    local = Engine(tables, VectorStore(spark, str(tmp_path / "local")))
+    old = VectorStore(spark, str(tmp_path / "spark"))
+    mixed = Engine(tables, VectorStore(spark, str(tmp_path / "mixed")))
+    for t, df in frames.items():
+        local._indexed(df, t, as_of=days[t])
+        old.add(_udf_rows(df, t), as_of=days[t])
+        # mixed: tickets appended locally, companies by Spark, contacts both
+        if t != "hubspot_company":
+            mixed._indexed(df, t, as_of=days[t])
+        if t != "hubspot_ticket":
+            mixed.store.add(_udf_rows(df, t), as_of=days[t])
+    assert _stored(local.store) == _stored(old)
+    assert len(_stored(old)) == sum(df.count() for df in frames.values())
+    assert all(r[-1] is None for r in _stored(local.store))
+    assert local.store.load().schema == old.load().schema
+
+    vs = mixed.store
+    probe = [float(x) for x in vs.load().first().embedding]
+    off = [(-1.0) ** j * 0.1 * (j % 7) for j in range(64)]
+    cases = [
+        (None, None),
+        (None, ["hubspot_company"]),
+        (days["hubspot_company"], None),
+        (days["hubspot_contact"], ["hubspot_contact", "hubspot_ticket"]),
+    ]
+    for as_of, types in cases:
+        files = vs._data_files(vs._present_dates(as_of)[: vs.max_days])
+        for q in (probe, off):
+            got = _assert_same(
+                spark,
+                vs._search_local(q, 30, types, files),
+                vs._search_spark(q, 30, as_of, types),
+            )
+            assert got and {r.type for r in got} <= set(types or frames)
+            if as_of is None and types is None:
+                assert len(got) == len(_stored(vs))
+
+
+@pytest.mark.parametrize("tool", ["get_tickets", "get_active_companies"])
+def test_indexed_tool_runs_one_spark_job(spark, tmp_path, tool):
+    """With a store attached, a tool call and the collect of its answer
+    run one Spark job together, and the answer's rows are the stored
+    rows: their JSON is the stored ``data_json``, row for row."""
+    import pyarrow.parquet as pq
+
+    from mcp_hubspot_spark.api import Engine
+    from tests.crm_fixtures import build_crm_tables
+
+    vs = VectorStore(spark, str(tmp_path / "vs"))
+    engine = Engine(build_crm_tables(spark), vs)
+    sc = spark.sparkContext
+    for call in range(2):
+        before = set(vs._data_files())
+        group = f"indexed-{tool}-{call}"
+        sc.setJobGroup(group, group)
+        try:
+            df = getattr(engine, tool)(limit=2 + call)
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        [added] = set(vs._data_files()) - before
+        stored = pq.read_table(added, columns=["data_json"])["data_json"].to_pylist()
+        answer = [r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect()]
+        assert len(rows) == 2 + call and answer == stored
+
+
 # ------------------------------------------------------ files and jobs
 
 

@@ -123,6 +123,27 @@ def test_add_casts_to_canonical_schema(spark, tmp_path):
     assert loaded.count() == 5
 
 
+def test_empty_date_directory_is_no_retained_day(spark, tmp_path):
+    """A ``date=`` directory without a data file (left by an append
+    killed before its rename) is no day: an empty store still loads
+    empty, and the directory uses up none of the ``max_days`` slots."""
+    root = tmp_path / "vs"
+    vs = VectorStore(spark, str(root), max_days=1)
+    (root / f"date={ANCHOR + timedelta(days=1)}").mkdir(parents=True)
+    assert vs._present_dates() == []
+    assert vs.load().count() == 0
+    emb = load_table(spark, SF, "embeddings").limit(4)
+    vs.add(emb.select(
+        "vec_id", "embedding", F.lit("document").alias("type"),
+        F.lit("{}").alias("data_json"),
+        F.lit(None).cast("map<string,string>").alias("extras"),
+    ), as_of=ANCHOR)
+    assert vs._present_dates() == [ANCHOR.isoformat()]
+    assert vs.retained().count() == 4
+    probe = [float(x) for x in emb.first().embedding]
+    assert len(vs.search(probe, k=10).collect()) == 4
+
+
 def test_engine_tools_index_results_into_store(spark, tmp_path):
     """With a store attached, every tool response is embedded + indexed as
     a side effect (reference handlers/base_handler.py:39-76) and then
