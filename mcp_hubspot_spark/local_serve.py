@@ -293,13 +293,36 @@ def arrow_type(result, column: str) -> pa.DataType:
     return to_arrow_type(result.schema[column].dataType)
 
 
+def _nullable(t: pa.DataType) -> pa.DataType:
+    """``t`` with every field below it nullable."""
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _nullable(f.type)) for f in t])
+    if pa.types.is_list(t):
+        return pa.list_(_nullable(t.value_type))
+    if pa.types.is_large_list(t):
+        return pa.large_list(_nullable(t.value_type))
+    if pa.types.is_map(t):
+        return pa.map_(t.key_type, _nullable(t.item_type))
+    return t
+
+
 def answer(spark, result):
     """The DataFrame a read returns: a Spark path's plan as is, a local
     path's Arrow table wrapped (its schema, nullability included, is the
-    Spark path's)."""
-    if isinstance(result, pa.Table):
+    Spark path's).
+
+    PySpark rebuilds a nested column whose children are nested (say
+    ``array<struct<..., array<string>>>``) with nullable fields, then
+    refuses to cast it back to fields declared not null. Such a table
+    is wrapped with every nested field nullable; top-level nullability
+    and all values are kept."""
+    if not isinstance(result, pa.Table):
+        return result
+    try:
         return spark.createDataFrame(result)
-    return result
+    except pa.ArrowTypeError:
+        relaxed = pa.schema([f.with_type(_nullable(f.type)) for f in result.schema])
+        return spark.createDataFrame(result.cast(relaxed))
 
 
 def rows(result, columns: Sequence[str]) -> list[tuple]:

@@ -503,3 +503,20 @@ def test_use_local_logs_path_and_bytes(tmp_path, caplog, monkeypatch):
         "read B: spark path, 100 bytes in 1 files",
         "read C: spark path, 100 bytes in 1 files",
     ]
+
+
+def test_answer_wraps_nested_not_null_fields(spark):
+    """``answer`` wraps any table ``toArrow()`` returns, including an
+    array of structs whose fields are declared not null (the
+    conversations tool's ``messages``), and the wrapped table collects to
+    the frame's rows."""
+    from mcp_hubspot_spark.api import Engine
+    from tests.crm_fixtures import build_crm_tables
+
+    frame = Engine(build_crm_tables(spark))._conversations_frame(5, None)
+    wrapped = local_serve.answer(spark, frame.toArrow())
+    assert wrapped.columns == frame.columns
+    assert [f.nullable for f in wrapped.schema] == [f.nullable for f in frame.schema]
+    by_id = lambda rows: sorted(rows, key=lambda r: r.id)  # noqa: E731
+    assert by_id(wrapped.collect()) == by_id(frame.collect())
+    assert len(frame.collect()) > 0

@@ -1,8 +1,8 @@
-"""Per-query plan capture + isolated timing for registry queries.
+"""Per-query plan capture and interleaved timing for registry queries.
 
 Usage:
     python tools/profile_query.py plans --out DIR [NAME...]   # explain -> DIR/<name>.txt
-    python tools/profile_query.py time  [NAME...]             # noop-sink timing, 1 cold + 3 steady reps
+    python tools/profile_query.py time  [NAME...]             # interleaved A/B timing
     python tools/profile_query.py both  --out DIR [NAME...]
 
 No NAME means every registry query. Env: SPARK_GRAFT_SF_DIR (the sf0.1
@@ -12,23 +12,26 @@ Plans are ``explain('formatted')`` text; two dumps of the same tree
 differ only in expression ids (``#\\d+L?``) and exchange/broadcast
 ``plan_id=N``, so normalize those before diffing dumps of two trees.
 
-Timing methodology matches bench.py (guide §1.4): each rep fully
-materializes every column through the noop sink; jobs are labelled with
-setJobDescription so UI/event-log forensics map to queries.
+``time`` hands all NAMEs to ``mcp_hubspot_spark.measure.measure`` at
+once: a cold rep each, then steady reps interleaved across them, so host
+drift hits every query alike. To compare variants of one query, register
+them under distinct names in a script and call ``measure`` the same way.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from mcp_hubspot_spark.measure import measure, warm_up  # noqa: E402
 from mcp_hubspot_spark.session import get_spark  # noqa: E402
+from mcp_hubspot_spark.sources.catalog import DEFAULT_SF_DIR  # noqa: E402
 from mcp_hubspot_spark.workload import QUERIES  # noqa: E402
 
 
@@ -37,35 +40,20 @@ def main() -> None:
     ap.add_argument("mode", choices=("plans", "time", "both"))
     ap.add_argument("names", nargs="*", help="registry queries (default: all)")
     ap.add_argument("--out", type=Path, help="plan directory (plans/both)")
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()  # NAMEs may follow --out DIR
     if args.mode != "time" and args.out is None:
         ap.error(f"{args.mode} needs --out DIR")
     names = args.names or sorted(QUERIES)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="profile_query")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
-
-    def _noop(batches):
-        import numpy  # noqa: F401
-
-        yield from batches
-
-    spark.range(10_000).repartition(64).mapInPandas(
-        _noop, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    if args.out is not None:
+    results: dict[str, dict] = {name: {} for name in names}
+    if args.mode in ("plans", "both"):
         args.out.mkdir(parents=True, exist_ok=True)
-    results: dict[str, dict] = {}
-    for name in names:
-        fn = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"{name}: build")
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        build_s = time.perf_counter() - t0
-        entry: dict = {"build_sec": round(build_s, 3)}
-        if args.mode in ("plans", "both"):
+        for name in names:
+            t0 = time.perf_counter()
+            df = QUERIES[name](spark, DEFAULT_SF_DIR)
+            entry = results[name]
+            entry["build_sec"] = round(time.perf_counter() - t0, 3)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
@@ -77,25 +65,11 @@ def main() -> None:
                 plan.count(t)
                 for t in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
             )
-        if args.mode in ("time", "both"):
-            reps = []
-            tracker = spark.sparkContext.statusTracker()
-            for i in range(4):
-                group = f"prof-{name}-{i}"
-                spark.sparkContext.setJobGroup(group, f"{name}: rep{i}")
-                t1 = time.perf_counter()
-                # rebuild each rep: query construction (driver lookups)
-                # is part of what the bench pays, so time it here too
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                reps.append(round(time.perf_counter() - t1, 3))
-                if i == 3:  # steady-state Spark job count (fixed overhead proxy)
-                    entry["jobs"] = len(tracker.getJobIdsForGroup(group))
-            entry["cold"] = reps[0]
-            entry["steady_min"] = min(reps[1:])
-            entry["steady_reps"] = reps[1:]
-        spark.sparkContext.setJobDescription(None)
-        results[name] = entry
-        print(json.dumps({name: entry}), flush=True)
+    if args.mode in ("time", "both"):
+        warm_up(spark)
+        builds = {name: partial(QUERIES[name], spark, DEFAULT_SF_DIR) for name in names}
+        for name, record in measure(spark, builds).items():
+            results[name].update(record)
     print(json.dumps({"all": results}))
 
 
