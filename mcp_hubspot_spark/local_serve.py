@@ -15,7 +15,8 @@ logic; this module holds only what the three reads share. Which path
 answers depends on the input alone (:func:`use_local`): no ``where``
 predicate and at most :data:`LOCAL_READ_MAX_BYTES` of files. Everything
 else keeps the Spark plan, which is also the reference the parity tests
-compare against.
+compare against. A batch read is the single read run once per query
+(:func:`batch`), so each query takes the path its own read would.
 
 The arithmetic replays the Spark expressions bit for bit:
 
@@ -323,6 +324,26 @@ def answer(spark, result):
     except pa.ArrowTypeError:
         relaxed = pa.schema([f.with_type(_nullable(f.type)) for f in result.schema])
         return spark.createDataFrame(result.cast(relaxed))
+
+
+def batch(spark, queries: Sequence[tuple], serve, qid_type: pa.DataType):
+    """Many reads as one DataFrame: ``serve(query)`` per ``(query_id,
+    query)`` pair, each taking its own path, the answers concatenated
+    behind a leading ``query_id`` column of ``qid_type``. A Spark
+    answer is a top-k, so its ``toArrow()`` holds at most k rows.
+    Raises ``ValueError`` for an empty batch or a repeated id."""
+    if not queries:
+        raise ValueError("empty query batch")
+    ids = [qid for qid, _ in queries]
+    if len(set(ids)) != len(ids):
+        raise ValueError(f"repeated query id in {ids}")
+    parts = []
+    for qid, query in queries:
+        t = serve(query)
+        t = t if isinstance(t, pa.Table) else t.toArrow()
+        qids = pa.array([qid] * t.num_rows, qid_type)
+        parts.append(t.add_column(0, "query_id", qids))
+    return answer(spark, pa.concat_tables(parts, promote_options="permissive"))
 
 
 def rows(result, columns: Sequence[str]) -> list[tuple]:

@@ -324,7 +324,7 @@ def hybrid_rrf_serve(
     (workload.py), which rescans and re-tokenizes the whole corpus per
     query on BOTH legs. Here each leg reads only what its index prunes
     to: the lexical leg touches |query-term buckets| / num_buckets of
-    the postings (SCALE_r10: 1.79 s vs 7.92 s brute at 1M docs) and the
+    the postings (1.79 s vs 7.92 s brute at 1M docs) and the
     dense leg scans nprobe cells. Each leg takes its own path (small
     reads in the driver, larger ones as Spark plans, see
     :mod:`.local_serve`); a Spark leg is collected, since it holds at
@@ -346,13 +346,26 @@ def hybrid_rrf_serve(
     scans the probed cells' embedding column; ``"pq"`` (requires an
     index built with ``pq_m``) scans only the m-byte-ish PQ codes and
     exact-reranks the ADC top-``pq_rerank`` (default 4x shortlist) —
-    the 100 TB IO shape (SCALE_r10: codes cut the dense read ~32x at
-    m=8/64-d float32). The PQ leg's final ranks are EXACT over its
+    the 100 TB IO shape (codes cut the dense read ~32x at m=8/64-d
+    float32). The PQ leg's final ranks are EXACT over its
     shortlist, so with ``nprobe`` covering every cell and ``pq_rerank``
     at least the probed row count it degenerates to the exact leg
     (pytest-pinned); at serving settings it trades recall for IO
     exactly as ``search_pq`` documents.
     """
+    fused = _hybrid_table(
+        text_index, vector_index, query_terms, query_vec,
+        k, shortlist, nprobe, rrf_k, dense, pq_rerank,
+    )
+    return local_serve.answer(text_index.spark, fused)
+
+
+def _hybrid_table(
+    text_index, vector_index, query_terms: list[str], query_vec,
+    k: int, shortlist: int, nprobe: int, rrf_k: int,
+    dense: str = "exact", pq_rerank: int | None = None,
+) -> pa.Table:
+    """:func:`hybrid_rrf_serve`'s fused answer as an Arrow table."""
     lex = text_index._serve(query_terms, k=shortlist)
     if dense == "pq":
         vec = vector_index.search_pq(
@@ -371,9 +384,7 @@ def hybrid_rrf_serve(
         k,
         rrf_k,
     )
-    return local_serve.answer(
-        text_index.spark, _fused_table(fused, lex, vec)
-    )
+    return _fused_table(fused, lex, vec)
 
 
 def _rrf_fuse(lex_rows, vec_rows, k: int, rrf_k: int) -> list[tuple]:
@@ -426,42 +437,17 @@ def hybrid_rrf_serve_batch(
     nprobe: int = 2,
     rrf_k: int = 60,
 ) -> DataFrame:
-    """Batched :func:`hybrid_rrf_serve`: Q hybrid queries against ONE
-    pruned posting read (``TextIndex.search_batch``) and ONE pruned
-    cell scan (``IvfIndex.search_batch``). Both legs are collected (at
-    most Q x ``shortlist`` rows each) and each query is fused in Python
-    by the same RRF as ``hybrid_rrf_serve``, so per-query output is
-    that call's (pytest-pinned). ``queries`` maps query_id (string) ->
-    (terms list, query vector). Returns (query_id, doc_id, lex_rank,
-    vec_rank, rrf_score), top-k per query by (rrf_score desc, doc_id
-    asc).
-    """
-    if not queries:
-        raise ValueError("empty query batch")
-    order = sorted(queries)
-    lex = text_index.search_batch(
-        {q: queries[q][0] for q in order}, k=shortlist
-    )
-    vec = vector_index.search_batch(
-        [(i, queries[q][1]) for i, q in enumerate(order)],
-        k=shortlist,
-        nprobe=nprobe,
-    )
-    lex_rows: dict = {q: [] for q in order}
-    for q, doc, rank in lex.select("query_id", "doc_id", "rank").collect():
-        lex_rows[q].append((doc, rank))
-    vec_rows: dict = {q: [] for q in order}
-    for i, doc, rank in vec.select("query_id", "vec_id", "rank").collect():
-        vec_rows[order[i]].append((doc, rank))
-    fused, query_ids = [], []
-    for q in order:
-        rows = _rrf_fuse(lex_rows[q], vec_rows[q], k, rrf_k)
-        fused += rows
-        query_ids += [q] * len(rows)
-    table = _fused_table(fused, lex, vec)
-    return local_serve.answer(
+    """:func:`hybrid_rrf_serve` per query of ``queries`` (query_id
+    (string) -> (terms list, query vector)), each leg on its own path:
+    (query_id, doc_id, lex_rank, vec_rank, rrf_score). Raises
+    ``ValueError`` for an empty batch."""
+    return local_serve.batch(
         text_index.spark,
-        table.add_column(0, "query_id", pa.array(query_ids, pa.string())),
+        sorted(queries.items()),
+        lambda q: _hybrid_table(
+            text_index, vector_index, q[0], q[1], k, shortlist, nprobe, rrf_k
+        ),
+        pa.string(),
     )
 
 

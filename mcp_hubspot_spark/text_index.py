@@ -12,12 +12,12 @@ phrase lookup) then read only the buckets their query terms hash to —
 same build-once/query-many economics the IVF index gives vectors. A
 ``search()`` whose buckets (plus tombstones) hold at most
 ``local_serve.LOCAL_READ_MAX_BYTES`` is scored in the driver with
-pyarrow + numpy and launches no Spark job; larger reads, the batch
-reads and the phrase reads run as Spark plans with partition pruning,
-and the two BM25 paths agree bit for bit. The reference has no lexical
-index at all (its search surface is the FAISS flat vector scan,
-faiss_manager.py); this is beyond-reference serving infrastructure for
-the LLM-pipeline mandate.
+pyarrow + numpy and launches no Spark job; larger reads and the phrase
+reads run as Spark plans with partition pruning, and the two BM25 paths
+agree bit for bit. ``search_batch`` runs ``search`` once per query.
+The reference has no lexical index at all (its search surface is the
+FAISS flat vector scan, faiss_manager.py); this is beyond-reference
+serving infrastructure for the LLM-pipeline mandate.
 
 Layout under ``root/``:
 - ``postings/epoch=<e>/bucket=<b>/``: (term, doc_id, tf, positions
@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import durable, local_serve
 from .operators.classifier import hash_bucket
 from .operators.text import bm25_weight, sorted_term_sum, tokens
-from .operators.topk import grouped_top_k, ranked_top_k
+from .operators.topk import ranked_top_k
 
 __all__ = ["TextIndex"]
 
@@ -374,18 +374,18 @@ class TextIndex:
         crash-safe swap idiom — then refresh corpus stats from the
         surviving postings.
 
-        Epoch consolidation (round 12): streaming ingest creates one
-        epoch partition set per micro-batch, and both the pruned read's
+        Epoch consolidation: streaming ingest creates one epoch
+        partition set per micro-batch, and both the pruned read's
         partition listing and its per-(doc, term) newest-generation
-        aggregate grow with epoch count (SCALE_r12 locates the
-        degradation). The rewrite keeps only the newest generation per
-        (doc, term) — the ``_pruned`` net applied physically — and
-        lands everything at epoch 0, so subsequent adds resume at
-        ``last_epoch + 1`` untouched. Epoch 0 is deliberately BELOW any
-        live add epoch: a crash-retried streaming batch re-adds at its
-        own epoch (> 0), never overwriting the consolidated partitions,
-        and its duplicate generations are served newest-first by the
-        read-side net until the next compact folds them in.
+        aggregate grow with epoch count. The rewrite keeps only the
+        newest generation per (doc, term) — the ``_pruned`` net applied
+        physically — and lands everything at epoch 0, so subsequent adds
+        resume at ``last_epoch + 1`` untouched. Epoch 0 is deliberately
+        BELOW any live add epoch: a crash-retried streaming batch
+        re-adds at its own epoch (> 0), never overwriting the
+        consolidated partitions, and its duplicate generations are
+        served newest-first by the read-side net until the next compact
+        folds them in.
 
         Cost: one full-index shuffle (the newest-generation aggregate)
         + rewrite. Amortize via :meth:`maybe_compact`'s threshold — at
@@ -462,21 +462,8 @@ class TextIndex:
         meta["sum_dl"] = int(stats.sum_dl or 0)
         durable.write_json(self.root / self._META, meta)
 
-    # epoch-partition-count threshold for maybe_compact(): the same
-    # measured-auto-switch pattern as vector.ADC_LITERAL_MAX_DOUBLES and
-    # text.BLOCKLIST_LITERAL_MAX_PHRASES, set AT the measured knee of
-    # the pruned-read-latency-vs-epoch curve (isolated 1M-doc runs,
-    # SCALE_r12_partial re-confirmed by SCALE_r13's quiet re-measure):
-    # BM25 pruned read 1.29 s at 1 epoch -> 3.49 s at 16 -> 5.40 s at
-    # 128 — degradation is already ~2.7x at 16 and sub-linear after, so
-    # a higher cap buys little rewrite amortization while serving every
-    # read degraded. Amortization at E=16: compact cost 47-106 s
-    # (index-size-dependent) against ~+2.2 s per read vs the folded
-    # index — the fold pays for itself within ~21-48 subsequent reads,
-    # and steady-state rewrite bandwidth stays index_size/16 per
-    # ingested batch. Read-heavy streams should lower this (every read
-    # past ~16 epochs is knee-side); write-only ingest with rare reads
-    # can raise it — maybe_compact(max_epochs=...) takes the override.
+    # maybe_compact()'s epoch cap, at the knee of read latency vs epochs:
+    # 1M-doc BM25 read 1.29 s at 1 epoch, 3.49 s at 16, 5.40 s at 128.
     COMPACT_MAX_EPOCHS = 16
 
     def _n_epoch_dirs(self) -> int:
@@ -601,13 +588,13 @@ class TextIndex:
         aggregate over the already-tiny pruned subset; single-epoch
         indexes skip it.
 
-        Scope (ADVICE r11): the net shadows only terms the newest
-        generation STILL CONTAINS. A convention-violating re-add that
-        drops a term leaves the old epoch's posting for it with no
-        newer generation to out-rank it, so it keeps serving (and a
-        phrase can match across generations). That case needs the
-        tombstone — use ``add(..., replace=True)`` or the explicit
-        ``delete(ids, dead_epoch=epoch)`` pairing."""
+        Scope: the net shadows only terms the newest generation STILL
+        CONTAINS. A convention-violating re-add that drops a term leaves
+        the old epoch's posting for it with no newer generation to
+        out-rank it, so it keeps serving (and a phrase can match across
+        generations). That case needs the tombstone — use ``add(...,
+        replace=True)`` or the explicit ``delete(ids,
+        dead_epoch=epoch)`` pairing."""
         meta = self._meta_dict()
         reader = self._read_postings()
         bucket_lits = self._buckets(terms, meta["num_buckets"])
@@ -769,11 +756,12 @@ class TextIndex:
             ]),
         )
 
-    def _contrib(self, terms: list[str], k1: float, b: float) -> DataFrame:
-        """Per-(doc, term) BM25 contributions ``_c`` over the pruned
-        postings of ``terms``: (N, avgdl) from meta, per-term df
-        aggregated from the pruned read (corpus-global by construction),
-        the weight ``bm25_scores`` uses."""
+    def _search_spark(
+        self, terms: list[str], k: int, k1: float, b: float
+    ) -> DataFrame:
+        """``search`` as a Spark plan over the partition-pruned postings:
+        (N, avgdl) from meta, per-term df aggregated from the pruned read
+        (corpus-global by construction), the weight ``bm25_scores`` uses."""
         meta = self._meta_dict()
         n_docs = float(meta["n_docs"])
         avgdl = meta["sum_dl"] / n_docs if n_docs else 1.0
@@ -781,21 +769,18 @@ class TextIndex:
         dfreq = post.groupBy("term").agg(
             F.count(F.lit(1)).cast("double").alias("_df")
         )
-        return post.join(F.broadcast(dfreq), "term").select(
-            "doc_id",
-            "term",
-            bm25_weight(
-                F.col("tf").cast("double"), F.col("dl").cast("double"),
-                F.col("_df"), F.lit(n_docs), F.lit(avgdl), k1, b,
-            ).alias("_c"),
-        )
-
-    def _search_spark(
-        self, terms: list[str], k: int, k1: float, b: float
-    ) -> DataFrame:
-        """``search`` as a Spark plan over the partition-pruned postings."""
-        scored = self._contrib(terms, k1, b).groupBy("doc_id").agg(
-            sorted_term_sum("term").alias("score")
+        scored = (
+            post.join(F.broadcast(dfreq), "term")
+            .select(
+                "doc_id",
+                "term",
+                bm25_weight(
+                    F.col("tf").cast("double"), F.col("dl").cast("double"),
+                    F.col("_df"), F.lit(n_docs), F.lit(avgdl), k1, b,
+                ).alias("_c"),
+            )
+            .groupBy("doc_id")
+            .agg(sorted_term_sum("term").alias("score"))
         )
         return ranked_top_k(
             scored, [F.col("score").desc(), F.col("doc_id").asc()], k
@@ -809,36 +794,15 @@ class TextIndex:
         k1: float = 1.2,
         b: float = 0.75,
     ) -> DataFrame:
-        """BM25 top-k for MANY queries from ONE pruned posting read —
-        the ``knn_batch`` analog on the persisted index (and the
-        serving counterpart of ``operators/text.py::bm25_topk_batch``,
-        which rescans the corpus). The read prunes to the union of all
-        query-term buckets and ``_search_spark``'s contributions are
-        computed once over it; a tiny broadcast (query_id, term) map
-        fans them into their queries, and each query folds its own
-        terms in sorted order — so every per-query ranking is
-        bit-identical to a ``search()`` call for that query
-        (pytest-pinned). Returns (query_id, rank, doc_id, score).
-        """
-        if not queries:
-            raise ValueError("empty query batch")
-        qmap = sorted(
-            (qid, t)
-            for qid, ts in queries.items()
-            for t in {x.lower() for x in ts}
+        """``search`` per query of ``queries`` (query_id -> terms), each
+        on its own path: (query_id, rank, doc_id, score). Raises
+        ``ValueError`` for an empty batch."""
+        return local_serve.batch(
+            self.spark,
+            sorted(queries.items()),
+            lambda terms: self._serve(terms, k, k1=k1, b=b),
+            pa.string(),
         )
-        contrib = self._contrib(sorted({t for _, t in qmap}), k1, b)
-        qdf = self.spark.createDataFrame(
-            qmap, "query_id string, term string"
-        )
-        scored = (
-            contrib.join(F.broadcast(qdf), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(sorted_term_sum("term").alias("score"))
-        )
-        return grouped_top_k(
-            scored, ["query_id"], [F.col("score").desc(), F.col("doc_id").asc()], k
-        ).select("query_id", "rank", "doc_id", "score")
 
     def phrase_hits_batch(self, phrases: list[str]) -> DataFrame:
         """Positional matches for MANY phrases from ONE pruned read —

@@ -42,8 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import durable, local_serve
-from .operators.topk import grouped_top_k
-from .operators.vector import _knn_exprs, _nearest_first, knn
+from .operators.vector import knn
 
 # ``date`` is the partition directory; the other columns are the files'
 STORE_SCHEMA = T.StructType([
@@ -279,11 +278,11 @@ class IvfIndex:
     path its per-day sharding gestures at). Probed cells of at most
     ``local_serve.LOCAL_READ_MAX_BYTES`` are ranked in the driver with
     pyarrow + numpy and launch no Spark job; larger probes, ``where``
-    filters, ``search_pq`` and ``search_batch`` run as Spark plans whose
-    partition pruning does the same selection. Build once / query many:
-    the index cost is amortized across every subsequent query, unlike
-    the in-query training path (``workload.ivf_search``) which exists
-    for oracle-checkability.
+    filters and ``search_pq`` run as Spark plans whose partition pruning
+    does the same selection, and ``search_batch`` runs ``search`` once
+    per query. Build once / query many: the index cost is amortized
+    across every subsequent query, unlike the in-query training path
+    (``workload.ivf_search``) which exists for oracle-checkability.
 
     The mutators (build/add/delete/compact) are single-writer under
     :mod:`.durable`'s lock; searches take no lock.
@@ -459,16 +458,10 @@ class IvfIndex:
         on correlated/unbalanced subspaces. Composes with
         ``pq_residual`` (rotate first, residual in rotated space).
 
-        The default (``pq_opq=None``) resolves to True for FLAT
-        (non-residual) PQ indexes and False otherwise — the
-        data-backed default (r12 verdict #6): on the SCALE_r12 decaying
-        spectrum corpus, flat-PQ raw recall@10 was 0.1125 vs 0.625
-        with the OPQ rotation at identical serving cost — a recall
-        cliff no default should sit under. Residual encoding already
-        concentrates the subquantizers on within-cell offsets
-        (ivfpq_residual rows), so residual builds keep rotation
-        opt-in; pass ``pq_opq=False`` explicitly to measure raw flat
-        codebooks (diagnostic)."""
+        The default (``pq_opq=None``) is True for flat PQ and False for
+        residual PQ: on a decaying-spectrum corpus, flat-PQ recall@10 was
+        0.1125 raw vs 0.625 rotated at the same serving cost, while
+        residual codes already sit on within-cell offsets."""
         from .operators.vector import (
             assign_cells_literal,
             pq_encode_matmul,
@@ -992,64 +985,14 @@ class IvfIndex:
         vec_col: str = "embedding",
         id_cols: Sequence[str] = ("vec_id",),
     ) -> DataFrame:
-        """Many queries against ONE pruned scan — the index-tier
-        ``knn_batch`` (and the dense twin of ``TextIndex.search_batch``):
-        every query's cells are ranked driver-side as ``search`` does
-        (zero Spark jobs with a manifest), the scan prunes to the UNION
-        of all probed cells, a tiny broadcast (query_id, cell_id) map
-        restricts each candidate row to the queries that actually
-        probed its cell (so a query never sees cells it didn't ask
-        for — per-query results are EXACTLY ``search``'s, pytest-
-        pinned), and ``grouped_top_k`` keeps each query's k nearest
-        candidate rows by knn's distance expression. Returns
-        (query_id, rank, *id_cols, distance, similarity) —
-        ``search``'s schema plus the query id.
-
-        Scale: one partition-pruned scan regardless of Q; both join
-        sides against it are broadcast; the window input is bounded by
-        |union cells| rows, never the index.
-        """
-        import math
-
-        if not queries:
-            raise ValueError("empty query batch")
-        qcell_rows: list[tuple[int, int]] = []
-        qvec_rows: list[tuple[int, list[float], float]] = []
-        all_cells: set[int] = set()
-        metric = "l2"
-        for qid, vec in queries:
-            qv, probe, metric, _ = self._probe(vec, nprobe)
-            qid = int(qid)
-            qcell_rows += [(qid, int(c)) for c in probe]
-            # the same driver-folded query norm knn uses for cosine, so
-            # batch arithmetic is bit-identical to the per-query path
-            qn = math.sqrt(sum(x * x for x in qv))
-            qvec_rows.append((qid, [float(x) for x in qv], qn))
-            all_cells.update(int(c) for c in probe)
-        qcells = self.spark.createDataFrame(
-            qcell_rows, "query_id long, _qcell long"
-        )
-        qvecs = self.spark.createDataFrame(
-            qvec_rows, "query_id long, _qv array<double>, _qn double"
-        )
-        pruned = self._pruned_cells(sorted(all_cells)).select(
-            *id_cols,
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-            F.col("cell_id").cast("long").alias("_cell"),
-        )
-        cand = pruned.join(
-            F.broadcast(qcells), F.col("_cell") == F.col("_qcell")
-        ).join(F.broadcast(qvecs), "query_id")
-        dist, sim = _knn_exprs(
-            F.col(vec_col), F.col("_qv"), F.col("_qn"), metric
-        )
-        scored = cand.select(
-            "query_id", *id_cols, dist.alias("distance")
-        )
-        return grouped_top_k(
-            scored, ["query_id"], _nearest_first(id_cols[0]), k
-        ).select(
-            "query_id", "rank", *id_cols, "distance", sim.alias("similarity")
+        """``search`` per ``(query_id, vector)`` pair, each on its own
+        path: (query_id, rank, *id_cols, distance, similarity). Raises
+        ``ValueError`` for an empty batch or a repeated query id."""
+        return local_serve.batch(
+            self.spark,
+            [(int(qid), vec) for qid, vec in queries],
+            lambda vec: self._serve(vec, k, nprobe, vec_col, id_cols),
+            pa.int64(),
         )
 
     def lookup(
@@ -1162,20 +1105,8 @@ class IvfIndex:
         # literal IN-list on the partition column → planning-time pruning
         return self._cells().filter(F.col("cell_id").isin(probe))
 
-    # Literal-vs-join switch for residual ADC serving, from the
-    # SCALE_r10 characterization (200k rows, 8 queries, m=8): the
-    # broadcast-join twin wins at EVERY measured table width — 8.05 vs
-    # 9.05 s at 512 inlined doubles, 9.5 vs 17.4 s at 2048, 7.8 vs
-    # 106.7 s at 16k, 15.9 vs 768 s at 131k (the literal's plan string
-    # alone is 19 MB there) — because the 3-D literal costs O(doubles)
-    # py4j lit-construction per query plus Catalyst re-walking the
-    # whole tree per rule, while the join's fixed ~0.1 s/query
-    # createDataFrame+broadcast overhead is flat in nprobe·codes.
-    # search_pq therefore switches to the join twin above 512 doubles; at
-    # or below that the two are within host-drift noise and the
-    # literal's zero-extra-jobs single-expression plan is kept for the
-    # smallest probes (and for SQL-oracle replayability, which is why
-    # the literal path exists at all).
+    # Residual ADC tables above this many doubles go in by broadcast join: the
+    # 3-D literal's plan grows with them (join 9.5 s, literal 17.4 s at 2048).
     ADC_LITERAL_MAX_DOUBLES = 512
 
     def search_pq(
@@ -1204,16 +1135,9 @@ class IvfIndex:
         The default (``rerank=None``) derives ``max(20·k,
         4·k·nprobe)`` — the serving tier's 4x-shortlist pattern
         (serving.py hybrid_rrf_serve) grown with the probed-cell count.
-        SCALE_r12's boundary-probe curves are the reason the default is
-        NOT ADC-only: at rerank=200 (20·k at k=10) the PQ leg matches
-        the exact leg's recall point-for-point at every measured nprobe
-        (ivf_mid_recall_pq_rr200_np{1,2,4,8} == exact), while at
-        rerank=0 recall is 0.025–0.475 and NON-monotone in nprobe —
-        more probed cells flood a fixed ADC shortlist. The 4·k·nprobe
-        term keeps the budget growing with nprobe so the flooding mode
-        cannot reappear at large probe counts. ``rerank=0`` is
-        DIAGNOSTIC-ONLY (raw ADC ordering, adc_distance output shape):
-        use it to measure codebook quality, never to serve.
+        On boundary probes rerank=200 matched the exact leg's recall at
+        every nprobe measured, ADC-only 0.025–0.475. ``rerank=0``
+        returns raw ADC order (adc_distance shape): a diagnostic only.
 
         On residual indexes the per-cell query tables reach the scan as
         one 3-D literal up to ``ADC_LITERAL_MAX_DOUBLES`` (nprobe·m·codes)

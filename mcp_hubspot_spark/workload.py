@@ -8869,8 +8869,8 @@ def corpus_heaps_fit(spark: SparkSession, sf: str) -> DataFrame:
 # broadcast (query_id, term) map fans them into their queries, each
 # query folds its own terms in sorted order (bit-identical to the
 # one-query bm25_scores — pinned), and rank-k survives a per-query
-# window over match-proportional rows. TextIndex.search_batch is the
-# persisted-index serving twin, pinned per-query to search().
+# window over match-proportional rows. TextIndex.search_batch serves
+# the same batch from the persisted index, one search() per query.
 _BM25_BATCH_QUERIES = {
     "q_lex": ["spark", "window", "hash"],
     "q_scan": ["table", "scan", "fast"],

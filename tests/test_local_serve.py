@@ -142,6 +142,9 @@ def test_ivf_wrong_dimension_query_raises(spark, ivf_l2, queries):
             ivf_l2.search(q, k=5)
         with pytest.raises(ValueError, match="dimensions"):
             ivf_l2.search_batch([(0, q)], k=5)
+    # a repeated id would make one query_id hold two queries' rows
+    with pytest.raises(ValueError, match="repeated query id"):
+        ivf_l2.search_batch([(1, queries[0]), ("1", queries[1])], k=5)
 
 
 # ------------------------------------------------------------ TextIndex
@@ -414,10 +417,10 @@ def test_ivf_local_reads_only_probed_cells(spark, ivf_l2, queries, monkeypatch):
 def test_small_serving_reads_launch_no_spark_job(
     spark, embs, ivf_l2, tix_base, queries, tmp_path, caplog
 ):
-    """At fixture sizes each of the four serving reads, built and
+    """At fixture sizes each serving read, single or batched, built and
     collected, runs in the driver: zero Spark jobs in its job group."""
     from mcp_hubspot_spark.api import Engine
-    from mcp_hubspot_spark.serving import hybrid_rrf_serve
+    from mcp_hubspot_spark.serving import hybrid_rrf_serve, hybrid_rrf_serve_batch
 
     vs = VectorStore(spark, str(tmp_path / "vs"))
     vs.add(_store_rows(spark, embs, [date(2024, 6, 1)]))
@@ -429,6 +432,18 @@ def test_small_serving_reads_launch_no_spark_job(
             tix_base, ivf_l2, ["spark", "window"], queries[0], k=10, nprobe=4
         ),
         "search_data": lambda: engine.search_data(queries[0], k=10),
+        # two queries of k=5 each
+        "ivf_batch": lambda: ivf_l2.search_batch(
+            [(0, queries[0]), (1, queries[1])], k=5, nprobe=4
+        ),
+        "text_batch": lambda: tix_base.search_batch(
+            {"a": ["spark", "window"], "b": ["hash", "table"]}, k=5
+        ),
+        "hybrid_batch": lambda: hybrid_rrf_serve_batch(
+            tix_base, ivf_l2,
+            {"a": (["spark", "window"], queries[0]), "b": (["hash"], queries[1])},
+            k=5, nprobe=4,
+        ),
     }
     sc = spark.sparkContext
     caplog.set_level(logging.DEBUG, logger="mcp_hubspot_spark.local_serve")
@@ -441,7 +456,8 @@ def test_small_serving_reads_launch_no_spark_job(
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
     lines = [r.getMessage() for r in caplog.records]
-    assert sum("local path" in m for m in lines) == 5  # hybrid reads two legs
+    # a hybrid read reads two legs; each batch reads per query
+    assert sum("local path" in m for m in lines) == 5 + 2 + 2 + 4
     assert all(" bytes in " in m for m in lines)
 
 
@@ -457,6 +473,52 @@ def test_over_the_bound_or_filtered_reads_take_the_spark_path(
     monkeypatch.setattr(local_serve, "LOCAL_READ_MAX_BYTES", 0)
     assert not is_local(ivf_l2.search(queries[0], k=3))
     assert not is_local(tix_base.search(["spark"], k=3))
+
+
+def test_batch_concatenates_local_and_spark_answers(
+    spark, ivf_l2, tix_base, queries, monkeypatch
+):
+    """A batch read is each query's own read: with the path alternating
+    inside a batch, every query's rows equal its single read's rows."""
+    from mcp_hubspot_spark.serving import hybrid_rrf_serve, hybrid_rrf_serve_batch
+
+    real = local_serve.use_local
+    calls = []
+
+    def alternate(what, files, where=None):
+        calls.append(what)
+        return real(what, files, where) and len(calls) % 2 == 1
+
+    def rows(df, cols):  # by the first column: rank, or a query's doc_id
+        return sorted(_bits(df.select(*cols).collect()), key=lambda r: r[0])
+
+    ivf_cols = ["rank", "vec_id", "distance", "similarity"]
+    monkeypatch.setattr(local_serve, "use_local", alternate)
+    batch = ivf_l2.search_batch(list(enumerate(queries)), k=5, nprobe=3)
+    assert calls and len(calls) == len(queries)
+    for i, q in enumerate(queries):
+        calls[:] = [None] * i  # the same path this query took in the batch
+        want = rows(ivf_l2.search(q, k=5, nprobe=3), ivf_cols)
+        assert rows(batch.filter(F.col("query_id") == i), ivf_cols) == want, i
+
+    text_qs = {"a": ["spark", "window"], "b": ["hash", "table"], "c": ["sort"]}
+    calls.clear()
+    batch = tix_base.search_batch(text_qs, k=5)
+    for i, (qid, terms) in enumerate(sorted(text_qs.items())):
+        calls[:] = [None] * i
+        want = rows(tix_base.search(terms, k=5), ["rank", "doc_id", "score"])
+        got = batch.filter(F.col("query_id") == qid)
+        assert rows(got, ["rank", "doc_id", "score"]) == want, qid
+
+    hyb_qs = {"a": (["spark", "window"], queries[0]), "b": (["hash"], queries[3])}
+    hyb_cols = ["doc_id", "lex_rank", "vec_rank", "rrf_score"]
+    calls.clear()
+    batch = hybrid_rrf_serve_batch(tix_base, ivf_l2, hyb_qs, k=8, nprobe=3)
+    for i, (qid, (terms, vec)) in enumerate(sorted(hyb_qs.items())):
+        calls[:] = [None] * (2 * i)  # two legs per query
+        want = rows(hybrid_rrf_serve(tix_base, ivf_l2, terms, vec, k=8, nprobe=3), hyb_cols)
+        got = batch.filter(F.col("query_id") == qid)
+        assert rows(got, hyb_cols) == want and want, qid
 
 
 def test_rrf_rounding_matches_spark_round(spark):

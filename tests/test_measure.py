@@ -126,8 +126,9 @@ def test_bench_stdout_line_fits_with_the_whole_registry():
 
 @pytest.mark.slow
 def test_scale_bench_smoke(sf_dir):
-    """Two cases at two copies of the smallest test data: one JSON line,
-    a job count per case, no errors (~40 s, mostly JVM start)."""
+    """Three cases at two copies of the smallest test data: one JSON
+    line, a job count per case, no errors (~40 s, mostly JVM start). The
+    batched BM25 read runs in the driver: no Spark job."""
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=sf_dir,
@@ -135,14 +136,16 @@ def test_scale_bench_smoke(sf_dir):
         SPARK_GRAFT_DRIVER_MEM="1g",
     )
     proc = subprocess.run(
-        [sys.executable, "scale_bench.py", "--copies", "2", "--only", "knn_l2,minhash_lsh_pairs"],
+        [sys.executable, "scale_bench.py", "--copies", "2", "--only",
+         "knn_l2,minhash_lsh_pairs,text_index_bm25_batch8"],
         cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert "errors" not in out
     names = sorted(out["cases"])
-    assert len(names) == 2
+    assert len(names) == 3
     assert names[0].startswith("knn_l2_") and names[1].startswith("minhash_lsh_pairs_")
-    for rec in out["cases"].values():
-        assert rec["jobs"] >= 1
+    assert names[2].startswith("text_index_bm25_batch8_")
+    for name, rec in out["cases"].items():
+        assert rec["jobs"] == 0 if name == names[2] else rec["jobs"] >= 1
