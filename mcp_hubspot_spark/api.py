@@ -60,26 +60,30 @@ class Engine:
     tables: dict[str, DataFrame]
     store: VectorStore | None = None
 
-    def _indexed(self, df: DataFrame, data_type: str, as_of: date | None = None) -> DataFrame:
-        """The tool's answer ``df``; with a store attached, run once and
-        indexed (:meth:`_index`), as a local frame whose collect runs no job."""
+    def _indexed(
+        self,
+        df: DataFrame,
+        data_type: str,
+        as_of: date | None = None,
+        answer: dict[str, Column] | None = None,
+    ) -> DataFrame:
+        """The tool's answer: ``df`` with the ``answer`` columns replaced
+        by name. With a store attached, the answer runs once: the JSON
+        payloads of the rows of ``df`` itself are embedded and appended to
+        the store in the driver (reference handlers/base_handler.py:39-76),
+        and the rows come back as a local frame whose collect runs no job."""
         if self.store is None:
-            return df
-        return local_serve.answer(df.sparkSession, self._index(df, data_type, as_of))
-
-    def _index(self, df: DataFrame, data_type: str, as_of: date | None = None) -> pa.Table:
-        """Run ``df`` once and return its rows, after embedding their JSON
-        payloads and appending them to the store in the driver (reference
-        handlers/base_handler.py:39-76)."""
+            return df.withColumns(answer) if answer else df
         payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-        table = df.select(
+        run = df.select(
             "*",
             # content-derived id: stable across re-runs and collision-
             # free across batches (monotonically_increasing_id restarts
             # at 0 every job, poisoning the store's key)
             F.xxhash64(F.lit(data_type), payload).alias("__vec_id"),
             payload.alias("__data_json"),
-        ).toArrow()
+        )
+        table = (run.withColumns(answer) if answer else run).toArrow()
         texts = table.column("__data_json")
         self.store.add(pa.table({
             "vec_id": table.column("__vec_id"),
@@ -89,7 +93,9 @@ class Engine:
             "data_json": texts,
             "extras": [None] * table.num_rows,
         }), as_of=as_of)
-        return table.drop_columns(["__vec_id", "__data_json"])
+        return local_serve.answer(
+            df.sparkSession, table.drop_columns(["__vec_id", "__data_json"])
+        )
 
     # ------------------------------------------------------------ tools
 
@@ -169,19 +175,29 @@ class Engine:
     ) -> DataFrame:
         """hubspot_get_recent_conversations (S6/S7/J5/A3/P7/F3,
         clients/conversation_client.py:220-453): latest threads with
-        nested time-ordered MESSAGE-type messages; text clipped AFTER
-        indexing (handlers/conversation_handler.py:63-67,104-121)."""
-        if self.store is not None:
-            # reference parity: the index keeps FULL text — clipping
-            # happens only on the response path
-            self._index(self._conversations_frame(limit, None), "hubspot_conversation")
-        return self._conversations_frame(limit, truncate_chars)
+        nested time-ordered MESSAGE-type messages; message text clipped
+        AFTER indexing (handlers/conversation_handler.py:63-67,104-121):
+        the store keeps the FULL text, and the same execution clips the
+        answer's ``text``/``rich_text``."""
+        answer = None
+        if truncate_chars is not None:
+            answer = {
+                "messages": F.transform(
+                    "messages",
+                    lambda m: m.withField(
+                        "text", truncate_text(m["text"], truncate_chars)
+                    ).withField(
+                        "rich_text", truncate_text(m["rich_text"], truncate_chars)
+                    ),
+                )
+            }
+        return self._indexed(
+            self._conversations_frame(limit), "hubspot_conversation", answer=answer
+        )
 
-    def _conversations_frame(
-        self, limit: int, truncate_chars: int | None
-    ) -> DataFrame:
+    def _conversations_frame(self, limit: int) -> DataFrame:
         threads = self.tables["threads"]
-        messages = self._shaped_messages(truncate_chars)
+        messages = self._shaped_messages()
         # reference sorts threads by -id (conversation_client.py:273); ids
         # are numeric strings — numeric order, non-numeric ids sort last
         top_threads = (
@@ -212,18 +228,12 @@ class Engine:
             )
         )
 
-    def _shaped_messages(self, truncate_chars: int | None) -> DataFrame:
+    def _shaped_messages(self) -> DataFrame:
         """Message shaping shared by conversation tools
         (clients/conversation_client.py:388-453): keep type==MESSAGE (P7),
-        classify sender (F5), conditional email extraction (F7/P8),
-        optional truncation (F3)."""
+        classify sender (F5), conditional email extraction (F7/P8)."""
         m = self.tables["messages"].filter(F.col("type") == "MESSAGE")
         first_sender = F.try_element_at(F.col("senders"), F.lit(1))
-        text_col: Column = F.col("text")
-        rich_col: Column = F.col("rich_text")
-        if truncate_chars is not None:
-            text_col = truncate_text(text_col, truncate_chars)
-            rich_col = truncate_text(rich_col, truncate_chars)
         return m.select(
             F.col("id").alias("message_id"),
             "thread_id",
@@ -239,8 +249,8 @@ class Engine:
                 lambda r: r.getField("deliveryIdentifier").getField("value"),
             ).alias("recipient_emails"),
             "subject",
-            text_col.alias("text"),
-            rich_col.alias("rich_text"),
+            "text",
+            "rich_text",
         )
 
     def get_recent_emails(
@@ -320,7 +330,7 @@ class Engine:
         edges = tickets.select(F.col("id").alias("ticket_id")).join(
             assoc, F.col("ticket_id") == assoc["from_id"], "left"
         ).select("ticket_id", F.col("to_object_id").alias("thread_id"))
-        messages = self._shaped_messages(truncate_chars=None)
+        messages = self._shaped_messages()
         per_thread = group_to_array(
             messages,
             group=["thread_id"],

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import const_double_array, const_long_array, memo_expr
+from ..functions.scalars import const_long_array, memo_expr
 
 from .text import positional_ngrams, tokens
 from .vector import dot, l2_norm
@@ -457,15 +457,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
 
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).astype("float64").tolist()
-
-
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: one sign bit per plane."""
-    key = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        s = dot(vec_col, const_double_array(p))
-        key = key + F.when(s > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return key
 
 
 def embedding_neardup_pairs(

@@ -17,7 +17,7 @@ Scale paths beyond brute force:
   * ``ivf_topk`` — inverted-file search: rows pre-assigned to their nearest
     centroid; a query probes only ``nprobe`` cells → partition pruning on
     the cell id.
-  * ``lsh_bucket_candidates`` in operators.dedup — random-hyperplane LSH.
+  * ``embedding_neardup_pairs`` in operators.dedup — random-hyperplane LSH.
 """
 
 from __future__ import annotations
@@ -337,23 +337,19 @@ def train_centroids(
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 10,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """Real IVF centroid training via MLlib KMeans (the honest build step;
     picking arbitrary rows as centroids is only plumbing).
 
-    Returns a ``(cell_id, centroid)`` DataFrame for assign_cells/ivf_topk.
-    At 100 TB you train on a sample (``sample_fraction``) — k-means
-    centroid quality converges long before the full corpus is seen — then
-    assign the full table in one pass.
+    Returns a ``(cell_id, centroid)`` DataFrame for assign_cells/ivf_topk,
+    cell ids 0..n-1 in order. At 100 TB pass a sample of the corpus
+    (``df.sample``) — k-means centroid quality converges long before the
+    full corpus is seen — then assign the full table in one pass.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    base = df.select(vec_col)
-    if sample_fraction is not None:
-        base = base.sample(fraction=sample_fraction, seed=seed)
-    train = base.select(array_to_vector(F.col(vec_col)).alias("features"))
+    train = df.select(array_to_vector(F.col(vec_col)).alias("features"))
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(train)
     spark = df.sparkSession
     return spark.createDataFrame(
@@ -568,29 +564,26 @@ def pq_train_codebooks(
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 10,
-    sample_fraction: float | None = None,
 ) -> list[list[list[float]]]:
     """Real PQ training: one MLlib KMeans per subvector (m sequential
-    fits — m is 8-16, each fit is one MLlib job on the sampled
-    subvector column). At 100 TB train on a sample (codebook centroids
+    fits — m is 8-16, each fit is one MLlib job on the subvector
+    column). At 100 TB pass a sample of the corpus (codebook centroids
     converge long before the corpus is seen), encode the full table in
     one expression pass.
 
-    RECALL CLIFF (SCALE_r12 flatpq rows): codebooks trained on RAW
-    flat vectors measured recall@10 0.1125 on the decaying-spectrum
-    corpus vs 0.625 with the OPQ pre-rotation at identical serving
-    cost — when calling this directly (outside IvfIndex, whose flat
-    builds now default to OPQ), train a rotation with
+    RECALL CLIFF: codebooks trained on RAW flat vectors measured
+    recall@10 0.1125 on the decaying-spectrum corpus vs 0.625 with the
+    OPQ pre-rotation at identical serving cost — when calling this
+    directly (outside IvfIndex, whose flat builds default to OPQ),
+    train a rotation with
     :func:`pq_train_opq_rotation` and pass it to encode/search unless
     you are deliberately measuring the raw floor."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     base = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-    if sample_fraction is not None:
-        base = base.sample(fraction=sample_fraction, seed=seed)
-    # cache the sampled projection: the first() probe + the m KMeans
-    # fits would otherwise re-scan (and re-sample) the source m+1 times
+    # cache the projection: the first() probe + the m KMeans fits would
+    # otherwise re-scan the source m+1 times
     base = base.cache()
     try:
         first = base.first()
@@ -1152,7 +1145,6 @@ def pq_train_opq_rotation(
     vec_col: str = "embedding",
     sample_n: int = 10_000,
     seed: int = 42,
-    sample_fraction: float | None = None,
 ) -> list[list[float]]:
     """Parametric OPQ rotation (Ge et al. 2014, OPQ-P): when subvector
     dimensions are correlated, plain PQ wastes codebook entropy — the
@@ -1167,10 +1159,8 @@ def pq_train_opq_rotation(
 
     Scale shape: ONE bounded sample collect (sample_n rows x d doubles)
     + numpy eigh on the driver; the corpus itself is never shuffled or
-    collected. Pass ``sample_fraction`` (as the sibling trainers take)
-    to skip the count()-based fraction derivation — without it, one
-    extra counting scan runs to size the sample, which is a whole
-    wasted pass at corpus scale. The full-table rotation happens later,
+    collected; one counting scan sizes the sample fraction. The
+    full-table rotation happens later,
     inside the encode pass (expression or BLAS), so OPQ adds zero extra
     Spark jobs to encoding."""
     import numpy as np
@@ -1180,12 +1170,10 @@ def pq_train_opq_rotation(
         raise ValueError("pq_train_opq_rotation: empty input")
     d = int(dim_row["d"])
     assert d % m == 0, f"dim {d} not divisible by m {m}"
-    if sample_fraction is None:
-        n_total = df.count()
-        sample_fraction = min(1.0, (sample_n * 1.2) / max(n_total, 1))
+    fraction = min(1.0, (sample_n * 1.2) / max(df.count(), 1))
     sample = (
         df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-        .sample(fraction=min(1.0, sample_fraction), seed=seed)
+        .sample(fraction=fraction, seed=seed)
         .limit(sample_n)
         .collect()
     )  # bounded: ≤ sample_n rows of d doubles

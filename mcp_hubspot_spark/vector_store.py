@@ -268,16 +268,19 @@ class VectorStore:
 
 class IvfIndex:
     """Persisted IVF index: the scale complement to ``VectorStore``'s
-    exact scan. ``build()`` trains centroids once (MLlib KMeans on a
-    sample), assigns every vector to its nearest cell, and writes the
-    table PARTITIONED BY cell_id with the centroids alongside;
-    ``search()`` picks the nprobe nearest centroids driver-side (tiny,
-    bounded) and reads ONLY those cells — nprobe/n_cells becomes a
-    physical-IO fraction, the same reason FAISS IVF beats flat scan
-    (reference ``faiss_manager.py`` uses IndexFlatL2; this is the upgrade
-    path its per-day sharding gestures at). Probed cells of at most
-    ``local_serve.LOCAL_READ_MAX_BYTES`` are ranked in the driver with
-    pyarrow + numpy and launch no Spark job; larger probes, ``where``
+    exact scan. ``build()`` trains centroids once (MLlib KMeans), assigns
+    every vector to its nearest cell, and writes the table PARTITIONED BY
+    cell_id. The trained model (the centroids, plus the PQ codebooks and
+    OPQ rotation when the index has them) is bounded by the cell count
+    and the dimension, not the corpus, so it lives in ``meta.json`` next
+    to the cells, as the reference keeps a JSON sidecar per FAISS file
+    (``faiss_manager.py:12-33``). ``search()`` ranks the centroids in the
+    driver and reads ONLY the nprobe nearest cells — nprobe/n_cells
+    becomes a physical-IO fraction, the same reason FAISS IVF beats flat
+    scan (reference ``faiss_manager.py`` uses IndexFlatL2; this is the
+    upgrade path its per-day sharding gestures at). Probed cells of at
+    most ``local_serve.LOCAL_READ_MAX_BYTES`` are ranked in the driver
+    with pyarrow + numpy and launch no Spark job; larger probes, ``where``
     filters and ``search_pq`` run as Spark plans whose partition pruning
     does the same selection, and ``search_batch`` runs ``search`` once
     per query. Build once / query many: the index cost is amortized
@@ -327,17 +330,17 @@ class IvfIndex:
             if not live.exists():
                 _os.rename(bak, live)  # crash leftover: restore
 
-    # ----------------------------------------------------------- metric
+    # ------------------------------------------------------------ model
     _META = "meta.json"
 
     def _meta_dict(self) -> dict:
         """Parsed meta.json, failing LOUD when it still carries the
         ``building`` sentinel :meth:`build` sets before touching any
-        data file. A rebuild that crashed mid-flight leaves the
-        directory mixing epochs (e.g. the OLD index's rotated cells
-        with no surviving ``opq`` claim, or new centroids over old
-        cells) — serving that silently returns wrong neighbors, so
-        every meta reader raises instead and the caller rebuilds."""
+        data file. A rebuild that crashed mid-flight leaves cells that
+        no model on disk describes (e.g. the OLD index's rotated cells,
+        or new cells under no centroids) — serving them silently returns
+        wrong neighbors, so every meta reader raises instead and the
+        caller rebuilds."""
         import json
 
         p = self.root / self._META
@@ -348,9 +351,20 @@ class IvfIndex:
             raise RuntimeError(
                 f"IvfIndex at {self.root}: meta.json carries the "
                 "'building' sentinel — a build() was interrupted and "
-                "the data files may mix old and new index epochs "
-                "(e.g. rotated cells with no opq claim). Rebuild the "
-                "index before serving."
+                "the cells may not match any trained model. Rebuild "
+                "the index before serving."
+            )
+        return meta
+
+    def _model(self) -> dict:
+        """The trained model ``build`` wrote to meta.json: ``metric`` and
+        ``centroids`` (list index = cell id), plus ``pq`` and
+        ``codebooks`` on IVFPQ indexes and ``opq`` and ``rotation`` on
+        rotated ones. Raises before the first build."""
+        meta = self._meta_dict()
+        if "centroids" not in meta:
+            raise ValueError(
+                f"IvfIndex at {self.root} holds no trained model: build() it first"
             )
         return meta
 
@@ -378,48 +392,51 @@ class IvfIndex:
         ).otherwise(v)
         return df.withColumn(vec_col, unit)
 
-    def _pq_meta(self) -> dict | None:
-        """The index's PQ config ({"m", "codes"}) or None when built
-        without product quantization."""
-        return self._meta_dict().get("pq")
+    @classmethod
+    def _encode(
+        cls, df: DataFrame, model: dict, vec_col: str, id_col: str
+    ) -> DataFrame:
+        """``df``'s rows as the cells store them, through every step the
+        ``model`` has a part for: cosine normalize (keeping id and vector
+        only) → OPQ rotate → literal-centroid assign (``cell_id``, zero
+        shuffle) → PQ encode (``pq_code``; a residual index encodes
+        ``v − assigned centroid``, the FAISS IVFPQ construction). ``build``
+        trains each part on the steps before it, so ``add`` encodes new
+        rows exactly as the build did."""
+        from .operators.vector import (
+            assign_cells_literal,
+            pq_encode_matmul,
+            residual_expr,
+            rotate_expr,
+        )
 
-    def _opq_meta(self) -> bool:
-        """Whether the index was built with the OPQ pretransform
-        (meta "opq": everything on disk lives in rotated space)."""
-        return bool(self._meta_dict().get("opq"))
-
-    def _load_rotation(self) -> list[list[float]]:
-        cached = getattr(self, "_rot_cache", None)
-        if cached is not None:
-            return cached
-        rows = self.spark.read.parquet(
-            str(self.root / "opq_rotation")
-        ).collect()  # d rows of d doubles — bounded by design
-        self._rot_cache = [
-            [float(x) for x in r.row]
-            for r in sorted(rows, key=lambda r: int(r.i))
-        ]
-        return self._rot_cache
-
-    def _load_codebooks(self) -> list[list[list[float]]]:
-        # cached per instance: reloading m*codes rows per query would add
-        # a second Spark job to a serving path _probe keeps at one job;
-        # build() invalidates (codebooks change only on rebuild)
-        cached = getattr(self, "_cb_cache", None)
-        if cached is not None:
-            return cached
-        rows = self.spark.read.parquet(
-            str(self.root / "pq_codebooks")
-        ).collect()  # m * codes rows — bounded by design
-        by_m: dict[int, dict[int, list[float]]] = {}
-        for r in rows:
-            by_m.setdefault(int(r.m), {})[int(r.code)] = [
-                float(x) for x in r.centroid
-            ]
-        self._cb_cache = [
-            [by_m[mi][c] for c in sorted(by_m[mi])] for mi in sorted(by_m)
-        ]
-        return self._cb_cache
+        if model["metric"] == "cosine":
+            df = cls._normalized(
+                df.select(
+                    id_col, F.col(vec_col).cast("array<double>").alias(vec_col)
+                ),
+                vec_col,
+            )
+        if "rotation" in model:
+            df = df.withColumn(
+                vec_col,
+                rotate_expr(
+                    F.col(vec_col).cast("array<double>"), model["rotation"]
+                ),
+            )
+        if "centroids" not in model:
+            return df
+        cents = list(enumerate(model["centroids"]))
+        df = assign_cells_literal(df, cents, vec_col=vec_col, metric=model["metric"])
+        if "codebooks" not in model:
+            return df
+        if model["pq"]["residual"]:
+            return pq_encode_matmul(
+                df.withColumn("_res", residual_expr(vec_col, cents)),
+                model["codebooks"],
+                vec_col="_res",
+            ).drop("_res")
+        return pq_encode_matmul(df, model["codebooks"], vec_col=vec_col)
 
     @durable.mutator
     def build(
@@ -428,44 +445,43 @@ class IvfIndex:
         n_cells: int = 16,
         vec_col: str = "embedding",
         id_col: str = "vec_id",
-        sample_fraction: float | None = None,
         metric: str = "l2",
         pq_m: int | None = None,
         pq_codes: int = 256,
         pq_residual: bool = False,
         pq_opq: bool | None = None,
     ) -> None:
-        """Train + assign + write. With ``pq_m`` set, the index is an
-        IVFPQ: per-subvector codebooks (m subquantizers x pq_codes
-        codes) are trained on the same (optionally sampled) corpus and
-        every stored row carries its ``pq_code`` array<int> next to the
-        vector — codes ride the same cell partitions, survive
-        delete/compact rewrites unchanged (full-row swaps), and let
-        ``search_pq`` scan 8-byte-ish codes instead of the embedding
-        column. For cosine indexes codebooks are trained on the stored
-        UNIT vectors, so L2 ADC ranking equals cosine ranking.
-        ``pq_residual=True`` trains/encodes on the residual
-        ``v − assigned centroid`` — the FAISS IVFPQ construction
-        (better recall at equal m on clustered corpora); serving builds
-        per-probed-cell query tables from the query residual.
-        ``pq_opq=True`` (requires pq_m) trains a parametric OPQ
-        rotation and builds the ENTIRE index in rotated space — the
-        FAISS ``OPQ,IVF,PQ`` pretransform composition: stored vectors,
-        centroids, and codebooks are all rotated (one expression-side
-        matmul folded into the build scan; queries rotate driver-side
-        in _probe), so exact search results are unchanged (orthogonal
-        invariance, pytest-pinned) while PQ codes stop wasting entropy
-        on correlated/unbalanced subspaces. Composes with
-        ``pq_residual`` (rotate first, residual in rotated space).
+        """Train the model, write every row to its cell, then write the
+        model to meta.json. With ``pq_m`` set, the index is an IVFPQ:
+        per-subvector codebooks (m subquantizers x pq_codes codes) are
+        trained on the same corpus and every stored row carries its
+        ``pq_code`` array<int> next to the vector — codes ride the same
+        cell partitions, survive delete/compact rewrites unchanged
+        (full-row swaps), and let ``search_pq`` scan 8-byte-ish codes
+        instead of the embedding column. For cosine indexes codebooks
+        are trained on the stored UNIT vectors, so L2 ADC ranking equals
+        cosine ranking. ``pq_residual=True`` trains/encodes on the
+        residual ``v − assigned centroid`` (better recall at equal m on
+        clustered corpora); serving builds per-probed-cell query tables
+        from the query residual. ``pq_opq=True`` (requires pq_m) trains
+        a parametric OPQ rotation and builds the ENTIRE index in rotated
+        space — the FAISS ``OPQ,IVF,PQ`` pretransform composition:
+        stored vectors, centroids, and codebooks are all rotated (one
+        expression-side matmul folded into the build scan; queries
+        rotate driver-side in _probe), so exact search results are
+        unchanged (orthogonal invariance, pytest-pinned) while PQ codes
+        stop wasting entropy on correlated/unbalanced subspaces.
+        Composes with ``pq_residual`` (rotate first, residual in rotated
+        space).
 
         The default (``pq_opq=None``) is True for flat PQ and False for
         residual PQ: on a decaying-spectrum corpus, flat-PQ recall@10 was
         0.1125 raw vs 0.625 rotated at the same serving cost, while
         residual codes already sit on within-cell offsets."""
         from .operators.vector import (
-            assign_cells_literal,
-            pq_encode_matmul,
             pq_train_codebooks,
+            pq_train_opq_rotation,
+            residual_expr,
             train_centroids,
         )
 
@@ -476,137 +492,50 @@ class IvfIndex:
         if pq_opq and pq_m is None:
             raise ValueError("pq_opq requires pq_m (rotation exists "
                              "to balance PQ subspaces)")
-        if metric == "cosine":
-            df = self._normalized(
-                df.select(
-                    id_col,
-                    F.col(vec_col).cast("array<double>").alias(vec_col),
-                ),
-                vec_col,
-            )
-        self._cb_cache = None  # rebuild replaces any cached codebooks
-        self._rot_cache = None
-        # Crash-ordering discipline: meta is written first with a
-        # "building" sentinel, and the pq / opq claims land in ONE
-        # final rewrite — WITHOUT the sentinel — only after EVERY data
-        # file (rotation, cells, centroids, codebooks) is on disk.
-        # Claiming early is worse than a missing file: a REBUILD that
-        # crashes after writing meta{opq} but before the rotated cells
-        # land would leave serving silently rotating queries against
-        # the OLD unrotated cells — wrong neighbors, no error. The
-        # sentinel closes the MIRROR hazard: a rebuild of an existing
-        # OPQ index that crashes after stripping the old meta but
-        # before new cells land would otherwise serve the OLD rotated
-        # cells as if unrotated (again wrong neighbors, no error) —
-        # with the sentinel every meta reader (_meta_dict) fails loud
-        # until a build completes.
-        meta: dict = {"metric": metric}
-        durable.write_json(self.root / self._META, {**meta, "building": True})
+        # Crash ordering: the "building" sentinel goes down before any
+        # cell file, and the model with its pq / opq claims lands in ONE
+        # final write after the cells. A build killed in between leaves
+        # new cells under the sentinel (or the OLD rotated cells under no
+        # opq claim); every meta reader (_meta_dict) fails loud on it
+        # until a build completes, instead of serving wrong neighbors.
+        model: dict = {"metric": metric}
+        durable.write_json(self.root / self._META, {**model, "building": True})
         if pq_opq:
-            from .operators.vector import (
-                pq_train_opq_rotation,
-                rotate_expr,
+            model["opq"] = True
+            model["rotation"] = pq_train_opq_rotation(
+                self._encode(df, model, vec_col, id_col), m=pq_m, vec_col=vec_col
             )
-
-            rotation = pq_train_opq_rotation(
-                df,
-                m=pq_m,
-                vec_col=vec_col,
-                sample_fraction=sample_fraction,
-            )
-            # withColumn (not select): metadata columns ride into the
-            # cells exactly as they do on the un-rotated l2 path
-            df = df.withColumn(
-                vec_col,
-                rotate_expr(
-                    F.col(vec_col).cast("array<double>"), rotation
-                ),
-            )
-            self.spark.createDataFrame(
-                [(i, row) for i, row in enumerate(rotation)],
-                "i int, row array<double>",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                str(self.root / "opq_rotation")
-            )
-        cents = train_centroids(
-            df, n_cells, vec_col=vec_col, sample_fraction=sample_fraction
-        )
-        cent_rows = [
-            (int(r.cell_id), [float(x) for x in r.centroid])
-            for r in cents.collect()  # n_cells rows — bounded by design
+        rotated = self._encode(df, model, vec_col, id_col)
+        model["centroids"] = [
+            [float(x) for x in r.centroid]
+            # n_cells rows in cell-id order — bounded by design
+            for r in train_centroids(rotated, n_cells, vec_col=vec_col).collect()
         ]
-        # literal centroids → per-row argmin expression, ZERO shuffle on
-        # the vector table; the only wide op in build is the partitioned
-        # write itself. Assignment uses the index's OWN metric so the
-        # probe-side cell ranking (same _cell_distance) agrees with it.
-        assigned = assign_cells_literal(
-            df, cent_rows, vec_col=vec_col, metric=metric
-        )
         if pq_m is not None:
-            if pq_residual:
-                # real-IVFPQ construction: train AND encode on the
-                # residual (v − assigned coarse centroid) — residuals
-                # concentrate around 0 regardless of which cell a
-                # vector lives in, so the m subquantizers model one
-                # tight distribution instead of the union of all cell
-                # neighborhoods: measurably better recall at equal m on
-                # clustered corpora (raw-encoding twin kept for
-                # comparability; see SCALE recall rows). The residual
-                # is a zero-shuffle expression over (vector, cell_id).
-                from .operators.vector import residual_expr
-
-                with_res = assigned.withColumn(
-                    "_res", residual_expr(vec_col, cent_rows)
-                )
-                cbs = pq_train_codebooks(
-                    with_res,
-                    m=pq_m,
-                    k=pq_codes,
-                    vec_col="_res",
-                    sample_fraction=sample_fraction,
-                )
-                assigned = pq_encode_matmul(
-                    with_res, cbs, vec_col="_res"
-                ).drop("_res")
-            else:
-                cbs = pq_train_codebooks(
-                    df,
-                    m=pq_m,
-                    k=pq_codes,
-                    vec_col=vec_col,
-                    sample_fraction=sample_fraction,
-                )
-                assigned = pq_encode_matmul(assigned, cbs, vec_col=vec_col)
-            cb_rows = [
-                (mi, ci, cent)
-                for mi, cb in enumerate(cbs)
-                for ci, cent in enumerate(cb)
-            ]
-            self.spark.createDataFrame(
-                cb_rows, "m int, code int, centroid array<double>"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                str(self.root / "pq_codebooks")
-            )
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("cell_id")
-            .parquet(str(self.root / "cells"))
-        )
-        self.spark.createDataFrame(
-            cent_rows, "cell_id int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(str(self.root / "centroids"))
-        # the FINAL meta rewrite: pq / opq claims appear only now that
-        # every data file they describe is on disk (see the ordering
-        # comment above)
-        if pq_m is not None:
-            meta["pq"] = {
+            model["pq"] = {
                 "m": int(pq_m),
                 "codes": int(pq_codes),
                 "residual": bool(pq_residual),
             }
-        if pq_opq:
-            meta["opq"] = True
-        durable.write_json(self.root / self._META, meta)
+            train, train_col = rotated, vec_col
+            if pq_residual:
+                # residuals concentrate around 0 whichever cell a vector
+                # lives in, so the m subquantizers model one tight
+                # distribution instead of the union of all cells
+                train = self._encode(df, model, vec_col, id_col).withColumn(
+                    "_res", residual_expr(vec_col, list(enumerate(model["centroids"])))
+                )
+                train_col = "_res"
+            model["codebooks"] = pq_train_codebooks(
+                train, m=pq_m, k=pq_codes, vec_col=train_col
+            )
+        (
+            self._encode(df, model, vec_col, id_col)
+            .write.mode("overwrite")
+            .partitionBy("cell_id")
+            .parquet(str(self.root / "cells"))
+        )
+        durable.write_json(self.root / self._META, model)
         # a REBUILD invalidates an exported manifest (new centroids, new
         # cell files): refresh it like add() does, or a server would probe
         # with stale centroids against overwritten files
@@ -620,71 +549,19 @@ class IvfIndex:
         vec_col: str = "embedding",
         id_col: str = "vec_id",
     ) -> None:
-        """Incremental ingest into a built index: assign new vectors to
-        the FROZEN centroids (the same literal-argmin expression as
-        build — zero shuffle on the new batch) and append to the cell
+        """Incremental ingest into a built index: encode new vectors
+        against the FROZEN model (the same :meth:`_encode` as build —
+        zero shuffle on the new batch) and append them to the cell
         partition directories. This is the train/add split FAISS IVF
         uses (reference ``faiss_manager.py`` appends daily without
-        retraining): centroids drift only across periodic ``build()``
+        retraining): the model changes only across periodic ``build()``
         rebuilds, which is the standard maintenance contract. If a
         serving manifest has been exported it is refreshed so the file
         listing includes the appended cell files."""
-        from .operators.vector import assign_cells_literal
-
-        cents = self.spark.read.parquet(str(self.root / "centroids")).collect()
-        if not cents:
-            raise ValueError("IvfIndex.add() before build(): no centroids")
-        cent_rows = [
-            (int(r.cell_id), [float(x) for x in r.centroid]) for r in cents
-        ]
-        batch = df.select(id_col, vec_col)
-        if self.metric() == "cosine":
-            batch = self._normalized(
-                batch.withColumn(
-                    vec_col, F.col(vec_col).cast("array<double>")
-                ),
-                vec_col,
-            )
-        if self._opq_meta():
-            # OPQ index: the whole index lives in rotated space —
-            # rotate the batch with the FROZEN rotation before
-            # assignment/encoding, exactly as build() did
-            from .operators.vector import rotate_expr
-
-            batch = batch.withColumn(
-                vec_col,
-                rotate_expr(
-                    F.col(vec_col).cast("array<double>"),
-                    self._load_rotation(),
-                ),
-            )
-        assigned = assign_cells_literal(
-            batch, cent_rows, vec_col=vec_col, metric=self.metric()
-        )
-        pq_meta = self._pq_meta()
-        if pq_meta is not None:
-            # PQ index: encode against the FROZEN codebooks (the same
-            # train/add split the centroids get) so appended rows carry
-            # codes like built rows do; a residual index subtracts the
-            # frozen assigned centroid first, exactly as build() did
-            from .operators.vector import pq_encode_matmul
-
-            if pq_meta.get("residual"):
-                from .operators.vector import residual_expr
-
-                assigned = pq_encode_matmul(
-                    assigned.withColumn(
-                        "_res", residual_expr(vec_col, cent_rows)
-                    ),
-                    self._load_codebooks(),
-                    vec_col="_res",
-                ).drop("_res")
-            else:
-                assigned = pq_encode_matmul(
-                    assigned, self._load_codebooks(), vec_col=vec_col
-                )
+        model = self._model()
         (
-            assigned.write.mode("append")
+            self._encode(df.select(id_col, vec_col), model, vec_col, id_col)
+            .write.mode("append")
             .partitionBy("cell_id")
             .parquet(str(self.root / "cells"))
         )
@@ -814,16 +691,16 @@ class IvfIndex:
 
     def export_manifest(self) -> dict:
         """Write ``manifest.json`` at the index root: metric, dim,
-        centroids, and the per-cell parquet file listing (paths relative
-        to the root). This is the ONLINE-SERVING handoff — an external
-        server (the reference splits serving into its own FAISS process,
-        ``faiss_manager.py``) can pick probe cells from the centroids and
-        mmap exactly the listed files, without a Spark session and
-        without re-deriving the partition layout from a directory walk.
-        One bounded JSON: n_cells centroids + file names, never vectors.
-        Replaced atomically, so a concurrent ``search`` (which reads it
-        without the lock) never parses a half-written file."""
-        cents = self.spark.read.parquet(str(self.root / "centroids")).collect()
+        centroids (from meta.json), and the per-cell parquet file listing
+        (paths relative to the root). This is the ONLINE-SERVING handoff —
+        an external server (the reference splits serving into its own
+        FAISS process, ``faiss_manager.py``) can pick probe cells from the
+        centroids and mmap exactly the listed files, without a Spark
+        session and without re-deriving the partition layout from a
+        directory walk. One bounded JSON: n_cells centroids + file names,
+        never vectors. Replaced atomically, so a concurrent reader never
+        parses a half-written file."""
+        model = self._model()
         cells_root = self.root / "cells"
         cells: dict[str, list[str]] = {}
         for part in sorted(cells_root.glob("cell_id=*")):
@@ -831,15 +708,13 @@ class IvfIndex:
             cells[str(cid)] = sorted(
                 str(f.relative_to(self.root)) for f in part.glob("*.parquet")
             )
+        cents = model["centroids"]
         manifest = {
             "format": self.MANIFEST_FORMAT,
-            "metric": self.metric(),
-            "dim": len(cents[0].centroid) if cents else 0,
+            "metric": model["metric"],
+            "dim": len(cents[0]),
             "n_cells": len(cents),
-            "centroids": {
-                str(int(r.cell_id)): [float(x) for x in r.centroid]
-                for r in cents
-            },
+            "centroids": {str(cid): c for cid, c in enumerate(cents)},
             "cells": cells,
         }
         durable.write_json(self.root / "manifest.json", manifest)
@@ -1024,51 +899,38 @@ class IvfIndex:
         )
 
     def _probe(
-        self, query_vec: Sequence[float], nprobe: int
+        self, query_vec: Sequence[float], nprobe: int, model: dict | None = None
     ) -> tuple[
         list[float], list[int], str, list[tuple[int, list[float]]]
     ]:
         """Shared serving front half: crash recovery, metric-matched
-        query normalization, and driver-side cell ranking (zero Spark
-        jobs when a manifest is exported). Returns the (possibly
-        normalized) query, the nprobe cell ids to scan, the metric,
-        and the probed cells' centroids (needed by the residual-PQ
-        serving path, free to everyone else — they're already in
-        hand). A query whose length is not the index's dimension
-        raises ``ValueError``: ranking would otherwise see only a
-        prefix of it, and every distance would be null."""
+        query normalization, and driver-side cell ranking against the
+        ``model`` (read from meta.json when not given; no Spark job).
+        Returns the (possibly rotated and normalized) query, the nprobe
+        cell ids to scan, the metric, and the probed cells' centroids
+        (needed by the residual-PQ serving path). A query whose length
+        is not the index's dimension raises ``ValueError``: ranking would
+        otherwise see only a prefix of it, and every distance would be
+        null."""
         import math
 
         self._recover_leftovers()
-        metric = self.metric()
-        # serving path: centroid selection from the manifest costs zero
-        # Spark jobs (a query should only ever launch the ONE pruned-scan
-        # job); the parquet centroids remain the source of truth when no
-        # manifest has been exported
-        manifest = self.read_manifest()
-        if manifest is not None:
-            cent_pairs = [
-                (int(cid), vec) for cid, vec in manifest["centroids"].items()
-            ]
-        else:
-            cent_pairs = [
-                (int(r.cell_id), r.centroid)
-                for r in self.spark.read.parquet(
-                    str(self.root / "centroids")
-                ).collect()
-            ]
+        if model is None:
+            model = self._model()
+        metric = model["metric"]
+        cents = model["centroids"]
         query_vec = [float(x) for x in query_vec]
-        if cent_pairs and len(query_vec) != len(cent_pairs[0][1]):
+        if len(query_vec) != len(cents[0]):
             raise ValueError(
                 f"query has {len(query_vec)} dimensions; the index at "
-                f"{self.root} has {len(cent_pairs[0][1])}"
+                f"{self.root} has {len(cents[0])}"
             )
-        if self._opq_meta():
+        if "rotation" in model:
             # rotate the query into the index's (rotated) space —
             # d x d driver-side matmul, trivial next to the scan
-            rot = self._load_rotation()
             query_vec = [
-                sum(w * x for w, x in zip(row, query_vec)) for row in rot
+                sum(w * x for w, x in zip(row, query_vec))
+                for row in model["rotation"]
             ]
         if metric == "cosine":
             # the index stores unit vectors; normalize the query so the
@@ -1091,15 +953,11 @@ class IvfIndex:
             )
 
         scored = sorted(
-            (_centroid_dist(centroid), cid) for cid, centroid in cent_pairs
+            (_centroid_dist(centroid), cid) for cid, centroid in enumerate(cents)
         )
         assert all(math.isfinite(d) for d, _ in scored)
         probe = [cid for _, cid in scored[: max(1, nprobe)]]
-        by_id = {int(cid): c for cid, c in cent_pairs}
-        probed_cents = [
-            (cid, [float(x) for x in by_id[cid]]) for cid in probe
-        ]
-        return query_vec, probe, metric, probed_cents
+        return query_vec, probe, metric, [(cid, cents[cid]) for cid in probe]
 
     def _pruned_cells(self, probe: list[int]) -> DataFrame:
         # literal IN-list on the partition column → planning-time pruning
@@ -1148,7 +1006,8 @@ class IvfIndex:
             pq_adc_topk_residual_join,
         )
 
-        pq_meta = self._pq_meta()
+        model = self._model()
+        pq_meta = model.get("pq")
         if pq_meta is None:
             raise ValueError(
                 "search_pq() on an index built without pq_m: "
@@ -1160,9 +1019,9 @@ class IvfIndex:
             # a shortlist smaller than k would silently under-return
             raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
         query_vec, probe, metric, probed_cents = self._probe(
-            query_vec, nprobe
+            query_vec, nprobe, model
         )
-        cbs = self._load_codebooks()
+        cbs = model["codebooks"]
         pruned = self._pruned_cells(probe)
         if where is not None:
             pruned = pruned.filter(where)

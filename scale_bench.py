@@ -269,10 +269,8 @@ def cases(spark, work: Path, docs, embs, evs) -> dict[str, Callable[[], Any]]:
         return tix
 
     def pq_codebooks():
-        return pq_train_codebooks(
-            embs_d, m=8, k=256, max_iter=5,
-            sample_fraction=min(1.0, 50_000 / max(1, n_embs)),
-        )
+        sample = embs_d.sample(fraction=min(1.0, 50_000 / max(1, n_embs)), seed=42)
+        return pq_train_codebooks(sample, m=8, k=256, max_iter=5)
 
     def pq_stored():
         path = str(work / "pq")
@@ -312,9 +310,8 @@ def cases(spark, work: Path, docs, embs, evs) -> dict[str, Callable[[], Any]]:
     def semdedup():
         # cell count grows with the corpus, so per-cell candidate squares
         # stay bounded as copies grows
-        cents = train_centroids(
-            embs_d, n_cells, sample_fraction=min(1.0, 20_000 / max(1, n_embs))
-        )
+        sample = embs_d.sample(fraction=min(1.0, 20_000 / max(1, n_embs)), seed=42)
+        cents = train_centroids(sample, n_cells)
         cent_rows = [
             (int(r.cell_id), [float(x) for x in r.centroid]) for r in cents.collect()
         ]

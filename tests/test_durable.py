@@ -82,7 +82,7 @@ def _snapshot_commit(root: Path) -> None:
 
 def _ivf_layout(root: Path) -> tuple[IvfIndex, dict]:
     idx = IvfIndex(None, str(root))
-    durable.write_json(root / "meta.json", {"metric": "l2"})
+    durable.write_json(root / "meta.json", {"metric": "l2", "centroids": [[0.0, 0.0]]})
     cell = root / "cells" / "cell_id=0"
     cell.mkdir(parents=True)
     (cell / "part-0.parquet").write_bytes(b"")
@@ -385,6 +385,61 @@ def test_index_json_is_replaced_not_rewritten(spark, tmp_path):
     )
     more = spark.createDataFrame([(3, "c d")], "doc_id long, text string")
     assert _replaced(ix.root / "meta.json", lambda: ix.add(more))
+
+
+class _Killed(BaseException):
+    """Stands in for a kill: nothing after the raise reaches the disk."""
+
+
+def test_build_killed_before_its_model_write_fails_loud(spark, tmp_path, monkeypatch):
+    """A rebuild killed between its cell write and its final meta.json
+    write leaves the ``building`` sentinel over new cells. ``search``,
+    ``search_pq``, ``add`` and ``export_manifest`` each raise on it
+    without launching a Spark job, and a rebuild serves again."""
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    idx = IvfIndex(spark, str(tmp_path / "ivf"))
+    idx.build(emb, n_cells=2)
+    idx.export_manifest()
+    write_json = durable.write_json
+
+    def killed_at_model_write(path, obj):
+        if Path(path).name == "meta.json" and not obj.get("building"):
+            raise _Killed
+        write_json(path, obj)
+
+    monkeypatch.setattr(durable, "write_json", killed_at_model_write)
+    with pytest.raises(_Killed):
+        idx.build(emb, n_cells=3)
+    monkeypatch.undo()
+    meta = json.loads((idx.root / "meta.json").read_text())
+    assert meta == {"metric": "l2", "building": True}
+    assert (idx.root / "cells" / "cell_id=2").is_dir()  # the new cells
+
+    q = [3.0, 2.0]
+    calls = {
+        "search": lambda: idx.search(q, k=3),
+        "search_pq": lambda: idx.search_pq(q, k=3),
+        "add": lambda: idx.add(emb.limit(1)),
+        "export_manifest": idx.export_manifest,
+    }
+    sc = spark.sparkContext
+    for name, call in calls.items():
+        group = f"building-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(RuntimeError, match="building"):
+                call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+    idx.build(emb, n_cells=3)
+    top = idx.search(q, k=1, nprobe=3).first()
+    assert top.vec_id == 17 and top.distance == 0.0  # 17 % 7, 17 % 5 == 3, 2
+    assert idx.read_manifest()["n_cells"] == 3
 
 
 def test_lock_and_atomic_replace_live_only_in_durable():

@@ -342,33 +342,78 @@ def test_engine_appends_match_the_spark_pipeline(spark, tmp_path):
                 assert len(got) == len(_stored(vs))
 
 
-@pytest.mark.parametrize("tool", ["get_tickets", "get_active_companies"])
+def _clipped(payload: str, n: int) -> dict:
+    """A stored conversation payload with its messages' text clipped to
+    ``n`` characters, as the tool's answer clips it."""
+    import json
+
+    row = json.loads(payload)
+    for m in row.get("messages") or []:
+        for f in ("text", "rich_text"):
+            if m.get(f) is not None:
+                m[f] = m[f][:n]
+    return row
+
+
+@pytest.mark.parametrize(
+    "tool", ["get_tickets", "get_active_companies", "get_recent_conversations"]
+)
 def test_indexed_tool_runs_one_spark_job(spark, tmp_path, tool):
     """With a store attached, a tool call and the collect of its answer
-    run one Spark job together, and the answer's rows are the stored
-    rows: their JSON is the stored ``data_json``, row for row."""
+    run the answer once together (one Spark job for a scan), and the
+    answer's rows are the stored rows: their JSON is the stored
+    ``data_json``, row for row. The conversations tool stores the full
+    message text and answers with it clipped."""
+    import json
+
     import pyarrow.parquet as pq
 
     from mcp_hubspot_spark.api import Engine
     from tests.crm_fixtures import build_crm_tables
 
     vs = VectorStore(spark, str(tmp_path / "vs"))
-    engine = Engine(build_crm_tables(spark), vs)
+    tables = build_crm_tables(spark)
+    engine = Engine(tables, vs)
+    clip = {"truncate_chars": 5} if tool == "get_recent_conversations" else {}
     sc = spark.sparkContext
-    for call in range(2):
-        before = set(vs._data_files())
-        group = f"indexed-{tool}-{call}"
+
+    def jobs(group, run):
         sc.setJobGroup(group, group)
         try:
-            df = getattr(engine, tool)(limit=2 + call)
-            rows = df.collect()
+            got = run()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for call in range(2):
+        before = set(vs._data_files())
+
+        def run():
+            df = getattr(engine, tool)(limit=2 + call, **clip)
+            return df, df.collect()
+
+        (df, rows), n_jobs = jobs(f"indexed-{tool}-{call}", run)
+        # the conversations answer joins and aggregates: one job per
+        # adaptive stage, as many as one run of the answer without a store
+        once = 1
+        if clip:
+            _, once = jobs(
+                f"plain-{tool}-{call}",
+                lambda: getattr(Engine(tables), tool)(limit=2 + call, **clip).toArrow(),
+            )
+        assert n_jobs == once
         [added] = set(vs._data_files()) - before
         stored = pq.read_table(added, columns=["data_json"])["data_json"].to_pylist()
         answer = [r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect()]
-        assert len(rows) == 2 + call and answer == stored
+        assert len(rows) == 2 + call
+        if clip:
+            n = clip["truncate_chars"]
+            assert [json.loads(a) for a in answer] == [_clipped(p, n) for p in stored]
+        else:
+            assert answer == stored
+    if clip:  # the store kept message text the answer clipped
+        texts = [m.get("text") or "" for p in stored for m in json.loads(p)["messages"]]
+        assert max(map(len, texts)) > n
 
 
 # ------------------------------------------------------ files and jobs
@@ -459,6 +504,29 @@ def test_small_serving_reads_launch_no_spark_job(
     # a hybrid read reads two legs; each batch reads per query
     assert sum("local path" in m for m in lines) == 5 + 2 + 2 + 4
     assert all(" bytes in " in m for m in lines)
+
+
+def test_ivf_model_reads_launch_no_spark_job(spark, ivf_l2, queries, tmp_path):
+    """With no manifest exported, ranking the cells (``_probe``, and so
+    ``search``) and ``export_manifest`` read the trained model from
+    meta.json: zero Spark jobs in their job groups."""
+    ix = _copy(spark, IvfIndex, ivf_l2, tmp_path / "ivf")
+    (ix.root / "manifest.json").unlink()
+    calls = {
+        "probe": lambda: ix._probe(queries[0], 4),
+        "search": lambda: ix.search(queries[0], k=10, nprobe=4).collect(),
+        "export_manifest": ix.export_manifest,
+    }
+    sc = spark.sparkContext
+    for name, call in calls.items():
+        group = f"ivf-model-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+    assert ix.read_manifest() == ivf_l2.read_manifest()
 
 
 def test_over_the_bound_or_filtered_reads_take_the_spark_path(
@@ -575,7 +643,7 @@ def test_answer_wraps_nested_not_null_fields(spark):
     from mcp_hubspot_spark.api import Engine
     from tests.crm_fixtures import build_crm_tables
 
-    frame = Engine(build_crm_tables(spark))._conversations_frame(5, None)
+    frame = Engine(build_crm_tables(spark))._conversations_frame(5)
     wrapped = local_serve.answer(spark, frame.toArrow())
     assert wrapped.columns == frame.columns
     assert [f.nullable for f in wrapped.schema] == [f.nullable for f in frame.schema]

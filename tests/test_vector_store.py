@@ -1218,7 +1218,7 @@ def test_ivfpq_residual_join_twin_agrees_with_literal(
     )
     idx = IvfIndex(spark, str(tmp_path / "ivf"))
     idx.build(df, n_cells=8, pq_m=4, pq_codes=16, pq_residual=True)
-    cbs = idx._load_codebooks()
+    cbs = idx._model()["codebooks"]
 
     for qid in (0, 7, 100):
         qv, probe, _, probed_cents = idx._probe(
@@ -1368,7 +1368,7 @@ def test_ivfpq_flat_build_defaults_to_opq(spark, tmp_path):
     flat.build(emb, n_cells=4, pq_m=8, pq_codes=16)
     meta = json.loads((flat.root / "meta.json").read_text())
     assert meta.get("opq") is True
-    assert (flat.root / "opq_rotation").exists()
+    assert len(meta["rotation"]) == 64
     # the default-config index still serves: self-hit through the
     # rotated rerank path at exact distance 0
     q = [float(x) for x in emb.filter(F.col("vec_id") == 5).first().embedding]
@@ -1379,5 +1379,5 @@ def test_ivfpq_flat_build_defaults_to_opq(spark, tmp_path):
     assert json.loads((res.root / "meta.json").read_text()).get("opq") is None
     raw = IvfIndex(spark, str(tmp_path / "rawdiag"))
     raw.build(emb, n_cells=4, pq_m=8, pq_codes=16, pq_opq=False)
-    assert json.loads((raw.root / "meta.json").read_text()).get("opq") is None
-    assert not (raw.root / "opq_rotation").exists()
+    raw_meta = json.loads((raw.root / "meta.json").read_text())
+    assert raw_meta.get("opq") is None and "rotation" not in raw_meta
