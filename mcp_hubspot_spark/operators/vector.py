@@ -33,10 +33,8 @@ from .topk import grouped_top_k, ranked_top_k, top_k
 
 
 def _vec_lit(vec: Sequence[float]) -> Column:
-    # SQL-text literal: F.lit converts list inputs at ~0.4 ms/element
-    # driver-side (r13 measurement — the scalar fast path does not
-    # apply to lists), while parsing the array(...) text is ~free and
-    # repr round-trip keeps every double bit-identical
+    # SQL-text literal: F.lit converts a list at ~0.4 ms/element in the
+    # driver; array(...) text parses ~free and repr keeps doubles exact
     return const_double_array(vec)
 
 
@@ -338,24 +336,86 @@ def train_centroids(
     seed: int = 42,
     max_iter: int = 10,
 ) -> DataFrame:
-    """Real IVF centroid training via MLlib KMeans (the honest build step;
-    picking arbitrary rows as centroids is only plumbing).
+    """IVF centroid training: k-means in the driver on a bounded sample,
+    as FAISS trains in-process (reference ``faiss_manager.py:12-33``).
 
-    Returns a ``(cell_id, centroid)`` DataFrame for assign_cells/ivf_topk,
-    cell ids 0..n-1 in order. At 100 TB pass a sample of the corpus
-    (``df.sample``) — k-means centroid quality converges long before the
-    full corpus is seen — then assign the full table in one pass.
+    The sample is the first ``min(256 * n_cells, LOCAL_READ_MAX_BYTES //
+    (8 * dim))`` non-null rows in ``(xxhash64(v), v)`` order, collected in
+    one Spark job: 256 rows per centroid is FAISS's
+    ``max_points_per_centroid`` (centroid quality converges long before
+    the corpus is seen), the byte cap bounds driver memory as
+    ``local_serve`` does, and a hash order depends only on the rows, so
+    the centroids do not move with the input's partitioning. Training is
+    :func:`_kmeans` (seeded k-means++, ``max_iter`` Lloyd steps). The
+    corpus-scale half, assigning every row, stays a Spark pass.
+
+    Returns a ``(cell_id, centroid)`` DataFrame (a local relation) for
+    assign_cells/ivf_topk, cell ids 0..n-1 in order. Empty input raises
+    ``ValueError``.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    import pyarrow as pa
 
-    train = df.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(train)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell_id int, centroid array<double>",
+    from ..local_serve import LOCAL_READ_MAX_BYTES
+
+    rows = df.where(F.col(vec_col).isNotNull()).select(
+        F.col(vec_col).cast("array<double>").alias("_v")
     )
+    first = rows.select(F.size("_v").alias("d")).first()
+    if first is None:
+        raise ValueError("train_centroids: empty input")
+    dim = int(first["d"])
+    cap = min(256 * n_cells, LOCAL_READ_MAX_BYTES // (8 * max(dim, 1)))
+    sample = (
+        rows.orderBy(F.xxhash64("_v"), "_v").limit(cap).toArrow().column("_v")
+    )
+    flat = sample.combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    if flat.size != len(sample) * dim:
+        raise ValueError(f"train_centroids: vectors are not all {dim}-d")
+    cents = _kmeans(flat.reshape(len(sample), dim), n_cells, seed, max_iter)
+    return df.sparkSession.createDataFrame(pa.table({
+        "cell_id": pa.array(range(n_cells), pa.int32()),
+        "centroid": pa.array(list(cents), pa.list_(pa.float64())),
+    }))
+
+
+def _kmeans(X, k: int, seed: int, max_iter: int):
+    """L2 k-means of the rows of ``X`` (n x d float64) into ``k``
+    centroids (a k x d array, row = cell id): k-means++ seeding from
+    ``np.random.default_rng(seed)``, then up to ``max_iter`` Lloyd steps,
+    stopping once the centroids stop moving. A cell that loses every
+    point keeps its previous centroid; with fewer distinct rows than
+    ``k`` the seeding repeats rows, so some cells stay empty."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    n = len(X)
+    xx = np.einsum("ij,ij->i", X, X)
+    C = np.empty((k, X.shape[1]))
+    C[0] = X[rng.integers(n)]
+    d2 = ((X - C[0]) ** 2).sum(axis=1)
+    for j in range(1, k):
+        total = d2.sum()
+        pick = rng.choice(n, p=d2 / total) if total > 0 else rng.integers(n)
+        C[j] = X[pick]
+        d2 = np.minimum(d2, ((X - C[j]) ** 2).sum(axis=1))
+    # rows per argmin block: the n x k distance block stays ~32 MB
+    chunk = max(1, (1 << 22) // k)
+    for _ in range(max_iter):
+        cc = np.einsum("ij,ij->i", C, C)
+        labels = np.concatenate([
+            np.argmin(xx[s : s + chunk, None] - 2.0 * (X[s : s + chunk] @ C.T) + cc, 1)
+            for s in range(0, n, chunk)
+        ])
+        counts = np.bincount(labels, minlength=k)
+        sums = np.zeros_like(C)
+        np.add.at(sums, labels, X)
+        new = C.copy()
+        full = counts > 0
+        new[full] = sums[full] / counts[full, None]
+        if np.array_equal(new, C):
+            break
+        C = new
+    return C
 
 
 def ivf_topk(
@@ -623,8 +683,7 @@ def pq_encode(
     matrix, see :func:`pq_train_opq_rotation`) the vector is rotated
     expression-side first — the OPQ pre-transform; codebooks must then
     have been trained on rotated vectors. Omitting the rotation on
-    correlated/unbalanced dimensions is a measured recall cliff
-    (SCALE_r12: 0.1125 raw vs 0.625 with OPQ) — see
+    correlated/unbalanced dimensions is a measured recall cliff — see
     :func:`pq_train_codebooks`."""
     v = F.col(vec_col)
     if rotation is not None:
@@ -1269,15 +1328,8 @@ def pq_adc_topk_residual_join(
     cell_col: str = "cell_id",
 ) -> DataFrame:
     """Broadcast-join twin of :func:`pq_adc_topk_residual`, and the
-    SERVING default above tiny probes: the literal path inlines all
-    nprobe per-cell query tables as one 3-D literal — O(nprobe·m·k)
-    doubles of expression tree, whose py4j construction and
-    per-Catalyst-rule re-walks grow linearly while the join's
-    createDataFrame+broadcast overhead is a flat ~0.1 s/query. Measured
-    at 200k rows / 8 queries (SCALE_r10): join wins at EVERY width —
-    8.05 vs 9.05 s at 512 inlined doubles, 9.5 vs 17.4 s at 2048
-    (nprobe=8, k=32), 7.8 vs 106.7 s at 16k, 15.9 vs 768 s at 131k
-    (nprobe=64, k=256 — the literal plan string alone is 19 MB there).
+    SERVING default above tiny probes: the literal path's plan grows with
+    nprobe·m·k (at 200k rows, 17.4 s vs the join's 9.5 s at 2048 doubles).
     The tables become a tiny nprobe-row DataFrame broadcast-joined on
     ``cell_col`` — plan size O(1) in nprobe·k, the per-row cost still m
     element_at lookups + adds on the joined table column, and the

@@ -268,9 +268,11 @@ class VectorStore:
 
 class IvfIndex:
     """Persisted IVF index: the scale complement to ``VectorStore``'s
-    exact scan. ``build()`` trains centroids once (MLlib KMeans), assigns
-    every vector to its nearest cell, and writes the table PARTITIONED BY
-    cell_id. The trained model (the centroids, plus the PQ codebooks and
+    exact scan. ``build()`` trains centroids once, with k-means in the
+    driver on a bounded hash-ordered sample
+    (:func:`~.operators.vector.train_centroids`), assigns every vector to
+    its nearest cell in one Spark pass, and writes the table PARTITIONED
+    BY cell_id. The trained model (the centroids, plus the PQ codebooks and
     OPQ rotation when the index has them) is bounded by the cell count
     and the dimension, not the corpus, so it lives in ``meta.json`` next
     to the cells, as the reference keeps a JSON sidecar per FAISS file
@@ -296,6 +298,9 @@ class IvfIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.root = Path(str(path))
+        # (st_ino, st_mtime_ns, st_size) of the meta.json last parsed, and
+        # its dict: the file is only ever replaced whole (os.replace)
+        self._meta_cache: tuple[tuple[int, int, int], dict] | None = None
 
     def _cells(self) -> DataFrame:
         """The cell table, with its ``cell_id`` partition column."""
@@ -340,13 +345,24 @@ class IvfIndex:
         no model on disk describes (e.g. the OLD index's rotated cells,
         or new cells under no centroids) — serving them silently returns
         wrong neighbors, so every meta reader raises instead and the
-        caller rebuilds."""
-        import json
+        caller rebuilds.
 
-        p = self.root / self._META
-        if not p.exists():
+        The dict is parsed once per version of the file (a PQ model runs
+        to hundreds of KB) and shared by every read: no caller may
+        mutate it."""
+        import json
+        import os
+
+        try:
+            fh = open(self.root / self._META, "rb")
+        except FileNotFoundError:
             return {}
-        meta = json.loads(p.read_text())
+        with fh:
+            st = os.fstat(fh.fileno())
+            key = (st.st_ino, st.st_mtime_ns, st.st_size)
+            if self._meta_cache is None or self._meta_cache[0] != key:
+                self._meta_cache = (key, json.load(fh))
+        meta = self._meta_cache[1]
         if meta.get("building"):
             raise RuntimeError(
                 f"IvfIndex at {self.root}: meta.json carries the "

@@ -310,8 +310,7 @@ def cases(spark, work: Path, docs, embs, evs) -> dict[str, Callable[[], Any]]:
     def semdedup():
         # cell count grows with the corpus, so per-cell candidate squares
         # stay bounded as copies grows
-        sample = embs_d.sample(fraction=min(1.0, 20_000 / max(1, n_embs)), seed=42)
-        cents = train_centroids(sample, n_cells)
+        cents = train_centroids(embs_d, n_cells)
         cent_rows = [
             (int(r.cell_id), [float(x) for x in r.centroid]) for r in cents.collect()
         ]

@@ -337,6 +337,26 @@ def test_ivf_kmeans_recall_vs_brute_force(spark):
     assert len(got & truth) / len(truth) >= 0.6
 
 
+def test_train_centroids_ignores_partitioning(spark):
+    """The training sample is picked by a hash of each row, so the same
+    rows give bit-identical centroids however they are partitioned; an
+    empty input raises."""
+    from mcp_hubspot_spark.operators.vector import train_centroids
+
+    emb = load_table(spark, SF, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+    def centroids(df):
+        return [(r.cell_id, r.centroid) for r in train_centroids(df, 8).collect()]
+
+    one = centroids(emb.repartition(1))
+    assert [cid for cid, _ in one] == list(range(8))
+    assert one == centroids(emb.repartition(5))
+    with pytest.raises(ValueError, match="empty input"):
+        train_centroids(emb.filter(F.lit(False)), 8)
+
+
 def test_asof_join_carries_genuine_null_payload(spark):
     """A matched right row whose payload is NULL must be carried as NULL —
     not skipped in favor of an older non-null row — and multi-column

@@ -473,6 +473,73 @@ def test_ivf_rebuild_refreshes_stale_manifest(spark, tmp_path):
     assert listed == on_disk
 
 
+def test_ivf_meta_cache_follows_rebuild_and_sentinel(spark, tmp_path):
+    """A handle caches the parsed meta.json per file version: after
+    another handle rebuilds the index, its search probes the new
+    centroids, and a meta replaced by one holding the ``building``
+    sentinel still raises on read."""
+    from mcp_hubspot_spark import durable
+    from mcp_hubspot_spark.operators.vector import knn
+    from mcp_hubspot_spark.vector_store import IvfIndex
+
+    root = tmp_path / "ivf"
+    writer, emb = _ivf_fixture(spark, root)
+    reader = IvfIndex(spark, str(root))
+    probe = [float(x) for x in emb.filter(F.col("vec_id") == 3).first().embedding]
+    reader.search(probe, k=5, nprobe=8).collect()
+    assert len(reader._model()["centroids"]) == 8
+    assert reader._meta_dict() is reader._meta_dict()
+
+    small = emb.filter(F.col("vec_id") < 100)
+    writer.build(small, n_cells=4)
+    assert reader._model() == writer._model()
+    assert len(reader._model()["centroids"]) == 4
+    got = [(r.vec_id, round(r.distance, 6)) for r in reader.search(probe, k=5, nprobe=4).collect()]
+    want = [(r.vec_id, round(r.distance, 6)) for r in knn(small, probe, k=5).collect()]
+    assert got == want
+
+    durable.write_json(root / "meta.json", {**reader._model(), "building": True})
+    with pytest.raises(RuntimeError, match="building"):
+        reader.search(probe, k=5, nprobe=4)
+
+
+def test_ivf_build_trains_in_the_driver(spark, tmp_path):
+    """build() runs three Spark jobs, counted by job group: the
+    dimension probe and the bounded sample of centroid training, then
+    the partitioned write."""
+    from mcp_hubspot_spark.vector_store import IvfIndex
+
+    emb = load_table(spark, SF, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-build-jobs", "ivf-build-jobs")
+    try:
+        IvfIndex(spark, str(tmp_path / "ivf")).build(emb, n_cells=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf-build-jobs")) <= 3
+
+
+def test_ivf_build_with_fewer_rows_than_cells(spark, tmp_path):
+    """Five rows into eight cells: the index builds (some cells stay
+    empty) and a full-probe search equals the exact kNN."""
+    from mcp_hubspot_spark.operators.vector import knn
+    from mcp_hubspot_spark.vector_store import IvfIndex
+
+    emb = load_table(spark, SF, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    few = emb.filter(F.col("vec_id") < 5)
+    probe = [float(x) for x in emb.filter(F.col("vec_id") == 3).first().embedding]
+    idx = IvfIndex(spark, str(tmp_path / "ivf"))
+    idx.build(few, n_cells=8)
+    assert len(idx._model()["centroids"]) == 8
+    got = [(r.vec_id, round(r.distance, 6)) for r in idx.search(probe, k=10, nprobe=8).collect()]
+    want = [(r.vec_id, round(r.distance, 6)) for r in knn(few, probe, k=10).collect()]
+    assert got == want and len(got) == 5
+
+
 def test_ivf_interrupted_swap_keeps_survivors(spark, tmp_path, monkeypatch):
     """A failure while moving the rewritten cell in must leave the cell's
     SURVIVING rows readable (restored from the backup), never a window
@@ -999,8 +1066,8 @@ def test_ivfpq_residual_beats_raw_on_clustered_corpus(spark, tmp_path):
         }
         hits_raw += len(want & got_raw)
         hits_res += len(want & got_res)
-    # corpus/queries are seeded but MLlib KMeans centroids shift with
-    # the session's partitioning (float aggregation order), so counts
+    # corpus/queries are seeded but the PQ codebooks (MLlib KMeans) shift
+    # with the session's partitioning (float aggregation order), so counts
     # move between sessions: measured residual 29-41 vs raw 23-26 of 80
     # across local[8]/local[32]. Assert the structural gap, not points.
     assert hits_res >= hits_raw + 5
