@@ -10,10 +10,16 @@ reference's handlers (every response indexed into FAISS before returning,
 ``handlers/base_handler.py:39-76``) are explicit: pass a VectorStore and a
 tool runs its answer once, embeds and appends the rows in the driver, and
 returns the same rows as a local DataFrame (``Engine._indexed``).
+
+The Engine caches each table built in the driver (no input files, not
+already local), since a Python-list table runs Python workers on every scan.
+File-backed tables stay uncached: their scan is JVM-native, and a cache would
+pin a file snapshot. ``persist()`` marks the caller's own DataFrame cached.
 """
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from datetime import date
 from typing import Sequence
@@ -33,10 +39,13 @@ from .functions.scalars import (
     iso_format,
     truncate_text,
 )
+from .measure import materialize
 from .operators.aggregates import group_to_array
 from .operators.joins import dedup_insert
 from .operators.scans import filtered_scan, filtered_scan_with_total, recent_scan
 from .vector_store import VectorStore
+
+logger = logging.getLogger(__name__)
 
 COMPANY_PROPERTIES = [  # reference clients/company_client.py:58-65
     "id", "name", "domain", "website", "phone", "industry", "hs_lastmodifieddate",
@@ -55,10 +64,26 @@ TICKET_PROPERTIES = [  # reference clients/ticket_client.py:169-180
 @dataclass
 class Engine:
     """Bundle of CRM tables + optional vector store, mirroring the
-    reference's HubSpotClient + FaissManager pair (server.py:60-97)."""
+    reference's HubSpotClient + FaissManager pair (server.py:60-97).
+
+    Construction caches and fills, one Spark job each, every table that
+    reads no files and is not already local or cached; such a table's rows
+    are fixed, so no answer changes. The caller's DataFrame is marked cached.
+    File-backed tables stay as they are (JVM-native scan, no pinned file
+    snapshot)."""
 
     tables: dict[str, DataFrame]
     store: VectorStore | None = None
+
+    def __post_init__(self) -> None:
+        # Filled here so the first tool call runs the plan of every later
+        # one: an unfilled cache costs an extra AQE job and has no size a
+        # join could broadcast on.
+        for name, df in self.tables.items():
+            if df.is_cached or df.isStreaming or df.isLocal() or df.inputFiles():
+                continue
+            materialize(df.persist())
+            logger.debug("Engine caches table %s", name)
 
     def _indexed(
         self,
@@ -414,9 +439,6 @@ def handle_tool_errors(func):
     like a network drop after the reference returned its payload."""
     import functools
     import json as _json
-    import logging
-
-    logger = logging.getLogger("mcp_hubspot_spark.api")
 
     @functools.wraps(func)
     def wrapper(*args, **kwargs):

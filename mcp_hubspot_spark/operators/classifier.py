@@ -160,9 +160,8 @@ def classifier_score_expr(
     no Exchange — one narrow pass over the scan (pytest-audited).
 
     Only valid for the hash-derived weight family (a trained table
-    cannot be folded into an expression without the literal-bloat
-    failure mode SCALE_r10 characterized for ADC serving); agreement
-    with the join path on that family is pytest-pinned.
+    cannot be folded into an expression without literal bloat, as with
+    ADC tables); agreement with the join path on that family is pinned.
     """
     toks = tokens(F.lower(F.col(text_col)))
     wsum = F.aggregate(
@@ -225,21 +224,18 @@ def classifier_train(
     baseline and the planted-task pytests pin both modes.
 
     ``num_parts`` sets the number of training partitions — the
-    AVERAGING GRANULARITY, which the round-12 calibration grid
-    (SCALE_r12 ``classifier_cal_*``, numpy-replicated in
-    ``tests/test_operators.py``) measured as the knob that actually
-    governs convergence on feature-correlated tasks: local SGD
+    AVERAGING GRANULARITY, which governs convergence on
+    feature-correlated tasks (numpy-replicated in
+    ``tests/test_operators.py``): local SGD
     decorrelates confounded features only within a partition, so AUC
     on the shadow-token task falls monotonically with partition count
     (P=1: 0.51→0.67 over 1→4 epochs; P=16: flat at ~0.47) while
     within-partition ORDER moves it at noise level. Fewer partitions =
     better convergence but less parallelism; pick by corpus size. When
-    unset, shuffle preserves the INPUT's partition count — r11's
-    unparameterized ``repartitionByRange`` let AQE coalesce the small
-    shuffle to ONE partition, silently serializing training (and
-    making the r11 "shuffle" AUC really a sequential-SGD AUC); an
-    explicit count is AQE-exempt. The plan-time ``getNumPartitions``
-    is metadata-only, no job.
+    unset, shuffle preserves the INPUT's partition count: AQE would
+    coalesce an unparameterized ``repartitionByRange`` to ONE partition,
+    serializing training; an explicit count is AQE-exempt. The
+    plan-time ``getNumPartitions`` is metadata-only, no job.
     """
     import numpy as np
     import pandas as pd
@@ -363,7 +359,7 @@ def binary_auc(
     )
     # fail loud on a single-class input: n_pos*n_neg = 0 would make the
     # division return null, which a metrics harness records as None/NaN
-    # silently (ADVICE r11). raise_error keeps the operator lazy — the
+    # silently. raise_error keeps the operator lazy — the
     # check rides the same one-row aggregate, no extra plan-time job.
     return contrib.agg(
         F.sum("_np").cast("long").alias("n_pos"),
@@ -392,10 +388,8 @@ def calibration_task(
     seed: int = 1000,
 ) -> DataFrame:
     """Deterministic MULTI-SIGNAL planted labeling task for trainer
-    calibration (r11 verdict #4: the single-dominant-feature noisy task
-    saturated in one pass, so 1-vs-2 epochs and shuffled-vs-clustered
-    order all landed on the same AUC — it proved the knobs run, not
-    that they work).
+    calibration: a single-dominant-feature task saturates in one pass,
+    so epochs and example order cannot move its AUC.
 
     Construction (a pure function of ids, fully replayable):
 

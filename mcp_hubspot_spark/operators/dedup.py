@@ -175,11 +175,9 @@ def _sig_match_fraction(col_a: str, col_b: str, num_perm: int) -> Column:
     is the same quotient), but whole-stage-codegen'd instead of an
     interpreted HOF chain. This matters because the LSH join evaluates
     the score once per BAND COLLISION (a pair colliding in c bands folds
-    it c times, c <= bands): the r14 sf1-scale A/B caught the narrow
-    pre-distinct shape losing to the r12 wide shape by ~20% purely on
-    the repeated interpreted folds (17.9 vs 14.6 s at 200k docs); with
-    the unrolled form the narrow shuffle keeps its byte win without the
-    HOF tax. Memoized on (cols, num_perm) — fixed SQL text."""
+    it c times, c <= bands): interpreted folds made the narrow shape
+    ~20% slower at 200k docs; unrolled, it keeps its shuffle-byte win.
+    Memoized on (cols, num_perm) — fixed SQL text."""
     terms = " + ".join(
         f"(case when `{col_a}`[{i}] = `{col_b}`[{i}] then 1 else 0 end)"
         for i in range(num_perm)
@@ -500,11 +498,8 @@ def embedding_neardup_pairs(
             for t in range(n_tables)
             for p in random_hyperplanes(dim, n_planes, seed + t)
         ]
-        # NESTED constant tables stay SQL-text: parsing the array(array(...))
-        # literal costs ~5 ms, while F.lit on a list-of-lists costs ~1.2 s
-        # of driver-side conversion (measured r13 — the flat-list F.lit
-        # fast path does not extend to nested lists, where PySpark falls
-        # back to per-element conversion)
+        # NESTED constant tables stay SQL text: parsing the literal costs
+        # ~5 ms, F.lit on nested lists ~1.2 s of per-element conversion
         planes_sql = "array(" + ", ".join(
             "array(" + ", ".join(f"{x!r}D" for x in p) + ")" for p in all_planes
         ) + ")"
@@ -675,9 +670,8 @@ def connected_components(
             labels = labels.unionByName(
                 nodes.select(F.col(nodes.columns[0]).alias(node_col))
             )
-        # one distinct over the union (not one per source) — round 1
-        # folds this into its own job off the sym checkpoint, no
-        # separate materialization needed
+        # one distinct over the union (not one per source); the first
+        # iteration folds it into its own job off the sym checkpoint
         labels = labels.distinct().select(
             node_col, F.col(node_col).alias("_label")
         )
@@ -1215,13 +1209,8 @@ def _merge_diagonal_runs(
     tokens. One shuffle keys the window partition (pair, diag); the
     island groupBy re-aggregates the same partition with the island id
     appended (AQE-local, the window already clustered the rows)."""
-    # Every Column here is built from fixed SQL text (parameterized only
-    # by the partition keys / k) and memoized: the former Window/when
-    # builder chains cost ~130 ms of py4j round-trips per query build
-    # (r13 verdict next-#5 driver-chatter item); a memoized F.expr parse
-    # is one round-trip once per session. Value-identical: CASE WHEN
-    # lag(..)=pos_a-1 THEN 0 ELSE 1 END matches the when/otherwise
-    # (NULL lag falls to ELSE both ways), and the casts are unchanged.
+    # Fixed SQL text (keyed by the partition keys / k), memoized: one
+    # parse per session instead of ~130 ms of py4j calls per query build.
     part = ", ".join([f"`{c}`" for c in keys] + ["diag"])
     kt = tuple(keys)
     new_island = memo_expr(
@@ -1333,9 +1322,8 @@ def index_repeated_spans(
     diagonal merge into truncated spans."""
     if id_col is None:
         id_col = idx.columns[0]
-    # selectExpr/where-string forms: one parse round-trip each vs the
-    # multi-call F.col/alias chains (~3 ms per Column on this box —
-    # r13 verdict next-#5 driver-chatter item); same unresolved plan.
+    # selectExpr/where-string forms: one parse round-trip each instead of
+    # F.col/alias chains (~3 ms of py4j calls per Column); same plan.
     a = idx.selectExpr(
         f"`{id_col}` as doc_a", "pos as pos_a", "shingle"
     )
@@ -1526,13 +1514,8 @@ def _cut_spans(
     stays expression-side either way."""
     from .text import tokens
 
-    # All fixed-shape Columns below are SQL-text parses memoized per
-    # session (parameterized only by id_col): the former Window/when/HOF
-    # builder chains cost ~240 ms of py4j round-trips per query build
-    # (r13 verdict next-#5 driver-chatter item). Value-identical: the
-    # CASE mirrors when/otherwise, NOT exists mirrors ~F.exists, and the
-    # coalesce-to-typed-empty moved inside the filter (only _kept reads
-    # _iv, so coalescing at the use site is the same expression).
+    # Fixed-shape Columns are SQL-text parses memoized per session (keyed
+    # by id_col): one parse instead of ~240 ms of py4j calls per build.
     qid = f"`{id_col}`"
     prev_max = memo_expr(
         ("cut_pm", id_col),

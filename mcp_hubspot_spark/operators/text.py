@@ -120,10 +120,8 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
 
     toks = df.select(id_col, F.explode(tokens(F.lower(F.col(text_col)))).alias("term"))
-    # (r14 note: a localCheckpoint on tf was tried and REVERTED — AQE's
-    # runtime ReuseExchange already shares the (doc, term) shuffle
-    # between the main branch and the dfreq broadcast; quiet-host A/B
-    # read the checkpoint as neutral, 1.63 vs 1.67 s median at sf0.1.)
+    # No localCheckpoint on tf (measured neutral): AQE's ReuseExchange
+    # already shares the (doc, term) shuffle with the dfreq broadcast.
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     total = df.agg(F.count("*").alias("n_docs"))
@@ -157,7 +155,7 @@ def positional_ngrams(toks: Column, n: int) -> Column:
     Construction is MEMOIZED via ``memo_expr`` (one memo, one policy:
     session-scoped, FIFO-capped) on (rendered input expression, n):
     building the n-1 zip_with chain costs 64-137 ms of py4j round-trips
-    per call (r13 cProfile) and the same (tokens(col), n) pair recurs
+    per call, and the same (tokens(col), n) pair recurs
     across many queries and bench reps. Equal rendered text == equal
     unresolved tree, so a memo hit is the identical expression — VALID
     because every caller passes an internally-built unresolved tree
@@ -596,10 +594,8 @@ def _bm25_contrib(
     and the weight is :func:`bm25_weight`, as ``TextIndex`` scores.
     Query terms are case-folded HERE so every caller (``bm25_scores``,
     ``bm25_topk_batch``, and through them the hybrid query) matches
-    the lowercased corpus tokens identically — r11's batch
-    operator lowercased but the one-query path did not, so
-    ``bm25_scores(["Spark"])`` matched nothing while its batch twin
-    matched (ADVICE r11). Returns (id_col, _term, _c)."""
+    the lowercased corpus tokens identically (``bm25_scores(["Spark"])``
+    would otherwise match nothing). Returns (id_col, _term, _c)."""
     toks = tokens(F.lower(F.col(text_col)))
     base = df.select(
         F.col(id_col),
@@ -921,16 +917,14 @@ def token_kl_divergence(
 # boilerplate, eval-set canaries): find every document containing ANY of
 # N token-aligned phrases. The naive form is N `LIKE`/`regexp` scans —
 # O(N) passes over 100 TB, unusable beyond a handful of patterns. Both
-# shapes here make it ONE pass, mirroring the literal-vs-join split the
-# ADC serving family characterized (SCALE_r10):
+# shapes here make it ONE pass, mirroring the literal-vs-join split of
+# the ADC serving family:
 #
 # - expr path: per-length shingle arrays tested against a LITERAL
 #   phrase array (`arrays_overlap`). Zero shuffle, zero join, and the
-#   test runs IN PLACE inside the scan's project — SCALE_r10 measured
-#   it FASTER than the bare join at both 16 and 1024 phrases (9.6 vs
-#   17.0 s and 11.2 vs 13.4 s per 1M docs): the text tier inverts the
-#   ADC literal-vs-join outcome because the join must materialize the
-#   full gram explosion while the overlap never leaves the row. The
+#   test runs IN PLACE inside the scan's project — faster than the bare
+#   join at 16 and 1024 phrases (9.6 vs 17.0 s, 11.2 vs 13.4 s per 1M
+#   docs), as the join materializes the gram explosion. The
 #   plan still carries O(N) string literals, so VERY wide lists
 #   (>>10k) eventually hit the expression-bloat wall.
 # - join path: distinct doc shingles exploded (narrow) and broadcast-
@@ -950,12 +944,8 @@ def token_kl_divergence(
 # DOUBLES): fine for hundreds, a multi-MB expression tree at 50k.
 # Above this cap, list blocklists are routed to the broadcast-join
 # path automatically (blocklist_hits skips the literal prefilter;
-# blocklist_flag dispatches to the join flag). SCALE_r11 located the
-# crossover at 1M docs: literal flag 9.4 s @16 phrases, 11.0 s @1k,
-# 16.5 s @4k, 34.5 s @10k vs the bare join FLAT at 15.7-17.3 s from
-# 16 through 51k phrases — the two meet almost exactly at this cap
-# (16.5 vs 15.9 s), and past it the literal loses 2x by 10k while the
-# join stays flat.
+# blocklist_flag dispatches to the join flag). At 1M docs the literal
+# flag (16.5 s @4k phrases) meets the flat ~16 s join here, 2x slower by 10k.
 BLOCKLIST_LITERAL_MAX_PHRASES = 4096
 
 
@@ -980,8 +970,8 @@ def blocklist_flag_expr(
 ) -> DataFrame:
     """Literal-array path: adds ``is_blocked`` without a join or a
     shuffle. Plan carries one literal per phrase — use for lists under
-    a few hundred; beyond that the join path's flat overhead wins (the
-    SCALE_r10 ADC-literal lesson at the text tier). Matching is
+    a few hundred; beyond that the join path's flat overhead wins (as
+    for ADC literal tables). Matching is
     case-insensitive (text and phrases both lowercased), like the rest
     of the text family."""
     toks = tokens(F.lower(F.col(text_col)))
@@ -1068,12 +1058,11 @@ def blocklist_hits(
     Plans (pytest-audited):
 
     - LIST blocklists at or under the literal cap compile to a pure
-      in-scan filter + projection — ZERO joins, ZERO shuffles (round
-      13): the cheap short-circuiting ``arrays_overlap`` flag gates
-      first (non-hit docs — the overwhelming majority — pay only the
-      flag, which exits on the first match; SCALE_r10 measured it at
-      9.6 s vs 17.0 s/1M docs for the bare explode+join at 16
-      phrases), then the per-length
+      in-scan filter + projection — ZERO joins, ZERO shuffles: the
+      cheap short-circuiting ``arrays_overlap`` flag gates first
+      (non-hit docs — the overwhelming majority — pay only the flag,
+      which exits on the first match: 9.6 s vs 17.0 s/1M docs for the
+      bare explode+join at 16 phrases), then the per-length
       ``array_intersect(ngram_list(toks, n), lit(phrases_n))`` over
       the SURVIVING rows IS the distinct matched-gram set
       (array_intersect dedups), so n_hits/first_hit are
@@ -1106,7 +1095,7 @@ def blocklist_hits(
         # built from lowercased text and joined with SINGLE spaces, so a
         # stored phrase with irregular spacing (tabs, doubled spaces,
         # leading/trailing whitespace) must be collapsed the same way or
-        # it silently never matches any gram (ADVICE r11)
+        # it silently never matches any gram
         phrase_df = phrases.select(
             F.trim(
                 F.regexp_replace(F.lower(F.col("phrase")), r"\s+", " ")

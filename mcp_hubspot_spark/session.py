@@ -36,12 +36,9 @@ _DEFAULTS: dict[str, str] = {
     # classifier-training pin relies on the same rule).
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     # Post-shuffle partition target (guide §9 baseline; §2.2 fewer-larger
-    # partitions as data scales). Locally NEUTRAL by interleaved A/B
-    # (r14: 12-query events tail 13.38 vs 13.66 s med at 256m vs the
-    # 64 MiB default — sf0.1 shuffles never exceed 64 MiB, so AQE
-    # coalescing decides identically); at 100 TB it quarters the reduce
-    # partition count of large shuffles, directly cutting the M x R
-    # shuffle-block quadratic.
+    # partitions as data scales). Locally neutral: sf0.1 shuffles stay
+    # under 64 MiB. At 100 TB it quarters the reduce partitions of large
+    # shuffles, cutting the M x R shuffle-block quadratic.
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256m",
     # Deterministic, environment-independent semantics.
     "spark.sql.session.timeZone": "UTC",

@@ -221,3 +221,114 @@ def test_error_boundary_returns_error_payload(engine, spark):
     # no-store search_data: the ValueError is also boundary-wrapped
     out2 = engine.guarded().search_data([0.0] * 4, k=1)
     assert isinstance(out2, str) and "error" in json.loads(out2)
+
+
+# ------------------------------------------------------- cached tables
+
+
+def _leaf_nodes(df) -> list[str]:
+    """Leaf operators of ``df``'s executed plan, through adaptive plans and
+    query stages but not into the plan a cache was built from."""
+    leaves, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            kids = node.children()
+            if kids.isEmpty():
+                leaves.append(node.nodeName())
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return leaves
+
+
+def test_engine_caches_driver_built_tables(spark, caplog):
+    """Tables built from Python rows are cached at construction, with one
+    DEBUG record each, so a tool call reads the cache instead of running
+    Python workers over the rows again."""
+    import logging
+
+    tables = build_crm_tables(spark)
+    caplog.set_level(logging.DEBUG, logger="mcp_hubspot_spark")
+    engine = Engine(tables)
+    assert [(r.levelname, r.getMessage()) for r in caplog.records] == [
+        ("DEBUG", f"Engine caches table {name}") for name in tables
+    ]
+    assert all(df.is_cached for df in tables.values())
+    engine.get_tickets().collect()
+    second = engine.get_tickets()
+    assert [r.id for r in second.collect()] == ["t3", "t1", "t2"]
+    leaves = _leaf_nodes(second)
+    assert "InMemoryTableScan" in leaves
+    assert not [n for n in leaves if n.startswith("Scan ExistingRDD")]
+
+
+@pytest.fixture(scope="module")
+def parquet_tables(spark, tmp_path_factory) -> dict:
+    root = tmp_path_factory.mktemp("crm_parquet")
+    tables = build_crm_tables(spark)
+    for name, df in tables.items():
+        df.write.parquet(str(root / name))
+    return {name: spark.read.parquet(str(root / name)) for name in tables}
+
+
+def test_engine_leaves_file_backed_tables_uncached(spark, parquet_tables, caplog):
+    import logging
+
+    tables = build_crm_tables(spark)
+    caplog.set_level(logging.DEBUG, logger="mcp_hubspot_spark")
+    engine = Engine({**tables, "tickets": parquet_tables["tickets"]})
+    assert not engine.tables["tickets"].is_cached
+    assert [name for name, df in engine.tables.items() if df.is_cached] == [
+        name for name in tables if name != "tickets"
+    ]
+    assert [r.getMessage() for r in caplog.records] == [
+        f"Engine caches table {name}" for name in tables if name != "tickets"
+    ]
+    assert "InMemoryTableScan" not in _leaf_nodes(engine.get_tickets())
+
+
+def test_all_tools_agree_over_file_backed_tables(engine, spark, parquet_tables, tmp_path):
+    """All 10 tools answer the same over parquet copies of the tables
+    (uncached) as over the Python-list tables (cached); the tools that
+    index their answer store the same payloads, so search_data agrees."""
+    from mcp_hubspot_spark.vector_store import VectorStore
+
+    new_contacts = spark.createDataFrame(
+        [("n1", "Ada", "Lovelace", "Acme"), ("n3", "Grace", "Hopper", "Acme")],
+        "id string, firstname string, lastname string, company string",
+    )
+    new_companies = spark.createDataFrame(
+        [("x1", "Acme"), ("x2", "Umbrella")], "id string, name string"
+    )
+    calls = {
+        "get_active_companies": lambda e: [e.get_active_companies(limit=3)],
+        "get_active_contacts": lambda e: [e.get_active_contacts(limit=2)],
+        "create_contact": lambda e: list(e.create_contact(new_contacts)),
+        "create_company": lambda e: list(e.create_company(new_companies)),
+        "get_company_activity": lambda e: [e.get_company_activity()],
+        "get_recent_conversations": lambda e: [e.get_recent_conversations()],
+        "get_recent_emails": lambda e: [e.get_recent_emails()],
+        "get_tickets": lambda e: [e.get_tickets(with_total=True)],
+        "get_ticket_conversation_threads": lambda e: [
+            e.get_ticket_conversation_threads()
+        ],
+        "search_data": lambda e: [e.search_data([0.1] * 64, k=50)],
+    }
+    answers = []
+    for name, tables in (("list", engine.tables), ("parquet", parquet_tables)):
+        e = Engine(tables, VectorStore(spark, str(tmp_path / name)))
+        answers.append({
+            tool: [sorted(map(repr, df.collect())) for df in call(e)]
+            for tool, call in calls.items()
+        })
+    assert not any(df.is_cached for df in parquet_tables.values())
+    for tool in calls:
+        assert answers[0][tool] == answers[1][tool], tool
+    indexed = ["get_active_companies", "get_active_contacts",
+               "get_recent_conversations", "get_tickets"]
+    stored = sum(len(answers[0][tool][0]) for tool in indexed)
+    assert 0 < len(answers[0]["search_data"][0]) == stored < 50
