@@ -99,7 +99,9 @@ class Engine:
         and the rows come back as a local frame whose collect runs no job."""
         if self.store is None:
             return df.withColumns(answer) if answer else df
-        payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+        # one star column, not one F.col per column: each F.col costs ~19
+        # py4j round trips (call-site capture), the same JSON either way
+        payload = F.to_json(F.struct(F.col("*")))
         run = df.select(
             "*",
             # content-derived id: stable across re-runs and collision-

@@ -272,16 +272,8 @@ def copurchase_lift(
     the total rides in via a broadcast one-row cross join, never a
     driver-side count.
 
-    (r14 adjudication note: the r13 shape derived all three quantities
-    from ONE tagged explode + single aggregate to avoid re-evaluating
-    the basket build — quiet-host interleaved A/B measured it ~35%
-    SLOWER at sf0.1 than either the lazy three-branch r12 shape or this
-    one (tagged 3.79-4.01 s, this 2.75-3.27 s, r12 2.50-3.21 s,
-    identical results), because the wide tagged explode dominates while
-    the branches are cheap. This shape keeps the r13 goal — the basket
-    build is provably consumed once, which the lazy r12 plan could not
-    guarantee (its plan re-evaluated the fact join per branch: 12 scans,
-    3x basket finalize) — at the r12 shape's local cost.)
+    Not one tagged explode + single aggregate: the wide explode measured
+    ~35% slower at sf0.1, while the checkpointed branches are cheap.
     """
     items = (
         df.select(

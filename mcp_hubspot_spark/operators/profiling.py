@@ -276,7 +276,7 @@ def psi_drift(
     # bin, zero-filled twins add 0, so sum over bins == side total). The
     # former tot_r/tot_c branch aggregates re-evaluated each side's full
     # scan+bin subtree (no exchange reuse across the agg boundary): 2
-    # extra corpus passes for two scalars (r14, guide §2.2/§1.3).
+    # extra corpus passes for two scalars.
     # nullif(0) reproduces the old NULL-total semantics when a side is
     # empty (sum over an empty agg was NULL; the window sum would be 0,
     # and ANSI division by zero would error instead of yielding NULL).
@@ -511,11 +511,8 @@ def ks_drift(
     grid = (
         pooled.groupBy("val")
         .agg(F.sum("_a").alias("n_a"), F.sum("_b").alias("n_b"))
-        # (r14 note: a localCheckpoint here was tried and REVERTED — the
-        # initial plan shows the grid subtree 3x, but AQE's runtime
-        # ReuseExchange already materializes the value shuffle once (the
-        # plan-audit test pins it), and the quiet-host A/B read the
-        # checkpoint as a ~0.2 s LOSS at sf0.1: 1.36 vs 1.10 s median.)
+        # No localCheckpoint: AQE's runtime ReuseExchange already runs the
+        # value shuffle once (plan-audit test), and a checkpoint was slower.
     )
 
     # one 1-row reduce for bucket cutoffs AND side totals; nullif(0) so

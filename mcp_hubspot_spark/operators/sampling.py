@@ -492,10 +492,10 @@ def poisson_bootstrap_ci(
         .drop("_h")
     )
     # The base (unweighted) stats RIDE the same (group, replica)
-    # aggregate instead of a second full scan of ``df`` (r14, guide
-    # §2.2/§1.3): every raw row emits exactly one replica-0 row, so the
-    # per-(group, _b=0) plain count and cents sum ARE the per-group
-    # n_rows and total — exact-integer identity, same decimal→long cast.
+    # aggregate instead of a second full scan of ``df``: every raw row
+    # emits exactly one replica-0 row, so the per-(group, _b=0) plain
+    # count and cents sum ARE the per-group n_rows and total —
+    # exact-integer identity, same decimal→long cast.
     per_rep = fanned.groupBy(group_col, "_b").agg(
         F.sum(F.col("_w") * F.col("_vc")).alias("_ws"),
         F.sum("_w").alias("_wn"),

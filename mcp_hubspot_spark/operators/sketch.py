@@ -108,7 +108,7 @@ def bloom_might_contain(
     broadcast-like constant in the codegen'd plan, probed with
     element_at + shift, no join, no shuffle."""
     num_bits = len(words) * 64
-    # SQL-text literal: even the r13 F.lit(list) form converted at
+    # SQL-text literal: an F.lit(list) form converts at
     # ~0.4 ms/element driver-side (~0.5 s per build at the default
     # 2^16 bits = 1024 words); parsing the array(...) text is ~free and
     # integer literals are trivially exact

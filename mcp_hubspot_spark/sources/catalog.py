@@ -51,8 +51,8 @@ _SCAN_PARTS: dict[tuple, int] = {}
 
 # Both catalog memos hold plain metadata (schemas, ints) keyed by path or
 # plan hash — valid across session restarts — but a long-lived driver
-# pointed at ever-new directories/plans must not grow them without bound
-# (r13 verdict what's-wrong #5). FIFO-cap: evict the oldest insertion.
+# pointed at ever-new directories/plans must not grow them without bound.
+# FIFO-cap: evict the oldest insertion.
 _MEMO_CAP = 1024
 
 

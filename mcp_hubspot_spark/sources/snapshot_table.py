@@ -3,7 +3,7 @@
 The reference's upsert is check-then-insert over two REST calls with no
 transaction (``clients/contact_client.py:79-87``); ``dedup_insert``
 (operators/joins.py J3) reproduces that contract and pins its non-atomicity.
-This module is the transactional upgrade the round-2 verdict asked for:
+This module is the transactional upgrade of that contract:
 Delta Lake is not installable in this environment, so the same
 copy-on-write + optimistic-commit design Delta/Iceberg/Hudi use is built
 directly on parquet:

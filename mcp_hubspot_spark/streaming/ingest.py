@@ -107,16 +107,16 @@ def stream_docs_to_text_index(
     corpus first, or build on an empty frame). Returns the
     StreamingQuery handle.
 
-    ``max_epochs`` bounds epoch-partition growth (round 12): each batch
-    lands as its own epoch partition set, and the pruned read's listing
-    + newest-generation aggregate grow with epoch count (SCALE_r12
-    locates the curve), so after each add the index's
-    :meth:`~.text_index.TextIndex.maybe_compact` folds everything to
-    one epoch whenever the live count exceeds the threshold (default:
-    the index's ``COMPACT_MAX_EPOCHS``). Crash-safe with replay: the
-    fold lands at epoch 0, a retried batch re-adds at its own epoch
-    above it, and the read-side net serves the newest generation —
-    drained results stay identical to an uncompacted run (e2e-pinned).
+    ``max_epochs`` bounds epoch-partition growth: each batch lands as
+    its own epoch partition set, and the pruned read's listing +
+    newest-generation aggregate grow with epoch count, so after each
+    add the index's :meth:`~.text_index.TextIndex.maybe_compact` folds
+    everything to one epoch whenever the live count exceeds the
+    threshold (default: the index's ``COMPACT_MAX_EPOCHS``). Crash-safe
+    with replay: the fold lands at epoch 0, a retried batch re-adds at
+    its own epoch above it, and the read-side net serves the newest
+    generation — drained results stay identical to an uncompacted run
+    (e2e-pinned).
     """
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -1,5 +1,5 @@
 """Streaming exact-substring (token-span) dedup — the incremental twin
-of ``operators.dedup.repeated_spans`` (round-8 batch family).
+of the batch operator ``operators.dedup.repeated_spans``.
 
 Why foreachBatch and not a stateful operator: a standing per-key shingle
 index is UNBOUNDED state (every position of every document ever seen),
@@ -26,7 +26,7 @@ The union of all batches' span outputs equals one batch
 orientation is by doc id, every pair's matched shingles meet in exactly
 one batch's join) — pinned by the e2e drain test.
 
-``max_df`` (round 10) extends the equality to the stop-shingle cap:
+``max_df`` extends the equality to the stop-shingle cap:
 per-batch shingle position counts persist beside the index
 (``_shingle_stats/batch=<id>`` — a hidden directory, so index readers
 never see it), the CUMULATIVE counts derive the standing stop-shingle
@@ -171,7 +171,7 @@ def seed_stop_stats(
 
     The shingle width ``k`` MUST equal the stream's ``k`` — seed counts
     for a different width key different shingles, silently contributing
-    nothing while appearing to have seeded the cap (ADVICE r11). It is
+    nothing while appearing to have seeded the cap. It is
     persisted beside the stats (``_shingle_stats/_seed_meta``) and
     ``process_span_batch`` fails loud on a mismatch.
     """
@@ -225,7 +225,7 @@ def process_span_batch(
         stats_path = f"{index_path}/_shingle_stats"
         # fail loud if the stats were seeded at a different shingle
         # width: mismatched-k seed counts key different shingles and
-        # silently contribute nothing (ADVICE r11). One tiny driver-side
+        # silently contribute nothing. One tiny driver-side
         # read per batch; the meta dir starts with "_" so the stats
         # union never lists it.
         _validate_seed_k(spark, stats_path, k)

@@ -535,7 +535,7 @@ class IvfIndex:
             }
             train, train_col = rotated, vec_col
             if pq_residual:
-                # residuals concentrate around 0 whichever cell a vector
+                # residuals concentrate near 0 whichever cell a vector
                 # lives in, so the m subquantizers model one tight
                 # distribution instead of the union of all cells
                 train = self._encode(df, model, vec_col, id_col).withColumn(

@@ -332,3 +332,34 @@ def test_all_tools_agree_over_file_backed_tables(engine, spark, parquet_tables, 
                "get_recent_conversations", "get_tickets"]
     stored = sum(len(answers[0][tool][0]) for tool in indexed)
     assert 0 < len(answers[0]["search_data"][0]) == stored < 50
+
+
+def test_indexed_payload_matches_explicit_columns(engine, spark, tmp_path, monkeypatch):
+    """Every indexed tool stores ``vec_id`` and ``data_json`` byte-identical
+    to the explicit one-``F.col``-per-column struct, so store keys written
+    by either form agree."""
+    from mcp_hubspot_spark.vector_store import VectorStore
+
+    seen = []
+    indexed = Engine._indexed
+
+    def spy(self, df, data_type, *args, **kwargs):
+        seen.append((df, data_type))
+        return indexed(self, df, data_type, *args, **kwargs)
+
+    monkeypatch.setattr(Engine, "_indexed", spy)
+    e = Engine(engine.tables, VectorStore(spark, str(tmp_path / "store")))
+    e.get_active_companies(limit=3)
+    e.get_active_contacts(limit=2)
+    e.get_recent_conversations()
+    e.get_tickets()
+    e.get_tickets(with_total=True)
+    assert {t for _, t in seen} == {
+        "hubspot_company", "hubspot_contact", "hubspot_conversation", "hubspot_ticket"
+    }
+    expected = []
+    for df, data_type in seen:
+        payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+        expected += df.select(F.xxhash64(F.lit(data_type), payload), payload).collect()
+    stored = e.store.load().select("vec_id", "data_json").collect()
+    assert sorted(map(tuple, stored)) == sorted(map(tuple, expected))

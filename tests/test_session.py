@@ -1,12 +1,15 @@
 """SparkSession factory: Python workers find this package without the
-caller exporting ``PYTHONPATH``."""
+caller exporting ``PYTHONPATH``, and run under its worker daemon."""
 
 from __future__ import annotations
 
 import os
 import subprocess
 import sys
+import zipfile
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -41,3 +44,47 @@ spark.stop()
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "dim 4" in proc.stdout
+
+
+@pytest.mark.parametrize(
+    "packages, dropped",
+    [(("pyspark", "py4j"), True), (("pyspark",), False), ((), False)],
+)
+def test_worker_daemon_drops_archives_only_when_pyspark_resolves(
+    tmp_path, monkeypatch, packages, dropped
+):
+    from mcp_hubspot_spark.worker_daemon import directory_path
+
+    monkeypatch.setattr(sys, "path_importer_cache", {})
+    archive = tmp_path / "pyspark.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        for name in ("pyspark", "py4j"):
+            z.writestr(f"{name}/__init__.py", "")
+    site = tmp_path / "site"
+    for name in packages:
+        (site / name).mkdir(parents=True)
+        (site / name / "__init__.py").write_text("")
+    path = [str(archive), str(tmp_path / "missing"), str(site)]
+    expected = path[1:] if dropped else path
+    assert directory_path(path) == expected
+
+
+def test_worker_imports_pyspark_outside_archives(spark):
+    """A Python-worker task imports pyspark from a directory and holds no
+    zipimporter for the per-task ``importlib.invalidate_caches()`` to
+    re-read."""
+
+    def probe(_):
+        import sys
+        import zipimport
+
+        import pyspark
+
+        yield pyspark.__file__, [
+            key for key, finder in sys.path_importer_cache.items()
+            if isinstance(finder, zipimport.zipimporter)
+        ]
+
+    [(origin, zips)] = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert os.path.isfile(origin), origin
+    assert zips == []
