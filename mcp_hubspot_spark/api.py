@@ -61,16 +61,27 @@ TICKET_PROPERTIES = [  # reference clients/ticket_client.py:169-180
 ]
 
 
+def _filled(df: DataFrame) -> bool:
+    """Whether ``df`` is cached with every partition of its cache stored."""
+    if not df.is_cached:
+        return False
+    cache_manager = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = cache_manager.lookupCachedData(df._jdf)
+    return cached.isDefined() and (
+        cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    )
+
+
 @dataclass
 class Engine:
     """Bundle of CRM tables + optional vector store, mirroring the
     reference's HubSpotClient + FaissManager pair (server.py:60-97).
 
-    Construction caches and fills, one Spark job each, every table that
-    reads no files and is not already local or cached; such a table's rows
-    are fixed, so no answer changes. The caller's DataFrame is marked cached.
-    File-backed tables stay as they are (JVM-native scan, no pinned file
-    snapshot)."""
+    Construction fills, one Spark job each, the cache of every table that
+    reads no files and is not already local or filled, caching it first
+    unless the caller has; such a table's rows are fixed, so no answer
+    changes. The caller's DataFrame is marked cached. File-backed tables
+    stay as they are (JVM-native scan, no pinned file snapshot)."""
 
     tables: dict[str, DataFrame]
     store: VectorStore | None = None
@@ -80,9 +91,9 @@ class Engine:
         # one: an unfilled cache costs an extra AQE job and has no size a
         # join could broadcast on.
         for name, df in self.tables.items():
-            if df.is_cached or df.isStreaming or df.isLocal() or df.inputFiles():
+            if df.isStreaming or df.isLocal() or df.inputFiles() or _filled(df):
                 continue
-            materialize(df.persist())
+            materialize(df if df.is_cached else df.persist())
             logger.debug("Engine caches table %s", name)
 
     def _indexed(

@@ -491,9 +491,7 @@ def hybrid_mmr_serve(
     )
     ids = [r.doc_id for r in fused.select("doc_id").collect()]  # ≤ fuse_k
     cand = fused.join(
-        vector_index.lookup(ids, id_col="vec_id").withColumnRenamed(
-            "vec_id", "doc_id"
-        ),
+        vector_index.lookup(ids).withColumnRenamed("vec_id", "doc_id"),
         "doc_id",
     )
     return mmr_rerank(

@@ -15,12 +15,12 @@ capability on plain parquet:
   keeps only the files whose [min,max] interval intersects the
   requested range, and hands Spark exactly that file list. The residual
   predicate still applies (zone maps are conservative).
-- ``write_zordered`` — rewrites a table ordered by the interleaved-bit
-  Z-value of two columns and range-partitioned on it, so EVERY file
-  covers a narrow rectangle in (a, b) space and the zone map prunes on
-  EITHER column — the property a linear sort only gives the leading
-  column. The standard multi-dimensional clustering trade
-  (Delta OPTIMIZE ZORDER BY).
+- ``write_zordered`` (from :mod:`..operators.layout`, re-exported here) —
+  rewrites a table ordered by the interleaved-bit Z-value of two columns
+  and range-partitioned on it, so EVERY file covers a narrow rectangle in
+  (a, b) space and the zone map prunes on EITHER column — the property a
+  linear sort only gives the leading column. The standard
+  multi-dimensional clustering trade (Delta OPTIMIZE ZORDER BY).
 
 At 100 TB the zone map is rows = files (~10^5-10^6), a driver-trivial
 frame; the skipping decision costs one sidecar read instead of 10^5
@@ -33,8 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.layout import write_zordered
+
+__all__ = ["build_zonemap", "read_pruned", "write_zordered"]
+
 _SIDECAR = "_zonemap"
-_ZBITS = 12  # 12 bits per dimension → 24-bit z-values, plenty for file counts
 
 
 def _list_parquet_names(spark: SparkSession, table_dir: str) -> set[str]:
@@ -135,60 +138,3 @@ def read_pruned(
         (F.col(col) >= lo) & (F.col(col) <= hi)
     )
     return df, len(keep), len(rows)
-
-
-def _zvalue(a_scaled, b_scaled):
-    """Interleave the low _ZBITS bits of two scaled integer columns."""
-    z = F.lit(0).cast("long")
-    for i in range(_ZBITS):
-        abit = F.shiftright(a_scaled, i).bitwiseAND(F.lit(1))
-        bbit = F.shiftright(b_scaled, i).bitwiseAND(F.lit(1))
-        z = (
-            z
-            + F.shiftleft(abit.cast("long"), 2 * i)
-            + F.shiftleft(bbit.cast("long"), 2 * i + 1)
-        )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    table_dir: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 16,
-) -> None:
-    """Rewrite ``df`` clustered by the Z-value of (col_a, col_b) into
-    ``n_files`` range-partitioned files. Column domains are scaled to
-    ``_ZBITS``-bit integers from their (driver-collected, bounded: 4
-    numbers) min/max; ``repartitionByRange`` on the z-value gives each
-    output file a contiguous z-interval — a small rectangle in both
-    dimensions, which is what makes single-column zone-map pruning work
-    on either column afterwards."""
-    stats = df.agg(
-        F.min(col_a).alias("a_lo"),
-        F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"),
-        F.max(col_b).alias("b_hi"),
-    ).collect()[0]
-    scale = (1 << _ZBITS) - 1
-
-    def scaled(c, lo, hi):
-        span = float(hi - lo) or 1.0
-        return F.least(
-            F.lit(scale),
-            ((F.col(c) - F.lit(lo)) / F.lit(span) * scale).cast("long"),
-        )
-
-    z = _zvalue(
-        scaled(col_a, stats.a_lo, stats.a_hi),
-        scaled(col_b, stats.b_lo, stats.b_hi),
-    )
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(table_dir)
-    )

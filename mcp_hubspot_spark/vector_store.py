@@ -54,6 +54,11 @@ STORE_SCHEMA = T.StructType([
     T.StructField("extras", T.MapType(T.StringType(), T.StringType())),
 ])
 
+# An IvfIndex cell row: the id, the vector as given (array<double> on cosine
+# indexes) and, on PQ indexes, its codes; ``cell_id`` is the partition directory
+IVF_ROW = ("vec_id", "embedding", "pq_code")
+_ID, _VEC, _CODE = IVF_ROW
+
 log = logging.getLogger(__name__)
 
 
@@ -272,7 +277,10 @@ class IvfIndex:
     driver on a bounded hash-ordered sample
     (:func:`~.operators.vector.train_centroids`), assigns every vector to
     its nearest cell in one Spark pass, and writes the table PARTITIONED
-    BY cell_id. The trained model (the centroids, plus the PQ codebooks and
+    BY cell_id. Every cell row has one format, :data:`IVF_ROW`: ``vec_id``
+    (the caller's id), ``embedding`` and, on PQ indexes, ``pq_code``; the
+    input to ``build`` and ``add`` needs those two columns and any other
+    is dropped. The trained model (the centroids, plus the PQ codebooks and
     OPQ rotation when the index has them) is bounded by the cell count
     and the dimension, not the corpus, so it lives in ``meta.json`` next
     to the cells, as the reference keeps a JSON sidecar per FAISS file
@@ -390,12 +398,12 @@ class IvfIndex:
         return self._meta_dict().get("metric", "l2")
 
     @staticmethod
-    def _normalized(df: DataFrame, vec_col: str) -> DataFrame:
+    def _normalized(df: DataFrame) -> DataFrame:
         """L2-normalize the vector column (cosine indexes store unit
         vectors — the FAISS IndexFlatIP-on-normalized convention — so
         the cell geometry and the scoring agree). Zero vectors stay
         as-is rather than becoming NULL/NaN."""
-        v = F.col(vec_col)
+        v = F.col(_VEC)
         norm = F.sqrt(
             F.aggregate(
                 F.transform(v, lambda x: x * x),
@@ -406,19 +414,17 @@ class IvfIndex:
         unit = F.when(
             norm > 0, F.transform(v, lambda x: x / norm)
         ).otherwise(v)
-        return df.withColumn(vec_col, unit)
+        return df.withColumn(_VEC, unit)
 
     @classmethod
-    def _encode(
-        cls, df: DataFrame, model: dict, vec_col: str, id_col: str
-    ) -> DataFrame:
-        """``df``'s rows as the cells store them, through every step the
-        ``model`` has a part for: cosine normalize (keeping id and vector
-        only) → OPQ rotate → literal-centroid assign (``cell_id``, zero
-        shuffle) → PQ encode (``pq_code``; a residual index encodes
-        ``v − assigned centroid``, the FAISS IVFPQ construction). ``build``
-        trains each part on the steps before it, so ``add`` encodes new
-        rows exactly as the build did."""
+    def _encode(cls, df: DataFrame, model: dict) -> DataFrame:
+        """``df``'s rows as the cells store them (:data:`IVF_ROW`), through
+        every step the ``model`` has a part for: cosine normalize → OPQ
+        rotate → literal-centroid assign (``cell_id``, zero shuffle) → PQ
+        encode (``pq_code``; a residual index encodes ``v − assigned
+        centroid``, the FAISS IVFPQ construction). ``build`` trains each
+        part on the steps before it, so ``add`` encodes new rows exactly as
+        the build did."""
         from .operators.vector import (
             assign_cells_literal,
             pq_encode_matmul,
@@ -426,41 +432,34 @@ class IvfIndex:
             rotate_expr,
         )
 
+        df = df.select(_ID, _VEC)
         if model["metric"] == "cosine":
-            df = cls._normalized(
-                df.select(
-                    id_col, F.col(vec_col).cast("array<double>").alias(vec_col)
-                ),
-                vec_col,
-            )
+            df = cls._normalized(df.withColumn(_VEC, F.col(_VEC).cast("array<double>")))
         if "rotation" in model:
             df = df.withColumn(
-                vec_col,
-                rotate_expr(
-                    F.col(vec_col).cast("array<double>"), model["rotation"]
-                ),
+                _VEC,
+                rotate_expr(F.col(_VEC).cast("array<double>"), model["rotation"]),
             )
         if "centroids" not in model:
             return df
         cents = list(enumerate(model["centroids"]))
-        df = assign_cells_literal(df, cents, vec_col=vec_col, metric=model["metric"])
+        df = assign_cells_literal(df, cents, vec_col=_VEC, metric=model["metric"])
         if "codebooks" not in model:
             return df
         if model["pq"]["residual"]:
             return pq_encode_matmul(
-                df.withColumn("_res", residual_expr(vec_col, cents)),
+                df.withColumn("_res", residual_expr(_VEC, cents)),
                 model["codebooks"],
                 vec_col="_res",
+                code_col=_CODE,
             ).drop("_res")
-        return pq_encode_matmul(df, model["codebooks"], vec_col=vec_col)
+        return pq_encode_matmul(df, model["codebooks"], vec_col=_VEC, code_col=_CODE)
 
     @durable.mutator
     def build(
         self,
         df: DataFrame,
         n_cells: int = 16,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
         metric: str = "l2",
         pq_m: int | None = None,
         pq_codes: int = 256,
@@ -519,13 +518,13 @@ class IvfIndex:
         if pq_opq:
             model["opq"] = True
             model["rotation"] = pq_train_opq_rotation(
-                self._encode(df, model, vec_col, id_col), m=pq_m, vec_col=vec_col
+                self._encode(df, model), m=pq_m, vec_col=_VEC
             )
-        rotated = self._encode(df, model, vec_col, id_col)
+        rotated = self._encode(df, model)
         model["centroids"] = [
             [float(x) for x in r.centroid]
             # n_cells rows in cell-id order — bounded by design
-            for r in train_centroids(rotated, n_cells, vec_col=vec_col).collect()
+            for r in train_centroids(rotated, n_cells, vec_col=_VEC).collect()
         ]
         if pq_m is not None:
             model["pq"] = {
@@ -533,20 +532,20 @@ class IvfIndex:
                 "codes": int(pq_codes),
                 "residual": bool(pq_residual),
             }
-            train, train_col = rotated, vec_col
+            train, train_col = rotated, _VEC
             if pq_residual:
                 # residuals concentrate near 0 whichever cell a vector
                 # lives in, so the m subquantizers model one tight
                 # distribution instead of the union of all cells
-                train = self._encode(df, model, vec_col, id_col).withColumn(
-                    "_res", residual_expr(vec_col, list(enumerate(model["centroids"])))
+                train = self._encode(df, model).withColumn(
+                    "_res", residual_expr(_VEC, list(enumerate(model["centroids"])))
                 )
                 train_col = "_res"
             model["codebooks"] = pq_train_codebooks(
                 train, m=pq_m, k=pq_codes, vec_col=train_col
             )
         (
-            self._encode(df, model, vec_col, id_col)
+            self._encode(df, model)
             .write.mode("overwrite")
             .partitionBy("cell_id")
             .parquet(str(self.root / "cells"))
@@ -559,12 +558,7 @@ class IvfIndex:
             self.export_manifest()
 
     @durable.mutator
-    def add(
-        self,
-        df: DataFrame,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-    ) -> None:
+    def add(self, df: DataFrame) -> None:
         """Incremental ingest into a built index: encode new vectors
         against the FROZEN model (the same :meth:`_encode` as build —
         zero shuffle on the new batch) and append them to the cell
@@ -576,7 +570,7 @@ class IvfIndex:
         listing includes the appended cell files."""
         model = self._model()
         (
-            self._encode(df.select(id_col, vec_col), model, vec_col, id_col)
+            self._encode(df, model)
             .write.mode("append")
             .partitionBy("cell_id")
             .parquet(str(self.root / "cells"))
@@ -646,26 +640,26 @@ class IvfIndex:
             self.export_manifest()
 
     @durable.mutator
-    def delete(self, ids, id_col: str = "vec_id") -> int:
+    def delete(self, ids) -> int:
         """Delete vectors by id — the removal side of the serving
         lifecycle (the reference expires whole daily FAISS partitions,
         ``faiss_manager.py:90-104``; the IVF analog is delete-by-id with
         a rewrite of ONLY the cells that contain the ids). ``ids`` is a
         Python sequence (literal IN-list, partition-friendly) or a
-        DataFrame of ids (broadcast semi/anti joins) for large deletes.
+        DataFrame whose first column holds the ids (broadcast semi/anti
+        joins) for large deletes.
         Untouched cells keep their exact files; the manifest, when
         exported, is refreshed so a server never probes removed rows.
         Returns the number of rows deleted."""
         base = self._cells()
         if isinstance(ids, DataFrame):
-            col = id_col if id_col in ids.columns else ids.columns[0]
-            ids_df = ids.select(F.col(col).alias(id_col)).distinct()
-            hits = base.join(F.broadcast(ids_df), id_col, "left_semi")
+            ids_df = ids.select(F.col(ids.columns[0]).alias(_ID)).distinct()
+            hits = base.join(F.broadcast(ids_df), _ID, "left_semi")
         else:
             idlist = [int(i) for i in ids]
             if not idlist:
                 return 0
-            hits = base.filter(F.col(id_col).isin(idlist))
+            hits = base.filter(F.col(_ID).isin(idlist))
         per_cell = {
             int(r.cell_id): int(r.n)
             for r in hits.groupBy("cell_id")
@@ -677,9 +671,9 @@ class IvfIndex:
         affected = sorted(per_cell)
         keep = base.filter(F.col("cell_id").isin(affected))
         if isinstance(ids, DataFrame):
-            keep = keep.join(F.broadcast(ids_df), id_col, "left_anti")
+            keep = keep.join(F.broadcast(ids_df), _ID, "left_anti")
         else:
-            keep = keep.filter(~F.col(id_col).isin(idlist))
+            keep = keep.filter(~F.col(_ID).isin(idlist))
         self._swap_cells(keep, affected)
         return sum(per_cell.values())
 
@@ -713,7 +707,9 @@ class IvfIndex:
         FAISS process, ``faiss_manager.py``) can pick probe cells from the
         centroids and mmap exactly the listed files, without a Spark
         session and without re-deriving the partition layout from a
-        directory walk. One bounded JSON: n_cells centroids + file names,
+        directory walk. Each listed file holds the rows of :data:`IVF_ROW`:
+        ``vec_id``, ``embedding`` and, when the index is an IVFPQ,
+        ``pq_code``. One bounded JSON: n_cells centroids + file names,
         never vectors. Replaced atomically, so a concurrent reader never
         parses a half-written file."""
         model = self._model()
@@ -753,12 +749,10 @@ class IvfIndex:
         query_vec: Sequence[float],
         k: int = 10,
         nprobe: int = 2,
-        vec_col: str = "embedding",
-        id_cols: Sequence[str] = ("vec_id",),
         where=None,
     ) -> DataFrame:
         """Exact top-k over the ``nprobe`` cells nearest the query:
-        (rank, *id_cols, distance, similarity). Without ``where``, probed
+        (rank, vec_id, distance, similarity). Without ``where``, probed
         cells of at most ``local_serve.LOCAL_READ_MAX_BYTES`` are ranked
         in the driver (no Spark job); otherwise the pruned Spark scan
         answers, with the same rows bit for bit.
@@ -770,18 +764,13 @@ class IvfIndex:
         unfiltered probe, never a post-join. Note the standard IVF
         caveat: a highly selective filter empties probed cells before k
         hits are found; raise nprobe for filtered queries."""
-        return local_serve.answer(
-            self.spark,
-            self._serve(query_vec, k, nprobe, vec_col, id_cols, where),
-        )
+        return local_serve.answer(self.spark, self._serve(query_vec, k, nprobe, where))
 
     def _serve(
         self,
         query_vec: Sequence[float],
         k: int = 10,
         nprobe: int = 2,
-        vec_col: str = "embedding",
-        id_cols: Sequence[str] = ("vec_id",),
         where=None,
     ):
         """``search``'s answer before wrapping: the local path's Arrow
@@ -789,10 +778,10 @@ class IvfIndex:
         query_vec, probe, metric, _ = self._probe(query_vec, nprobe)
         files = self._cell_files(probe)
         if local_serve.use_local(f"IvfIndex.search at {self.root}", files, where):
-            result = self._search_local(query_vec, metric, files, k, vec_col, id_cols)
+            result = self._search_local(query_vec, metric, files, k)
             if result is not None:
                 return result
-        return self._search_spark(query_vec, probe, metric, k, vec_col, id_cols, where)
+        return self._search_spark(query_vec, probe, metric, k, where)
 
     def _cell_files(self, probe: Sequence[int]) -> list[str]:
         """The data files of the probed cells, listed from the cell
@@ -807,40 +796,40 @@ class IvfIndex:
         metric: str,
         files: Sequence[str],
         k: int,
-        vec_col: str = "embedding",
-        id_cols: Sequence[str] = ("vec_id",),
     ) -> pa.Table | None:
         """``search`` over the probed cells' ``files``, in the driver.
         None when the index holds no cell file to type an answer with;
         the Spark path then raises its own error."""
-        stored = [c for c in id_cols if c != "cell_id"]
-        part = ["cell_id"] if "cell_id" in id_cols else []
-        rows = local_serve.read(
-            files, [*stored, vec_col],
-            cast={vec_col: pa.list_(pa.float64())}, partition_cols=part,
-        )
+        rows = local_serve.read(files, [_ID, _VEC], cast={_VEC: pa.list_(pa.float64())})
         if rows is None:
-            schema = local_serve.schema_of(self.root / "cells", [*stored, vec_col])
+            schema = local_serve.schema_of(self.root / "cells", [_ID, _VEC])
             if schema is None:
                 return None
             rows = schema.empty_table()
-            for c in part:
-                rows = rows.append_column(c, pa.array([], pa.int32()))
-        X, valid = local_serve.vectors(rows[vec_col], len(query_vec))
+        X, valid = local_serve.vectors(rows[_VEC], len(query_vec))
         dist, sim = local_serve.knn_scores(X, valid, query_vec, metric)
-        top = local_serve.top_k(dist, rows[id_cols[0]], k, null=~valid)
-        fields = [rows.schema.field(c).with_nullable(True) for c in id_cols]
+        top = local_serve.top_k(dist, rows[_ID], k, null=~valid)
         return pa.Table.from_arrays(
             [
                 local_serve.rank_column(len(top)),
-                *[rows[c].take(top) for c in id_cols],
+                rows[_ID].take(top),
                 local_serve.nullable(dist[top], ~valid[top]),
                 local_serve.nullable(sim[top], ~valid[top]),
             ],
             schema=pa.schema([
-                local_serve.RANK, *fields,
+                local_serve.RANK, rows.schema.field(_ID).with_nullable(True),
                 ("distance", pa.float64()), ("similarity", pa.float64()),
             ]),
+        )
+
+    @staticmethod
+    def _exact(
+        cells: DataFrame, query_vec: Sequence[float], k: int, metric: str
+    ) -> DataFrame:
+        """Exact top-k over ``cells`` as a Spark plan, vectors read as double."""
+        return knn(
+            cells.select(_ID, F.col(_VEC).cast("array<double>").alias(_VEC)),
+            query_vec, k=k, vec_col=_VEC, id_cols=(_ID,), metric=metric,
         )
 
     def _search_spark(
@@ -849,50 +838,31 @@ class IvfIndex:
         probe: Sequence[int],
         metric: str,
         k: int,
-        vec_col: str = "embedding",
-        id_cols: Sequence[str] = ("vec_id",),
         where=None,
     ) -> DataFrame:
         """``search`` as a Spark plan over the partition-pruned cells."""
         pruned = self._pruned_cells(list(probe))
         if where is not None:
             pruned = pruned.filter(where)
-        return knn(
-            pruned.select(
-                *id_cols, F.col(vec_col).cast("array<double>").alias(vec_col)
-            ),
-            query_vec,
-            k=k,
-            vec_col=vec_col,
-            id_cols=id_cols,
-            metric=metric,
-        )
+        return self._exact(pruned, query_vec, k, metric)
 
     def search_batch(
         self,
         queries: Sequence[tuple[int, Sequence[float]]],
         k: int = 10,
         nprobe: int = 2,
-        vec_col: str = "embedding",
-        id_cols: Sequence[str] = ("vec_id",),
     ) -> DataFrame:
         """``search`` per ``(query_id, vector)`` pair, each on its own
-        path: (query_id, rank, *id_cols, distance, similarity). Raises
+        path: (query_id, rank, vec_id, distance, similarity). Raises
         ``ValueError`` for an empty batch or a repeated query id."""
         return local_serve.batch(
             self.spark,
             [(int(qid), vec) for qid, vec in queries],
-            lambda vec: self._serve(vec, k, nprobe, vec_col, id_cols),
+            lambda vec: self._serve(vec, k, nprobe),
             pa.int64(),
         )
 
-    def lookup(
-        self,
-        ids: Sequence,
-        *,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> DataFrame:
+    def lookup(self, ids: Sequence) -> DataFrame:
         """Bounded point-lookup of stored rows by id — the
         refinement-stage read (``search_pq``'s rerank runs the same
         shape inline over its probed cells). A document's cell is
@@ -909,9 +879,8 @@ class IvfIndex:
                 f"lookup() is a bounded point-lookup ({len(ids)} ids); "
                 "join against the cells table for bulk reads"
             )
-        return self._cells().filter(F.col(id_col).isin(ids)).select(
-            id_col,
-            F.col(vec_col).cast("array<double>").alias(vec_col),
+        return self._cells().filter(F.col(_ID).isin(ids)).select(
+            _ID, F.col(_VEC).cast("array<double>").alias(_VEC)
         )
 
     def _probe(
@@ -989,13 +958,11 @@ class IvfIndex:
         k: int = 10,
         nprobe: int = 2,
         rerank: int | None = None,
-        vec_col: str = "embedding",
-        id_cols: Sequence[str] = ("vec_id",),
         where=None,
     ) -> DataFrame:
         """IVFPQ serving (requires ``build(pq_m=...)``): probe cells as
         ``search`` does, but rank candidates by ASYMMETRIC distance over
-        the stored ``pq_code`` column — the pruned scan reads ids +
+        the stored ``pq_code`` column — the pruned scan reads ``vec_id`` +
         m-byte-ish codes, never the embedding column (the at-scale IO
         win: 64-d float32 rows shrink 32x at m=8/256).
         ``rerank=N`` runs the standard refinement: collect the bounded
@@ -1044,7 +1011,7 @@ class IvfIndex:
         if pq_meta.get("residual"):
             # residual index: each probed cell ranks by a table built
             # from THIS cell's query residual; the scan still reads
-            # (ids, cell_id, pq_code) only — cell_id is the partition
+            # (vec_id, cell_id, pq_code) only — cell_id is the partition
             # column, so it costs nothing extra
             n_doubles = (
                 len(probed_cents) * len(cbs) * int(pq_meta["codes"])
@@ -1055,56 +1022,17 @@ class IvfIndex:
                 else pq_adc_topk_residual
             )
             adc = residual_topk(
-                pruned.select(*id_cols, "cell_id", "pq_code"),
-                cbs,
-                query_vec,
-                probed_cents,
-                k=(rerank if rerank else k),
-                id_cols=id_cols,
+                pruned.select(_ID, "cell_id", _CODE), cbs, query_vec, probed_cents,
+                k=(rerank if rerank else k), id_cols=(_ID,), code_col=_CODE,
             )
         else:
             adc = pq_adc_topk(
-                pruned.select(*id_cols, "pq_code"),
-                cbs,
-                query_vec,
-                k=(rerank if rerank else k),
-                id_cols=id_cols,
+                pruned.select(_ID, _CODE), cbs, query_vec,
+                k=(rerank if rerank else k), id_cols=(_ID,), code_col=_CODE,
             )
         if not rerank:
             return adc.limit(k)
-        short_rows = adc.collect()  # ≤ rerank rows
-        if not short_rows:
-            # empty shortlist → empty exact stage, keeping knn's schema
-            cand = pruned.filter(F.lit(False))
-        elif len(id_cols) == 1:
-            cand = pruned.filter(
-                F.col(id_cols[0]).isin([r[id_cols[0]] for r in short_rows])
-            )
-        else:
-            # composite ids: filter on the FULL id tuple (an isin on the
-            # first column alone would admit out-of-shortlist rows that
-            # share its value into the exact stage). Bounded OR of ≤
-            # rerank conjunctions — same literal-list scale as isin.
-            import functools
-            import operator as op
-
-            clauses = [
-                functools.reduce(
-                    op.and_,
-                    [F.col(c) == F.lit(r[c]) for c in id_cols],
-                )
-                for r in short_rows
-            ]
-            cand = pruned.filter(functools.reduce(op.or_, clauses))
-        if where is not None:
-            cand = cand.filter(where)
-        return knn(
-            cand.select(
-                *id_cols, F.col(vec_col).cast("array<double>").alias(vec_col)
-            ),
-            query_vec,
-            k=k,
-            vec_col=vec_col,
-            id_cols=id_cols,
-            metric=metric,
-        )
+        short = [r[_ID] for r in adc.collect()]  # ≤ rerank rows
+        # an empty shortlist gives an empty exact stage, keeping knn's schema
+        cand = pruned.filter(F.col(_ID).isin(short) if short else F.lit(False))
+        return self._exact(cand, query_vec, k, metric)

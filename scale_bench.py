@@ -53,6 +53,7 @@ from mcp_hubspot_spark.operators.dedup import (
     semantic_dedup_matmul,
     simhash_fingerprints,
 )
+from mcp_hubspot_spark.operators.layout import write_zordered
 from mcp_hubspot_spark.operators.sampling import (
     hash_stratified_sample,
     per_group_cap,
@@ -96,7 +97,7 @@ from mcp_hubspot_spark.operators.vector import (
 from mcp_hubspot_spark.serving import hybrid_rrf_serve, hybrid_rrf_serve_batch
 from mcp_hubspot_spark.session import get_spark
 from mcp_hubspot_spark.sources.catalog import DEFAULT_SF_DIR, load_table
-from mcp_hubspot_spark.sources.zonemap import build_zonemap, read_pruned, write_zordered
+from mcp_hubspot_spark.sources.zonemap import build_zonemap, read_pruned
 from mcp_hubspot_spark.text_index import TextIndex
 from mcp_hubspot_spark.vector_store import IvfIndex
 

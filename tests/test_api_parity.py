@@ -291,6 +291,27 @@ def test_engine_leaves_file_backed_tables_uncached(spark, parquet_tables, caplog
     assert "InMemoryTableScan" not in _leaf_nodes(engine.get_tickets())
 
 
+def test_engine_fills_tables_the_caller_cached(spark):
+    """A table the caller cached but never filled is filled at
+    construction too, so a tool's first call runs the jobs of its later
+    ones (an unfilled cache adds an AQE job and cannot be broadcast)."""
+    tables = build_crm_tables(spark)
+    for df in tables.values():
+        df.cache()
+    engine = Engine(tables)
+    sc = spark.sparkContext
+    jobs = []
+    for call in range(2):
+        group = f"cached-conversations-{call}"
+        sc.setJobGroup(group, group)
+        try:
+            engine.get_recent_conversations().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] == jobs[1], jobs
+
+
 def test_all_tools_agree_over_file_backed_tables(engine, spark, parquet_tables, tmp_path):
     """All 10 tools answer the same over parquet copies of the tables
     (uncached) as over the Python-list tables (cached); the tools that

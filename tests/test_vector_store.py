@@ -347,6 +347,32 @@ def _ivf_fixture(spark, root, n_cells=8):
     return idx, emb
 
 
+def test_ivf_cells_store_only_the_row_format(spark, tmp_path):
+    """Every cell file, built or added, holds IVF_ROW's columns and no
+    other, whatever else the input carries: a kept extra column would
+    answer ``where=`` filters on built rows and miss every added one."""
+    import pyarrow.parquet as pq
+
+    from mcp_hubspot_spark.vector_store import IvfIndex
+
+    emb = load_table(spark, SF, "embeddings")  # vec_id, embedding, label
+    assert "label" in emb.columns
+    row = ["vec_id", "embedding"]
+    for name, kw, cols in [
+        ("l2", {}, row),
+        ("cosine", {"metric": "cosine"}, row),
+        ("pq", {"pq_m": 4, "pq_codes": 8}, [*row, "pq_code"]),
+    ]:
+        idx = IvfIndex(spark, str(tmp_path / name))
+        idx.build(emb.filter(F.col("vec_id") >= 5), n_cells=4, **kw)
+        built = set((tmp_path / name / "cells").glob("cell_id=*/*.parquet"))
+        idx.add(emb.filter(F.col("vec_id") < 5))
+        files = set((tmp_path / name / "cells").glob("cell_id=*/*.parquet"))
+        assert built and files - built, name
+        for f in sorted(files):
+            assert pq.read_schema(f).names == cols, (name, f)
+
+
 def _all_ids(spark, root):
     return {
         r.vec_id
@@ -1072,43 +1098,6 @@ def test_ivfpq_residual_beats_raw_on_clustered_corpus(spark, tmp_path):
     # across local[8]/local[32]. Assert the structural gap, not points.
     assert hits_res >= hits_raw + 5
     assert hits_res >= 25  # raw ADC ordering drowns in cluster offsets
-
-
-@pytest.mark.slow
-def test_ivfpq_rerank_composite_ids_full_tuple_filter(spark, tmp_path):
-    """search_pq(rerank=N) with composite id_cols must filter the exact
-    stage on the FULL id tuple (round-9 advice fix): with a non-unique
-    first id column, an isin on it alone would admit out-of-shortlist
-    twins into the exact stage. The smoke contract: composite-id rerank
-    returns correctly-shaped rows, the top hit is the query's own
-    (id, tag) tuple, and rows sharing vec_id but differing in tag are
-    distinct results."""
-    import numpy as np
-
-    from mcp_hubspot_spark.vector_store import IvfIndex
-
-    rng = np.random.default_rng(21)
-    X = rng.normal(size=(200, 16))
-    rows = [
-        (i % 100, "a" if i < 100 else "b", [float(x) for x in X[i]])
-        for i in range(200)
-    ]  # every vec_id appears twice, once per tag
-    df = spark.createDataFrame(
-        rows, "vec_id long, tag string, embedding array<double>"
-    )
-    ivf = IvfIndex(spark, str(tmp_path / "comp"))
-    ivf.build(df, n_cells=4, pq_m=4, pq_codes=16, id_col="vec_id")
-    q = [float(x) for x in X[137]]  # (vec_id=37, tag='b')
-    got = ivf.search_pq(
-        q, k=3, nprobe=4, rerank=20, id_cols=("vec_id", "tag")
-    ).collect()
-    assert len(got) == 3
-    assert (got[0].vec_id, got[0].tag) == (37, "b")
-    assert got[0].distance < 1e-12
-    # the twin (37, 'a') is a DIFFERENT random vector — if it appears
-    # it must rank below the exact self-hit
-    for r in got[1:]:
-        assert (r.vec_id, r.tag) != (37, "b")
 
 
 @pytest.mark.slow
