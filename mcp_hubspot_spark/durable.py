@@ -26,7 +26,9 @@ other.
 **Readers never take the lock.** They see a store through files that
 only ever change by ``os.replace`` (JSON state, appended parquet) or
 directory rename, so a read resolves the old or the new version, never
-a torn one.
+a torn one. The two indexes read their ``meta.json`` through
+:func:`read_meta`, once per file version, and refuse it while it
+carries a build's ``building`` sentinel.
 
 **Crash recovery** is each store's own ``_recover()`` — the stores
 repair different layouts (``IvfIndex`` rolls a cell swap back,
@@ -53,6 +55,7 @@ import time
 import uuid
 
 MUTATION_LOCK = "_mutation.lock"
+META = "meta.json"
 
 log = logging.getLogger(__name__)
 
@@ -155,3 +158,31 @@ def write_json(path, obj) -> None:
     """Replace the JSON file at ``path`` with ``obj`` atomically."""
     with replacing(path) as tmp, open(tmp, "x") as fh:
         fh.write(json.dumps(obj, sort_keys=True))
+
+
+def read_meta(store) -> dict:
+    """The store's ``root/meta.json``, parsed once per version of the file
+    and cached on the store as ``_meta_cache``, keyed by the file's
+    ``(st_ino, st_mtime_ns, st_size)``: the file only ever changes by
+    :func:`write_json`'s rename, so a new version is a new inode. Every
+    read shares the cached dict, so no caller may mutate it.
+
+    Raises ``FileNotFoundError`` when the file is missing, and
+    ``RuntimeError`` when it carries the ``building`` sentinel a build
+    writes before its first data file: the data files on disk may then
+    be partial or match no model, and the store must be rebuilt before
+    it serves."""
+    with open(os.path.join(store.root, META), "rb") as fh:
+        st = os.fstat(fh.fileno())
+        key = (st.st_ino, st.st_mtime_ns, st.st_size)
+        cached = store._meta_cache
+        if cached is None or cached[0] != key:
+            cached = store._meta_cache = (key, json.load(fh))
+    meta = cached[1]
+    if meta.get("building"):
+        raise RuntimeError(
+            f"{type(store).__name__} at {store.root}: meta.json carries the "
+            "'building' sentinel — a build() was interrupted mid-write. "
+            "Rebuild before serving."
+        )
+    return meta

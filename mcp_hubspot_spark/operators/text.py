@@ -17,6 +17,13 @@ from .topk import grouped_top_k
 
 _WS = r"\s+"
 
+# BM25's saturation and length-normalization constants, fixed as Lucene's
+# defaults: every BM25 path (this module's corpus scans, TextIndex's Spark
+# plan and its numpy replay) reads them here, and the DuckDB oracles of
+# the registry's BM25 queries replay these two values.
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 # tiny per-language stopword marker lists for the heuristic language ID.
 # Deterministic and SQL-expressible (the DuckDB oracle uses the same lists).
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -527,12 +534,11 @@ def bm25_scores(
     query_terms: list[str],
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 ranked retrieval (Robertson-Sparck Jones idf, Lucene-style
-    ``ln(1 + (N - df + 0.5)/(df + 0.5))``) of documents against a fixed
-    query-term list. Returns (id, score) for docs matching >= 1 term.
+    ``ln(1 + (N - df + 0.5)/(df + 0.5))``, k1 = :data:`BM25_K1`, b =
+    :data:`BM25_B`) of documents against a fixed query-term list.
+    Returns (id, score) for docs matching >= 1 term.
 
     Scale shape: the doc side is ONE linear scan — tokens are filtered to
     the query terms map-side (array_intersect-style before any explode),
@@ -543,7 +549,7 @@ def bm25_scores(
     fixed-order fold rather than a shuffle-order float sum, so results
     are bit-stable across partitionings (and engines).
     """
-    contrib = _bm25_contrib(df, query_terms, text_col, id_col, k1, b)
+    contrib = _bm25_contrib(df, query_terms, text_col, id_col)
     return contrib.groupBy(id_col).agg(sorted_term_sum("_term").alias("score"))
 
 
@@ -553,12 +559,12 @@ def bm25_weight(
     df: Column,
     n: Column,
     avgdl: Column,
-    k1: float,
-    b: float,
 ) -> Column:
     """One term's BM25 contribution to one document: Lucene idf
-    ``ln(1 + (N - df + 0.5)/(df + 0.5))`` times the saturated,
-    length-normalized term frequency. Doubles in, double out."""
+    ``ln(1 + (N - df + 0.5)/(df + 0.5))`` times the term frequency
+    saturated by :data:`BM25_K1` and length-normalized by
+    :data:`BM25_B`. Doubles in, double out."""
+    k1, b = BM25_K1, BM25_B
     idf = F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
     return (
         idf
@@ -583,8 +589,6 @@ def _bm25_contrib(
     query_terms: list[str],
     text_col: str,
     id_col: str,
-    k1: float,
-    b: float,
 ) -> DataFrame:
     """Per-(doc, term) BM25 contributions for ``query_terms`` in ONE
     corpus scan — the shared front half of :func:`bm25_scores` and
@@ -629,7 +633,7 @@ def _bm25_contrib(
             "_term",
             bm25_weight(
                 F.col("_tf"), F.col("_dl"), F.col("_df"),
-                F.col("_n"), F.col("_avgdl"), k1, b,
+                F.col("_n"), F.col("_avgdl"),
             ).alias("_c"),
         )
     )
@@ -642,8 +646,6 @@ def bm25_topk_batch(
     k: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 top-k for MANY queries in ONE corpus scan — the
     ``knn_batch`` analog at the lexical tier. The naive form runs
@@ -669,7 +671,7 @@ def bm25_topk_batch(
         for t in {x.lower() for x in ts}
     )
     all_terms = sorted({t for _, t in qmap})
-    contrib = _bm25_contrib(df, all_terms, text_col, id_col, k1, b)
+    contrib = _bm25_contrib(df, all_terms, text_col, id_col)
     qdf = df.sparkSession.createDataFrame(
         qmap, "query_id string, _term string"
     )

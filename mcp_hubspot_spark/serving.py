@@ -29,9 +29,16 @@ from pyspark.sql import functions as F
 
 from . import durable, local_serve
 from .sources.snapshot_table import SnapshotTable
+from .text_index import DOC_ROW
 from .vector_store import IvfIndex
 
 _STATE = "_sync_state.json"
+_DOC, _TEXT = DOC_ROW
+
+# Reciprocal-rank fusion's rank offset: a doc scores 1/(RRF_K + rank) per
+# leg. Fixed at the usual 60, the value the DuckDB oracles of the brute
+# hybrid registry queries replay.
+RRF_K = 60
 
 
 class _SyncedVersion:
@@ -55,13 +62,22 @@ class _SyncedVersion:
         durable.write_json(self._state_path(), {"synced_version": version})
 
 
+def _fresh_docs(changes: DataFrame) -> DataFrame:
+    """A CDC diff's added and changed documents: their after-images as
+    :data:`.text_index.DOC_ROW` rows."""
+    return changes.filter(F.col("diff_status").isin("added", "changed")).select(
+        _DOC, F.col("after").getField(_TEXT).alias(_TEXT)
+    )
+
+
 class IndexMaintainer(_SyncedVersion):
     """Keeps ``index`` answering for the current version of ``table``.
 
-    ``embed`` maps a DataFrame carrying (``id_col``, ``text_col``) to
-    (vec_id, embedding) — defaulting to the deterministic hash embedder,
-    with the same injectable seam the embedding module itself uses for a
-    real model. ``n_cells`` sizes the initial build.
+    The table's rows are documents (:data:`.text_index.DOC_ROW`).
+    ``embed`` maps a DataFrame carrying (doc_id, text) to (vec_id,
+    embedding) — defaulting to the deterministic hash embedder, with the
+    same injectable seam the embedding module itself uses for a real
+    model. ``n_cells`` sizes the initial build.
     """
 
     def __init__(
@@ -69,16 +85,12 @@ class IndexMaintainer(_SyncedVersion):
         spark: SparkSession,
         table: SnapshotTable,
         index: IvfIndex,
-        id_col: str = "doc_id",
-        text_col: str = "text",
         dim: int = 64,
         embed=None,
     ):
         self.spark = spark
         self.table = table
         self.index = index
-        self.id_col = id_col
-        self.text_col = text_col
         self.dim = dim
         self._embed = embed or self._default_embed
 
@@ -86,8 +98,8 @@ class IndexMaintainer(_SyncedVersion):
         from .functions.embedding import embed_column
 
         return df.select(
-            F.col(self.id_col).cast("long").alias("vec_id"),
-            embed_column(F.col(self.text_col), dim=self.dim)
+            F.col(_DOC).cast("long").alias("vec_id"),
+            embed_column(F.col(_TEXT), dim=self.dim)
             .cast("array<double>")
             .alias("embedding"),
         )
@@ -139,14 +151,9 @@ class IndexMaintainer(_SyncedVersion):
         # the union of stale AND fresh ids: crash-retry convergence (see
         # docstring) requires clearing 'added' ids too before re-adding
         stale = changes.select(
-            F.col(self.id_col).cast("long").alias("vec_id")
+            F.col(_DOC).cast("long").alias("vec_id")
         ).distinct()
-        fresh = changes.filter(
-            F.col("diff_status").isin("added", "changed")
-        ).select(
-            F.col(self.id_col),
-            F.col("after").getField(self.text_col).alias(self.text_col),
-        )
+        fresh = _fresh_docs(changes)
         n_deleted = self.index.delete(stale)
         # count the PRE-embed frame: counting after _embed would run the
         # embedding UDF a second time when add() materializes the write
@@ -183,7 +190,8 @@ class TextIndexMaintainer(_SyncedVersion):
       added−removed, sum_dl by len(after)−len(before).
 
     Epochs are the table versions themselves, which are monotonic by
-    the snapshot table's commit protocol.
+    the snapshot table's commit protocol. The table's rows are
+    documents (:data:`.text_index.DOC_ROW`).
 
     Shared diff-replay bound (applies equally to :class:`IndexMaintainer`):
     a crash-retry whose window spans a VALUE-REVERT — a doc changed
@@ -195,28 +203,14 @@ class TextIndexMaintainer(_SyncedVersion):
     their version atomically, so the window is only crash-to-retry.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        table: SnapshotTable,
-        index,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ):
+    def __init__(self, spark: SparkSession, table: SnapshotTable, index):
         self.spark = spark
         self.table = table
         self.index = index
-        self.id_col = id_col
-        self.text_col = text_col
 
     def initialize(self, num_buckets: int = 64) -> int:
         v = self.table.version()
-        self.index.build(
-            self.table.read(version=v),
-            id_col=self.id_col,
-            text_col=self.text_col,
-            num_buckets=num_buckets,
-        )
+        self.index.build(self.table.read(version=v), num_buckets=num_buckets)
         self._record(v)
         return v
 
@@ -236,13 +230,8 @@ class TextIndexMaintainer(_SyncedVersion):
         if v_to == v_from:
             return {"from": v_from, "to": v_to, "tombstoned": 0, "added": 0}
         changes = self.table.table_changes(v_from, v_to, include_values=True)
-        stale = changes.select(self.id_col).distinct()
-        fresh = changes.filter(
-            F.col("diff_status").isin("added", "changed")
-        ).select(
-            F.col(self.id_col),
-            F.col("after").getField(self.text_col).alias(self.text_col),
-        )
+        stale = changes.select(_DOC).distinct()
+        fresh = _fresh_docs(changes)
         # NET stats delta from the CDC images alone — no corpus scan.
         # dl(after) counts for added+changed rows, dl(before) for
         # removed+changed rows; the difference of the two sums moves
@@ -264,11 +253,11 @@ class TextIndexMaintainer(_SyncedVersion):
         # so an empty-range diff is never requested
         dl_after = F.when(
             F.col("diff_status").isin("added", "changed"),
-            F.size(_tok(F.lower(F.col("after").getField(self.text_col)))),
+            F.size(_tok(F.lower(F.col("after").getField(_TEXT)))),
         ).otherwise(F.lit(0))
         dl_before = F.when(
             F.col("diff_status").isin("removed", "changed"),
-            F.size(_tok(F.lower(F.col("before").getField(self.text_col)))),
+            F.size(_tok(F.lower(F.col("before").getField(_TEXT)))),
         ).otherwise(F.lit(0))
         if stats_changes is not None:
             mov = stats_changes.agg(
@@ -289,13 +278,7 @@ class TextIndexMaintainer(_SyncedVersion):
         counts = changes.groupBy("diff_status").count().collect()
         by_status = {r.diff_status: int(r["count"]) for r in counts}
         self.index.delete(stale, dead_epoch=v_to)
-        self.index.add(
-            fresh,
-            id_col=self.id_col,
-            text_col=self.text_col,
-            epoch=v_to,
-            stats_delta=stats_delta,
-        )
+        self.index.add(fresh, epoch=v_to, stats_delta=stats_delta)
         self._record(v_to)
         return {
             "from": v_from,
@@ -314,7 +297,6 @@ def hybrid_rrf_serve(
     k: int = 10,
     shortlist: int = 20,
     nprobe: int = 2,
-    rrf_k: int = 60,
     dense: str = "exact",
     pq_rerank: int | None = None,
 ) -> DataFrame:
@@ -340,7 +322,9 @@ def hybrid_rrf_serve(
     trades the dense leg's recall for cell pruning exactly as
     ``IvfIndex.search`` documents.
 
-    RRF (:func:`_rrf_fuse`) is rank-only: score scales never mix.
+    RRF (:func:`_rrf_fuse`) is rank-only: score scales never mix. Its
+    offset is the constant :data:`RRF_K` = 60, as in the brute twin and
+    its DuckDB oracle.
 
     ``dense`` picks the ANN leg's physical path: ``"exact"`` (default)
     scans the probed cells' embedding column; ``"pq"`` (requires an
@@ -355,14 +339,14 @@ def hybrid_rrf_serve(
     """
     fused = _hybrid_table(
         text_index, vector_index, query_terms, query_vec,
-        k, shortlist, nprobe, rrf_k, dense, pq_rerank,
+        k, shortlist, nprobe, dense, pq_rerank,
     )
     return local_serve.answer(text_index.spark, fused)
 
 
 def _hybrid_table(
     text_index, vector_index, query_terms: list[str], query_vec,
-    k: int, shortlist: int, nprobe: int, rrf_k: int,
+    k: int, shortlist: int, nprobe: int,
     dense: str = "exact", pq_rerank: int | None = None,
 ) -> pa.Table:
     """:func:`hybrid_rrf_serve`'s fused answer as an Arrow table."""
@@ -382,14 +366,13 @@ def _hybrid_table(
         local_serve.rows(lex, ("doc_id", "rank")),
         local_serve.rows(vec, ("vec_id", "rank")),
         k,
-        rrf_k,
     )
     return _fused_table(fused, lex, vec)
 
 
-def _rrf_fuse(lex_rows, vec_rows, k: int, rrf_k: int) -> list[tuple]:
+def _rrf_fuse(lex_rows, vec_rows, k: int) -> list[tuple]:
     """Reciprocal-rank fusion of two legs' (doc, rank) rows: a doc's
-    score is 1/(rrf_k + rank) summed over the legs it appears in (each
+    score is 1/(:data:`RRF_K` + rank) summed over the legs it appears in (each
     pair of its leg rows, as a full outer join on the id pairs them),
     rounded as Spark's ``round(·, 6)`` rounds. Returns the top ``k``
     (doc, lex_rank, vec_rank, rrf_score) by score descending, doc
@@ -400,7 +383,7 @@ def _rrf_fuse(lex_rows, vec_rows, k: int, rrf_k: int) -> list[tuple]:
             legs.setdefault(doc, ([], []))[leg].append(rank)
 
     def rrf(rank):
-        return 1.0 / (rrf_k + rank) if rank is not None else 0.0
+        return 1.0 / (RRF_K + rank) if rank is not None else 0.0
 
     fused = [
         (doc, lr, vr, local_serve.spark_round(rrf(lr) + rrf(vr), 6))
@@ -435,7 +418,6 @@ def hybrid_rrf_serve_batch(
     k: int = 10,
     shortlist: int = 20,
     nprobe: int = 2,
-    rrf_k: int = 60,
 ) -> DataFrame:
     """:func:`hybrid_rrf_serve` per query of ``queries`` (query_id
     (string) -> (terms list, query vector)), each leg on its own path:
@@ -445,7 +427,7 @@ def hybrid_rrf_serve_batch(
         text_index.spark,
         sorted(queries.items()),
         lambda q: _hybrid_table(
-            text_index, vector_index, q[0], q[1], k, shortlist, nprobe, rrf_k
+            text_index, vector_index, q[0], q[1], k, shortlist, nprobe
         ),
         pa.string(),
     )
@@ -462,7 +444,6 @@ def hybrid_mmr_serve(
     shortlist: int = 20,
     nprobe: int = 2,
     lam: float = 0.7,
-    rrf_k: int = 60,
 ) -> DataFrame:
     """The full served retrieval stack: index-backed hybrid RRF fusion
     (:func:`hybrid_rrf_serve`, top ``fuse_k``) -> MMR diversity rerank
@@ -487,7 +468,6 @@ def hybrid_mmr_serve(
         k=fuse_k,
         shortlist=shortlist,
         nprobe=nprobe,
-        rrf_k=rrf_k,
     )
     ids = [r.doc_id for r in fused.select("doc_id").collect()]  # ≤ fuse_k
     cand = fused.join(

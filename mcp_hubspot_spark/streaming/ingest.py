@@ -18,25 +18,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.embedding import embed_column
+from ..text_index import DOC_ROW
 from ..vector_store import VectorStore
+
+_DOC, _TEXT = DOC_ROW
 
 
 def stream_embed_to_store(
     stream_df: DataFrame,
     store: VectorStore,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    data_type: str = "document",
     dim: int = 64,
 ):
-    """Start a streaming query embedding ``text_col`` and appending rows
-    shaped for the vector store. Returns the StreamingQuery handle."""
+    """Start a streaming query embedding the ``text`` of a stream of
+    documents (:data:`~.text_index.DOC_ROW`) and appending rows shaped
+    for the vector store, each of ``type`` "document". Returns the
+    StreamingQuery handle."""
     shaped = stream_df.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        embed_column(text_col, dim=dim).alias("embedding"),
-        F.lit(data_type).alias("type"),
-        F.to_json(F.struct(F.col(id_col), F.col(text_col))).alias("data_json"),
+        F.col(_DOC).cast("long").alias("vec_id"),
+        embed_column(_TEXT, dim=dim).alias("embedding"),
+        F.lit("document").alias("type"),
+        F.to_json(F.struct(F.col(_DOC), F.col(_TEXT))).alias("data_json"),
         F.lit(None).cast("map<string,string>").alias("extras"),
     )
 
@@ -83,11 +85,10 @@ def stream_docs_to_text_index(
     index,
     checkpoint_dir: str,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_epochs: int | None = None,
 ):
-    """Streaming append-only ingest into a :class:`~.text_index.TextIndex`
+    """Streaming append-only ingest of documents
+    (:data:`~.text_index.DOC_ROW`) into a :class:`~.text_index.TextIndex`
     — the lexical twin of :func:`stream_embed_to_store`, built directly
     on the index's epoch machinery: each micro-batch ``add()``s at
     ``epoch = batch_id + 1`` (build owns epoch 0), so recovery is free
@@ -120,12 +121,7 @@ def stream_docs_to_text_index(
     """
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        index.add(
-            batch_df,
-            id_col=id_col,
-            text_col=text_col,
-            epoch=int(batch_id) + 1,
-        )
+        index.add(batch_df, epoch=int(batch_id) + 1)
         index.maybe_compact(max_epochs=max_epochs)
 
     return (

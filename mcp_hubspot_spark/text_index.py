@@ -50,7 +50,6 @@ BM25 reads prune the positions column away (ReadSchema-audited).
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 import numpy as np
@@ -60,10 +59,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import durable, local_serve
 from .operators.classifier import hash_bucket
-from .operators.text import bm25_weight, sorted_term_sum, tokens
+from .operators.text import BM25_B, BM25_K1, bm25_weight, sorted_term_sum, tokens
 from .operators.topk import ranked_top_k
 
-__all__ = ["TextIndex"]
+__all__ = ["DOC_ROW", "TextIndex"]
+
+# A document row as every TextIndex writer reads it: the id and the raw text
+# (the text twin of vector_store.IVF_ROW); postings keep the id as ``doc_id``
+DOC_ROW = ("doc_id", "text")
+_DOC, _TEXT = DOC_ROW
 
 
 class TextIndex:
@@ -76,26 +80,20 @@ class TextIndex:
     """
 
     LOCK_TIMEOUT_S = 120.0
-    _META = "meta.json"
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.root = Path(str(path))
+        self._meta_cache = None  # durable.read_meta's per-version cache
 
     # ------------------------------------------------------------ meta
 
     def _meta_dict(self) -> dict:
-        p = self.root / self._META
-        if not p.exists():
-            raise FileNotFoundError(f"no index at {self.root}")
-        meta = json.loads(p.read_text())
-        if meta.get("building"):
-            raise RuntimeError(
-                f"index at {self.root} carries the 'building' sentinel — "
-                "a build() was interrupted mid-write and the postings "
-                "may be partial; rebuild before serving"
-            )
-        return meta
+        """Parsed meta.json, once per file version
+        (:func:`.durable.read_meta`): ``FileNotFoundError`` before the
+        first build, ``RuntimeError`` on the ``building`` sentinel, whose
+        postings may be partial."""
+        return durable.read_meta(self)
 
     def last_epoch(self) -> int:
         """The newest write generation whose stats delta has been
@@ -106,18 +104,18 @@ class TextIndex:
 
     # ----------------------------------------------------------- build
 
-    def _postings_for(self, df: DataFrame, id_col: str, text_col: str,
-                      num_buckets: int, epoch: int) -> DataFrame:
+    @staticmethod
+    def _postings_for(df: DataFrame, num_buckets: int, epoch: int) -> DataFrame:
         """(epoch, bucket, term, doc_id, tf, positions, dl) for a corpus
-        slice. One narrow posexplode + one (doc, term) hash aggregate;
-        dl rides the aggregate via first() so no second corpus join is
-        needed. ``epoch`` is the write generation (see :meth:`add`):
+        slice of :data:`DOC_ROW` rows. One narrow posexplode + one (doc,
+        term) hash aggregate; dl rides the aggregate via first() so no
+        second corpus join is needed. ``epoch`` is the write generation (see :meth:`add`):
         it makes incremental writes replay-idempotent and lets
         tombstones kill OLD generations of a re-added document without
         hiding the new one."""
-        toks = tokens(F.lower(F.col(text_col)))
+        toks = tokens(F.lower(F.col(_TEXT)))
         base = df.select(
-            F.col(id_col).alias("doc_id"),
+            _DOC,
             toks.alias("_toks"),
             F.size(toks).cast("long").alias("dl"),
         )
@@ -142,18 +140,12 @@ class TextIndex:
         )
 
     @durable.mutator
-    def build(
-        self,
-        df: DataFrame,
-        *,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        num_buckets: int = 64,
-    ) -> None:
-        """Tokenize once, write positional postings partitioned by the
-        term-hash bucket. Crash-ordering: meta carries a ``building``
-        sentinel from before the first data write until the final
-        claims write, so readers fail loud on a half-built index.
+    def build(self, df: DataFrame, *, num_buckets: int = 64) -> None:
+        """Tokenize ``df``'s :data:`DOC_ROW` columns once, write
+        positional postings partitioned by the term-hash bucket.
+        Crash-ordering: meta carries a ``building`` sentinel from before
+        the first data write until the final claims write, so readers
+        fail loud on a half-built index.
 
         Rebuilding over an EXISTING index resets it completely: the
         tombstone table (and any interrupted-compact leftovers) are
@@ -164,7 +156,7 @@ class TextIndex:
         interrupted builds, so this path must be loss-free)."""
         import shutil
 
-        meta_path = self.root / self._META
+        meta_path = self.root / durable.META
         durable.write_json(meta_path, {"building": True})
         for stale in ("tombstones", "_postings_new", "_postings_old"):
             p = self.root / stale
@@ -172,10 +164,10 @@ class TextIndex:
                 shutil.rmtree(p)
         stats = df.select(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.size(tokens(F.lower(F.col(text_col))))).alias("sum_dl"),
+            F.sum(F.size(tokens(F.lower(F.col(_TEXT))))).alias("sum_dl"),
         ).first()
         (
-            self._postings_for(df, id_col, text_col, num_buckets, epoch=0)
+            self._postings_for(df, num_buckets, epoch=0)
             .write.mode("overwrite")
             .partitionBy("epoch", "bucket")
             .parquet(str(self.root / "postings"))
@@ -195,13 +187,12 @@ class TextIndex:
         self,
         df: DataFrame,
         *,
-        id_col: str = "doc_id",
-        text_col: str = "text",
         epoch: int | None = None,
         stats_delta: tuple[int, int] | None = None,
         replace: bool = False,
     ) -> None:
-        """Write postings for a new GENERATION of documents.
+        """Write postings for a new GENERATION of documents (rows of
+        :data:`DOC_ROW`).
 
         ``epoch`` is the write generation (defaults to last_epoch + 1;
         CDC maintainers pass their table version). The write is a
@@ -249,7 +240,7 @@ class TextIndex:
             stats = df.select(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(
-                    F.size(tokens(F.lower(F.col(text_col))))
+                    F.size(tokens(F.lower(F.col(_TEXT))))
                 ).alias("sum_dl"),
             ).first()
             dn, dsl = int(stats.n), int(stats.sum_dl or 0)
@@ -277,7 +268,7 @@ class TextIndex:
                     .filter(F.col("epoch") < F.lit(int(epoch)))
                     .join(
                         F.broadcast(
-                            df.select(F.col(id_col).alias("doc_id")).distinct()
+                            df.select(_DOC).distinct()
                         ),
                         "doc_id",
                         "leftsemi",
@@ -299,27 +290,24 @@ class TextIndex:
             # own tombstone (dead_epoch kills strictly-below). Inlined
             # rather than delegated to delete() — the flock is held.
             (
-                df.select(
-                    F.col(id_col).alias("doc_id"),
-                    F.lit(int(epoch)).alias("dead_epoch"),
-                )
+                df.select(_DOC, F.lit(int(epoch)).alias("dead_epoch"))
                 .write.mode("append")
                 .parquet(str(self.root / "tombstones"))
             )
         (
-            self._postings_for(
-                df, id_col, text_col, meta["num_buckets"], epoch=epoch
-            )
+            self._postings_for(df, meta["num_buckets"], epoch=epoch)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("epoch", "bucket")
             .parquet(str(self.root / "postings"))
         )
         if epoch > int(meta["last_epoch"]):
-            meta["n_docs"] = int(meta["n_docs"]) + int(stats_delta[0])
-            meta["sum_dl"] = int(meta["sum_dl"]) + int(stats_delta[1])
-            meta["last_epoch"] = int(epoch)
-            durable.write_json(self.root / self._META, meta)
+            durable.write_json(self.root / durable.META, {
+                **meta,
+                "n_docs": int(meta["n_docs"]) + int(stats_delta[0]),
+                "sum_dl": int(meta["sum_dl"]) + int(stats_delta[1]),
+                "last_epoch": int(epoch),
+            })
 
     @durable.mutator
     def delete(self, doc_ids, *, dead_epoch: int | None = None) -> None:
@@ -339,7 +327,13 @@ class TextIndex:
         stale, never wrong-shaped.
 
         ``doc_ids`` is a Python list or a single-column DataFrame (the
-        CDC path — ids never round-trip through the driver)."""
+        CDC path — ids never round-trip through the driver). An empty
+        list writes nothing: an empty tombstone table would make the
+        next :meth:`compact` rewrite the whole index for no dead row."""
+        if not isinstance(doc_ids, DataFrame):
+            doc_ids = list(doc_ids)
+            if not doc_ids:
+                return
         meta = self._meta_dict()
         if dead_epoch is None:
             dead_epoch = int(meta["last_epoch"]) + 1
@@ -458,9 +452,9 @@ class TextIndex:
         if tomb.exists():
             shutil.rmtree(tomb)
         shutil.rmtree(old)
-        meta["n_docs"] = int(stats.n)
-        meta["sum_dl"] = int(stats.sum_dl or 0)
-        durable.write_json(self.root / self._META, meta)
+        durable.write_json(self.root / durable.META, {
+            **meta, "n_docs": int(stats.n), "sum_dl": int(stats.sum_dl or 0)
+        })
 
     # maybe_compact()'s epoch cap, at the knee of read latency vs epochs:
     # 1M-doc BM25 read 1.29 s at 1 epoch, 3.49 s at 16, 5.40 s at 128.
@@ -619,33 +613,22 @@ class TextIndex:
             )
         return pruned
 
-    def search(
-        self,
-        query_terms: list[str],
-        k: int = 10,
-        *,
-        k1: float = 1.2,
-        b: float = 0.75,
-    ) -> DataFrame:
+    def search(self, query_terms: list[str], k: int = 10) -> DataFrame:
         """BM25 top-k over the pruned posting read — score-identical to
         the batch ``bm25_scores`` corpus scan (agreement pytest): same
-        Lucene idf, same sorted-term fixed-order fold, with (N, avgdl)
-        from meta and per-term df aggregated from the pruned read
-        (corpus-global by construction). Returns (rank, doc_id, score).
-        Reads of at most ``local_serve.LOCAL_READ_MAX_BYTES`` are scored
-        in the driver (no Spark job), larger ones by the Spark plan; the
-        two agree bit for bit.
+        Lucene idf, same fixed constants (``operators.text.BM25_K1`` =
+        1.2, ``BM25_B`` = 0.75, the values the DuckDB oracles of the
+        BM25 registry queries replay), same sorted-term fixed-order fold,
+        with (N, avgdl) from meta and per-term df aggregated from the
+        pruned read (corpus-global by construction). Returns (rank,
+        doc_id, score). Reads of at most
+        ``local_serve.LOCAL_READ_MAX_BYTES`` are scored in the driver (no
+        Spark job), larger ones by the Spark plan; the two agree bit for
+        bit.
         """
-        return local_serve.answer(self.spark, self._serve(query_terms, k, k1=k1, b=b))
+        return local_serve.answer(self.spark, self._serve(query_terms, k))
 
-    def _serve(
-        self,
-        query_terms: list[str],
-        k: int = 10,
-        *,
-        k1: float = 1.2,
-        b: float = 0.75,
-    ):
+    def _serve(self, query_terms: list[str], k: int = 10):
         """``search``'s answer before wrapping: the local path's Arrow
         table or the Spark path's plan."""
         terms = sorted(set(t.lower() for t in query_terms))
@@ -653,10 +636,10 @@ class TextIndex:
         if local_serve.use_local(
             f"TextIndex.search at {self.root}", postings + tombstones
         ):
-            result = self._search_local(terms, k, k1, b, postings, tombstones)
+            result = self._search_local(terms, k, postings, tombstones)
             if result is not None:
                 return result
-        return self._search_spark(terms, k, k1, b)
+        return self._search_spark(terms, k)
 
     def _search_files(self, terms: list[str]) -> tuple[list[str], list[str]]:
         """The files a BM25 read of ``terms`` opens: every epoch's
@@ -676,8 +659,6 @@ class TextIndex:
         self,
         terms: list[str],
         k: int,
-        k1: float,
-        b: float,
         postings: list[str],
         tombstones: list[str],
     ) -> pa.Table | None:
@@ -730,6 +711,7 @@ class TextIndex:
         ])
         tf = post["tf"].to_numpy().astype(np.float64)
         dl = post["dl"].to_numpy().astype(np.float64)
+        k1, b = BM25_K1, BM25_B
         contrib = (idf_of[term_key] * (tf * (k1 + 1.0))) / (
             tf + k1 * ((1.0 - b) + b * dl / avgdl)
         )
@@ -756,9 +738,7 @@ class TextIndex:
             ]),
         )
 
-    def _search_spark(
-        self, terms: list[str], k: int, k1: float, b: float
-    ) -> DataFrame:
+    def _search_spark(self, terms: list[str], k: int) -> DataFrame:
         """``search`` as a Spark plan over the partition-pruned postings:
         (N, avgdl) from meta, per-term df aggregated from the pruned read
         (corpus-global by construction), the weight ``bm25_scores`` uses."""
@@ -776,7 +756,7 @@ class TextIndex:
                 "term",
                 bm25_weight(
                     F.col("tf").cast("double"), F.col("dl").cast("double"),
-                    F.col("_df"), F.lit(n_docs), F.lit(avgdl), k1, b,
+                    F.col("_df"), F.lit(n_docs), F.lit(avgdl),
                 ).alias("_c"),
             )
             .groupBy("doc_id")
@@ -786,21 +766,14 @@ class TextIndex:
             scored, [F.col("score").desc(), F.col("doc_id").asc()], k
         )
 
-    def search_batch(
-        self,
-        queries: dict[str, list[str]],
-        k: int = 10,
-        *,
-        k1: float = 1.2,
-        b: float = 0.75,
-    ) -> DataFrame:
+    def search_batch(self, queries: dict[str, list[str]], k: int = 10) -> DataFrame:
         """``search`` per query of ``queries`` (query_id -> terms), each
         on its own path: (query_id, rank, doc_id, score). Raises
         ``ValueError`` for an empty batch."""
         return local_serve.batch(
             self.spark,
             sorted(queries.items()),
-            lambda terms: self._serve(terms, k, k1=k1, b=b),
+            lambda terms: self._serve(terms, k),
             pa.string(),
         )
 

@@ -306,9 +306,7 @@ class IvfIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.root = Path(str(path))
-        # (st_ino, st_mtime_ns, st_size) of the meta.json last parsed, and
-        # its dict: the file is only ever replaced whole (os.replace)
-        self._meta_cache: tuple[tuple[int, int, int], dict] | None = None
+        self._meta_cache = None  # durable.read_meta's per-version cache
 
     def _cells(self) -> DataFrame:
         """The cell table, with its ``cell_id`` partition column."""
@@ -344,41 +342,18 @@ class IvfIndex:
                 _os.rename(bak, live)  # crash leftover: restore
 
     # ------------------------------------------------------------ model
-    _META = "meta.json"
-
     def _meta_dict(self) -> dict:
-        """Parsed meta.json, failing LOUD when it still carries the
-        ``building`` sentinel :meth:`build` sets before touching any
-        data file. A rebuild that crashed mid-flight leaves cells that
-        no model on disk describes (e.g. the OLD index's rotated cells,
-        or new cells under no centroids) — serving them silently returns
-        wrong neighbors, so every meta reader raises instead and the
-        caller rebuilds.
-
-        The dict is parsed once per version of the file (a PQ model runs
-        to hundreds of KB) and shared by every read: no caller may
-        mutate it."""
-        import json
-        import os
-
+        """Parsed meta.json (``{}`` before the first build), failing LOUD
+        on the ``building`` sentinel :meth:`build` sets before touching
+        any data file: a rebuild that crashed mid-flight leaves cells
+        that no model on disk describes (e.g. the OLD index's rotated
+        cells, or new cells under no centroids), and serving them would
+        silently return wrong neighbors. Parsed once per file version
+        (a PQ model runs to hundreds of KB, :func:`.durable.read_meta`)."""
         try:
-            fh = open(self.root / self._META, "rb")
+            return durable.read_meta(self)
         except FileNotFoundError:
             return {}
-        with fh:
-            st = os.fstat(fh.fileno())
-            key = (st.st_ino, st.st_mtime_ns, st.st_size)
-            if self._meta_cache is None or self._meta_cache[0] != key:
-                self._meta_cache = (key, json.load(fh))
-        meta = self._meta_cache[1]
-        if meta.get("building"):
-            raise RuntimeError(
-                f"IvfIndex at {self.root}: meta.json carries the "
-                "'building' sentinel — a build() was interrupted and "
-                "the cells may not match any trained model. Rebuild "
-                "the index before serving."
-            )
-        return meta
 
     def _model(self) -> dict:
         """The trained model ``build`` wrote to meta.json: ``metric`` and
@@ -514,7 +489,7 @@ class IvfIndex:
         # opq claim); every meta reader (_meta_dict) fails loud on it
         # until a build completes, instead of serving wrong neighbors.
         model: dict = {"metric": metric}
-        durable.write_json(self.root / self._META, {**model, "building": True})
+        durable.write_json(self.root / durable.META, {**model, "building": True})
         if pq_opq:
             model["opq"] = True
             model["rotation"] = pq_train_opq_rotation(
@@ -550,7 +525,7 @@ class IvfIndex:
             .partitionBy("cell_id")
             .parquet(str(self.root / "cells"))
         )
-        durable.write_json(self.root / self._META, model)
+        durable.write_json(self.root / durable.META, model)
         # a REBUILD invalidates an exported manifest (new centroids, new
         # cell files): refresh it like add() does, or a server would probe
         # with stale centroids against overwritten files
@@ -896,7 +871,9 @@ class IvfIndex:
         (needed by the residual-PQ serving path). A query whose length
         is not the index's dimension raises ``ValueError``: ranking would
         otherwise see only a prefix of it, and every distance would be
-        null."""
+        null. So does a query whose centroid distances are not finite (a
+        NaN or infinite value): every comparison against NaN is false, so
+        the probed cells would be arbitrary."""
         import math
 
         self._recover_leftovers()
@@ -940,7 +917,11 @@ class IvfIndex:
         scored = sorted(
             (_centroid_dist(centroid), cid) for cid, centroid in enumerate(cents)
         )
-        assert all(math.isfinite(d) for d, _ in scored)
+        if not all(math.isfinite(d) for d, _ in scored):
+            raise ValueError(
+                f"query has a NaN or infinite value; the index at "
+                f"{self.root} ranks cells by finite distances"
+            )
         probe = [cid for _, cid in scored[: max(1, nprobe)]]
         return query_vec, probe, metric, [(cid, cents[cid]) for cid in probe]
 
@@ -958,7 +939,6 @@ class IvfIndex:
         k: int = 10,
         nprobe: int = 2,
         rerank: int | None = None,
-        where=None,
     ) -> DataFrame:
         """IVFPQ serving (requires ``build(pq_m=...)``): probe cells as
         ``search`` does, but rank candidates by ASYMMETRIC distance over
@@ -1006,8 +986,6 @@ class IvfIndex:
         )
         cbs = model["codebooks"]
         pruned = self._pruned_cells(probe)
-        if where is not None:
-            pruned = pruned.filter(where)
         if pq_meta.get("residual"):
             # residual index: each probed cell ranks by a table built
             # from THIS cell's query residual; the scan still reads

@@ -4786,7 +4786,7 @@ def bm25_search(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import bm25_scores
 
     docs = load_table(spark, sf, "documents")
-    scores = bm25_scores(docs, _BM25_TERMS, k1=1.2, b=0.75)
+    scores = bm25_scores(docs, _BM25_TERMS)
     return scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(15)
 
 
@@ -7641,7 +7641,7 @@ def hybrid_search_rrf(spark: SparkSession, sf: str) -> DataFrame:
         float(x) for x in embs.filter(F.col("vec_id") == 0).first().embedding
     ]
     lex = (
-        bm25_scores(docs, _BM25_TERMS, k1=1.2, b=0.75)
+        bm25_scores(docs, _BM25_TERMS)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(20)
         .withColumn(

@@ -192,8 +192,8 @@ def test_text_local_matches_spark(spark, docs, tix_base, tmp_path, case):
         postings, tombstones = ix._search_files(terms)
         got = _assert_same(
             spark,
-            ix._search_local(terms, 10, 1.2, 0.75, postings, tombstones),
-            ix._search_spark(terms, 10, 1.2, 0.75),
+            ix._search_local(terms, 10, postings, tombstones),
+            ix._search_spark(terms, 10),
         )
         assert len(got) == (0 if terms == ["zzqx"] else 10)
     if case == "mid_compact":

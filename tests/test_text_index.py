@@ -99,6 +99,60 @@ def test_building_sentinel_fails_loud(spark, tmp_path):
         ix.search(["spark"])
 
 
+def test_meta_cache_follows_rebuild_and_sentinel(spark, docs, tmp_path):
+    """A handle caches the parsed meta.json per file version: after
+    another handle rebuilds the index, its search scores with the new
+    corpus stats, and a meta replaced by one holding the ``building``
+    sentinel still raises on read. A missing meta.json raises
+    FileNotFoundError."""
+    from mcp_hubspot_spark import durable
+
+    root = tmp_path / "ix"
+    writer = TextIndex(spark, str(root))
+    writer.build(docs, num_buckets=8)
+    reader = TextIndex(spark, str(root))
+    terms = ["spark", "merge"]
+    reader.search(terms, k=5).collect()
+    assert reader._meta_dict() is reader._meta_dict()
+
+    small = docs.filter(F.col("doc_id") % 3 == 0)
+    writer.build(small, num_buckets=8)
+    assert reader._meta_dict() == writer._meta_dict()
+    assert reader._meta_dict()["n_docs"] == small.count()
+    fresh = TextIndex(spark, str(tmp_path / "fresh"))
+    fresh.build(small, num_buckets=8)
+    got = [(r.doc_id, r.score) for r in reader.search(terms, k=5).collect()]
+    want = [(r.doc_id, r.score) for r in fresh.search(terms, k=5).collect()]
+    assert got == want and got
+
+    durable.write_json(root / "meta.json", {**reader._meta_dict(), "building": True})
+    with pytest.raises(RuntimeError, match="building"):
+        reader.search(terms, k=5)
+    with pytest.raises(FileNotFoundError):
+        TextIndex(spark, str(tmp_path / "none")).search(terms)
+
+
+def test_delete_of_no_ids_writes_nothing(spark, tmp_path):
+    """delete([]) leaves no tombstone table, so a following compact()
+    has nothing to drop or fold and runs no Spark job (counted by job
+    group)."""
+    two = spark.createDataFrame(
+        [(1, "a b"), (2, "b c")], "doc_id long, text string"
+    )
+    ix = TextIndex(spark, str(tmp_path / "ix"))
+    ix.build(two, num_buckets=8)
+    ix.delete([])
+    assert not (ix.root / "tombstones").exists()
+    sc = spark.sparkContext
+    sc.setJobGroup("text-empty-delete", "text-empty-delete")
+    try:
+        ix.compact()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("text-empty-delete")) == []
+    assert [r.doc_id for r in ix.search(["b"], k=5).collect()] == [1, 2]
+
+
 def test_driver_hash_replica_matches_expression(spark):
     """_pruned's hashlib bucket replica must agree with the expression-
     side classifier.hash_bucket for any term."""
@@ -124,7 +178,7 @@ def test_search_plan_prunes_partitions_and_positions(spark, built):
     import io
     from contextlib import redirect_stdout
 
-    df = built._search_spark(["spark", "window"], 5, 1.2, 0.75)
+    df = built._search_spark(["spark", "window"], 5)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain(True)

@@ -529,6 +529,27 @@ def test_ivf_meta_cache_follows_rebuild_and_sentinel(spark, tmp_path):
         reader.search(probe, k=5, nprobe=4)
 
 
+def test_ivf_nan_query_raises_value_error(spark, tmp_path):
+    """A query holding NaN or infinity raises ValueError naming the
+    index, from search and search_pq alike: cells ranked by comparisons
+    against NaN would be arbitrary."""
+    from mcp_hubspot_spark.vector_store import IvfIndex
+
+    emb = load_table(spark, SF, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    ).filter(F.col("vec_id") < 64)
+    root = tmp_path / "ivfpq"
+    ivf = IvfIndex(spark, str(root))
+    ivf.build(emb, n_cells=2, pq_m=4, pq_codes=4)
+    q = [float(x) for x in emb.filter(F.col("vec_id") == 3).first().embedding]
+    for bad in (float("nan"), float("inf")):
+        query = [bad] + q[1:]
+        with pytest.raises(ValueError, match=str(root)):
+            ivf.search(query, k=3, nprobe=2)
+        with pytest.raises(ValueError, match=str(root)):
+            ivf.search_pq(query, k=3, nprobe=2)
+
+
 def test_ivf_build_trains_in_the_driver(spark, tmp_path):
     """build() runs three Spark jobs, counted by job group: the
     dimension probe and the bounded sample of centroid training, then

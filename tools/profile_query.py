@@ -8,9 +8,11 @@ Usage:
 No NAME means every registry query. Env: SPARK_GRAFT_SF_DIR (the sf0.1
 test data by default), SPARK_GRAFT_CPUS.
 
-Plans are ``explain('formatted')`` text; two dumps of the same tree
-differ only in expression ids (``#\\d+L?``) and exchange/broadcast
-``plan_id=N``, so normalize those before diffing dumps of two trees.
+Plans are ``explain('formatted')`` text, written normalized: expression
+ids (``#\\d+L?``) become ``#N`` and the exchange/broadcast number in
+``plan_id=\\d+`` becomes ``N``, the only parts that differ between two
+dumps of the same tree. So ``diff -r DIR_A DIR_B`` of two trees' dumps
+lists only the plans that changed.
 
 ``time`` hands all NAMEs to ``mcp_hubspot_spark.measure.measure`` at
 once: a cold rep each, then steady reps interleaved across them, so host
@@ -22,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 import time
 from functools import partial
@@ -33,6 +36,15 @@ from mcp_hubspot_spark.measure import measure, warm_up  # noqa: E402
 from mcp_hubspot_spark.session import get_spark  # noqa: E402
 from mcp_hubspot_spark.sources.catalog import DEFAULT_SF_DIR  # noqa: E402
 from mcp_hubspot_spark.workload import QUERIES  # noqa: E402
+
+_EXPR_ID = re.compile(r"#\d+L?")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with its expression ids and ``plan_id`` numbers replaced,
+    so two dumps of the same tree are equal text."""
+    return _PLAN_ID.sub("plan_id=N", _EXPR_ID.sub("#N", plan))
 
 
 def main() -> None:
@@ -54,9 +66,9 @@ def main() -> None:
             df = QUERIES[name](spark, DEFAULT_SF_DIR)
             entry = results[name]
             entry["build_sec"] = round(time.perf_counter() - t0, 3)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
+            plan = normalize_plan(df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
-            )
+            ))
             path = args.out / f"{name}.txt"
             path.write_text(plan)
             entry["plan"] = str(path)
