@@ -10,6 +10,10 @@ Usage:
     python bench_compare.py BENCH_LOCAL_r06.json BENCH_LOCAL_r07.json \
         [--threshold 0.3] [--min-sec 0.5]
 
+When both artifacts carry ``jobs_queries`` (Spark jobs of each query's
+last rep), every common query whose job count changed is listed: a time
+move with an unchanged count is more likely host noise than a code change.
+
 Queries faster than ``--min-sec`` in BOTH rounds are suppressed by
 default: their round-to-round variance routinely exceeds any real
 effect (codegen/GC jitter dominates under ~0.5 s on local[32]), which
@@ -121,6 +125,17 @@ def main() -> None:
               + ", ".join(f"{q}={qb[q]}s" for q in added))
     if removed:
         print(f"removed ({len(removed)}): " + ", ".join(removed))
+
+    ja, jb = a.get("jobs_queries"), b.get("jobs_queries")
+    if ja and jb:
+        both = [q for q in common if q in ja and q in jb]
+        changed = [q for q in both if ja[q] != jb[q]]
+        print(
+            f"jobs: {sum(ja[q] for q in both)} -> {sum(jb[q] for q in both)} "
+            f"over {len(both)} queries; {len(changed)} changed"
+        )
+        for q in changed:
+            print(f"  jobs      {q:32s} {ja[q]:4d} -> {jb[q]:4d} ({jb[q] - ja[q]:+d})")
 
     # noise-bar suppression (round 11): artifacts written by the current
     # bench.py carry per-query steady-rep spreads (max − min of the 2-3

@@ -303,8 +303,9 @@ class Engine:
         path."""
         emails = self.tables["emails"].filter(~F.col("archived"))
         if detail_ids is not None:
-            emails = emails.filter(F.col("id").isin(list(detail_ids)))
-            limit = max(limit, len(list(detail_ids)))
+            ids = list(detail_ids)  # an iterator is consumed once
+            emails = emails.filter(F.col("id").isin(ids))
+            limit = max(limit, len(ids))
         return (
             emails.withColumn("_idn", F.expr("try_cast(id AS long)"))
             .orderBy(

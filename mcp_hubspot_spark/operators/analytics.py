@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .topk import sorted_result
+
 
 def ordered_funnel(
     events: DataFrame,
@@ -128,7 +130,7 @@ def transition_matrix(
                 F.col("n_transitions") / F.col("_n_from"), 6
             ).alias("p_transition"),
         )
-        .orderBy("from_type", "to_type")
+        .transform(sorted_result, "from_type", "to_type")
     )
 
 

@@ -8,6 +8,14 @@ O(k) memory per partition, which is what makes it survive 100 TB inputs.
 
 Determinism: callers should always pass a unique tiebreaker as the last sort
 column; a top-k whose boundary row is ambiguous is not reproducible.
+
+A full sort of a query's result (no limit) goes through :func:`sorted_result`.
+``orderBy`` plans an ``Exchange rangepartitioning``, and range partitioning
+first runs a sampling job to pick its bounds: one more Spark job and one
+more shuffle per query. On a result small enough to broadcast, AQE then
+coalesces that exchange back into one partition anyway, so the sampling
+buys nothing. :func:`sorted_result` sends such a result to one partition
+and sorts it there, with no sampling job.
 """
 
 from __future__ import annotations
@@ -74,3 +82,38 @@ def grouped_top_k(
         df.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
+
+
+def sorted_result(df: DataFrame, *order: Column | str) -> DataFrame:
+    """``df`` globally sorted by ``order``; use it as
+    ``df.transform(sorted_result, *order)`` in place of a final
+    ``orderBy``.
+
+    A batch ``df`` whose Catalyst size estimate is at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` becomes
+    ``repartition(1).sortWithinPartitions(*order)``: ``Exchange
+    SinglePartition`` plus a local Sort. That threshold is the size Spark
+    already trusts to ship whole to every task, and -1 turns this rule
+    off as it turns off broadcasting. The result is the single partition
+    AQE would have coalesced the range exchange into, without the
+    sampling job. Every other input, streaming included, gets ``orderBy``.
+
+    ``repartition(1)``, not ``coalesce(1)``: a coalesce saves the shuffle
+    but folds the upstream stage into one task, so CPU-heavy stages
+    (MinHash signatures, pandas UDFs) lose all their parallelism. The
+    repartition keeps the upstream stages as parallel as they were.
+
+    A sort whose child is already one partition (a global aggregate, a
+    window without partition keys) plans no exchange under ``orderBy``;
+    ``repartition(1)`` would add a stage there, so such queries keep
+    ``orderBy``.
+    """
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    if (
+        not df.isStreaming
+        and limit >= 0
+        and df._jdf.queryExecution().analyzed().stats().sizeInBytes() <= limit
+    ):
+        return df.repartition(1).sortWithinPartitions(*order)
+    return df.orderBy(*order)

@@ -14,6 +14,16 @@ that re-reads every archive Spark puts on the worker's path (``pyspark.zip``,
 1,328 entries; the spark-core jar, 5,359), ~0.2 s a task on a 4-core
 host. The daemon takes the archives off ``sys.path`` before it forks the
 workers, whenever pyspark and py4j are also installed as directories.
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+is off. With it on, every Column call captures its Python call site: a stack
+walk plus about 6 py4j round trips. Building ``(F.col("id") * 2 +
+F.lit(3)).alias("b")`` sends 49 py4j commands with it on and 9 with it off,
+and a query's Python build pays that on every Column it makes. What errors
+lose: the ``== DataFrame ==`` block of an error names the py4j reflection
+frame (``NativeMethodAccessorImpl.invoke0``) instead of the caller's
+file:line. The error class, its message and the fragment naming the failing
+operation (``divide`` where it was ``__truediv__``) stay.
 """
 
 from __future__ import annotations
@@ -74,6 +84,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Quieter, faster local runs; harmless on a cluster.
     "spark.ui.enabled": "false",
+    # No Python call-site capture per Column call (module docstring).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local mode = the driver JVM IS the whole engine; the 1g default heap
     # GC-thrashes on wide shuffles long before the machine is used. 8g is
     # modest on the 128 GiB test box and a normal driver size on clusters.

@@ -33,7 +33,7 @@ from .operators.dedup import (
 )
 from .operators.scans import filtered_scan, recent_scan, semi_lookup
 from .operators.text import LANG_MARKERS, language_id, quality_features, fingerprint
-from .operators.topk import grouped_top_k, ranked_top_k
+from .operators.topk import grouped_top_k, ranked_top_k, sorted_result
 from .operators.vector import l2_squared, cosine_similarity
 from .sources.catalog import fan_out, load_table
 
@@ -136,7 +136,7 @@ def contains_token_docs(spark: SparkSession, sf: str) -> DataFrame:
         docs,
         filter_groups=[[{"propertyName": "text", "operator": "CONTAINS_TOKEN", "value": "vector"}]],
         properties=["doc_id", "lang", "source"],
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # J1/J2/A1/A5 — association-expand join + rollup (reference
@@ -219,7 +219,7 @@ def semi_lookup_lines(spark: SparkSession, sf: str) -> DataFrame:
     return (
         semi_lookup(lineitem, [1, 2, 3, 5, 8, 13, 21, 34], key="l_orderkey")
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")
+        .transform(sorted_result, "l_orderkey", "l_linenumber")
     )
 
 
@@ -245,7 +245,7 @@ def parts_without_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     return (
         part.join(lineitem, part["p_partkey"] == lineitem["l_partkey"], "left_anti")
         .select("p_partkey", "p_name")
-        .orderBy("p_partkey")
+        .transform(sorted_result, "p_partkey")
     )
 
 
@@ -282,7 +282,7 @@ def order_lines_nested(spark: SparkSession, sf: str) -> DataFrame:
     )
     return nested.select(
         F.col("l_orderkey").alias("o_orderkey"), "n_lines", "line_numbers"
-    ).orderBy("o_orderkey")
+    ).transform(sorted_result, "o_orderkey")
 
 
 # A1/A2 — grouped counts (reference clients/ticket_client.py:286-291).
@@ -307,7 +307,7 @@ def order_counts_by_status(spark: SparkSession, sf: str) -> DataFrame:
             F.countDistinct("o_custkey").alias("n_customers"),
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total_price"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sorted_result, "o_orderstatus")
     )
 
 
@@ -341,7 +341,7 @@ def top_orders_per_customer(spark: SparkSession, sf: str) -> DataFrame:
             "o_orderkey",
             "o_totalprice",
         )
-        .orderBy("c_custkey", "rank")
+        .transform(sorted_result, "c_custkey", "rank")
     )
 
 
@@ -367,7 +367,7 @@ def orders_last_30d(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("o_orderdate") > F.col("cutoff"))
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("o_orderstatus")
+        .transform(sorted_result, "o_orderstatus")
     )
 
 
@@ -403,7 +403,7 @@ def priority_class_counts(spark: SparkSession, sf: str) -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("avg_price"),
         )
-        .orderBy("priority_class")
+        .transform(sorted_result, "priority_class")
     )
 
 
@@ -447,7 +447,7 @@ def pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(sorted_result, "l_returnflag", "l_linestatus")
     )
 
 
@@ -476,7 +476,7 @@ def events_json_props(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("k").alias("sum_k"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("event_type")
+        .transform(sorted_result, "event_type")
     )
 
 
@@ -496,7 +496,7 @@ def canonical_json_docs(spark: SparkSession, sf: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.to_json(F.struct("doc_id", "lang", "source")).alias("payload"),
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # TPC-H Q3-shaped shipping priority: selective 3-way join + grouped revenue
@@ -587,7 +587,7 @@ def revenue_by_nation(spark: SparkSession, sf: str) -> DataFrame:
         .join(lineitem, lineitem["l_orderkey"] == orders["o_orderkey"])
         .groupBy(F.col("n_name").alias("nation"))
         .agg(revenue.alias("revenue"), F.count(F.lit(1)).alias("n_lines"))
-        .orderBy("nation")
+        .transform(sorted_result, "nation")
     )
 
 
@@ -714,7 +714,7 @@ def nation_trade_volume(spark: SparkSession, sf: str) -> DataFrame:
             F.year("l_shipdate").cast("int").alias("ship_year"),
         )
         .agg(_revenue_expr().alias("revenue"), F.count(F.lit(1)).alias("n_lines"))
-        .orderBy("cust_nation", "supp_nation", "ship_year")
+        .transform(sorted_result, "cust_nation", "supp_nation", "ship_year")
     )
 
 
@@ -756,7 +756,7 @@ def orders_cube(spark: SparkSession, sf: str) -> DataFrame:
             "n_orders",
             "total_price",
         )
-        .orderBy("gid", "status", "priority")
+        .transform(sorted_result, "gid", "status", "priority")
     )
 
 
@@ -865,7 +865,7 @@ def exact_dedup_groups(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     return exact_dedup(
         docs, F.concat_ws(":", "lang", "source"), id_col="doc_id"
-    ).orderBy("dedup_key")
+    ).transform(sorted_result, "dedup_key")
 
 
 def _duck_tokens(expr: str = "text") -> str:
@@ -916,7 +916,9 @@ def minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
     sig = minhash_signature("text", num_perm=_MINHASH_PERMS, shingle_n=3)
     sig_str = F.array_join(F.transform(sig, lambda x: x.cast("string")), "|")
-    return docs.select("doc_id", sig_str.alias("sig")).orderBy("doc_id")
+    return docs.select("doc_id", sig_str.alias("sig")).transform(
+        sorted_result, "doc_id"
+    )
 
 
 # Exact n-gram Jaccard near-dup pairs via inverted-index join.
@@ -944,7 +946,7 @@ def ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents").filter(F.col("doc_id") < 300))
     return ngram_jaccard_pairs(
         docs, shingle_n=2, min_jaccard=0.03
-    ).orderBy("id_a", "id_b")
+    ).transform(sorted_result, "id_a", "id_b")
 
 
 # Containment dedup via the overlap coefficient |A∩B|/min(|A|,|B|):
@@ -1002,7 +1004,7 @@ def ngram_containment(spark: SparkSession, sf: str) -> DataFrame:
     corpus = fan_out(base.unionByName(sup))
     return ngram_containment_pairs(
         corpus, shingle_n=3, min_overlap=0.9
-    ).orderBy("id_a", "id_b")
+    ).transform(sorted_result, "id_a", "id_b")
 
 
 # Exact substring-level (token-span) dedup — the Lee et al. 2022
@@ -1069,8 +1071,8 @@ def substring_dedup_spans(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import repeated_spans
 
     docs = fan_out(load_table(spark, sf, "documents"))
-    return repeated_spans(docs, k=_SPAN_K).orderBy(
-        "doc_a", "doc_b", "a_start", "b_start"
+    return repeated_spans(docs, k=_SPAN_K).transform(
+        sorted_result, "doc_a", "doc_b", "a_start", "b_start"
     )
 
 
@@ -1130,8 +1132,8 @@ def substring_selfrepeat_spans(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import self_repeated_spans
 
     docs = fan_out(load_table(spark, sf, "documents"))
-    return self_repeated_spans(docs, k=4).orderBy(
-        "doc_id", "a_start", "b_start"
+    return self_repeated_spans(docs, k=4).transform(
+        sorted_result, "doc_id", "a_start", "b_start"
     )
 
 
@@ -1198,7 +1200,7 @@ def substring_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import scrub_repeated_spans
 
     docs = fan_out(load_table(spark, sf, "documents"))
-    return scrub_repeated_spans(docs, k=_SPAN_K).orderBy("doc_id")
+    return scrub_repeated_spans(docs, k=_SPAN_K).transform(sorted_result, "doc_id")
 
 
 # Within-document scrub: every LATER occurrence of a >= 4-token
@@ -1222,7 +1224,7 @@ def substring_selfclean_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import scrub_self_repeats
 
     docs = fan_out(load_table(spark, sf, "documents"))
-    return scrub_self_repeats(docs, k=4).orderBy("doc_id")
+    return scrub_self_repeats(docs, k=4).transform(sorted_result, "doc_id")
 
 
 # Span-level benchmark decontamination — the exact-substring member of
@@ -1327,8 +1329,8 @@ def benchmark_span_overlap(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import cross_corpus_spans
 
     cand, bench = _span_decon_inputs(spark, sf)
-    return cross_corpus_spans(cand, bench, k=_SPAN_K).orderBy(
-        "doc_id", "bench_id", "d_start", "b_start"
+    return cross_corpus_spans(cand, bench, k=_SPAN_K).transform(
+        sorted_result, "doc_id", "bench_id", "d_start", "b_start"
     )
 
 
@@ -1344,8 +1346,8 @@ def span_decontaminated_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import scrub_contaminated_spans
 
     cand, bench = _span_decon_inputs(spark, sf)
-    return scrub_contaminated_spans(cand, bench, k=_SPAN_K).orderBy(
-        "doc_id"
+    return scrub_contaminated_spans(cand, bench, k=_SPAN_K).transform(
+        sorted_result, "doc_id"
     )
 
 
@@ -1371,7 +1373,7 @@ def token_stats(spark: SparkSession, sf: str) -> DataFrame:
         F.size(toks).cast("long").alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars_computed"),
         F.round(F.length("text").cast("double") / F.size(toks), 4).alias("mean_tok_len"),
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Fixed-width histogram of order value: data-profiling shape (bucketize ->
@@ -1406,7 +1408,7 @@ def order_value_histogram(spark: SparkSession, sf: str) -> DataFrame:
             .cast("double")
             .alias("total_value"),
         )
-        .orderBy("bucket")
+        .transform(sorted_result, "bucket")
     )
 
 
@@ -1441,7 +1443,7 @@ def tfidf_query(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import tfidf_top_terms
 
     docs = fan_out(load_table(spark, sf, "documents"))
-    return tfidf_top_terms(docs, k=3).orderBy("doc_id", "rnk")
+    return tfidf_top_terms(docs, k=3).transform(sorted_result, "doc_id", "rnk")
 
 
 def _duck_lang_scores() -> tuple[str, str]:
@@ -1473,7 +1475,9 @@ _sc, _case = _duck_lang_scores()
 )
 def lang_id(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
-    return language_id(docs, "text").select("doc_id", "lang_pred").orderBy("doc_id")
+    return language_id(docs, "text").select("doc_id", "lang_pred").transform(
+        sorted_result, "doc_id"
+    )
 
 
 # Document fingerprint: md5 over sorted distinct token set.
@@ -1488,7 +1492,9 @@ def lang_id(spark: SparkSession, sf: str) -> DataFrame:
 )
 def doc_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
-    return fingerprint(docs, "text").select("doc_id", "fingerprint").orderBy("doc_id")
+    return fingerprint(docs, "text").select("doc_id", "fingerprint").transform(
+        sorted_result, "doc_id"
+    )
 
 
 # Quality features (C4/Gopher-style filters).
@@ -1518,7 +1524,7 @@ def doc_quality(spark: SparkSession, sf: str) -> DataFrame:
         F.col("q_tokens").cast("long").alias("q_tokens"),
         "q_punct_ratio",
         "q_stopword_ratio",
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # ============================================================= events =====
@@ -1551,7 +1557,7 @@ def events_hourly(spark: SparkSession, sf: str) -> DataFrame:
             "n",
             "total_value",
         )
-        .orderBy("hour_start", "event_type")
+        .transform(sorted_result, "hour_start", "event_type")
     )
 
 
@@ -1598,7 +1604,7 @@ def events_sessions(spark: SparkSession, sf: str) -> DataFrame:
             "n_events",
             "session_value",
         )
-        .orderBy("user_id", "session_start")
+        .transform(sorted_result, "user_id", "session_start")
     )
 
 
@@ -1624,7 +1630,7 @@ def scan_union_distinct(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") > 400000.0)
     ).select(cols)
     b = orders.filter(F.col("o_totalprice") > 450000.0).select(cols)
-    return a.unionByName(b).distinct().orderBy("o_orderkey")
+    return a.unionByName(b).distinct().transform(sorted_result, "o_orderkey")
 
 
 # Sliding event-time windows (1h window, 30m slide): each event lands in 2
@@ -1657,7 +1663,7 @@ def events_sliding(spark: SparkSession, sf: str) -> DataFrame:
             "event_type",
             "n",
         )
-        .orderBy("window_start", "event_type")
+        .transform(sorted_result, "window_start", "event_type")
     )
 
 
@@ -1684,7 +1690,7 @@ def doc_excerpts(spark: SparkSession, sf: str) -> DataFrame:
         F.upper("lang").alias("lang_uc"),
         F.concat_ws("/", "lang", "source").alias("part_key"),
         F.length("text").cast("long").alias("text_len"),
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # ================================================== dedup (planted) =======
@@ -1765,7 +1771,7 @@ def minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
         bands=4,
         shingle_n=3,
         min_jaccard=0.25,
-    ).orderBy("id_a", "id_b")
+    ).transform(sorted_result, "id_a", "id_b")
 
 
 # Transitive dedup CLUSTERS: LSH pairs → connected components → every
@@ -1815,7 +1821,7 @@ def dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
         # corpus doc: the corpus IS the initial label table — skips the
         # endpoint-union distinct exchange of the first label round
         nodes_exhaustive=True,
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # INCREMENTAL dedup: new docs (the daily delta) checked against the
@@ -1904,7 +1910,7 @@ def incremental_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
         bands=4,
         shingle_n=3,
         min_jaccard=0.25,
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # End-to-end dedup REPORT: detect (LSH) → cluster (connected components)
@@ -1991,7 +1997,7 @@ def dedup_survivor_report(spark: SparkSession, sf: str) -> DataFrame:
                 "dropped_tokens"
             ),
         )
-        .orderBy("survivor_id")
+        .transform(sorted_result, "survivor_id")
     )
 
 
@@ -2040,7 +2046,7 @@ def contaminated_docs(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     cand = fan_out(cand_nat.unionByName(planted))
-    return ngram_contamination(cand, bench, n=5).orderBy("doc_id")
+    return ngram_contamination(cand, bench, n=5).transform(sorted_result, "doc_id")
 
 
 # Bloom-PREFILTERED decontamination: same exact contract as
@@ -2090,7 +2096,9 @@ def bloom_decontaminated_docs(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     cand = cand_nat.unionByName(planted)
-    return bloom_prefiltered_contamination(cand, bench, n=7).orderBy("doc_id")
+    return bloom_prefiltered_contamination(cand, bench, n=7).transform(
+        sorted_result, "doc_id"
+    )
 
 
 _KMV_K = 64
@@ -2132,7 +2140,7 @@ def kmv_distinct_users(spark: SparkSession, sf: str) -> DataFrame:
     events = load_table(spark, sf, "events")
     return kmv_distinct(
         events, ["event_type"], "user_id", k=_KMV_K
-    ).orderBy("event_type")
+    ).transform(sorted_result, "event_type")
 
 
 def _duck_simhash_expr() -> str:
@@ -2166,7 +2174,7 @@ def simhash_fps(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 100)
     return docs.select(
         "doc_id", simhash("text", shingle_n=2).alias("simhash")
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # SimHash near-dup pairs via block-permutation candidates + hamming verify.
@@ -2207,7 +2215,7 @@ def simhash_neardups(spark: SparkSession, sf: str) -> DataFrame:
             allow_partial_recall=True,
         )
         .withColumn("hamming", F.col("hamming").cast("int"))
-        .orderBy("id_a", "id_b")
+        .transform(sorted_result, "id_a", "id_b")
     )
 
 
@@ -2260,7 +2268,7 @@ def embedding_neardup_cosine(spark: SparkSession, sf: str) -> DataFrame:
             corpus, min_cosine=0.99, n_planes=None
         )
         .withColumn("cosine", F.round(F.col("cosine"), 4))
-        .orderBy("id_a", "id_b")
+        .transform(sorted_result, "id_a", "id_b")
     )
 
 
@@ -3053,7 +3061,7 @@ def knn_batch_q(spark: SparkSession, sf: str) -> DataFrame:
     return (
         knn_batch(emb, queries, k=5)
         .select("query_id", "rank", "vec_id")
-        .orderBy("query_id", "rank")
+        .transform(sorted_result, "query_id", "rank")
     )
 
 
@@ -3090,7 +3098,7 @@ def nation_customer_supplier_sets(spark: SparkSession, sf: str) -> DataFrame:
     both = cust.intersect(supp).withColumn("side", F.lit("both"))
     # subtract == EXCEPT DISTINCT (intersect's dual)
     only_c = cust.subtract(supp).withColumn("side", F.lit("customers_only"))
-    return both.unionByName(only_c).orderBy("side", "nationkey")
+    return both.unionByName(only_c).transform(sorted_result, "side", "nationkey")
 
 
 # As-of join (backward): for each error event, the user's most recent
@@ -3139,7 +3147,7 @@ def events_asof_click(spark: SparkSession, sf: str) -> DataFrame:
         F.date_format("ts", ISO).alias("error_ts"),
         "click_event_id",
         (F.unix_micros("ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    ).orderBy("event_id")
+    ).transform(sorted_result, "event_id")
 
 
 # Lead/lag analytics: per-user inter-event gaps (lag over (user, ts)).
@@ -3176,7 +3184,7 @@ def events_user_gaps(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("gap_us").alias("sum_gap_us"),
             F.max("gap_us").alias("max_gap_us"),
         )
-        .orderBy("user_id")
+        .transform(sorted_result, "user_id")
     )
 
 
@@ -3221,7 +3229,7 @@ def events_near_pairs(spark: SparkSession, sf: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_pairs"),
             F.min("gap_us").alias("min_gap_us"),
         )
-        .orderBy("user_id")
+        .transform(sorted_result, "user_id")
     )
 
 
@@ -3260,7 +3268,7 @@ def orders_rollup(spark: SparkSession, sf: str) -> DataFrame:
             "n_orders",
             "total_price",
         )
-        .orderBy("gid", "status", "priority")
+        .transform(sorted_result, "gid", "status", "priority")
     )
 
 
@@ -3291,7 +3299,7 @@ def doc_length_quantiles(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.percentile("n_chars", F.lit(0.75)), 4).alias("p75"),
             F.round(F.percentile("n_chars", F.lit(0.9)), 4).alias("p90"),
         )
-        .orderBy("lang")
+        .transform(sorted_result, "lang")
     )
 
 
@@ -3334,7 +3342,7 @@ def salted_flag_totals(spark: SparkSession, sf: str) -> DataFrame:
         "n",
         F.col("sum_qty_dec").cast("double").alias("sum_qty"),
         "max_price",
-    ).orderBy("l_returnflag", "l_linestatus")
+    ).transform(sorted_result, "l_returnflag", "l_linestatus")
 
 
 # Same result as knn_batch, computed on the numpy block-matmul scale path
@@ -3373,7 +3381,7 @@ def knn_batch_matmul_q(spark: SparkSession, sf: str) -> DataFrame:
     return (
         knn_batch_matmul(emb, queries, k=5)
         .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id")
-        .orderBy("query_id", "rank")
+        .transform(sorted_result, "query_id", "rank")
     )
 
 
@@ -3426,7 +3434,7 @@ def corpus_clean_stats(spark: SparkSession, sf: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_toks").alias("total_tokens"),
         )
-        .orderBy("source")
+        .transform(sorted_result, "source")
     )
 
 
@@ -3450,7 +3458,7 @@ def doc_zscore_by_source(spark: SparkSession, sf: str) -> DataFrame:
     return (
         grouped_zscore(docs, group=["source"], value="n_chars")
         .select("doc_id", "source", F.round("zscore", 4).alias("zscore"))
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -3489,7 +3497,7 @@ def label_centroids(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.element_at("centroid", i + 1), 6).alias(f"c{i + 1}")
             for i in range(4)
         ],
-    ).orderBy("label")
+    ).transform(sorted_result, "label")
 
 
 # Pivot (wide reshaping): order counts per priority with one column per
@@ -3520,7 +3528,7 @@ def orders_status_pivot(spark: SparkSession, sf: str) -> DataFrame:
             F.coalesce(F.col(s), F.lit(0)).alias(f"n_{s.lower()}")
             for s in ("F", "O", "P")
         ],
-    ).orderBy("o_orderpriority")
+    ).transform(sorted_result, "o_orderpriority")
 
 
 # posexplode (lateral UDTF-style fan-out): token position table for the
@@ -3549,7 +3557,7 @@ def doc_token_positions(spark: SparkSession, sf: str) -> DataFrame:
             "doc_id",
             F.posexplode(F.slice(tok(F.col("text")), 1, 3)).alias("pos", "tok"),
         )
-        .orderBy("doc_id", "pos")
+        .transform(sorted_result, "doc_id", "pos")
     )
 
 
@@ -3589,7 +3597,7 @@ def doc_hash_split(spark: SparkSession, sf: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
         )
-        .orderBy("split")
+        .transform(sorted_result, "split")
     )
 
 
@@ -3628,7 +3636,7 @@ def events_user_cumulative(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).over(w).alias("n_so_far"),
         F.round(F.sum("value").over(w), 4).alias("cum_value"),
         F.round(F.percent_rank().over(wr), 6).alias("value_pr"),
-    ).orderBy("user_id", "event_id")
+    ).transform(sorted_result, "user_id", "event_id")
 
 
 # Distinct-set aggregation: the set of order statuses per customer as a
@@ -3657,7 +3665,7 @@ def customer_status_sets(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("statuses"),
             F.countDistinct("o_orderstatus").alias("n_statuses"),
         )
-        .orderBy("o_custkey")
+        .transform(sorted_result, "o_custkey")
     )
 
 
@@ -3677,7 +3685,7 @@ def doc_first_number(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 200)
     return docs.select(
         "doc_id", F.regexp_extract("text", "[0-9]+", 0).alias("first_num")
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Fuzzy-duplicate candidates: prefix-blocked self-join + levenshtein
@@ -3716,7 +3724,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf: str) -> DataFrame:
         a.join(b, on="_blk")
         .filter((F.col("key_a") < F.col("key_b")) & (dist <= 1))
         .select("key_a", "key_b", dist.cast("int").alias("dist"))
-        .orderBy("key_a", "key_b")
+        .transform(sorted_result, "key_a", "key_b")
     )
 
 
@@ -3782,7 +3790,7 @@ def events_sessionized(spark: SparkSession, sf: str) -> DataFrame:
             F.max("n_events").alias("max_session_events"),
             F.sum("n_events").alias("n_events"),
         )
-        .orderBy("user_id")
+        .transform(sorted_result, "user_id")
     )
 
 
@@ -3842,7 +3850,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf: str) -> DataFrame:
             corpus, min_cosine=0.99, n_planes=8, n_tables=4, dim=64
         )
         .withColumn("cosine", F.round(F.col("cosine"), 4))
-        .orderBy("id_a", "id_b")
+        .transform(sorted_result, "id_a", "id_b")
     )
 
 
@@ -3904,7 +3912,7 @@ def events_moving_avg(spark: SparkSession, sf: str) -> DataFrame:
         "event_id",
         F.date_format("ts", ISO).alias("ts_iso"),
         F.round(F.avg("value").over(w), 6).alias("mov_avg"),
-    ).orderBy("user_id", "ts_iso", "event_id")
+    ).transform(sorted_result, "user_id", "ts_iso", "event_id")
 
 
 # ARGMIN per group via single-pass struct-min (cheapest lineitem per
@@ -3947,7 +3955,7 @@ def cheapest_line_per_part(spark: SparkSession, sf: str) -> DataFrame:
             F.col("_m.o").alias("min_orderkey"),
             F.col("_m.s").alias("min_suppkey"),
         )
-        .orderBy("l_partkey")
+        .transform(sorted_result, "l_partkey")
     )
 
 
@@ -4017,7 +4025,7 @@ def order_priority_stats(spark: SparkSession, sf: str) -> DataFrame:
                 4,
             ).alias("price_avg"),
         )
-        .orderBy("o_orderpriority")
+        .transform(sorted_result, "o_orderpriority")
     )
 
 
@@ -4165,7 +4173,7 @@ def user_cohort_retention(spark: SparkSession, sf: str) -> DataFrame:
             F.col("day_offset").cast("long").alias("day_offset"),
             "n_users",
         )
-        .orderBy("cohort", "day_offset")
+        .transform(sorted_result, "cohort", "day_offset")
     )
 
 
@@ -4221,7 +4229,7 @@ def redact_pii_docs(spark: SparkSession, sf: str) -> DataFrame:
         redacted.alias("redacted"),
         n_emails.cast("int").alias("n_emails"),
         n_numbers.cast("int").alias("n_numbers"),
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # SNAPSHOT DIFF (CDC reconciliation): two deterministic "versions" of
@@ -4278,7 +4286,7 @@ def orders_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     return (
         diff.groupBy("diff_status")
         .agg(F.count(F.lit(1)).alias("n_keys"))
-        .orderBy("diff_status")
+        .transform(sorted_result, "diff_status")
     )
 
 
@@ -4312,7 +4320,7 @@ def stratified_sample_docs(spark: SparkSession, sf: str) -> DataFrame:
         id_col="doc_id",
         default_rate=0.1,
         seed="mix",
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Target-mixture resampling (pre-training data mixing: rebalance the
@@ -4369,7 +4377,7 @@ def mixture_resample_docs(spark: SparkSession, sf: str) -> DataFrame:
             F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
             pct.cast("int").alias("target_pct"),
         )
-        .orderBy("lang")
+        .transform(sorted_result, "lang")
     )
 
 
@@ -4397,8 +4405,8 @@ def eval_holdout_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.sampling import exact_k_holdout
 
     docs = load_table(spark, sf, "documents").select("doc_id", "lang")
-    return exact_k_holdout(docs, "lang", k=10, id_col="doc_id").orderBy(
-        "doc_id"
+    return exact_k_holdout(docs, "lang", k=10, id_col="doc_id").transform(
+        sorted_result, "doc_id"
     )
 
 
@@ -4438,7 +4446,7 @@ def upsample_repeat_docs(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select("doc_id", "lang")
     return upsample_repeat(
         docs, "lang", {"zh": 250, "fr": 150}, id_col="doc_id"
-    ).orderBy("doc_id", "copy_idx")
+    ).transform(sorted_result, "doc_id", "copy_idx")
 
 
 # Random sign projection (Achlioptas/JL): shrink embeddings before ANN —
@@ -4490,7 +4498,7 @@ def embedding_projection(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
     return random_sign_projection(
         emb, d_in=64, d_out=8, seed="rp"
-    ).orderBy("vec_id", "dim_idx")
+    ).transform(sorted_result, "vec_id", "dim_idx")
 
 
 # Projected-search-then-exact-rerank: the reason the projection exists.
@@ -4651,7 +4659,7 @@ def remove_boilerplate_docs(spark: SparkSession, sf: str) -> DataFrame:
         F.md5(F.col("cleaned_text")).alias("cleaned_md5"),
         "n_lines",
         "n_removed",
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Keep-FIRST line dedup (RefinedWeb-style exact dedup at line granularity):
@@ -4734,7 +4742,7 @@ def dedup_lines_docs(spark: SparkSession, sf: str) -> DataFrame:
         F.md5(F.col("cleaned_text")).alias("cleaned_md5"),
         "n_lines",
         "n_removed",
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 _BM25_TERMS = ["spark", "window", "hash"]
@@ -4836,7 +4844,9 @@ def events_resampled_locf(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.timeseries import resample_locf
 
     events = load_table(spark, sf, "events").filter(F.col("user_id") < 20)
-    return resample_locf(events, step_s=21_600).orderBy("user_id", "grid_ts")
+    return resample_locf(events, step_s=21_600).transform(
+        sorted_result, "user_id", "grid_ts"
+    )
 
 
 # Deterministic bottom-m hash-sample quantiles: the KMV trick applied to
@@ -5029,7 +5039,7 @@ def orders_above_customer_avg(spark: SparkSession, sf: str) -> DataFrame:
             # nearest-double between engines
             "cust_avg",
         )
-        .orderBy("o_orderkey")
+        .transform(sorted_result, "o_orderkey")
     )
 
 
@@ -5096,7 +5106,7 @@ def doc_bigram_lm_score(spark: SparkSession, sf: str) -> DataFrame:
                 6,
             ).alias("lm_score"),
         )
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -5130,7 +5140,7 @@ def embedding_row_stats(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.sqrt(sq), 6).alias("l2_norm"),
         F.round(s / F.size(v), 6).alias("mean_val"),
         F.round(mx, 6).alias("max_abs"),
-    ).orderBy("vec_id")
+    ).transform(sorted_result, "vec_id")
 
 
 # Document CHUNKING: overlapping 64-token windows, stride 48 (the step
@@ -5173,7 +5183,7 @@ def doc_chunks(spark: SparkSession, sf: str) -> DataFrame:
         chunk_documents(docs, chunk_tokens=64, overlap=16)
         .withColumn("chunk_idx", F.col("chunk_idx").cast("int"))
         .withColumn("n_chunk_tokens", F.col("n_chunk_tokens").cast("int"))
-        .orderBy("doc_id", "chunk_idx")
+        .transform(sorted_result, "doc_id", "chunk_idx")
     )
 
 
@@ -5241,7 +5251,7 @@ def events_campaign_attribution(spark: SparkSession, sf: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .orderBy("campaign_id")
+        .transform(sorted_result, "campaign_id")
     )
 
 
@@ -5296,7 +5306,7 @@ def doc_repetition(spark: SparkSession, sf: str) -> DataFrame:
         "top_unigram_frac",
         "dup_2gram_frac",
         "dup_3gram_frac",
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Concat-and-chunk sequence packing (GPT-style pretraining batches):
@@ -5331,7 +5341,9 @@ def packed_sequences(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import pack_sequences
 
     docs = load_table(spark, sf, "documents")
-    return pack_sequences(docs, capacity=256).orderBy("source", "doc_id")
+    return pack_sequences(docs, capacity=256).transform(
+        sorted_result, "source", "doc_id"
+    )
 
 
 # Quality filter with per-doc reject reasons (C4/Gopher-style filter
@@ -5395,7 +5407,7 @@ def quality_filter_docs(spark: SparkSession, sf: str) -> DataFrame:
             reason.alias("reject_reason"),
             reason.isNull().alias("keep"),
         )
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -5534,7 +5546,7 @@ def training_corpus_pipeline(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("n_tok").alias("n_tokens"),
             F.countDistinct("seq_id").alias("n_sequences"),
         )
-        .orderBy("lang")
+        .transform(sorted_result, "lang")
     )
 
 
@@ -5579,7 +5591,7 @@ def embed_documents(spark: SparkSession, sf: str) -> DataFrame:
                 F.transform("embedding", lambda x: F.round(x.cast("double"), 6))
             )
         ).alias("embedding_md5"),
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Approximate quantiles (Greenwald-Khanna sketch) — the scale path beside
@@ -5603,7 +5615,7 @@ def doc_length_quantiles_approx(spark: SparkSession, sf: str) -> DataFrame:
                 for i, q in enumerate(("p25", "p50", "p75", "p90"))
             ],
         )
-        .orderBy("lang")
+        .transform(sorted_result, "lang")
     )
 
 
@@ -5614,7 +5626,7 @@ def approx_distinct_users(spark: SparkSession, sf: str) -> DataFrame:
     events = load_table(spark, sf, "events")
     return events.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
-    ).orderBy("event_type")
+    ).transform(sorted_result, "event_type")
 
 
 def _pagerank_oracle_sql(n_iter: int = 5, damping: float = 0.85) -> str:
@@ -5746,7 +5758,7 @@ def media_features_q(spark: SparkSession, sf: str) -> DataFrame:
         "width",
         "height",
         *[F.col("feature")[i].alias(f"f{i}") for i in range(8)],
-    ).orderBy("media_id")
+    ).transform(sorted_result, "media_id")
 
 
 # Multimodal frame-sampling fan-out (one row per pseudo-frame). The stub
@@ -5778,8 +5790,8 @@ def media_frame_sample_q(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 20)
     media = documents_as_media(docs)
-    return frame_sample_plan(media, every_n_ms=10_000).orderBy(
-        "media_id", "frame_idx"
+    return frame_sample_plan(media, every_n_ms=10_000).transform(
+        sorted_result, "media_id", "frame_idx"
     )
 
 
@@ -5813,8 +5825,8 @@ def global_shuffle_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.sampling import global_shuffle
 
     docs = load_table(spark, sf, "documents").select("doc_id")
-    return global_shuffle(docs, "doc_id", seed="ep0", n_shards=8).orderBy(
-        "shard", "pos"
+    return global_shuffle(docs, "doc_id", seed="ep0", n_shards=8).transform(
+        sorted_result, "shard", "pos"
     )
 
 
@@ -5846,7 +5858,7 @@ def canonical_text_docs(spark: SparkSession, sf: str) -> DataFrame:
             "norm_text",
             F.md5(F.col("norm_text")).alias("norm_fp"),
         )
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -5902,7 +5914,7 @@ def quantized_embedding_error(spark: SparkSession, sf: str) -> DataFrame:
         "q_scale",
         F.array_max(err).alias("max_abs_err"),
         n_sat.cast("int").alias("n_saturated"),
-    ).orderBy("vec_id")
+    ).transform(sorted_result, "vec_id")
 
 
 # Weighted sampling without replacement (Efraimidis-Spirtes A-ES):
@@ -6031,7 +6043,7 @@ def temperature_mixture_docs(spark: SparkSession, sf: str) -> DataFrame:
         temperature_mixture(docs, "lang", alpha=0.5, id_col="doc_id",
                             seed="temp")
         .select("doc_id", "lang", "keep_rate")
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -6108,7 +6120,9 @@ def semantic_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.filter(F.col("vec_id") < 8).collect()
     ]
-    return semantic_dedup(corpus, cents, min_cosine=0.99).orderBy("vec_id")
+    return semantic_dedup(corpus, cents, min_cosine=0.99).transform(
+        sorted_result, "vec_id"
+    )
 
 
 # Length-bucketed batching: the pad-efficiency loader layout — batches
@@ -6143,7 +6157,7 @@ def length_bucketed_batches_q(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select("doc_id", "n_chars")
     return length_bucketed_batches(
         docs, "n_chars", batch_size=32, id_col="doc_id", seed="lb"
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Per-domain document cap (head-domain down-weighting for crawl corpora):
@@ -6175,8 +6189,8 @@ def domain_capped_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.sampling import per_group_cap
 
     docs = load_table(spark, sf, "documents").select("source", "doc_id")
-    return per_group_cap(docs, "source", "doc_id", k=10, seed="cap").orderBy(
-        "source", "rank"
+    return per_group_cap(docs, "source", "doc_id", k=10, seed="cap").transform(
+        sorted_result, "source", "rank"
     )
 
 
@@ -6242,7 +6256,7 @@ def semantic_contaminated_docs(spark: SparkSession, sf: str) -> DataFrame:
     return (
         semantic_contamination(corpus, bench, min_cosine=0.9)
         .withColumn("cosine", F.round("cosine", 4))
-        .orderBy("vec_id")
+        .transform(sorted_result, "vec_id")
     )
 
 
@@ -6302,7 +6316,7 @@ def vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
                 4,
             ).alias("coverage"),
         )
-        .orderBy("source")
+        .transform(sorted_result, "source")
     )
 
 
@@ -6344,7 +6358,7 @@ def events_scd2(spark: SparkSession, sf: str) -> DataFrame:
     return scd2_intervals(
         events, key_col="user_id", ts_col="ts", state_col="event_type",
         order_col="event_id", iso_fmt=ISO,
-    ).orderBy("user_id", "valid_from_iso", "state")
+    ).transform(sorted_result, "user_id", "valid_from_iso", "state")
 
 
 # Greedy next-fit bin packing without splitting docs: sequential
@@ -6389,7 +6403,7 @@ def greedy_packed_docs(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select("doc_id", "n_chars")
     return greedy_pack_docs(
         docs, "n_chars", capacity=1000, n_shards=4, seed="pack"
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # UNPIVOT (wide → long): the inverse of the status pivot — melt the
@@ -6433,7 +6447,7 @@ def orders_unpivot(spark: SparkSession, sf: str) -> DataFrame:
             variableColumnName="priority",
             valueColumnName="n",
         )
-        .orderBy("o_orderstatus", "priority")
+        .transform(sorted_result, "o_orderstatus", "priority")
     )
 
 
@@ -6487,7 +6501,7 @@ def rolling_7d_active_users(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             F.date_format("win_day", "yyyy-MM-dd").alias("day"), "active_7d"
         )
-        .orderBy("day")
+        .transform(sorted_result, "day")
     )
 
 
@@ -6542,7 +6556,7 @@ def events_value_outliers_mad(spark: SparkSession, sf: str) -> DataFrame:
             F.round("med", 4).alias("type_median"),
             F.round("mad", 4).alias("type_mad"),
         )
-        .orderBy("event_id")
+        .transform(sorted_result, "event_id")
     )
 
 
@@ -6616,7 +6630,7 @@ def user_value_trend(spark: SparkSession, sf: str) -> DataFrame:
                 4,
             ).alias("intercept"),
         )
-        .orderBy("user_id")
+        .transform(sorted_result, "user_id")
     )
 
 
@@ -6756,7 +6770,7 @@ def order_value_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
             F.round("ci_lo", 4).alias("ci_lo"),
             F.round("ci_hi", 4).alias("ci_hi"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sorted_result, "o_orderstatus")
     )
 
 
@@ -6831,7 +6845,7 @@ def hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
             F.col("rk").cast("int").alias("rank"),
             F.round("cos", 4).alias("cosine"),
         )
-        .orderBy("qid", "rank")
+        .transform(sorted_result, "qid", "rank")
     )
 
 
@@ -6888,7 +6902,7 @@ def mixture_plan(spark: SparkSession, sf: str) -> DataFrame:
             .cast("long")
             .alias("planned_chars"),
         )
-        .orderBy("lang")
+        .transform(sorted_result, "lang")
     )
 
 
@@ -7002,7 +7016,7 @@ def event_type_lift(spark: SparkSession, sf: str) -> DataFrame:
             F.col("n_ab").cast("long").alias("n_both"),
             F.round(lift, 4).alias("lift"),
         )
-        .orderBy("type_a", "type_b")
+        .transform(sorted_result, "type_a", "type_b")
     )
 
 
@@ -7110,7 +7124,7 @@ def bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     merges = bpe_learn_merges(docs, k=4)
     return spark.createDataFrame(
         merges, "rank int, lhs string, rhs string, n_pairs long"
-    ).orderBy("rank")
+    ).transform(sorted_result, "rank")
 
 
 # The APPLY side of BPE: tokenize the corpus with the learned merge
@@ -7179,7 +7193,7 @@ def bpe_compression(spark: SparkSession, sf: str) -> DataFrame:
                 F.col("n_chars_total").cast("double") / F.col("n_tokens"), 4
             ).alias("compression"),
         )
-        .orderBy("lang")
+        .transform(sorted_result, "lang")
     )
 
 
@@ -7237,7 +7251,7 @@ def orders_value_drift(spark: SparkSession, sf: str) -> DataFrame:
             F.round(p_cur, 6).alias("p_cur"),
             F.round(F.abs(p_cur - p_ref), 6).alias("l1_contrib"),
         )
-        .orderBy("bucket")
+        .transform(sorted_result, "bucket")
     )
 
 
@@ -7403,7 +7417,7 @@ def customer_name_linkage(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer").filter(F.col("c_custkey") < 500)
     return deletion_neighborhood_pairs(
         cust, "c_custkey", "c_name", max_dist=1
-    ).orderBy("key_a", "key_b")
+    ).transform(sorted_result, "key_a", "key_b")
 
 
 # Triangle counting over the co-supplier graph (suppliers linked when
@@ -7559,7 +7573,7 @@ def supplier_clustering(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("sa") < F.col("sb"))
         .select(F.col("sa").alias("src"), F.col("sb").alias("dst"))
     )
-    return clustering_coefficients(edges).orderBy("node")
+    return clustering_coefficients(edges).transform(sorted_result, "node")
 
 
 # Hybrid retrieval with reciprocal-rank fusion: BM25 lexical top-20 and
@@ -7762,7 +7776,7 @@ def search_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     )
     return out.select(
         "doc_id", "mmr_rank", F.round("mmr_score", 6).alias("mmr_score")
-    ).orderBy("mmr_rank")
+    ).transform(sorted_result, "mmr_rank")
 
 
 # DSIR-style importance-resampling selection (Xie et al. 2023): rank the
@@ -7983,7 +7997,7 @@ def event_attribution(spark: SparkSession, sf: str) -> DataFrame:
                 F.sum("linear_credit").cast("double"), 6
             ).alias("linear_touch"),
         )
-        .orderBy("touch_type")
+        .transform(sorted_result, "touch_type")
     )
 
 
@@ -8230,8 +8244,8 @@ def events_type_drift(spark: SparkSession, sf: str) -> DataFrame:
     split = F.lit("2024-01-16").cast("timestamp")
     ref = ev.filter(F.col("ts") < split).select("event_type")
     cur = ev.filter(F.col("ts") >= split).select("event_type")
-    return categorical_drift(ref, cur, cat_col="event_type").orderBy(
-        "category"
+    return categorical_drift(ref, cur, cat_col="event_type").transform(
+        sorted_result, "category"
     )
 
 
@@ -8293,7 +8307,7 @@ def events_seasonality(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.timeseries import seasonality_profile
 
     events = load_table(spark, sf, "events")
-    return seasonality_profile(events).orderBy("dow", "hod")
+    return seasonality_profile(events).transform(sorted_result, "dow", "hod")
 
 
 # Search-quality evaluation harness — NDCG@k / MRR / precision@k over
@@ -8356,7 +8370,7 @@ def order_ranking_quality(spark: SparkSession, sf: str) -> DataFrame:
         .otherwise(0.0)
         .alias("rel"),
     )
-    return ranking_metrics(ranked, k=10).orderBy("query")
+    return ranking_metrics(ranked, k=10).transform(sorted_result, "query")
 
 
 # Seasonality-adjusted anomaly detection — each event z-scored against
@@ -8613,7 +8627,7 @@ def classifier_scored_docs(spark: SparkSession, sf: str) -> DataFrame:
     out = classifier_score(docs, weights, num_buckets=4096)
     return out.select(
         "doc_id", "n_toks", F.round("score", 4).alias("score")
-    ).orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 # Classifier evaluation metric: ROC AUC by the Mann-Whitney
@@ -8711,7 +8725,7 @@ def blocklist_hit_docs(spark: SparkSession, sf: str) -> DataFrame:
         "the line sort",
         "value table part",
     ]
-    return blocklist_hits(docs, phrases).orderBy("doc_id")
+    return blocklist_hits(docs, phrases).transform(sorted_result, "doc_id")
 
 
 # Corpus Zipf fit: OLS power-law fit of ln(freq) on ln(rank)
@@ -8790,7 +8804,7 @@ def phrase_occurrences_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import phrase_occurrences
 
     docs = fan_out(load_table(spark, sf, "documents"))
-    return phrase_occurrences(docs, "table table").orderBy("doc_id")
+    return phrase_occurrences(docs, "table table").transform(sorted_result, "doc_id")
 
 
 # Heaps'-law vocabulary-growth fit: the companion corpus-
@@ -8914,8 +8928,8 @@ def bm25_batch_search(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import bm25_topk_batch
 
     docs = load_table(spark, sf, "documents")
-    return bm25_topk_batch(docs, _BM25_BATCH_QUERIES, k=5).orderBy(
-        "query_id", "rank"
+    return bm25_topk_batch(docs, _BM25_BATCH_QUERIES, k=5).transform(
+        sorted_result, "query_id", "rank"
     )
 
 
@@ -8962,7 +8976,7 @@ def media_resized(spark: SparkSession, sf: str) -> DataFrame:
         "height",
         "byte_len",
         F.sha2("payload", 256).alias("payload_sha256"),
-    ).orderBy("media_id")
+    ).transform(sorted_result, "media_id")
 
 
 # ================================================= driver-check window ====

@@ -169,6 +169,28 @@ def test_recent_emails_detail_id_lookup(engine):
     assert [r.id for r in rows] == ["502", "500"]
 
 
+def test_recent_emails_detail_ids_iterator_returns_every_id(engine, spark):
+    """``detail_ids`` may be any iterable, an iterator included: all 12
+    requested ids come back although ``limit`` is 10."""
+    from datetime import datetime, timedelta
+
+    from mcp_hubspot_spark.schemas import CRM_SCHEMAS
+
+    t0 = datetime(2024, 1, 1)
+    emails = spark.createDataFrame(
+        [
+            (str(600 + i), "s", "body", None, "a@x.com", "b@y.com", None, None,
+             t0 + timedelta(hours=i), t0 + timedelta(hours=i), False)
+            for i in range(14)
+        ],
+        CRM_SCHEMAS["emails"],
+    )
+    many = Engine(tables={**engine.tables, "emails": emails})
+    ids = [str(600 + i) for i in range(12)]
+    rows = many.get_recent_emails(limit=10, detail_ids=iter(ids)).collect()
+    assert [r.id for r in rows] == ids[::-1]
+
+
 def test_staging_cache_roundtrip(engine, spark, tmp_path):
     from mcp_hubspot_spark.sources.staging import invalidate, read_or_build
 

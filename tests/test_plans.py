@@ -1050,3 +1050,64 @@ def test_bm25_batch_scan_count_is_query_invariant(spark):
     )
     assert one.count("Scan parquet") == eight.count("Scan parquet")
     assert "BroadcastExchange" in eight and "Window" in eight
+
+
+# the analytics_mix queries whose final sort goes through sorted_result and
+# fits the broadcast threshold (event_attribution and classifier_scored_docs
+# also go through it, but their join estimates exceed the threshold)
+SMALL_SORTED = [
+    "doc_fingerprints",
+    "events_asof_click",
+    "order_lines_nested",
+    "top_orders_per_customer",
+    "exact_dedup_groups",
+    "doc_hash_split",
+    "events_scd2",
+    "kmv_distinct_users",
+    "salted_flag_totals",
+]
+
+
+def test_small_final_sort_skips_range_sampling(spark):
+    """A final sort of a broadcast-sized result is one partition sorted
+    locally: no range exchange, so no sampling job (4 jobs with it)."""
+    df = QUERIES["exact_dedup_groups"](spark, SF)
+    plan = plan_of(df)
+    assert "rangepartitioning" not in plan
+    assert "SinglePartition" in plan
+    sc = spark.sparkContext
+    sc.setJobGroup("sorted-result-jobs", "sorted-result-jobs")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("sorted-result-jobs")) == 3
+
+
+def test_sorted_result_follows_broadcast_threshold(spark):
+    """-1 turns the single-partition sort off with broadcasting."""
+    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan = plan_of(QUERIES["exact_dedup_groups"](spark, SF))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    assert "rangepartitioning" in plan
+    assert "SinglePartition" not in plan
+
+
+def test_sorted_result_rows_match_order_by(spark, monkeypatch):
+    """Row for row, including order: the oracle gate compares rows as
+    sets, so this is the only check of the result order."""
+    from mcp_hubspot_spark import workload
+
+    got = {}
+    for q in SMALL_SORTED:
+        df = QUERIES[q](spark, SF)
+        assert "SinglePartition" in plan_of(df), q
+        got[q] = df.collect()
+    monkeypatch.setattr(workload, "sorted_result", lambda df, *o: df.orderBy(*o))
+    for q in SMALL_SORTED:
+        df = QUERIES[q](spark, SF)
+        assert "rangepartitioning" in plan_of(df), q
+        assert got[q] == df.collect(), q

@@ -88,3 +88,25 @@ def test_worker_imports_pyspark_outside_archives(spark):
     [(origin, zips)] = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
     assert os.path.isfile(origin), origin
     assert zips == []
+
+
+def test_column_builds_capture_no_call_site(spark, monkeypatch):
+    """PySpark's DataFrame debugging is off: a Column expression is built
+    in 9 py4j commands (49 with call-site capture on)."""
+    import pyspark.errors.utils as errors_utils
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    assert errors_utils.is_debugging_enabled() is False
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(*args, **kwargs):
+        sent.append(args)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    (F.col("id") * 2 + F.lit(3)).alias("b")
+    monkeypatch.undo()
+    assert len(sent) <= 9, len(sent)
