@@ -7,7 +7,8 @@ Each query is timed by ``mcp_hubspot_spark.measure``: one cold rep, then
 steady reps, each fully materialized through the noop sink, after a
 session warm-up. "queries"/"value" report the best steady rep,
 "cold_queries"/"cold_total" the cold rep with its one-time codegen. The
-full payload, with spreads and per-query job counts, goes to a file.
+full payload, with spreads and per-query job and compile counts, goes to a
+file.
 """
 
 from __future__ import annotations
@@ -248,6 +249,7 @@ def main() -> None:
         "cold_queries": {n: r["cold_s"] for n, r in ok.items()},
         "cold_total": round(sum(r["cold_s"] for r in ok.values()), 3),
         "jobs_queries": {n: r["jobs"] for n, r in ok.items()},
+        "compiles_queries": {n: r["compiles"] for n, r in ok.items()},
         "calib_sec": calib,
         "calib_shuffle_sec": calib_shuffle,
         "calib_series": calib_series,

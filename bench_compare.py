@@ -11,8 +11,12 @@ Usage:
         [--threshold 0.3] [--min-sec 0.5]
 
 When both artifacts carry ``jobs_queries`` (Spark jobs of each query's
-last rep), every common query whose job count changed is listed: a time
-move with an unchanged count is more likely host noise than a code change.
+last rep), every common query whose job count changed is listed, and a
+time mover whose job count is unchanged is printed as ``noise-suspect``
+instead of REGRESSED or improved: a move with the same work is more likely
+host noise than a code change. When both also carry ``compiles_queries``
+(generated classes compiled in the last rep), a mover is noise-suspect
+only if that count is unchanged too.
 
 Queries faster than ``--min-sec`` in BOTH rounds are suppressed by
 default: their round-to-round variance routinely exceeds any real
@@ -27,7 +31,7 @@ import argparse
 import json
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
     ap.add_argument("new")
@@ -35,7 +39,7 @@ def main() -> None:
                     help="relative move to report (0.3 = ±30%%)")
     ap.add_argument("--min-sec", type=float, default=0.5,
                     help="suppress queries below this in both rounds")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     def _load(path: str) -> dict:
         """Accept either a BENCH_LOCAL_r*.json (full payload) or a
@@ -136,6 +140,21 @@ def main() -> None:
         )
         for q in changed:
             print(f"  jobs      {q:32s} {ja[q]:4d} -> {jb[q]:4d} ({jb[q] - ja[q]:+d})")
+    ka, kb = a.get("compiles_queries"), b.get("compiles_queries")
+    if ka and kb:
+        both = [q for q in common if q in ka and q in kb]
+        print(
+            f"compiles: {sum(ka[q] for q in both)} -> {sum(kb[q] for q in both)} "
+            f"over {len(both)} queries; "
+            f"{sum(ka[q] != kb[q] for q in both)} changed"
+        )
+
+    def same_work(q: str) -> bool:
+        """Both artifacts count q's jobs (and compiles, when both carry
+        them) and no count moved."""
+        if not (ja and jb and q in ja and q in jb) or ja[q] != jb[q]:
+            return False
+        return not (ka and kb and q in ka and q in kb) or ka[q] == kb[q]
 
     # noise-bar suppression (round 11): artifacts written by the current
     # bench.py carry per-query steady-rep spreads (max − min of the 2-3
@@ -162,10 +181,10 @@ def main() -> None:
         print(f"no moves beyond ±{args.threshold:.0%} "
               f"(>{args.min_sec}s queries)")
     for rel, q, o, n in sorted(moves, key=lambda t: -abs(t[0])):
-        tag = "REGRESSED" if rel > 0 else "improved"
-        print(f"  {tag:9s} {q:32s} {o:7.3f}s -> {n:7.3f}s ({rel:+.0%})")
+        tag = "noise-suspect" if same_work(q) else "REGRESSED" if rel > 0 else "improved"
+        print(f"  {tag:13s} {q:32s} {o:7.3f}s -> {n:7.3f}s ({rel:+.0%})")
     for rel, q, o, n, bar in sorted(noise, key=lambda t: -abs(t[0])):
-        print(f"  noise     {q:32s} {o:7.3f}s -> {n:7.3f}s ({rel:+.0%}) "
+        print(f"  {'noise':13s} {q:32s} {o:7.3f}s -> {n:7.3f}s ({rel:+.0%}) "
               f"within spread bar {bar:.3f}s")
 
 

@@ -14,6 +14,14 @@ interleaved across the builds (A, B, A, B, ...), so host drift during a
 comparison hits every build alike. Every rep runs under the job group
 ``<name>#<rep>`` (cold is rep 0), so the Spark jobs of a rep are
 attributable to it from the status store.
+
+Each rep also counts the classes Spark's code generator compiled during it:
+the delta of ``CodegenMetrics.METRIC_COMPILATION_TIME``'s count, a JVM-wide
+counter. In local mode the executors share the driver's JVM, so the count
+includes the classes compiled in task threads; on a cluster it counts the
+driver's compiles only. A warm rep compiles nothing when its classes are
+still in the generated-class cache (``session``), so the count moves with
+the code and the session settings, where wall time also moves with the host.
 """
 
 from __future__ import annotations
@@ -59,26 +67,31 @@ def measure(spark, builds: Mapping[str, Callable[[], Any]]) -> dict[str, dict]:
     Returns per name either ``{"error": str}`` (the build raised; it runs
     no further reps, the others go on) or ``cold_s``, ``steady_s`` (the
     steady reps in order), ``best_s``, ``spread_s`` (max - min of the
-    steady reps) and ``jobs``, the number of Spark jobs of the last rep.
-    Never raises for a failing build.
+    steady reps), ``jobs``, the number of Spark jobs of the last rep, and
+    ``compiles``, the classes generated code compiled during it (module
+    docstring). Never raises for a failing build.
     """
     sc = spark.sparkContext
     saved = {
         k: sc.getLocalProperty(k)
         for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
     }
+    compilations = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     times: dict[str, list[float]] = {name: [] for name in builds}
+    compiles: dict[str, int] = {}
     errors: dict[str, str] = {}
 
     def rep(names) -> None:
         for name in [n for n in names if n not in errors]:
             sc.setJobGroup(f"{name}#{len(times[name])}", name)
             try:
+                c0 = compilations.getCount()
                 t0 = time.perf_counter()
                 out = builds[name]()
                 if isinstance(out, DataFrame):
                     materialize(out)
                 times[name].append(time.perf_counter() - t0)
+                compiles[name] = compilations.getCount() - c0
             except Exception as exc:  # one failing build must not end the run
                 log.warning("build %s failed", name, exc_info=True)
                 errors[name] = f"{type(exc).__name__}: {exc}"[:200]
@@ -104,5 +117,6 @@ def measure(spark, builds: Mapping[str, Callable[[], Any]]) -> dict[str, dict]:
             "best_s": round(min(steady), 3),
             "spread_s": round(max(steady) - min(steady), 3),
             "jobs": len(tracker.getJobIdsForGroup(f"{name}#{len(ts) - 1}")),
+            "compiles": compiles[name],
         }
     return out

@@ -15,7 +15,7 @@ import pytest
 from mcp_hubspot_spark.measure import measure
 
 REPO = Path(__file__).resolve().parent.parent
-RECORD = {"cold_s", "steady_s", "best_s", "spread_s", "jobs"}
+RECORD = {"cold_s", "steady_s", "best_s", "spread_s", "jobs", "compiles"}
 
 
 def _first_job(spark, group: str) -> int:
@@ -43,6 +43,9 @@ def test_record_fields(spark):
     assert out["m_frame"]["jobs"] >= 1
     assert out["m_collected"]["jobs"] >= 1
     assert out["m_python"]["jobs"] == 0
+    # a warm rep finds its generated classes in the session's cache
+    assert out["m_frame"]["compiles"] == 0
+    assert out["m_python"]["compiles"] == 0
 
 
 def test_failing_build_is_recorded_and_others_run(spark):

@@ -110,3 +110,24 @@ def test_column_builds_capture_no_call_site(spark, monkeypatch):
     (F.col("id") * 2 + F.lit(3)).alias("b")
     monkeypatch.undo()
     assert len(sent) <= 9, len(sent)
+
+
+def test_warm_query_reuses_its_generated_classes(spark):
+    """A query rerun after 150 other generated classes compiles none: the
+    generated-class cache holds more than Spark's default 100 entries."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
+    def query():
+        return spark.range(100).selectExpr("id * 7 AS y").selectExpr("sum(y)").collect()
+
+    query()
+    before = compiles.getCount()
+    for i in range(150):
+        # an inlined integer literal makes each projection a distinct class
+        spark.range(10).selectExpr(f"id + {i} AS x").collect()
+    assert compiles.getCount() - before >= 150
+    before = compiles.getCount()
+    assert query() == [(sum(7 * i for i in range(100)),)]
+    assert compiles.getCount() - before == 0

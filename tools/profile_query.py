@@ -16,8 +16,10 @@ lists only the plans that changed.
 
 ``time`` hands all NAMEs to ``mcp_hubspot_spark.measure.measure`` at
 once: a cold rep each, then steady reps interleaved across them, so host
-drift hits every query alike. To compare variants of one query, register
-them under distinct names in a script and call ``measure`` the same way.
+drift hits every query alike. Each query prints ``measure``'s record,
+with ``jobs`` and ``compiles`` (generated classes compiled in its last
+rep). To compare variants of one query, register them under distinct names
+in a script and call ``measure`` the same way.
 """
 
 from __future__ import annotations
